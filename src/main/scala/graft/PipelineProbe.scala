@@ -45,10 +45,10 @@ import graft.sources.JsonlSource
 object PipelineProbe {
   def main(args: Array[String]): Unit = {
     val docMult = args.headOption.map(_.toInt).getOrElse(200)
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = graft.util.SessionTuning.tuned(SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.streaming.StateStores.useRocksDB(spark)
     val base = "/root/testdata/sf0.1"

@@ -837,7 +837,7 @@ object Curate {
       .repartition(col("doc_id"))
       .localCheckpoint(false)
     (s, graft.util.JobDesc.labeled(documents.sparkSession,
-      "classifier: train sample")(s.count()))
+      "language classifier: train sample")(s.count()))
   }
 
   /** Train the K-class one-vs-rest labeler; returns the per-class weight

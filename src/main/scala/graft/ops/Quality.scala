@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.functions.Deterministic.dsum
 
 /** Per-batch data-quality metrics.
@@ -40,6 +42,18 @@ object Quality {
           .otherwise((col("valid_events").cast("double") /
             col("total_events").cast("double")) * 100.0))
 
+  /** [[batchMetrics]]' row for an empty frame, from its schema alone (no
+    * Spark job): every count 0, the rate 0.0, the value sum null.
+    */
+  def emptyMetricsRow(df: DataFrame): Row = {
+    val schema = batchMetrics(df).schema
+    new GenericRowWithSchema(schema.fields.map { f =>
+      if (f.name == "validity_rate") 0.0
+      else if (f.dataType == LongType) 0L
+      else null
+    }, schema)
+  }
+
   /** The micro-batch variant: the SAME global metrics row PLUS the
     * per-validation-error counts out of ONE job — `rollup` carries both
     * grouping levels through a single shuffle (the grand-total row keeps
@@ -47,7 +61,7 @@ object Quality {
     * `grouping()` disambiguates the total row from the valid (null-error)
     * group. Returns (metrics row, error → count).
     */
-  def batchMetricsWithErrors(df: DataFrame): (org.apache.spark.sql.Row, Map[String, Long]) = {
+  def batchMetricsWithErrors(df: DataFrame): (Row, Map[String, Long]) = {
     val rows = df
       .rollup(col("validation_errors"))
       .agg(
@@ -70,10 +84,10 @@ object Quality {
             col("total_events").cast("double")) * 100.0))
       .collect()
     // rollup over an EMPTY frame emits zero rows (unlike a global agg) —
-    // fall back to the global-agg row so callers get total_events = 0
-    // instead of a NoSuchElementException
+    // fall back to the global agg's row for an empty frame, built without
+    // running it, so callers get total_events = 0 for this one job
     val total = rows.find(_.getAs[Int]("is_total") == 1)
-      .getOrElse(batchMetrics(df).collect()(0))
+      .getOrElse(emptyMetricsRow(df))
     val errors = rows.iterator
       .filter(r => r.getAs[Int]("is_total") == 0 && r.getAs[String]("validation_errors") != null)
       .map(r => r.getAs[String]("validation_errors") -> r.getAs[Long]("total_events"))

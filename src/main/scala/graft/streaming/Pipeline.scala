@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.ops.{Enrich, Quality, Validate}
 import graft.sink.{Sink, SinkColumns}
-import graft.util.{BatchMetrics, PipelineMonitor}
+import graft.util.{BatchMetrics, ParJobs, PipelineMonitor}
 
 /** The streaming pipeline: directory CSV stream → validate → enrich →
   * watermark+dedup → `foreachBatch` into a [[graft.sink.Sink]].
@@ -22,9 +22,13 @@ import graft.util.{BatchMetrics, PipelineMonitor}
   * bypass dedup so rejects stay observable.
   *
   * Scale notes: validation/enrichment are per-row expression pipelines
-  * (no shuffle); dedup is the only stateful op and its state is bounded by
-  * the watermark; the per-batch quality metrics are ONE aggregation job
-  * (`Quality.batchMetrics`), not the reference's N scans.
+  * (no shuffle); dedup is the only stateful op. Its state is NOT bounded by
+  * the watermark: `dropDuplicates("event_id")` has no event-time key, so
+  * no key is ever evicted (measured: about 25,700 state rows after 27
+  * files of 1,000 events); `dedupedValid(withinWatermark = true)` is the
+  * bounded variant. Each micro-batch executes its stream plan once: the quality
+  * metrics rollup (ONE aggregation job, not the reference's N scans) fills
+  * the batch cache that the sink appends then read.
   */
 object Pipeline {
 
@@ -62,7 +66,7 @@ object Pipeline {
     Enrich.enrichedAt(Validate.withValidation(parsed), now)
   }
 
-  /** The deduplicated valid branch: watermark bounds dedup state (D1+D2).
+  /** The deduplicated valid branch (D1+D2).
     *
     * `withinWatermark = true` uses Spark 4's
     * `dropDuplicatesWithinWatermark` — state for an event_id expires once
@@ -70,8 +74,9 @@ object Pipeline {
     * semantics when duplicates arrive close together (the reference's
     * at-least-once file source re-delivery) and keeps state strictly
     * bounded. The default mirrors the reference's documented
-    * `dropDuplicates` exactly: one state entry per key for as long as the
-    * key's event time is above the watermark.
+    * `dropDuplicates` exactly: one state entry per key, kept forever —
+    * the watermark column is not a dedup key, so the watermark evicts
+    * nothing and late rows are only dropped, not forgotten.
     */
   def dedupedValid(
       enriched: DataFrame,
@@ -87,27 +92,35 @@ object Pipeline {
   /** One micro-batch: quality metrics in one agg pass, valid/dead-letter
     * routing, pinned-column projection, three sink appends
     * (reference `write_to_postgres`, `:363-441`).
+    *
+    * The metrics rollup is the batch's single execution of the stream
+    * plan: it fills the cache, so the appends read cached rows and an
+    * empty batch (`total_events == 0`) costs that one job. The events and
+    * dead-letter appends are independent and run as concurrent jobs; the
+    * metrics row is appended only after both succeed.
     */
   def processBatch(
       batchDf: DataFrame,
       batchId: Long,
       sink: Sink,
       monitor: Option[PipelineMonitor] = None): Option[BatchMetrics] = {
-    if (batchDf.isEmpty) None
-    else {
-      val t0 = System.nanoTime()
-      val cached = batchDf.cache()
-      try {
-        // metrics + per-error counts in ONE job (rollup — see
-        // Quality.batchMetricsWithErrors); the reference ran ~10
-        val (m, errorCounts) = Quality.batchMetricsWithErrors(cached)
+    val t0 = System.nanoTime()
+    val cached = batchDf.cache()
+    try {
+      // metrics + per-error counts in ONE job (rollup — see
+      // Quality.batchMetricsWithErrors); the reference ran ~10
+      val (m, errorCounts) = Quality.batchMetricsWithErrors(cached)
+      val total = m.getAs[Long]("total_events")
+      if (total == 0) None
+      else {
         val valid = cached.filter(col("is_valid"))
         val dead = cached.filter(!col("is_valid"))
-        sink.append(SinkColumns.project(valid, SinkColumns.events), "ecommerce_events")
-        sink.append(SinkColumns.project(dead, SinkColumns.deadLetter), "dead_letter_events")
+        ParJobs.run(
+          () => sink.append(SinkColumns.project(valid, SinkColumns.events), "ecommerce_events"),
+          () => sink.append(SinkColumns.project(dead, SinkColumns.deadLetter), "dead_letter_events"))
         val metrics = BatchMetrics(
           batchId = batchId,
-          totalEvents = m.getAs[Long]("total_events"),
+          totalEvents = total,
           validEvents = m.getAs[Long]("valid_events"),
           invalidEvents = m.getAs[Long]("invalid_events"),
           processingTimeSec = (System.nanoTime() - t0) / 1e9,
@@ -122,8 +135,8 @@ object Pipeline {
           "data_quality_metrics")
         monitor.foreach(_.record(metrics))
         Some(metrics)
-      } finally cached.unpersist()
-    }
+      }
+    } finally cached.unpersist()
   }
 
   /** S6 — wire the full query: stream → transform → dedup → foreachBatch,

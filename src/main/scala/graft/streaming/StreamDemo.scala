@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sink.ParquetSink
-import graft.util.{ConsoleAlertHandler, PipelineMonitor}
+import graft.util.{ConsoleAlertHandler, PipelineMonitor, SessionTuning}
 
 /** Runnable end-to-end smoke of the streaming pipeline: generates CSV
   * micro-batches into a temp watched directory (atomic rename, like the
@@ -20,11 +20,11 @@ object StreamDemo {
     val nBatches = args.headOption.map(_.toInt).getOrElse(3)
     val rows = args.lift(1).map(_.toInt).getOrElse(100)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = SessionTuning.tuned(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

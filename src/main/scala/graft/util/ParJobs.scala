@@ -11,10 +11,11 @@ package graft.util
   * (the loops still await the whole index group before any routing
   * append starts, preserving the write-back-first replay discipline).
   *
-  * Failure: the first thrown exception propagates to the caller (the
-  * micro-batch fails and replays); concurrently-started siblings finish
-  * in the background, which is safe because every write here is already
-  * replay-idempotent by the loops' contract.
+  * Failure: once every task has finished, the first failure in argument
+  * order propagates to the caller (the micro-batch fails and replays).
+  * Waiting for the siblings keeps a caller's `finally` (say, unpersisting
+  * the batch cache the tasks read) from running under a job still in
+  * flight.
   */
 object ParJobs {
   def run(tasks: (() => Unit)*): Unit =
@@ -29,9 +30,8 @@ object ParJobs {
       // saturate the pool and serialize (or starve unrelated users of
       // the global EC). blocking tells the fork-join pool to grow past
       // its parallelism for the duration (ADVICE r13).
-      Await.result(
-        Future.sequence(tasks.map(t => Future(blocking(t()))).toVector),
-        Duration.Inf)
-      ()
+      val running = tasks.map(t => Future(blocking(t()))).toVector
+      running.foreach(Await.ready(_, Duration.Inf))
+      running.foreach(_.value.get.get)
     }
 }

@@ -2,8 +2,8 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Session tuning shared by the measurement mains (Bench / Verify /
-  * Explain / OptProf) — r18 optimization round.
+/** Session tuning shared by the mains that build a session (Bench /
+  * Verify / Explain / OptProf, the streaming demo and probes).
   *
   * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (Spark
   * default 1 MB) is AQE's floor on coalesced-partition size. With
@@ -35,12 +35,32 @@ import org.apache.spark.sql.SparkSession
   * tasks — best subset total of {16k, 64k, 128k, 256k, 1m}. The resolved
   * default stays env-overridable so a deployment with genuinely
   * byte-proportional work can restore the 1 MB floor without a rebuild.
+  *
+  * The `file:` scheme is [[ForkFreeLocalFs]] / [[ForkFreeLocalFileSystem]].
+  * Without libhadoop, Hadoop's local file system forks `chmod` on every
+  * create and mkdir and `readlink` on every FileContext rename, and a
+  * streaming checkpoint (offset log, commit log, state-store delta, each
+  * written to a temp file, renamed, and shadowed by a `.crc`) does both on
+  * every trigger. Measured with JFR `jdk.ProcessStart` over one
+  * `events_stream` benchmark run (27,000 events, 4-core VM): 4,512
+  * processes with Hadoop's classes (3,230 `readlink`, 1,253 `chmod`, 29
+  * Spark housekeeping), 42 with these (all Spark housekeeping: `rm -rf`
+  * clean-ups, one `getconf`, one `setsid`). `.crc` files, checksum
+  * verification and the fail-if-exists rename are unchanged: both are
+  * Hadoop's checksummed wrappers over a raw local file system that
+  * overrides only those two calls.
   */
 object SessionTuning {
   val MinCoalescedPartitionSize: String =
     sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "128k")
 
+  /** Hadoop keys that make `file:` the fork-free local file system. */
+  val LocalFileSystemConf: Map[String, String] = Map(
+    "fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName,
+    "fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName)
+
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      MinCoalescedPartitionSize)
+    LocalFileSystemConf.foldLeft(
+      b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+        MinCoalescedPartitionSize)) { case (acc, (k, v)) => acc.config(s"spark.hadoop.$k", v) }
 }

@@ -147,4 +147,13 @@ class ValidateEnrichSpec extends SparkSpec {
     assert(m.getAs[Long]("total_events") == 0)
     assert(errors.isEmpty)
   }
+
+  test("empty-frame metrics row equals batchMetrics' row on an empty frame") {
+    val empty = Enrich.enriched(Validate.withValidation(mkEvents(Seq.empty)))
+    val expected = Quality.batchMetrics(empty).collect()(0)
+    val zero = Quality.emptyMetricsRow(empty)
+    assert(zero.schema == expected.schema)
+    assert(zero == expected)
+    assert(Quality.batchMetricsWithErrors(empty)._1 == expected)
+  }
 }

@@ -113,6 +113,89 @@ class PipelineSpec extends SparkSpec {
     } finally out.stop()
   }
 
+  private val eventCols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
+
+  /** Job ids Spark started under job group `group` while `f` ran. A
+    * sentinel job in another group flushes the listener bus: its start
+    * event arrives after every event posted before it.
+    */
+  private def jobsInGroup(group: String)(f: => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val sentinel = s"$group-sentinel"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.add(e.jobId)
+          case `sentinel` => sentinelSeen.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.toSeq
+  }
+
+  test("a data batch evaluates its input once") {
+    val rows = Seq(
+      (1L, "2024-01-10 10:00:00", 7L, "view", 5.0, "{}"),
+      (2L, "2024-01-10 10:01:00", 8L, "bogus", 5.0, "{}"),
+      (3L, "2024-01-10 10:02:00", 9L, "purchase", 5.0, "{}"),
+      (4L, "2024-01-10 10:03:00", 9L, "click", 2.0, "{}"))
+    val input = Pipeline.transform(rows.toDF(eventCols: _*), anchor)
+    val evaluated = spark.sparkContext.longAccumulator("pipeline-spec-input-rows")
+    // an RDD-backed frame, like the one foreachBatch hands over: every
+    // action re-runs the map unless it reads the batch cache
+    val counted = spark.createDataFrame(
+      input.rdd.map { r => evaluated.add(1); r }, input.schema)
+    val sink = new InMemorySink
+    val m = Pipeline.processBatch(counted, 0L, sink)
+    assert(m.map(_.totalEvents).contains(rows.size.toLong))
+    assert(evaluated.value == rows.size)
+    assert(sink.rowCount("ecommerce_events") == 3)
+    assert(sink.rowCount("dead_letter_events") == 1)
+    assert(sink.rowCount("data_quality_metrics") == 1)
+  }
+
+  test("an empty batch runs exactly one job and writes nothing") {
+    val schema = Pipeline.transform(
+      Seq.empty[(Long, String, Long, String, Double, String)].toDF(eventCols: _*), anchor).schema
+    val empty = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq.empty[org.apache.spark.sql.Row], 4), schema)
+    val sink = new InMemorySink
+    var out = Option.empty[graft.util.BatchMetrics]
+    val jobs = jobsInGroup("pipeline-spec-empty-batch") {
+      out = Pipeline.processBatch(empty, 0L, sink)
+    }
+    assert(out.isEmpty)
+    assert(jobs.size == 1, s"jobs: $jobs")
+    assert(sink.tables.isEmpty)
+  }
+
+  test("a failed events append writes no quality-metrics row") {
+    val inner = new InMemorySink
+    val failing = new graft.sink.Sink {
+      override def append(df: org.apache.spark.sql.DataFrame, table: String): Unit =
+        if (table == "ecommerce_events") throw new IllegalStateException("events append failed")
+        else inner.append(df, table)
+    }
+    val input = Pipeline.transform(
+      Seq((1L, "2024-01-10 10:00:00", 7L, "view", 5.0, "{}"),
+        (2L, "2024-01-10 10:01:00", 8L, "bogus", 5.0, "{}")).toDF(eventCols: _*), anchor)
+    val e = intercept[IllegalStateException](Pipeline.processBatch(input, 0L, failing))
+    assert(e.getMessage == "events append failed")
+    assert(inner.rowCount("data_quality_metrics") == 0)
+  }
+
   test("empty batches are short-circuited") {
     val sink = new InMemorySink
     import spark.implicits._

@@ -162,6 +162,15 @@ class ServicesSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](graft.config.StreamingConfig(triggerSeconds = 0).validate())
   }
 
+  test("ParJobs rethrows the first failure only after every task has finished") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException](ParJobs.run(
+      () => throw new IllegalStateException("first"),
+      () => { Thread.sleep(300); siblingDone.set(true) }))
+    assert(e.getMessage == "first")
+    assert(siblingDone.get)
+  }
+
   test("config singleton is stable until reset") {
     GraftConfig.reset()
     val a = GraftConfig.get

@@ -261,8 +261,9 @@ object SparkEntry {
     "q67_incremental_hourly" -> ((s, dir) =>
       graft.ops.Incremental.incrementalHourly(enrichedV(s, dir),
         lit(graft.ops.Incremental.CutTs).cast("timestamp"))),
-    // distributed Lloyd's k-means in exact fixed point — trains the IVF
-    // coarse quantizer in-engine; the learned model itself is hash-checked
+    // Lloyd's k-means in exact fixed point — one job collects the capped
+    // training sample, the iterations run on the driver, the final
+    // assignment is distributed; the learned model itself is hash-checked
     "q68_kmeans_centroids" -> ((s, dir) =>
       graft.ops.KMeans.kmeansCentroids(Tables.embeddings(s, dir))),
     // the full ANN loop: k-means-trained quantizer routes the IVF search

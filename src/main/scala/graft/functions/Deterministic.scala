@@ -42,6 +42,4 @@ object Deterministic {
     */
   def dsumSql(expr: String): String =
     s"CAST(CAST(SUM(CAST(($expr) AS DECIMAL(22,6))) AS VARCHAR) AS DOUBLE)"
-  def davgSql(expr: String): String =
-    s"(${dsumSql(expr)} / COUNT($expr))"
 }

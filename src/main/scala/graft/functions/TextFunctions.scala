@@ -29,16 +29,6 @@ object TextFunctions {
     when(size(toks) >= n, array_distinct(grams)).otherwise(array().cast("array<string>"))
   }
 
-  /** Seeded portable hash: md5 over "seed|value", as hex. Identical in any
-    * engine with md5; ordering = lexicographic on hex.
-    */
-  def seededMd5(seed: Int, value: Column): Column =
-    md5(concat_ws("|", lit(seed), value))
-
-  /** The same as SQL text (DuckDB + Spark both accept this form). */
-  def seededMd5Sql(seed: Int, valueExpr: String): String =
-    s"md5(CAST($seed AS VARCHAR) || '|' || $valueExpr)"
-
   /** Hex char (1-based position p of a hex string) → 0..15 int. */
   def hexNibble(hexStr: Column, p: Int): Column =
     (instr(lit("0123456789abcdef"), substring(hexStr, p, 1)) - 1).cast("int")

@@ -111,7 +111,7 @@ object BPE {
     // the word itself), the standard vocabulary cut for corpus-scale BPE:
     // pair counts are dominated by frequent words, the long tail
     // contributes noise, and the cap makes per-merge cost independent of
-    // corpus size (the k-means TrainCap recipe — see KMeans.trainingSample).
+    // corpus size (the k-means recipe — see KMeans.TrainCap).
     // TakeOrderedAndProject bounds the cut; repartition spreads the kept
     // words before the iteration loop. Default 0 trains on the full
     // vocabulary — the oracle-mirrored q93/q94 behavior.

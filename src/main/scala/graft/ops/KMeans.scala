@@ -4,31 +4,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.LongArrayDot.dotLong
 
-/** Distributed Lloyd's k-means over the embedding corpus — the in-engine
-  * trainer for the IVF coarse quantizer ([[Similarity.ivfTopK]] routes by
-  * nearest centroid; this op is where those centroids come from, replacing
-  * the testdata's pre-assigned `label` column with learned cells).
+/** Lloyd's k-means over the embedding corpus — the in-engine trainer for
+  * the IVF coarse quantizer ([[Similarity.ivfTopK]] routes by nearest
+  * centroid; this op is where those centroids come from, replacing the
+  * testdata's pre-assigned `label` column with learned cells).
   *
-  * Built the way MLlib trains k-means, but engine-portable:
+  * Training runs on a bounded sample ([[TrainCap]] vectors): one Spark
+  * job collects it, then seeding and Lloyd's iterations run on the
+  * driver; only the final assignment is distributed:
   *  - Every per-vector computation is quantized to fixed point
   *    (`floor(x·1e6)` longs, the [[graft.functions.QuantizedDot]]
   *    convention) so distances are EXACT integers — no float-sum
   *    nondeterminism across partitionings or engines.
-  *  - Assignment = the k×Dim centroid table (the model — tiny by
-  *    definition) rides into a compiled per-partition argmin kernel
-  *    (`|x−c|² = x·x − 2x·c + c·c`, the x·x term precomputed once per
-  *    vector; ties to the smallest cluster id) — n·k·Dim fused integer
-  *    multiply-adds with NO n×k row materialization (r11; the r1–r10
-  *    broadcast-crossJoin + min(struct) aggregate computed the same
-  *    integers through an n×k-row shuffle-combine).
-  *  - Update = posexplode to (cluster, dim, q) cells and sum/count — also
-  *    map-side combinable; the k×Dim result collects to the driver (the
-  *    standard Lloyd's driver-sync; it is the model, not data).
+  *  - Assignment is one argmin loop ([[Centroids.nearest]]) over the k×Dim
+  *    centroid table (`|x−c|² = x·x − 2x·c + c·c`, the x·x term
+  *    precomputed once per vector; ties to the smallest cluster id). The
+  *    driver-side trainer and the compiled per-partition kernels
+  *    ([[assign]], [[assignTrainedCellsKernel]], [[PQ]]'s encoder, the
+  *    trained-IVF router) all run that loop — n·k·Dim fused integer
+  *    multiply-adds with NO n×k row materialization.
+  *  - Update = per-cluster, per-dimension sums and counts over the sample
+  *    (`Math.addExact`, so an overflow fails loudly as ANSI `sum` does).
   *  - Centroid means divide in double (`floor(sum/count)`): both sum
   *    (≤ n·1e6 < 2^53) and quotient are exactly representable/correctly
   *    rounded IEEE, so the floor is engine-identical.
   *  - Seeding is content-deterministic: the k vectors with the smallest
-  *    `md5("km|" ++ vec_id)` — a TakeOrdered top-k, no RNG state.
+  *    `md5("km|" ++ vec_id)` — the first k rows of the sample, no RNG state.
   *  - Empty clusters keep their previous centroid (documented, mirrored in
   *    the oracle) instead of vanishing.
   *
@@ -46,10 +47,13 @@ object KMeans {
     * hash-order the seeds come from, so seeds ⊂ sample by construction),
     * and only the FINAL assignment touches the full corpus — standard
     * bounded-sample quantizer training (FAISS practice recommends
-    * ~39–256 training points per centroid; 4096 is 512× k=8). Training
-    * cost is therefore independent of corpus size. At the verification
-    * volume (n ≤ cap) the sample IS the corpus, so the learned model —
-    * and every oracle hash downstream — is unchanged there.
+    * ~39–256 training points per centroid; 4096 is 512× k=8). One job
+    * collects the sample (≤ cap·dim longs) and the iterations run on the
+    * driver, so training costs one job per model and its per-iteration
+    * work, cap · min(k, cap) · dim multiply-adds, is independent of
+    * corpus size. At the verification volume (n ≤ cap) the sample IS the
+    * corpus, so the learned model — and every oracle hash downstream — is
+    * unchanged there.
     */
   val TrainCap = 4096
 
@@ -70,14 +74,50 @@ object KMeans {
       .withColumn("xx", dotLong(col("xq"), col("xq")))
       .cache()
 
-  private def seedCentroids(xq: DataFrame, k: Int): Array[(Int, Array[Long])] =
-    xq.select(col("vec_id"), col("xq"),
-        md5(concat(lit("km|"), col("vec_id").cast("string"))).as("h"))
-      .orderBy(col("h"), col("vec_id"))
-      .limit(k)
-      .collect()
-      .zipWithIndex
-      .map { case (r, i) => (i, r.getAs[scala.collection.Seq[Long]]("xq").toArray) }
+  /** A model laid out for the argmin loop: centroids in ascending
+    * cluster-id order, row-major in one flat k×dim array, with c·c
+    * precomputed per centroid. Positions index [[ids]]; serializable, so
+    * the per-partition kernels capture it whole.
+    */
+  private[ops] final class Centroids(
+      val ids: Array[Int], flat: Array[Long], cc: Array[Long], dim: Int)
+      extends Serializable {
+    val k: Int = ids.length
+
+    /** `|x−c|² = x·x − 2x·c + c·c` for the centroid at position `c`, with
+      * the vector read from `x(off until off + dim)`.
+      */
+    def dist(x: Array[Long], off: Int, xx: Long, c: Int): Long = {
+      var dot = 0L
+      val coff = c * dim
+      var d = 0
+      while (d < dim) { dot += x(off + d) * flat(coff + d); d += 1 }
+      xx - 2L * dot + cc(c)
+    }
+
+    /** Position of the nearest centroid. Strict < over ascending cluster
+      * ids == min(struct(dist, c)): equal distances keep the smaller id.
+      */
+    def nearest(x: Array[Long], off: Int, xx: Long): Int = {
+      var best = 0
+      var bestD = Long.MaxValue
+      var c = 0
+      while (c < k) {
+        val dd = dist(x, off, xx, c)
+        if (dd < bestD) { bestD = dd; best = c }
+        c += 1
+      }
+      best
+    }
+  }
+
+  private[ops] object Centroids {
+    def apply(model: Array[(Int, Array[Long])], dim: Int): Centroids = {
+      val ordered = model.sortBy(_._1)
+      new Centroids(ordered.map(_._1), ordered.flatMap(_._2),
+        ordered.map { case (_, cq) => cq.map(v => v * v).sum }, dim)
+    }
+  }
 
   /** Nearest-centroid assignment: (vec_id, cluster) — a compiled
     * per-partition argmin kernel. Replaces the r1–r10
@@ -93,52 +133,44 @@ object KMeans {
   private def assign(xq: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame = {
     val spark = xq.sparkSession
     import spark.implicits._
-    val ordered = cents.sortBy(_._1)
-    val ids = ordered.map(_._1)
-    val dim = ordered.head._2.length
-    val flat = ordered.flatMap(_._2) // k×dim, row-major — cache-friendly scan
-    val cc = ordered.map { case (_, cq) => cq.map(v => v * v).sum }
-    val k = ids.length
+    val model = Centroids(cents, cents.head._2.length)
     xq.select(col("vec_id"), col("xq"), col("xx"))
       .as[(Long, scala.collection.Seq[Long], Long)]
       .mapPartitions { it =>
         it.map { case (id, xqSeq, xx) =>
-          val x = xqSeq.toArray
-          var best = 0
-          var bestD = Long.MaxValue
-          var c = 0
-          while (c < k) {
-            var dot = 0L
-            val off = c * dim
-            var d = 0
-            while (d < dim) { dot += x(d) * flat(off + d); d += 1 }
-            val dist = xx - 2L * dot + cc(c)
-            // strict < over ascending cluster ids == min(struct(dist, c)):
-            // equal distances keep the smaller cluster id
-            if (dist < bestD) { bestD = dist; best = ids(c) }
-            c += 1
-          }
-          (id, best)
+          (id, model.ids(model.nearest(xqSeq.toArray, 0, xx)))
         }
       }.toDF("vec_id", "cluster")
   }
 
-  /** One Lloyd's update; clusters with no members keep `prev`'s centroid. */
-  private def updateCentroids(
-      xq: DataFrame, assigned: DataFrame,
-      prev: Array[(Int, Array[Long])], dim: Int = Dim): Array[(Int, Array[Long])] = {
-    val cells = assigned.join(xq, "vec_id")
-      .select(col("cluster"), posexplode(col("xq")).as(Seq("dim", "v")))
-      .groupBy("cluster", "dim")
-      .agg(sum("v").as("s"), count(lit(1)).as("n"))
-      .withColumn("cq", floor(col("s").cast("double") / col("n")).cast("long"))
-      .collect()
-    val byCluster = cells.groupBy(_.getAs[Int]("cluster")).map { case (c, rows) =>
-      val arr = new Array[Long](dim)
-      rows.foreach(r => arr(r.getAs[Int]("dim")) = r.getAs[Long]("cq"))
-      c -> arr
+  /** One Lloyd's iteration over the driver-side sample (vectors
+    * row-major in `xs`, x·x in `xx`): assign every vector, then move each
+    * centroid to `floor(sum / count)` of its members; a cluster with no
+    * members keeps its centroid. `cents` holds ids 0 until k in order, so
+    * a centroid's position is its cluster id.
+    */
+  private def lloydStep(
+      xs: Array[Long], xx: Array[Long], dim: Int,
+      cents: Array[(Int, Array[Long])]): Array[(Int, Array[Long])] = {
+    val model = Centroids(cents, dim)
+    val sums = new Array[Long](cents.length * dim)
+    val counts = new Array[Long](cents.length)
+    var i = 0
+    while (i < xx.length) {
+      val c = model.nearest(xs, i * dim, xx(i))
+      counts(c) += 1
+      var d = 0
+      while (d < dim) {
+        sums(c * dim + d) = Math.addExact(sums(c * dim + d), xs(i * dim + d))
+        d += 1
+      }
+      i += 1
     }
-    prev.map { case (c, old) => (c, byCluster.getOrElse(c, old)) }
+    cents.zipWithIndex.map { case ((id, old), c) =>
+      if (counts(c) == 0) (id, old)
+      else (id, Array.tabulate(dim)(d =>
+        math.floor(sums(c * dim + d).toDouble / counts(c).toDouble).toLong))
+    }
   }
 
   /** Session-scoped trained-model memo, keyed by the CANONICALIZED logical
@@ -165,30 +197,28 @@ object KMeans {
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int, Int),
     Array[(Int, Array[Long])]]()
 
-  /** The md5-prefix training sample: first [[TrainCap]] vectors in the
-    * seed hash order, eagerly materialized (localCheckpoint) so every
-    * Lloyd's pass reads ~cap·dim longs of local blocks instead of
-    * re-running the TakeOrdered; repartitioned back out because the
-    * top-cap collapses to one partition.
+  /** One job collects the training sample — the first [[TrainCap]] valid
+    * vectors in seed-hash order, as fixed-point longs and x·x — then
+    * seeding (its first k rows) and `iters` Lloyd's iterations run on the
+    * driver. The quantization and x·x are the [[corpus]] columns, so the
+    * model is the one a distributed Lloyd's over the same sample learns.
     */
-  private def trainingSample(xq: DataFrame): DataFrame =
-    xq.select(col("vec_id"), col("xq"), col("xx"),
-        md5(concat(lit("km|"), col("vec_id").cast("string"))).as("h"))
-      .orderBy(col("h"), col("vec_id"))
-      .limit(TrainCap)
-      .drop("h")
-      .repartition(col("vec_id"))
-      .localCheckpoint()
-
   private def trainModel(
       embeddings: DataFrame, k: Int, iters: Int,
       dim: Int = Dim): Array[(Int, Array[Long])] = {
-    val xq = corpus(embeddings, dim)
-    val sample = trainingSample(xq)
-    xq.unpersist() // one pass built the sample; iterations read its blocks
-    var cents = seedCentroids(sample, k)
-    for (_ <- 0 until iters)
-      cents = updateCentroids(sample, assign(sample, cents), cents, dim)
+    val rows = embeddings
+      .filter(col("embedding").isNotNull && size(col("embedding")) === dim)
+      .select(col("vec_id"), quantize(col("embedding")).as("xq"))
+      .withColumn("xx", dotLong(col("xq"), col("xq")))
+      .orderBy(md5(concat(lit("km|"), col("vec_id").cast("string"))), col("vec_id"))
+      .limit(TrainCap)
+      .collect()
+    val xs = rows.flatMap(_.getSeq[Long](1))
+    val xx = rows.map(_.getLong(2))
+    var cents = rows.take(k).zipWithIndex.map { case (r, i) =>
+      (i, r.getSeq[Long](1).toArray)
+    }
+    for (_ <- 0 until iters) cents = lloydStep(xs, xx, dim, cents)
     cents
   }
 
@@ -198,8 +228,7 @@ object KMeans {
     */
   def kmeansCentroids(
       embeddings: DataFrame, k: Int = K, iters: Int = Iters): DataFrame = {
-    val cents = trainedModel(embeddings, k, iters) // before corpus(): on a
-    // cache miss trainModel unpersists its own corpus cache when done
+    val cents = trainedModel(embeddings, k, iters)
     val xq = corpus(embeddings)
     // materialize the k-row size relation NOW (localCheckpoint is eager)
     // while the corpus cache is hot, so unpersisting xq below cannot force
@@ -325,11 +354,7 @@ object KMeans {
       case t => throw new IllegalArgumentException(
         s"assignTrainedCellsKernel: $embCol has unsupported type $t")
     }
-    val ordered = model.sortBy(_._1)
-    val ids = ordered.map(_._1)
-    val flat = ordered.flatMap(_._2)
-    val cc = ordered.map { case (_, cq) => cq.map(v => v * v).sum }
-    val k = ids.length
+    val cents = Centroids(model, dim)
     filtered.mapPartitions { it =>
       val x = new Array[Long](dim)
       it.map { row =>
@@ -343,22 +368,12 @@ object KMeans {
           val q = math.floor(v * 1e6).toLong
           x(d) = q; xx += q * q; d += 1
         }
-        var best = 0
-        var bestD = Long.MaxValue
-        var c = 0
-        while (c < k) {
-          var dot = 0L
-          val off = c * dim
-          var i = 0
-          while (i < dim) { dot += x(i) * flat(off + i); i += 1 }
-          val dist = xx - 2L * dot + cc(c)
-          if (dist < bestD) { bestD = dist; best = ids(c) }
-          c += 1
-        }
-        // Seq[Any] — plain Seq(best, bestD) would numeric-widen the Int
+        val c = cents.nearest(x, 0, xx)
+        // Seq[Any] — plain Seq(cell, dist) would numeric-widen the Int
         // cell to Long and break the row encoder's INT field
         Row.fromSeq(row.toSeq ++
-          (if (withDist) Seq[Any](best, bestD) else Seq[Any](best)))
+          (if (withDist) Seq[Any](cents.ids(c), cents.dist(x, 0, xx, c))
+          else Seq[Any](cents.ids(c))))
       }
     }(Encoders.row(schema))
   }
@@ -489,13 +504,15 @@ object KMeans {
       embeddings: DataFrame, k: Int = K, iters: Int = Iters,
       tau: Double = Similarity.CosineThreshold): DataFrame = {
     val model = trainedModel(embeddings, k, iters)
-    // eager-materialize (id, emb, cell, dist): three consumers below (two
-    // join sides + the surviving anti-join) read blocks, not the pipeline
+    // cache (id, emb, cell, dist): three consumers below (two join sides
+    // + the surviving anti-join) read blocks, not the pipeline. A cache,
+    // not a checkpoint: after the free below a second action recomputes
+    // from lineage, which a checkpoint's truncated lineage cannot
     val cells = assignTrainedCells(
         embeddings.select(col("vec_id"), col("embedding")), model,
         withDist = true)
       .select(col("vec_id"), col("embedding"), col("cell"), col("cent_dist"))
-      .localCheckpoint()
+      .cache()
     val a = cells.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
       col("cell"), col("cent_dist").as("dist_a"))
     val b = cells.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"),
@@ -506,7 +523,7 @@ object KMeans {
         (col("dist_b") > col("dist_a") ||
           (col("dist_b") === col("dist_a") && col("id_b") < col("id_a"))))
       .select(col("id_a")).distinct()
-    // checkpointed cell relation freed after the caller's action (r19 §5)
+    // cell relation cache freed after the caller's action (r19 §5)
     graft.util.CacheScope.freeAfterUse(
       cells.join(dominated, col("vec_id") === col("id_a"), "left_anti")
         .select(col("vec_id"), col("cell"), col("cent_dist"))
@@ -610,8 +627,8 @@ object KMeans {
     * filtering is decided on the whole embedding, so every subspace
     * includes exactly the same vectors). Training iterations run over the
     * `xs` md5-prefix sample (first [[TrainCap]] vectors in seed-hash
-    * order, the engine's [[trainingSample]]); `afinal` assigns the FULL
-    * corpus through the trained centroids.
+    * order, the sample the engine's trainer collects); `afinal` assigns
+    * the FULL corpus through the trained centroids.
     */
   def kmeansCtesSql(
       k: Int = K, iters: Int = Iters, dim: Int = Dim,
@@ -697,35 +714,17 @@ object KMeans {
       embeddings: DataFrame, topK: Int = 3, k: Int = K, iters: Int = Iters): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val cents = trainedModel(embeddings, k, iters)
-    val ordered = cents.sortBy(_._1)
-    val ids = ordered.map(_._1)
     val dim = Dim
-    val flat = ordered.flatMap(_._2)
-    val cc = ordered.map { case (_, cq) => cq.map(v => v * v).sum }
-    val nk = ids.length
+    val cents = Centroids(trainedModel(embeddings, k, iters), dim)
     val assigned = embeddings
       .filter(col("embedding").isNotNull && size(col("embedding")) === dim)
       .repartition(col("vec_id"))
       .select(col("vec_id"), quantize(col("embedding")).as("xq"))
       .as[(Long, scala.collection.Seq[Long])]
       .map { case (id, xqSeq) =>
-        val x = xqSeq.toArray
-        // argmin of (cc − 2·dot): xx is constant per row, so dropping it
+        // argmin of (cc − 2·dot): xx is constant per row, so passing 0
         // changes no comparison — same cell, same ties, as [[assign]]
-        var best = 0
-        var bestD = Long.MaxValue
-        var c = 0
-        while (c < nk) {
-          var dot = 0L
-          val off = c * dim
-          var d = 0
-          while (d < dim) { dot += x(d) * flat(off + d); d += 1 }
-          val score = cc(c) - 2L * dot
-          if (score < bestD) { bestD = score; best = ids(c) }
-          c += 1
-        }
-        (best, id, xqSeq)
+        (cents.ids(cents.nearest(xqSeq.toArray, 0, 0L)), id, xqSeq)
       }
     assigned.groupByKey(_._1)
       .flatMapGroups { (_, it) =>
@@ -776,10 +775,6 @@ object KMeans {
       .toDF("query_id", "neighbor_id", "cosine", "rank")
       .orderBy("query_id", "rank")
   }
-
-  def ivfTopKTrainedSql(
-      topK: Int = 3, k: Int = K, iters: Int = Iters, dim: Int = Dim): String =
-    trainedSearchSql(kmeansCtesSql(k, iters, dim), topK)
 
   /** Adaptive centroid count for corpus-scaling trained-IVF search: the
     * smallest power-of-two k with K·k² ≥ n, i.e. k ≈ √(n/K) — so the

@@ -1461,29 +1461,6 @@ object NearDup {
        |ORDER BY contained, container""".stripMargin
   }
 
-  def ngramJaccardPairsCappedSql(
-      n: Int = 3, minJaccard: Double = 0.5, maxDf: Int = 100): String = {
-    val gram = (0 until n).map(i => s"toks[i+$i]").mkString(" || ' ' || ")
-    s"""WITH sh AS (
-       |  SELECT doc_id,
-       |    CASE WHEN len(toks) >= $n
-       |      THEN list_distinct(list_transform(generate_series(1, len(toks)-${n - 1}), i -> $gram))
-       |      ELSE [] END AS shingles
-       |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS toks FROM documents)),
-       |ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE len(shingles) > 0),
-       |rare AS (SELECT shingle FROM ex GROUP BY shingle HAVING count(*) <= $maxDf),
-       |exc AS (SELECT e.doc_id, e.shingle FROM ex e JOIN rare r ON e.shingle = r.shingle),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM exc a JOIN exc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id)
-       |SELECT doc_a, doc_b, jaccard FROM (
-       |  SELECT c.doc_a, c.doc_b,
-       |    CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-       |      / len(list_distinct(x.shingles || y.shingles)) AS jaccard
-       |  FROM cand c JOIN sh x ON c.doc_a = x.doc_id JOIN sh y ON c.doc_b = y.doc_id)
-       |WHERE jaccard >= $minJaccard ORDER BY doc_a, doc_b""".stripMargin
-  }
-
   def dfCapStatsSql(
       n: Int = 3, maxDf: Int = 100, fanoutBudget: Int = 100): String = {
     val gram = (0 until n).map(i => s"toks[i+$i]").mkString(" || ' ' || ")

@@ -63,7 +63,9 @@ object PQ {
 
   /** Per-subspace trained codebooks (memoized through [[KMeans
     * .trainedModel]]'s session registry, so codebooks/encode/search share
-    * one training per subspace).
+    * one training per subspace). Each codebook trains on the driver from
+    * one collected sample of at most [[KMeans.TrainCap]] sliced vectors:
+    * one Spark job per subspace on a memo miss.
     */
   def models(
       embeddings: DataFrame, m: Int = M, codes: Int = Codes,
@@ -191,11 +193,8 @@ object PQ {
     }
     val schema = StructType(filtered.schema.fields(0) +:
       (0 until m).map(s => StructField(s"code_$s", IntegerType, nullable = false)))
-    val subModels = mods.sortBy(_._1).map { case (_, model) =>
-      val ordered = model.sortBy(_._1)
-      (ordered.map(_._1), ordered.flatMap(_._2),
-        ordered.map { case (_, cq) => cq.map(v => v * v).sum })
-    }.toArray
+    val subModels = mods.sortBy(_._1)
+      .map { case (_, model) => KMeans.Centroids(model, subDim) }.toArray
     filtered.mapPartitions { it =>
       val x = new Array[Long](dim)
       it.map { row =>
@@ -212,25 +211,12 @@ object PQ {
         out(0) = row.get(0)
         var s = 0
         while (s < m) {
-          val (ids, flat, cc) = subModels(s)
+          val cents = subModels(s)
           val off0 = s * subDim
           var xx = 0L
           var i = 0
           while (i < subDim) { val q = x(off0 + i); xx += q * q; i += 1 }
-          var best = 0
-          var bestD = Long.MaxValue
-          var c = 0
-          val k = ids.length
-          while (c < k) {
-            var dot = 0L
-            val coff = c * subDim
-            var j = 0
-            while (j < subDim) { dot += x(off0 + j) * flat(coff + j); j += 1 }
-            val dist = xx - 2L * dot + cc(c)
-            if (dist < bestD) { bestD = dist; best = ids(c) }
-            c += 1
-          }
-          out(1 + s) = best
+          out(1 + s) = cents.ids(cents.nearest(x, off0, xx))
           s += 1
         }
         Row.fromSeq(out.toIndexedSeq)

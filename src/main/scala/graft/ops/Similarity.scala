@@ -1102,46 +1102,6 @@ object Similarity {
     }
   }
 
-  def ivfTopKSql(k: Int = 3, nprobe: Int = 1, subPlanes: Int = 0): String = {
-    val cellExpr =
-      if (subPlanes <= 0) "c.clabel"
-      else {
-        val bits = planeSignsFor(subPlanes).map { signs =>
-          val arr = signs.mkString("[", ",", "]")
-          val d = graft.functions.QuantizedDot.dotq6Sql("q.embedding", arr)
-          s"(CASE WHEN $d >= 0 THEN '1' ELSE '0' END)"
-        }.mkString(" || ")
-        s"CAST(c.clabel AS VARCHAR) || '|' || $bits"
-      }
-    s"""WITH q AS (
-       |  SELECT vec_id, embedding,
-       |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT)) AS qv
-       |  FROM embeddings),
-       |cend AS (
-       |  SELECT label AS clabel, i AS pos, SUM(qv[i]) AS s, COUNT(*) AS n
-       |  FROM (SELECT e.label, q.qv FROM embeddings e JOIN q ON e.vec_id = q.vec_id),
-       |    unnest(generate_series(1, len(qv))) AS t(i)
-       |  GROUP BY 1, 2),
-       |cen AS (SELECT clabel, list(s ORDER BY pos) AS cs, any_value(n) AS n FROM cend GROUP BY clabel),
-       |assigned AS (
-       |  SELECT vec_id, cell, rn FROM (
-       |    SELECT q.vec_id, $cellExpr AS cell,
-       |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |        (CAST(list_sum(list_transform(list_zip(q.qv, c.cs), x -> x[1]*x[2])) AS DOUBLE) / c.n) DESC,
-       |        c.clabel) AS rn
-       |    FROM q, cen c) WHERE rn <= $nprobe),
-       |wc_q AS (SELECT q.vec_id, q.embedding, a.cell FROM q JOIN assigned a ON q.vec_id = a.vec_id),
-       |wc_c AS (SELECT q.vec_id, q.embedding, a.cell FROM q JOIN assigned a
-       |  ON q.vec_id = a.vec_id AND a.rn = 1)
-       |SELECT query_id, neighbor_id, cosine, rank FROM (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |    ${dotSql("a.embedding", "b.embedding")} AS cosine,
-       |    CAST(row_number() OVER (PARTITION BY a.vec_id
-       |      ORDER BY ${dotSql("a.embedding", "b.embedding")} DESC, b.vec_id) AS INT) AS rank
-       |  FROM wc_q a JOIN wc_c b ON a.cell = b.cell AND a.vec_id <> b.vec_id)
-       |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
-  }
-
   def lshBucketedTopKSql(k: Int = 3): String = {
     val bitExprs = planeSigns.map { signs =>
       val arr = signs.mkString("[", ",", "]")

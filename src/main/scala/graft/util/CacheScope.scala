@@ -36,6 +36,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - checkpoint-aware: handles that are `localCheckpoint`ed rather than
   *    cached are freed through [[Checkpoints.free]] (block-level RDD
   *    unpersist) — `Dataset.unpersist` alone would be a no-op for them.
+  *    Only the handle's own checkpoint is freed, never a `LogicalRDD`
+  *    inside its plan (the caller's input). A freed checkpoint cannot be
+  *    recomputed, so a relation the result re-reads on a second action
+  *    must be a cache, not a checkpoint.
   */
 object CacheScope {
   // NOTE (r19, measured then rejected): an eager cache-materializing

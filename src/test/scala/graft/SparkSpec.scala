@@ -8,6 +8,36 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // session is shared across suites
+
+  /** Job ids Spark started under job group `group` while `f` ran. A
+    * sentinel job in another group flushes the listener bus: its start
+    * event arrives after every event posted before it.
+    */
+  def jobsInGroup(group: String)(f: => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val sentinel = s"$group-sentinel"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.add(e.jobId)
+          case `sentinel` => sentinelSeen.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.toSeq
+  }
 }
 
 object SparkSpec {

@@ -80,6 +80,36 @@ class CacheScopeSpec extends SparkSpec {
     assertEventuallyFreed(before, "embeddingNearDups")
   }
 
+  test("semantic dedup answers a second action after its free") {
+    // 64-dim vectors in two tight groups (semanticDedup trains at Dim)
+    val df = (0 until 12).map { i =>
+      val v = Array.fill(KMeans.Dim)(0.0f)
+      v(i % 2) = 1.0f
+      v(2 + i % 5) = 0.01f * i
+      (i.toLong, v.toSeq)
+    }.toDF("vec_id", "embedding")
+    KMeans.trainedModel(df, k = 2, iters = 2) // memoized outside the window
+    spark.catalog.clearCache()
+    val before = pinned()
+    val kept = KMeans.semanticDedup(df, k = 2, iters = 2, tau = 0.9)
+    val first = kept.count()
+    assertEventuallyFreed(before, "semanticDedup")
+    assert(kept.count() == first)
+  }
+
+  test("a library free leaves the caller's checkpointed input readable") {
+    spark.catalog.clearCache()
+    val ckDocs = docs.localCheckpoint()
+    val ckRdd = ckDocs.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+    val before = pinned()
+    assert(NearDup.ngramJaccardPairsCapped(ckDocs, n = 2).count() >= 0)
+    assertEventuallyFreed(before, "ngramJaccardPairsCapped")
+    assert(spark.sparkContext.getPersistentRDDs.contains(ckRdd),
+      "the caller's checkpoint was unpersisted by the library's free")
+    assert(ckDocs.count() == 5)
+  }
+
   test("a second action on the same freed DataFrame still computes the " +
     "identical result (unpersist drops blocks, not semantics)") {
     val df = TextAnalysis.winnowingOverlap(docs, k = 2, w = 2)

@@ -115,36 +115,6 @@ class PipelineSpec extends SparkSpec {
 
   private val eventCols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
 
-  /** Job ids Spark started under job group `group` while `f` ran. A
-    * sentinel job in another group flushes the listener bus: its start
-    * event arrives after every event posted before it.
-    */
-  private def jobsInGroup(group: String)(f: => Unit): Seq[Int] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val sentinel = s"$group-sentinel"
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.add(e.jobId)
-          case `sentinel` => sentinelSeen.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    jobs.asScala.toSeq
-  }
-
   test("a data batch evaluates its input once") {
     val rows = Seq(
       (1L, "2024-01-10 10:00:00", 7L, "view", 5.0, "{}"),

@@ -131,7 +131,8 @@ object SparkEntry {
     // nprobe DERIVED from measured tune-sample recall, r14 — the r13
     // hard-coded nprobe=1 graded mean recall 0.3 at the iid regime) —
     // cells composite-split so their COUNT scales with the corpus
-    // (per-cell work flat; the r6-measured superlinearity fix)
+    // (per-cell work flat; the r6-measured superlinearity fix); each cell
+    // is served by one top-k kernel, never a candidate-pair join + window
     "q36_ann_ivf_topk" -> ((s, dir) => Similarity.ivfTopKAdaptive(Tables.embeddings(s, dir))),
     // the curation endpoint: near-dup connected components → keep-list
     "q37_dedup_keeplist" -> ((s, dir) => NearDup.dedupKeepList(Tables.documents(s, dir))),
@@ -171,7 +172,7 @@ object SparkEntry {
       graft.streaming.WindowedAggs.slidingActivityExact(ev(s, dir))
         .orderBy("window_start")),
     // IVF with multi-cell probing (nprobe=2) — the standard recall/cost
-    // dial; same equi-join plan shape as q36, candidates scale with nprobe
+    // dial; same per-cell search kernel as q36, dots scale with nprobe
     "q44_ann_ivf_nprobe" -> ((s, dir) =>
       Similarity.ivfTopKAdaptive(Tables.embeddings(s, dir), nprobe = 2)),
     // TPC-H Q5 shape: two dimension paths meet at the fact (local-supplier
@@ -267,8 +268,8 @@ object SparkEntry {
     "q68_kmeans_centroids" -> ((s, dir) =>
       graft.ops.KMeans.kmeansCentroids(Tables.embeddings(s, dir))),
     // the full ANN loop: k-means-trained quantizer routes the IVF search
-    // (q36's plan shape with LEARNED cells instead of the label column);
-    // centroid count k ∝ √n so search join and assignment balance at n^1.5
+    // (q36's per-cell search kernel with LEARNED cells instead of the label
+    // column); centroid count k ∝ √n so search and assignment balance at n^1.5
     "q69_ann_ivf_trained" -> ((s, dir) =>
       graft.ops.KMeans.ivfTopKTrainedAdaptive(Tables.embeddings(s, dir))),
     // the stream-stream interval join, batch-run (watermarks are no-ops):
@@ -543,7 +544,7 @@ object SparkEntry {
     // cells at the verification corpus): sub-buckets scatter iid
     // neighbors, so the derivation measures whether ANY nprobe meets the
     // recall bar here and, if not, degrades to exact probe-all-cells in
-    // the same plan shape — this row pins that decision cross-engine
+    // the same search kernel — this row pins that decision cross-engine
     "q121_ann_ivf_derived_subbucket" -> ((s, dir) =>
       Similarity.ivfTopKAdaptive(Tables.embeddings(s, dir), budget = 125L)),
     // the PQ refine-floor calibration (r14): every tune-sample true

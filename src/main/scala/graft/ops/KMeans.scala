@@ -258,7 +258,7 @@ object KMeans {
     val cents = trainedModel(embeddings, k, iters)
     val xq = corpus(embeddings)
     // eager-materialize the final (vec_id, cluster) relation, then release
-    // the quantized-corpus cache: callers (q69's two-sided search join)
+    // the quantized-corpus cache: callers joining the assignment
     // re-read checkpoint blocks instead of pinning the corpus in storage
     val out = assign(xq, cents).localCheckpoint()
     xq.unpersist()
@@ -457,31 +457,17 @@ object KMeans {
 
   /** nprobe-probed trained-IVF top-k: each query probes its `nprobe`
     * nearest TRAINED cells; corpus vectors live in their single home
-    * cell. [[Similarity.ivfTopK]]'s equi-join plan with the learned
-    * router — candidates ≈ nprobe·n/k per query side, against
-    * [[ivfTopKTrained]]'s home-cell-only kernel (nprobe = 1).
+    * cell. [[Similarity.ivfTopKFromRanked]] over the trained ranking —
+    * the same per-cell [[Similarity.cellTopK]] kernel as the label-cell
+    * IVF, with the learned router; dots ≈ nprobe·n/k per query.
     */
   def ivfTopKTrainedProbed(
       embeddings: DataFrame, topK: Int = 3, nprobe: Int = 1,
       k: Int = K, iters: Int = Iters): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ranked = trainedCellsRanked(embeddings, nprobe, k, iters).cache()
-    val emb = embeddings.select(col("vec_id"), col("embedding"))
-    val a = emb.join(ranked, "vec_id")
-      .toDF("query_id", "query_emb", "cell_a", "cell_rank")
-    val b = emb.join(ranked.filter(col("cell_rank") === 1), "vec_id")
-      .toDF("neighbor_id", "emb_b", "cell_b", "crb")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
     // ranked-assignment cache freed after the caller's action (r19 §5)
     graft.util.CacheScope.freeAfterUse(
-      a.join(b, col("cell_a") === col("cell_b") && col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          Similarity.dot(col("query_emb"), col("emb_b")).as("cosine"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= topK)
-        .orderBy("query_id", "rank"),
-      Seq(ranked))
+      Similarity.ivfTopKFromRanked(embeddings, ranked, topK), Seq(ranked))
   }
 
   /** Semantic deduplication over the trained cells — the SemDeDup recipe
@@ -597,7 +583,7 @@ object KMeans {
     * on the static corpus, cell-index the corpus once, then assign each
     * incoming probe its nearest trained cell per-row and stream-static
     * equi-join on the cell — the full train → index → serve loop (q69's
-    * batch search shape, with the probe side unbounded). Append-safe: the
+    * in-cell search, with the probe side unbounded). Append-safe: the
     * only stateful op is the join against a static side.
     */
   def streamingTrainedServe(
@@ -688,97 +674,45 @@ object KMeans {
 
   /** IVF top-k search routed by the TRAINED quantizer — the full
     * train → index → search loop ([[Similarity.ivfTopK]] with learned
-    * cells instead of the testdata's pre-assigned `label`).
+    * cells instead of the testdata's pre-assigned `label`): every vector
+    * searches its home cell only — [[ivfTopKTrainedProbed]]'s result at
+    * nprobe = 1, served without a ranked assignment to cache or join: the
+    * compiled argmin ([[assignTrainedCellsKernel]]) routes each vector,
+    * and the salt rule reads the corpus size and the model's cell count.
     *
-    * Execution (r11): ONE shuffle of the n quantized vectors keyed on
-    * their trained cell, then a per-cell compiled top-k kernel
-    * (`groupByKey(cell).flatMapGroups`) that scans each cell's members
-    * in a tight integer loop and emits only n·topK result rows. The
-    * r1–r10 plan joined the corpus with itself on the cell and ranked
-    * with a window — semantically identical, but it MATERIALIZED the
-    * Σ cell² candidate relation (625 M rows at the 200× probe) through a
-    * join + window exchange, which cost ~110 s where the underlying
-    * arithmetic is ~2 s of fused multiply-adds. The kernel keeps the
-    * candidate volume as COMPUTE (Σ cell² quantized dots, the n^1.5
-    * contract under [[adaptiveK]]) without ever shuffling it as rows.
-    * Exactness is bitwise: floor(x·1e6) quantization, dot/1e12 cosine
-    * (the [[graft.functions.QuantizedDot]] convention), ties to the
-    * smaller neighbor_id — the q69 oracle hash is unchanged.
-    *
-    * Memory: one cell's members are held per group (n_c·Dim longs); the
-    * [[adaptiveK]] sizing keeps n_c ≈ √(K·n) — ~50 MB at a 10⁹-vector
-    * corpus — and a pathologically skewed cell indicates the quantizer,
-    * not the search, needs retraining.
+    * Execution: one shuffle of the n vectors keyed on their trained cell
+    * (and salt, when the cells under-fill the session), then the
+    * per-cell [[Similarity.cellTopK]] kernel, which keeps each cell's
+    * Σ cell² quantized dots as COMPUTE and emits only n·topK rows — with
+    * one cell per query its in-cell ranks are final, so there is no rank
+    * window (materializing the Σ cell² candidate relation through a join
+    * and a window cost ~110 s at the 200× probe, where the arithmetic is
+    * ~2 s). Exactness is bitwise: floor(x·1e6) quantization, dot/1e12
+    * cosine, ties to the smaller neighbor_id — the q69 oracle hash is
+    * unchanged. Memory: one cell's members as `long[]`s; the
+    * [[adaptiveK]] sizing keeps a cell at ≈ √(K·n) vectors.
     */
   def ivfTopKTrained(
-      embeddings: DataFrame, topK: Int = 3, k: Int = K, iters: Int = Iters): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val dim = Dim
-    val cents = Centroids(trainedModel(embeddings, k, iters), dim)
-    val assigned = embeddings
-      .filter(col("embedding").isNotNull && size(col("embedding")) === dim)
-      .repartition(col("vec_id"))
-      .select(col("vec_id"), quantize(col("embedding")).as("xq"))
-      .as[(Long, scala.collection.Seq[Long])]
-      .map { case (id, xqSeq) =>
-        // argmin of (cc − 2·dot): xx is constant per row, so passing 0
-        // changes no comparison — same cell, same ties, as [[assign]]
-        (cents.ids(cents.nearest(xqSeq.toArray, 0, 0L)), id, xqSeq)
-      }
-    assigned.groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val members = it.toArray
-        val n = members.length
-        val mids = members.map(_._2)
-        val xs = members.map(_._3.toArray)
-        val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double, Int)]()
-        var i = 0
-        while (i < n) {
-          // bounded top-k insertion by (dot desc, neighbor_id asc)
-          val bd = new Array[Long](topK)
-          val bid = new Array[Long](topK)
-          var filled = 0
-          var j = 0
-          while (j < n) {
-            if (j != i) {
-              var dot = 0L
-              val xi = xs(i)
-              val xj = xs(j)
-              var d = 0
-              while (d < dim) { dot += xi(d) * xj(d); d += 1 }
-              val id = mids(j)
-              // insert if better than the current worst
-              if (filled < topK || dot > bd(filled - 1) ||
-                  (dot == bd(filled - 1) && id < bid(filled - 1))) {
-                var p = if (filled < topK) filled else topK - 1
-                while (p > 0 && (bd(p - 1) < dot ||
-                    (bd(p - 1) == dot && bid(p - 1) > id))) {
-                  bd(p) = bd(p - 1); bid(p) = bid(p - 1); p -= 1
-                }
-                bd(p) = dot
-                bid(p) = id
-                if (filled < topK) filled += 1
-              }
-            }
-            j += 1
-          }
-          var r = 0
-          while (r < filled) {
-            out += ((mids(i), bid(r), bd(r).toDouble / 1e12, r + 1))
-            r += 1
-          }
-          i += 1
-        }
-        out.iterator
-      }
-      .toDF("query_id", "neighbor_id", "cosine", "rank")
-      .orderBy("query_id", "rank")
+      embeddings: DataFrame, topK: Int = 3, k: Int = K, iters: Int = Iters): DataFrame =
+    trainedSearch(embeddings, topK, k, iters, embeddings.count())
+
+  /** [[ivfTopKTrained]] over a corpus of `n` vectors: every vector is one
+    * home row of one of the model's cells, so the salt rule needs only n
+    * and the cell count, not a pass over the assignment.
+    */
+  private def trainedSearch(
+      embeddings: DataFrame, topK: Int, k: Int, iters: Int, n: Long): DataFrame = {
+    val model = trainedModel(embeddings, k, iters)
+    val cells = assignTrainedCellsKernel(embeddings.select(col("vec_id"), col("embedding")),
+        model, "embedding", withDist = false, Dim)
+      .withColumn("cell_rank", lit(1))
+    Similarity.cellTopK(cells, topK,
+      Similarity.saltsFor(embeddings.sparkSession, n, n, model.length), 1)
   }
 
   /** Adaptive centroid count for corpus-scaling trained-IVF search: the
     * smallest power-of-two k with K·k² ≥ n, i.e. k ≈ √(n/K) — so the
-    * in-cell search join (n²/k candidate pairs) and the full-corpus
+    * in-cell search (n²/k quantized dots) and the full-corpus
     * assignment (n·k distance evaluations) BOTH grow as n^1.5, the
     * balanced coarse-quantizer sizing (FAISS guidelines recommend
     * k ∝ √n). Integer-only search (no float log/sqrt edge), mirrored
@@ -798,12 +732,14 @@ object KMeans {
 
   /** The registered trained-IVF entry point: [[ivfTopKTrained]] with the
     * centroid count derived from the corpus size ([[adaptiveK]]), so the
-    * search join's per-cell population shrinks as the corpus grows
+    * search's per-cell population shrinks as the corpus grows
     * instead of the cell count being a fixed constant of the model.
     */
   def ivfTopKTrainedAdaptive(
-      embeddings: DataFrame, topK: Int = 3, iters: Int = Iters): DataFrame =
-    ivfTopKTrained(embeddings, topK, adaptiveK(embeddings.count()), iters)
+      embeddings: DataFrame, topK: Int = 3, iters: Int = Iters): DataFrame = {
+    val n = embeddings.count()
+    trainedSearch(embeddings, topK, adaptiveK(n), iters, n)
+  }
 
   def ivfTopKTrainedAdaptiveSql(
       topK: Int = 3, iters: Int = Iters, dim: Int = Dim): String =

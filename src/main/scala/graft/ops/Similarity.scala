@@ -2,7 +2,7 @@ package graft.ops
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -42,7 +42,7 @@ object Similarity {
 
   /** Adaptive-IVF cell-size budget: sub-bucketing splits every label cell
     * in two each time the corpus doubles past `CellBudget` vectors, so the
-    * per-cell population — and with it the Σ cell² in-cell join cost —
+    * per-cell population — and with it the Σ cell² in-cell search cost —
     * stays bounded as the corpus grows (measured: label-only cells are
     * 13–16× superlinear at 10× data; see [[adaptiveSubPlanes]]).
     */
@@ -505,7 +505,8 @@ object Similarity {
     * the corpus-side shuffle.
     *
     * Returns the matched candidates with cosine; the foreachBatch caller
-    * applies the same `row_number ≤ k` as [[lshBucketedTopK]].
+    * ranks them per batch (`row_number ≤ k` by cosine desc, neighbor_id),
+    * the order [[lshBucketedTopK]]'s kernel keeps.
     */
   def streamingBucketProbe(
       probes: DataFrame, corpus: DataFrame, planes: Int = Planes): DataFrame = {
@@ -521,32 +522,22 @@ object Similarity {
   }
 
   /** Approximate top-k: each vector searches only its own LSH bucket.
-    * The join is an equi-join on bucket — at scale this is the same-bucket
-    * co-partitioned search that replaces the O(n²) scan.
+    * The bucket is the vector's single home cell, so this is the
+    * [[cellTopK]] kernel with every vector both a query and a home row of
+    * its bucket: one shuffle of n rows on (bucket, salt), k rows out per
+    * vector, no candidate-pair relation and no rank window.
     */
   def lshBucketedTopK(embeddings: DataFrame, k: Int = 3, planes: Int = Planes): DataFrame = {
-    // cache: both sides of the same-bucket self-join read the bucketed
+    // cache: the salt derivation and the search both read the bucketed
     // relation; without it the corpus scan + plane dots run twice.
     // Repartition first — see embeddingNearDupsApprox (broadcast side ⇒
     // no pre-compute exchange ⇒ single-split corpus serializes)
     val withB = embeddings.repartition(col("vec_id"))
       .select(col("vec_id"), col("embedding"),
-        bucketCol(col("embedding"), planes).as("bucket"))
+        bucketCol(col("embedding"), planes).as("cell"), lit(1).as("cell_rank"))
       .cache()
-    val a = withB.select(col("vec_id").as("query_id"), col("embedding").as("query_emb"),
-      col("bucket").as("bucket_a"))
-    val b = withB.select(col("vec_id").as("neighbor_id"), col("embedding").as("emb_b"),
-      col("bucket").as("bucket_b"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    graft.util.CacheScope.freeAfterUse(
-      a.join(b, col("bucket_a") === col("bucket_b") && col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          dot(col("query_emb"), col("emb_b")).as("cosine"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .orderBy("query_id", "rank"),
-      Seq(withB))
+    val (salts, probes) = cellJoinSalts(withB)
+    graft.util.CacheScope.freeAfterUse(cellTopK(withB, k, salts, probes), Seq(withB))
   }
 
   // ------------------------------------------------------------------ IVF
@@ -619,107 +610,226 @@ object Similarity {
     */
   private val MinDotsPerTask = 1L << 16
 
-  /** Salt count for the in-cell search join (r18 optimization round,
-    * guide §2.5 "split very large tenants into hash ranges"): the cell
-    * equi-join's parallelism is bounded by the DISTINCT CELL COUNT, so a
-    * coarse router (10 label cells at the verification corpus) serializes
-    * the candidate dot products on a handful of tasks no matter how many
-    * cores the session has — measured r18: q36's serving join+top-k ran
-    * 7.2 s in ONE task at local[32] while every other job in the query
-    * was ≤ 0.5 s. The fix keys the join on (cell, salt): the home side
-    * explodes over `salts` deterministic sub-splits, the query side maps
-    * to `pmod(hash(query_id), salts)` — every (query, neighbor) pair
-    * still meets exactly once, so the result relation is bit-identical.
+  /** Salt count for the in-cell search (r18 optimization round, guide
+    * §2.5 "split very large tenants into hash ranges"), plus the deepest
+    * probe rank in the assignment. The search groups on the cell, so its
+    * parallelism is bounded by the DISTINCT CELL COUNT: a coarse router
+    * (10 label cells at the verification corpus) serializes the dot
+    * products on a handful of tasks no matter how many cores the session
+    * has — measured r18: q36's serving join+top-k ran 7.2 s in ONE task at
+    * local[32]. The fix keys the search on (cell, salt): home rows explode
+    * over `salts` deterministic sub-splits, query rows map to
+    * `pmod(hash(vec_id), salts)` — every (query, neighbor) pair still
+    * meets exactly once, so the result is bit-identical.
     *
     * `salts` is DERIVED, not a constant: one tiny aggregation over the
     * (cached) ranked assignment measures probe rows, home rows and
-    * distinct cells; the dot volume they imply is compared against the
-    * session's parallelism. When cells ≥ cores — the 100 TB regime, where
-    * the adaptive sub-bucketing keeps cell count ∝ corpus size — the
-    * derivation returns 1 and the plan is the unsalted equi-join
-    * unchanged. Only a coarse-router corpus on a wide session pays the
-    * (bounded, ≤ 64×) home-side replication that buys back the idle
-    * cores.
+    * distinct cells (an HLL estimate: the salt count moves work between
+    * tasks, never a result, so one exchange beats an exact count). When
+    * the dot volume they imply fills at least 4 × `defaultParallelism`
+    * tasks of [[MinDotsPerTask]], the derivation picks the fewest salts
+    * that give that many (cell, salt) keys. Cells
+    * ≥ cores is not enough on its own: 10 cells hashed onto 4 shuffle
+    * partitions (8 trained cells for q128) leave 2–3 tasks with all the
+    * quadratic work, so the bar is 4 keys per core, which hashing spreads
+    * evenly. When cells ≫ cores — the 100 TB regime, where the adaptive
+    * sub-bucketing keeps cell count ∝ corpus size — it returns 1 and the
+    * search keys on the plain cell. A coarse-router corpus pays a bounded
+    * (≤ 64×) home-row replication for the idle cores.
     */
-  private[ops] def cellJoinSalts(ranked: DataFrame): Int = {
+  private[ops] def cellJoinSalts(ranked: DataFrame): (Int, Int) = {
     val r = graft.util.JobDesc.labeled(ranked.sparkSession,
       "ivf: salt derivation")(ranked.agg(
       count(lit(1)).as("rows"),
-      sum(when(col("cell_rank") === 1, 1L).otherwise(0L)).as("home"),
-      countDistinct(col("cell")).as("cells")).head())
-    val rows = r.getLong(0)
-    val home = r.getLong(1)
-    val cells = math.max(1L, r.getLong(2))
+      coalesce(sum(when(col("cell_rank") === 1, 1L).otherwise(0L)), lit(0L)).as("home"),
+      approx_count_distinct(col("cell")).as("cells"),
+      coalesce(max(col("cell_rank")), lit(1)).as("probes")).head())
+    (saltsFor(ranked.sparkSession, r.getLong(0), r.getLong(1), r.getLong(2)), r.getInt(3))
+  }
+
+  /** [[cellJoinSalts]]'s rule from its three measurements: `rows`
+    * (query rows), `home` (home rows) and `cells` (distinct cells).
+    */
+  private[ops] def saltsFor(
+      spark: org.apache.spark.sql.SparkSession, rows: Long, home: Long, cells0: Long): Int = {
+    val cells = math.max(1L, cells0)
     val dots = rows.toDouble * home / cells // Σ_cell probes·pop ≈ rows·avgPop
-    val par = ranked.sparkSession.sparkContext.defaultParallelism
-    val usefulTasks = math.min(par.toDouble, math.ceil(dots / MinDotsPerTask))
-    math.min(64, math.max(1, math.ceil(usefulTasks / cells).toInt))
+    val par = spark.sparkContext.defaultParallelism
+    val keys = math.min(4.0 * par, math.ceil(dots / MinDotsPerTask))
+    math.min(64, math.max(1, math.ceil(keys / cells).toInt))
   }
 
   /** IVF approximate top-k: each query probes its `nprobe` nearest cells;
-    * corpus vectors live in their single nearest cell. The search join is
-    * an equi-join on cell — the same co-partitioned shape as
-    * [[lshBucketedTopK]], with centroids as the router. A (query, neighbor)
-    * pair meets at most once because the neighbor has ONE home cell.
-    * nprobe is the standard IVF recall/cost dial: candidates grow
-    * linearly with it while the plan shape stays identical. When the cell
-    * count under-fills the session ([[cellJoinSalts]]), the join key
-    * widens to (cell, salt) — same candidate set, same output, spread
-    * compute.
+    * corpus vectors live in their single nearest cell, and the search runs
+    * per cell in the [[cellTopK]] kernel — the same per-cell search as
+    * [[lshBucketedTopK]], with centroids as the router. A (query,
+    * neighbor) pair meets at most once because the neighbor has ONE home
+    * cell. nprobe is the standard IVF recall/cost dial: dots grow linearly
+    * with it while the plan shape stays identical. When the cell count
+    * under-fills the session ([[cellJoinSalts]]), the search key widens to
+    * (cell, salt) — same candidates, same output, spread compute.
     */
   def ivfTopK(
       embeddings: DataFrame, k: Int = 3, nprobe: Int = 1, subPlanes: Int = 0): DataFrame = {
-    // cache: both sides of the in-cell join read the ranked-assignment
-    // relation, and the toDF renames below would otherwise defeat
-    // exchange reuse — without this the centroid pipeline runs twice
-    // (the salt derivation's aggregation is also the action that
-    // materializes it, so neither join side recomputes the pipeline).
+    // cache: the salt derivation and the search both read the ranked
+    // assignment (the derivation's aggregation is also the action that
+    // materializes it, so the search does not recompute the pipeline).
     // Query-scoped (r19): freed after the caller's action.
     val ranked = ivfCellsRanked(embeddings, nprobe, subPlanes).cache()
     graft.util.CacheScope.freeAfterUse(
       ivfTopKFromRanked(embeddings, ranked, k), Seq(ranked))
   }
 
-  /** The search join over an already-ranked (vec_id, cell, cell_rank ≤
-    * nprobe) assignment — factored out (r18) so [[ivfTopKAdaptive]]'s
-    * serving pass reuses the SAME cached assignment its nprobe derivation
-    * already computed (`ivfCellsRanked(np)` ≡ `ivfCellsRanked(MaxDerivedNprobe)
-    * .filter(cell_rank ≤ np)` — the window rank is nprobe-independent),
-    * instead of rebuilding the centroid + assignment pipeline a second
-    * time inside the same query.
+  /** The in-cell search over an already-ranked (vec_id, cell, cell_rank ≤
+    * nprobe) assignment: one join attaches the embeddings, then
+    * [[cellTopK]] serves every query. Factored out (r18) so
+    * [[ivfTopKAdaptive]]'s serving pass reuses the SAME cached assignment
+    * its nprobe derivation already computed (`ivfCellsRanked(np)` ≡
+    * `ivfCellsRanked(MaxDerivedNprobe).filter(cell_rank ≤ np)` — the
+    * window rank is nprobe-independent), and so the trained router
+    * ([[KMeans.ivfTopKTrainedProbed]]) serves through the same code.
     */
   private[ops] def ivfTopKFromRanked(
       embeddings: DataFrame, ranked: DataFrame, k: Int): DataFrame = {
-    val salts = cellJoinSalts(ranked)
-    val emb = embeddings.select(col("vec_id"), col("embedding"))
-    val a0 = emb.join(ranked, "vec_id")
-      .toDF("query_id", "query_emb", "cell_a", "cell_rank")
-    val b0 = emb.join(ranked.filter(col("cell_rank") === 1), "vec_id")
-      .toDF("neighbor_id", "emb_b", "cell_b", "cell_rank_b")
-    // salts == 1 (the at-scale regime: cells ≥ cores) keeps the plain
-    // cell equi-join — no extra columns, no generate node in the plan
-    val (a, b, cond) =
-      if (salts <= 1)
-        (a0, b0, col("cell_a") === col("cell_b")
-          && col("query_id") =!= col("neighbor_id"))
-      else (
-        a0.withColumn("salt_a", pmod(hash(col("query_id")), lit(salts))),
-        b0.withColumn("salt_b", explode(sequence(lit(0), lit(salts - 1)))),
-        col("cell_a") === col("cell_b") && col("salt_a") === col("salt_b")
-          && col("query_id") =!= col("neighbor_id"))
+    val (salts, probes) = cellJoinSalts(ranked)
+    cellTopK(embeddings.select(col("vec_id"), col("embedding")).join(ranked, "vec_id"),
+      k, salts, probes)
+  }
+
+  /** The in-cell search: over (vec_id, embedding, cell, cell_rank) rows —
+    * rank 1 the vector's single home cell, rank > 1 a further probed cell
+    * — every vector's k nearest OTHER vectors among the homes of the cells
+    * it probes, as (query_id, neighbor_id, cosine, rank) ordered by query
+    * and rank. `salts` and `probes` (the deepest cell_rank) come from
+    * [[cellJoinSalts]]. The candidate pairs are compute inside
+    * [[cellKernel]] — never rows, never shuffled, never sorted. When every
+    * vector probes only its home cell (LSH buckets, nprobe 1) a query has
+    * one search group and the kernel's ranks are final; otherwise one
+    * `row_number` ranks each query's ≤ nprobe·k kernel rows across cells.
+    *
+    * Exactness: the kernel's dot is [[graft.functions.QuantizedDot]]'s —
+    * `floor(x·1e6)` per element, a `long` sum over the shorter length, a
+    * NULL element contributing 0 (the expression skips it), a NULL
+    * embedding giving a NULL cosine that ranks last; cosine = dot / 1e12,
+    * and distinct dots (≤ 2^53) map to distinct cosines, so ranking by the
+    * dot is ranking by the cosine: the result is the candidate equi-join +
+    * `row_number` it replaced, bit for bit.
+    */
+  private[ops] def cellTopK(
+      cells: DataFrame, k: Int, salts: Int, probes: Int): DataFrame = {
+    val idType = cells.schema("vec_id").dataType
+    val found = cellKernel(cells, k, salts)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
-    a.join(b, cond)
-      .select(col("query_id"), col("neighbor_id"),
-        dot(col("query_emb"), col("emb_b")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    (if (probes <= 1) found
+     else found.withColumn("rank", row_number().over(w)).filter(col("rank") <= k))
+      .select(col("query_id").cast(idType).as("query_id"),
+        col("neighbor_id").cast(idType).as("neighbor_id"), col("cosine"), col("rank"))
       .orderBy("query_id", "rank")
+  }
+
+  /** [[cellTopK]]'s kernel. Rows group on (cell, salt) sorted by
+    * cell_rank, so each group yields its home rows (rank 1, replicated to
+    * every salt) before its probing rows. Per group it quantizes each home
+    * vector ONCE into a `long[]`, then streams the queries, keeping for
+    * each the k best homes by (dot desc, NULL last, neighbor_id asc) in
+    * fixed arrays, and emits ≤ k rows with `rank` the in-group position.
+    *
+    * Memory bound: one (cell, salt) group's home vectors (population ×
+    * dim × 8 bytes) plus k slots; queries stream. Salts split a cell's
+    * queries, not its homes, so the bound is the largest cell — the size
+    * [[adaptiveSubPlanes]] and [[KMeans.adaptiveK]] hold flat as the
+    * corpus grows.
+    */
+  private[ops] def cellKernel(cells: DataFrame, k: Int, salts: Int): DataFrame = {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.types.StructType
+    val own = pmod(hash(col("vec_id")), lit(salts))
+    val prepared = cells
+      .filter(col("vec_id").isNotNull && col("cell").isNotNull)
+      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"), col("cell"),
+        col("cell_rank").cast("int").as("cell_rank"))
+      // salts == 1: no generate node; every row is a query of its group
+      .withColumn("salt", if (salts <= 1) lit(0)
+        else explode(when(col("cell_rank") === 1, sequence(lit(0), lit(salts - 1)))
+          .otherwise(array(own))))
+      .withColumn("is_query", if (salts <= 1) lit(true) else col("salt") === own)
+    prepared.groupBy(col("cell"), col("salt"))
+      .as[Row, Row](Encoders.row(prepared.select("cell", "salt").schema),
+        Encoders.row(prepared.schema))
+      .flatMapSortedGroups(col("cell_rank"))((_, rows) => cellSearch(rows, k))(
+        Encoders.row(StructType.fromDDL(
+          "query_id BIGINT, neighbor_id BIGINT, cosine DOUBLE, rank INT")))
+  }
+
+  /** One (cell, salt) group of [[cellKernel]]: rows (vec_id, embedding,
+    * cell, cell_rank, salt, is_query), home rows first.
+    */
+  private def cellSearch(rows: Iterator[Row], k: Int): Iterator[Row] = {
+    def quantized(r: Row): Array[Long] =
+      if (r.isNullAt(1)) null
+      else r.getSeq[Any](1).iterator.map(x =>
+        if (x == null) 0L else math.floor(x.asInstanceOf[Number].doubleValue * 1e6).toLong)
+        .toArray
+    val in = rows.buffered
+    val homes = scala.collection.mutable.ArrayBuffer[(Long, Array[Long], Boolean)]()
+    while (in.hasNext && in.head.getInt(3) == 1) {
+      val r = in.next()
+      homes += ((r.getLong(0), quantized(r), r.getBoolean(5)))
+    }
+    val hid = homes.map(_._1).toArray
+    val hv = homes.map(_._2).toArray
+    def topK(qid: Long, x: Array[Long]): Iterator[Row] = {
+      val best = new Best(math.max(0, k))
+      var j = 0
+      while (j < hid.length) {
+        val y = hv(j)
+        if (hid(j) != qid) {
+          if (x == null || y == null) best.offer(isNull = true, 0L, hid(j))
+          else {
+            val n = math.min(x.length, y.length)
+            var dot = 0L
+            var d = 0
+            while (d < n) { dot += x(d) * y(d); d += 1 }
+            best.offer(isNull = false, dot, hid(j))
+          }
+        }
+        j += 1
+      }
+      Iterator.tabulate(best.filled)(r =>
+        Row(qid, best.ids(r), if (best.nulls(r)) null else best.dots(r).toDouble / 1e12, r + 1))
+    }
+    homes.iterator.filter(_._3).flatMap(h => topK(h._1, h._2)) ++
+      in.flatMap(r => topK(r.getLong(0), quantized(r)))
+  }
+
+  /** k slots kept sorted by (dot desc, NULL dot last, id asc). */
+  private final class Best(k: Int) {
+    val dots = new Array[Long](k)
+    val nulls = new Array[Boolean](k)
+    val ids = new Array[Long](k)
+    var filled = 0
+
+    /** Does (isNull, dot, id) rank before slot p? */
+    private def beats(isNull: Boolean, dot: Long, id: Long, p: Int): Boolean =
+      if (isNull != nulls(p)) !isNull
+      else if (!isNull && dot != dots(p)) dot > dots(p)
+      else id < ids(p)
+
+    def offer(isNull: Boolean, dot: Long, id: Long): Unit =
+      if (filled < k || (filled > 0 && beats(isNull, dot, id, filled - 1))) {
+        var p = if (filled < k) filled else k - 1
+        while (p > 0 && beats(isNull, dot, id, p - 1)) {
+          dots(p) = dots(p - 1); nulls(p) = nulls(p - 1); ids(p) = ids(p - 1); p -= 1
+        }
+        dots(p) = dot; nulls(p) = isNull; ids(p) = id
+        if (filled < k) filled += 1
+      }
   }
 
   /** Sub-plane count that keeps expected cell population ≤ `budget`:
     * the smallest p with n ≤ budget·2^p. Cell count then scales ∝ n
-    * (fixed cell size), so the in-cell equi-join's Σ cell² work grows
+    * (fixed cell size), so the in-cell search's Σ cell² work grows
     * LINEARLY with the corpus instead of quadratically — the property the
     * label-only seeding lacks. Integer arithmetic only (no log2 float
     * edge at exact powers of two), mirrored verbatim in the oracle.
@@ -946,15 +1056,15 @@ object Similarity {
     * ([[adaptiveSubPlanes]]) — at the verification volume (n ≤ budget)
     * p = 0 and this IS the label-seeded search, while every doubling past
     * the budget doubles the cell count, holding per-cell work flat. The
-    * search plan is [[ivfTopK]] unchanged.
+    * search is [[ivfTopK]]'s per-cell kernel unchanged.
     *
     * `nprobe = 0` (the DEFAULT) means MEASUREMENT-DERIVED
     * ([[derivedNprobe]]): the smallest probe count whose tune-sample
     * recall meets the [[TuneHitBar]] target. When even the full sweep
     * misses the bar (structure-free corpora — the router cannot serve the
     * recall contract at any nprobe), the search DEGRADES LOUDLY to
-    * probing every label cell with no sub-bucket suffix: exact top-k in
-    * the identical equi-join plan shape, full-scan cost made visible in
+    * probing every label cell with no sub-bucket suffix: exact top-k from
+    * the same [[cellTopK]] kernel, full-scan cost made visible in
     * the log and in [[nprobeTuneGrid]] (no chosen row) instead of
     * silently returning 20–30% of the true neighbors. At cluster scale a
     * corpus that defeats this router belongs on the trained-KMeans IVF

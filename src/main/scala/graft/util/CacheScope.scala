@@ -1,8 +1,6 @@
 package graft.util
 
-import java.util.concurrent.atomic.AtomicBoolean
-
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -32,7 +30,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    identical semantics (and re-populates nothing — one-shot scope);
   *  - plan-only safe: a consumer that never executes (Explain, plan
   *    specs) registers no blocks, so the unfired listener holds only a
-  *    plan reference;
+  *    plan reference, and at most [[MaxPending]] such listeners stay
+  *    registered — the oldest is forgotten without a free;
   *  - checkpoint-aware: handles that are `localCheckpoint`ed rather than
   *    cached are freed through [[Checkpoints.free]] (block-level RDD
   *    unpersist) — `Dataset.unpersist` alone would be a no-op for them.
@@ -52,23 +51,32 @@ object CacheScope {
   // only added a job and measured flat-to-worse in 7-rep A/Bs
   // (q119 +0.37 s, q114 +0.22 s, q121/q36 flat). Lazy caches stand.
 
+  /** Most scopes left pending at once. A scope whose result never
+    * executes (Explain, plan specs) would stay registered for the session,
+    * its plan tested by `sameResult` on every later execution; past this
+    * many the oldest is forgotten — deregistered WITHOUT a free, so its
+    * handles stay cached until the owner's `clearCache()`.
+    */
+  val MaxPending = 64
+
+  private val pending = new java.util.LinkedHashMap[QueryExecutionListener, SparkSession]()
+
+  /** Scopes registered and neither fired nor forgotten. */
+  def pendingCount: Int = pending.synchronized(pending.size)
+
   def freeAfterUse(result: DataFrame, handles: Seq[DataFrame]): DataFrame = {
     val spark = result.sparkSession
     val target = result.queryExecution.analyzed
-    val fired = new AtomicBoolean(false)
     lazy val listener: QueryExecutionListener = new QueryExecutionListener {
       private def maybeFree(qe: QueryExecution): Unit = {
         val hit =
           try qe.analyzed.exists(_.sameResult(target))
           catch { case _: Throwable => false }
-        if (hit && fired.compareAndSet(false, true)) {
+        if (hit && deregister(listener))
           handles.foreach { h =>
             try h.unpersist(blocking = false) catch { case _: Throwable => () }
             try Checkpoints.free(h) catch { case _: Throwable => () }
           }
-          try spark.listenerManager.unregister(listener)
-          catch { case _: Throwable => () }
-        }
       }
       override def onSuccess(
           funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -77,7 +85,22 @@ object CacheScope {
           funcName: String, qe: QueryExecution, exception: Exception): Unit =
         maybeFree(qe)
     }
-    spark.listenerManager.register(listener)
+    val forgotten = pending.synchronized {
+      pending.put(listener, spark)
+      spark.listenerManager.register(listener)
+      val it = pending.keySet.iterator
+      List.fill(math.max(0, pending.size - MaxPending))(it.next())
+    }
+    forgotten.foreach(deregister)
     result
+  }
+
+  /** Removes a pending scope; true only for the call that removed it. */
+  private def deregister(listener: QueryExecutionListener): Boolean = {
+    val spark = pending.synchronized(pending.remove(listener))
+    spark != null && {
+      try spark.listenerManager.unregister(listener) catch { case _: Throwable => () }
+      true
+    }
   }
 }

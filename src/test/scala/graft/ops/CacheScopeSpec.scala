@@ -110,6 +110,25 @@ class CacheScopeSpec extends SparkSpec {
     assert(ckDocs.count() == 5)
   }
 
+  test("scopes that never execute stay bounded, are forgotten without a " +
+    "free, and an executed scope still frees its handles") {
+    import graft.util.CacheScope
+    spark.catalog.clearCache()
+    val handles = (0 until 3 * CacheScope.MaxPending).map { i =>
+      val h = spark.range(i + 1).toDF("x").cache()
+      CacheScope.freeAfterUse(h.filter($"x" > 0), Seq(h))
+      h
+    }
+    assert(CacheScope.pendingCount <= CacheScope.MaxPending)
+    // the oldest scopes were forgotten, not fired: their handles stay cached
+    assert(handles.forall(_.storageLevel != StorageLevel.NONE))
+    spark.catalog.clearCache()
+    val before = pinned()
+    assert(Similarity.ivfTopKAdaptive(emb, k = 2, nprobe = 1).count() >= 0)
+    assertEventuallyFreed(before, "ivfTopKAdaptive(nprobe=1) after the flood")
+    assert(CacheScope.pendingCount <= CacheScope.MaxPending)
+  }
+
   test("a second action on the same freed DataFrame still computes the " +
     "identical result (unpersist drops blocks, not semantics)") {
     val df = TextAnalysis.winnowingOverlap(docs, k = 2, w = 2)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.LongArrayDot.dotLong
 
@@ -173,51 +173,34 @@ object KMeans {
     }
   }
 
-  /** Session-scoped trained-model memo, keyed by the CANONICALIZED logical
-    * plan of the input corpus (+ k, iters): structural plan equality, so
-    * the same corpus read through the same lineage trains ONCE per session
-    * and every consumer (q68 model dump, q69 trained search, q76 serving
-    * assignment, streaming serve) shares the k×Dim-long artifact — a model
-    * registry, the same reuse a production train→index→serve loop has.
-    * Values are tiny (k·Dim longs) and deterministic in the input, so
-    * memoization cannot change any result, only skip repeated training.
-    *
-    * Bounded LRU (r14 VERDICT #5), same pattern and rationale as
-    * [[graft.ops.PQ]] `refineCache` / [[Similarity]] `tuneCache`: the key
-    * retains the full canonicalized logical plan (and, through
-    * `LogicalRelation`, file-index state), so a long-lived session
-    * training against many distinct corpora would otherwise accumulate
-    * analyzed plans forever. 32 entries covers any realistic number of
-    * concurrently-served models while keeping retention O(1). Same
-    * same-plan-same-data assumption: files under a memoized plan are
-    * immutable for the session; new corpus snapshot = new path = new plan
-    * = fresh training.
+  /** The training sample: one Spark job, labelled `label`, collects the
+    * first [[TrainCap]] valid (`dim`-long, non-null) vectors in seed-hash
+    * order (`md5("km|" ++ vec_id)`, then vec_id). Each row is vec_id
+    * followed by `cols`, evaluated over `xq`, the fixed-point vector.
     */
-  private val modelCache = graft.util.BoundedLru[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int, Int),
-    Array[(Int, Array[Long])]]()
+  private[ops] def trainingSample(
+      embeddings: DataFrame, dim: Int, label: String,
+      cols: Seq[Column]): Array[Row] =
+    graft.util.JobDesc.labeled(embeddings.sparkSession, label)(
+      embeddings
+        .filter(col("embedding").isNotNull && size(col("embedding")) === dim)
+        .select(col("vec_id"), quantize(col("embedding")).as("xq"))
+        .select(col("vec_id") +: cols: _*)
+        .orderBy(md5(concat(lit("km|"), col("vec_id").cast("string"))), col("vec_id"))
+        .limit(TrainCap)
+        .collect())
 
-  /** One job collects the training sample — the first [[TrainCap]] valid
-    * vectors in seed-hash order, as fixed-point longs and x·x — then
-    * seeding (its first k rows) and `iters` Lloyd's iterations run on the
-    * driver. The quantization and x·x are the [[corpus]] columns, so the
-    * model is the one a distributed Lloyd's over the same sample learns.
+  /** Seeding and `iters` Lloyd's iterations on the driver over sampled
+    * vectors in seed-hash order (row-major `dim`-wide in `xs`, x·x in
+    * `xx`): the seeds are the first k vectors. The quantization and x·x
+    * are the [[corpus]] columns, so the model is the one a distributed
+    * Lloyd's over the same sample learns.
     */
-  private def trainModel(
-      embeddings: DataFrame, k: Int, iters: Int,
-      dim: Int = Dim): Array[(Int, Array[Long])] = {
-    val rows = embeddings
-      .filter(col("embedding").isNotNull && size(col("embedding")) === dim)
-      .select(col("vec_id"), quantize(col("embedding")).as("xq"))
-      .withColumn("xx", dotLong(col("xq"), col("xq")))
-      .orderBy(md5(concat(lit("km|"), col("vec_id").cast("string"))), col("vec_id"))
-      .limit(TrainCap)
-      .collect()
-    val xs = rows.flatMap(_.getSeq[Long](1))
-    val xx = rows.map(_.getLong(2))
-    var cents = rows.take(k).zipWithIndex.map { case (r, i) =>
-      (i, r.getSeq[Long](1).toArray)
-    }
+  private[ops] def lloyd(
+      xs: Array[Long], xx: Array[Long], dim: Int, k: Int,
+      iters: Int): Array[(Int, Array[Long])] = {
+    var cents = Array.tabulate(math.min(k, xx.length))(i =>
+      (i, xs.slice(i * dim, (i + 1) * dim)))
     for (_ <- 0 until iters) cents = lloydStep(xs, xx, dim, cents)
     cents
   }
@@ -254,8 +237,12 @@ object KMeans {
     * users wiring the trained quantizer into IVF routing.
     */
   def kmeansAssignments(
-      embeddings: DataFrame, k: Int = K, iters: Int = Iters): DataFrame = {
-    val cents = trainedModel(embeddings, k, iters)
+      embeddings: DataFrame, k: Int = K, iters: Int = Iters): DataFrame =
+    assignments(embeddings, trainedModel(embeddings, k, iters))
+
+  /** [[kmeansAssignments]] under an already-trained model. */
+  private[ops] def assignments(
+      embeddings: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame = {
     val xq = corpus(embeddings)
     // eager-materialize the final (vec_id, cluster) relation, then release
     // the quantized-corpus cache: callers joining the assignment
@@ -267,14 +254,16 @@ object KMeans {
 
   /** Train and return the raw model: k fixed-point centroids, driver-side
     * (k×Dim longs — tiny by definition). The broadcastable artifact the
-    * serving paths below route by. Memoized per (corpus plan, k, iters) —
-    * see [[modelCache]].
+    * serving paths below route by. Every call trains: one labelled job
+    * collects the sample ([[trainingSample]]), [[lloyd]] runs on the
+    * driver. An op that needs the model twice trains once and passes it.
     */
   def trainedModel(
       embeddings: DataFrame, k: Int = K, iters: Int = Iters,
       dim: Int = Dim): Array[(Int, Array[Long])] = {
-    val key = (embeddings.queryExecution.analyzed.canonicalized, k, iters, dim)
-    modelCache.computeIfAbsent(key, _ => trainModel(embeddings, k, iters, dim))
+    val rows = trainingSample(embeddings, dim, "k-means: train sample",
+      Seq(col("xq"), dotLong(col("xq"), col("xq"))))
+    lloyd(rows.flatMap(_.getSeq[Long](1)), rows.map(_.getLong(2)), dim, k, iters)
   }
 
   /** Nearest-trained-centroid assignment as a PER-ROW expression: the k
@@ -428,32 +417,6 @@ object KMeans {
       .select(col("vec_id"), col("col.c").as("cell"),
         (col("pos") + 1).cast("int").as("cell_rank"))
   }
-
-  /** The nprobe tune grid measured over TRAINED cells — same sample,
-    * same exact-truth joins, same integer bar as the label-cell
-    * derivation ([[Similarity.tuneGridFromRanked]]); k defaults to the
-    * corpus-adaptive centroid count. Memoized like the label grid.
-    */
-  private val trainedTuneCache = graft.util.BoundedLru[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int),
-    Seq[(Int, Long)]]()
-
-  def trainedTuneGridRows(
-      embeddings: DataFrame, k: Int = 0, iters: Int = Iters): Seq[(Int, Long)] = {
-    val kk = if (k > 0) k else adaptiveK(embeddings.count())
-    val key = (embeddings.queryExecution.analyzed, kk, iters)
-    trainedTuneCache.computeIfAbsent(key, _ =>
-      Similarity.tuneGridFromRanked(embeddings,
-        trainedCellsRanked(embeddings, Similarity.MaxDerivedNprobe, kk, iters)))
-  }
-
-  /** Smallest nprobe whose TRAINED-cell tune-sample recall meets the
-    * [[Similarity.TuneHitBar]]; −1 when even the full sweep misses it.
-    */
-  def derivedNprobeTrained(
-      embeddings: DataFrame, k: Int = 0, iters: Int = Iters): Int =
-    trainedTuneGridRows(embeddings, k, iters)
-      .find(_._2 >= Similarity.TuneHitBar).map(_._1).getOrElse(-1)
 
   /** nprobe-probed trained-IVF top-k: each query probes its `nprobe`
     * nearest TRAINED cells; corpus vectors live in their single home

@@ -11,9 +11,10 @@ import graft.functions.LongArrayDot.dotLong
   * split each `Dim`-dimensional vector into `M` contiguous subspaces,
   * train an independent k-means codebook of `Codes` centroids per
   * subspace (reusing [[KMeans]]'s fixed-point, engine-exact trainer on
-  * sliced vectors — same seeding rule, same Lloyd's updates, same
-  * empty-cluster semantics), and represent every vector by its M nearest
-  * code ids.
+  * sliced vectors — same sample, same seeding rule, same Lloyd's updates,
+  * same empty-cluster semantics), and represent every vector by its M
+  * nearest code ids. Each public call trains the codebooks once
+  * ([[models]]) and passes them to every phase that needs them.
   *
   * Search is ADC (asymmetric distance computation, the paper's §IV): the
   * UNquantized query precomputes a lookup table of squared distances to
@@ -48,32 +49,27 @@ object PQ {
   val Codes = 256
   val Iters: Int = KMeans.Iters
 
-  /** The s-th subspace slice of each VALID full vector. Validity (null /
-    * wrong length) is decided on the whole embedding, so all subspaces
-    * contain exactly the same vec_ids — the per-subspace trainers see
-    * aligned corpora (mirrored in the oracle's `validDim`).
-    */
-  private def subVectors(
-      embeddings: DataFrame, s: Int, subDim: Int): DataFrame =
-    embeddings
-      .filter(col("embedding").isNotNull &&
-        size(col("embedding")) === KMeans.Dim)
-      .select(col("vec_id"),
-        slice(col("embedding"), s * subDim + 1, subDim).as("embedding"))
-
-  /** Per-subspace trained codebooks (memoized through [[KMeans
-    * .trainedModel]]'s session registry, so codebooks/encode/search share
-    * one training per subspace). Each codebook trains on the driver from
-    * one collected sample of at most [[KMeans.TrainCap]] sliced vectors:
-    * one Spark job per subspace on a memo miss.
+  /** Per-subspace trained codebooks. Validity (null / wrong length) is
+    * decided on the whole embedding, so every subspace trains on the same
+    * vectors (mirrored in the oracle's `validDim`), and the md5 sample
+    * order depends only on vec_id, so every subspace samples the same
+    * ones: one labelled job collects that sample with each subspace's
+    * slice and its x·x as columns, then [[KMeans.lloyd]] trains each
+    * codebook on the driver. Each codebook equals [[KMeans.trainedModel]]
+    * on that subspace's sliced vectors.
     */
   def models(
       embeddings: DataFrame, m: Int = M, codes: Int = Codes,
       iters: Int = Iters): Seq[(Int, Array[(Int, Array[Long])])] = {
     val subDim = KMeans.Dim / m
+    val rows = KMeans.trainingSample(embeddings, KMeans.Dim, "pq: train sample",
+      (0 until m).flatMap { s =>
+        val sub = slice(col("xq"), s * subDim + 1, subDim)
+        Seq(sub, dotLong(sub, sub))
+      })
     (0 until m).map { s =>
-      s -> KMeans.trainedModel(
-        subVectors(embeddings, s, subDim), codes, iters, subDim)
+      s -> KMeans.lloyd(rows.flatMap(_.getSeq[Long](1 + 2 * s)),
+        rows.map(_.getLong(2 + 2 * s)), subDim, codes, iters)
     }
   }
 
@@ -86,16 +82,12 @@ object PQ {
       iters: Int = Iters): DataFrame = {
     val spark = embeddings.sparkSession
     val subDim = KMeans.Dim / m
-    val sizes: Map[(Int, Int), Long] = (0 until m).flatMap { s =>
-      val model = KMeans.trainedModel(
-        subVectors(embeddings, s, subDim), codes, iters, subDim)
-      KMeans.assignTrainedCells(
-          subVectors(embeddings, s, subDim), model, dim = subDim)
-        .groupBy("cell").agg(count(lit(1)).as("n"))
-        .collect().map(r => (s, r.getAs[Int]("cell")) -> r.getAs[Long]("n"))
-    }.toMap
+    val mods = models(embeddings, m, codes, iters)
+    val sizes: Map[(Int, Int), Long] = encLong(embeddings, mods, m)
+      .groupBy("s", "code").agg(count(lit(1)).as("n"))
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     val rows = for {
-      (s, model) <- models(embeddings, m, codes, iters)
+      (s, model) <- mods
       (code, cq) <- model
       d <- 0 until subDim
     } yield (s, code, d, cq(d), sizes.getOrElse((s, code), 0L))
@@ -136,9 +128,15 @@ object PQ {
   def pqEncode(
       embeddings: DataFrame, m: Int = M, codes: Int = Codes,
       iters: Int = Iters): DataFrame =
+    encoded(embeddings, models(embeddings, m, codes, iters), m)
+
+  /** [[pqEncode]] under already-trained codebooks. */
+  private def encoded(
+      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
+      m: Int): DataFrame =
     encode(
       embeddings.repartition(col("vec_id")), // spread before the M×Codes-wide exprs
-      models(embeddings, m, codes, iters), m)
+      mods, m)
 
   /** Shared slice+assign fold: filter well-formed vectors, slice each of
     * the `m` subspaces, assign each against its subspace codebook, project
@@ -240,12 +238,12 @@ object PQ {
     * subspace, code) — nQueries·M·Codes rows, always broadcast.
     */
   private def lutDf(
-      embeddings: DataFrame, nQueries: Int, m: Int, codes: Int,
-      iters: Int, queryFrom: Int = 0): DataFrame = {
+      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
+      nQueries: Int, m: Int, queryFrom: Int = 0): DataFrame = {
     val spark = embeddings.sparkSession
     val subDim = KMeans.Dim / m
     val cbRows = for {
-      (s, model) <- models(embeddings, m, codes, iters)
+      (s, model) <- mods
       (code, cq) <- model
     } yield (s, code, cq.toSeq, cq.map(v => v * v).sum)
     val codebook = spark.createDataFrame(cbRows)
@@ -268,8 +266,9 @@ object PQ {
 
   /** Encoded corpus in long format: (vec_id, s, code). */
   private def encLong(
-      embeddings: DataFrame, m: Int, codes: Int, iters: Int): DataFrame =
-    pqEncode(embeddings, m, codes, iters)
+      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
+      m: Int): DataFrame =
+    encoded(embeddings, mods, m)
       .select(col("vec_id"), posexplode(
         array((0 until m).map(s => col(s"code_$s")): _*)).as(Seq("s", "code")))
 
@@ -285,7 +284,7 @@ object PQ {
       m: Int = M, codes: Int = Codes, iters: Int = Iters): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_dist"), col("neighbor_id"))
-    adcDists(embeddings, nQueries, m, codes, iters)
+    adcDists(embeddings, models(embeddings, m, codes, iters), nQueries, m)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
       .orderBy("query_id", "rank")
@@ -295,10 +294,10 @@ object PQ {
     * every corpus vector against every query's lookup tables.
     */
   private def adcDists(
-      embeddings: DataFrame, nQueries: Int, m: Int, codes: Int,
-      iters: Int, queryFrom: Int = 0): DataFrame = {
-    val lut = lutDf(embeddings, nQueries, m, codes, iters, queryFrom)
-    val enc = encLong(embeddings, m, codes, iters)
+      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
+      nQueries: Int, m: Int, queryFrom: Int = 0): DataFrame = {
+    val lut = lutDf(embeddings, mods, nQueries, m, queryFrom)
+    val enc = encLong(embeddings, mods, m)
     enc.join(broadcast(lut), Seq("s", "code"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
@@ -308,8 +307,9 @@ object PQ {
   /** IVF-PQ composed search (the FAISS-style billion-scale index layout:
     * coarse inverted lists + PQ codes; Jégou et al. 2011 §V): queries
     * route to their `nprobe` nearest TRAINED coarse cells (the q68/q69
-    * quantizer — shared through the session model registry), and only
-    * vectors in probed cells are ADC-scored through the PQ lookup tables.
+    * quantizer, trained once per call and used for both the routing and
+    * the corpus assignment), and only vectors in probed cells are
+    * ADC-scored through the PQ lookup tables.
     * Non-residual variant (codes quantize the raw vectors, not the
     * coarse residuals), stated plainly: residual encoding would need a
     * second codebook family per coarse cell and buys accuracy, not
@@ -327,7 +327,7 @@ object PQ {
       codes: Int = Codes, iters: Int = Iters): DataFrame = {
     val spark = embeddings.sparkSession
     val coarse = KMeans.trainedModel(embeddings, kCoarse, iters)
-    val cells = KMeans.kmeansAssignments(embeddings, kCoarse, iters)
+    val cells = KMeans.assignments(embeddings, coarse)
       .withColumnRenamed("cluster", "cell")
     val centDf = spark.createDataFrame(coarse.toSeq).toDF("cell", "cq")
       .withColumn("cc", dotLong(col("cq"), col("cq")))
@@ -348,8 +348,9 @@ object PQ {
     val cands = probed.join(cells, "cell")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
-    val lut = lutDf(embeddings, nQueries, m, codes, iters)
-    val enc = encLong(embeddings, m, codes, iters)
+    val mods = models(embeddings, m, codes, iters)
+    val lut = lutDf(embeddings, mods, nQueries, m)
+    val enc = encLong(embeddings, mods, m)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_dist"), col("neighbor_id"))
     cands.join(enc, "vec_id")
@@ -590,34 +591,6 @@ object PQ {
     */
   val RefineFactor = 16
 
-  /** Session memo for [[derivedRefineFactor]] — same pattern as
-    * [[KMeans.trainedModel]]'s registry: the factor is deterministic in
-    * (corpus plan, m, codes, iters), one small int, so memoization can
-    * only skip repeated histogram jobs, never change a result.
-    *
-    * Bounded LRU, not an unbounded map: the key retains the full
-    * canonicalized logical plan (and through `LogicalRelation`, file-index
-    * state), so a long-lived session querying many distinct corpora would
-    * otherwise accumulate analyzed plans forever. 32 entries covers any
-    * realistic number of concurrently-served corpora while keeping
-    * retention O(1).
-    *
-    * Same-plan-same-data assumption (shared with [[KMeans.trainedModel]]):
-    * a memo hit requires plan identity, and the memo assumes the files
-    * under that plan are immutable for the session — re-writing a parquet
-    * path IN-SESSION and re-deriving from a reused DataFrame object would
-    * serve the stale R (as it would serve KMeans' stale centroids).
-    * Corpus snapshots here are immutable paths; new snapshot = new path =
-    * new plan = fresh derivation.
-    */
-  private val refineCache = graft.util.BoundedLru[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int, Int, Int),
-    Int]()
-
-  private val calFloorCache = graft.util.BoundedLru[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int, Int),
-    Int]()
-
   /** SAMPLE-CALIBRATED refine floor (r14, VERDICT r13 #8): instead of
     * asserting a constant swept at n ≤ 2,000, MEASURE — on the fixed tune
     * sample ([[Similarity.TuneQueries]] queries × [[Similarity.TuneK]]
@@ -637,36 +610,29 @@ object PQ {
     * Cost: exact truth for the sample is one broadcast-queries corpus
     * scan (the price [[pqRefineRecall]] already pays per evaluation), the
     * ranks come from the same ADC relation serving computes, and the
-    * result is one driver integer, memoized per (corpus plan, m, codes,
-    * iters). Mirrored integer-for-integer in the oracle
+    * result is one driver integer, derived per call. Mirrored
+    * integer-for-integer in the oracle
     * ([[derivedCutoffCtesSql]]'s ctruth/cneed/cfl CTEs), so q107/q110
     * stay hash-checked THROUGH the calibrated floor, and exposed as a
     * relation by q122 (the q120-style observability contract).
     */
   def calibratedRefineFloor(
       embeddings: DataFrame, m: Int = M, codes: Int = Codes,
-      iters: Int = Iters): Int = {
-    val key = (embeddings.queryExecution.analyzed.canonicalized, m, codes, iters)
-    calFloorCache.computeIfAbsent(key, _ => {
-      // the sample WIDTH is corpus-scaled (r16, VERDICT r15 #2): one
-      // count against the already-derivation-priced corpus picks 10
-      // queries below Similarity.TuneCorpusLarge (every oracle-checked
-      // volume — hashes unchanged) and 40 above it, where PQTUNE_r15
-      // measured the 50-pair quantile under-resolving the needed_r tail
-      val nq = Similarity.tuneQueriesFor(embeddings.count())
-      calibratedRefineFloorAt(embeddings, nq, m, codes, iters)
-    })
-  }
+      iters: Int = Iters): Int =
+    calibratedFloor(embeddings, models(embeddings, m, codes, iters), m)
 
-  /** The calibration at an EXPLICIT sample width (the PQTune `calsweep`
-    * measurement arm; [[calibratedRefineFloor]] passes the corpus-scaled
-    * width). Bar = the 48/50 ratio of the pair count
-    * ([[Similarity.tuneHitBarFor]]).
+  /** [[calibratedRefineFloor]] under already-trained codebooks. The
+    * sample WIDTH is corpus-scaled (r16, VERDICT r15 #2): one count picks
+    * 10 queries below [[Similarity.TuneCorpusLarge]] (every oracle-checked
+    * volume) and 40 above it, where PQTUNE_r15 measured the 50-pair
+    * quantile under-resolving the needed_r tail. Bar = the 48/50 ratio of
+    * the pair count ([[Similarity.tuneHitBarFor]]).
     */
-  private[graft] def calibratedRefineFloorAt(
-      embeddings: DataFrame, nq: Int, m: Int = M, codes: Int = Codes,
-      iters: Int = Iters): Int = {
-    val needed = neededRanksDf(embeddings, nq, m, codes, iters)
+  private def calibratedFloor(
+      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
+      m: Int): Int = {
+    val nq = Similarity.tuneQueriesFor(embeddings.count())
+    val needed = neededRanksDf(embeddings, mods, nq, m)
       .select(col("needed_r"))
       .collect().map(_.getLong(0)).sorted
     if (needed.isEmpty) RefineFactor
@@ -683,13 +649,13 @@ object PQ {
     * ADC rank and the refine factor that would have shortlisted it.
     */
   private def neededRanksDf(
-      embeddings: DataFrame, nq: Int, m: Int, codes: Int,
-      iters: Int): DataFrame = {
+      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
+      nq: Int, m: Int): DataFrame = {
     val truth = Similarity
       .bruteForceTopK(embeddings, nq, Similarity.TuneK)
       .select(col("query_id"), col("neighbor_id"))
     val sw = Window.partitionBy(col("query_id")).orderBy(col("adc_dist"))
-    adcDists(embeddings, nq, m, codes, iters)
+    adcDists(embeddings, mods, nq, m)
       .withColumn("srank", rank().over(sw))
       .join(truth, Seq("query_id", "neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -705,9 +671,10 @@ object PQ {
   def pqFloorCalibration(
       embeddings: DataFrame, m: Int = M, codes: Int = Codes,
       iters: Int = Iters): DataFrame = {
-    val f = calibratedRefineFloor(embeddings, m, codes, iters)
+    val mods = models(embeddings, m, codes, iters)
+    val f = calibratedFloor(embeddings, mods, m)
     val nq = Similarity.tuneQueriesFor(embeddings.count())
-    neededRanksDf(embeddings, nq, m, codes, iters)
+    neededRanksDf(embeddings, mods, nq, m)
       .withColumn("floor_r", lit(f.toLong))
       .orderBy("query_id", "neighbor_id")
   }
@@ -735,40 +702,41 @@ object PQ {
     * Cost shape: one aggregation over the encoded table (corpus-linear,
     * the same scan the index build already pays), then two aggregations
     * over the DISTINCT-TUPLE relation (≪ corpus — bounded by code-space
-    * diversity), returning ONE driver integer, memoized per session.
+    * diversity), returning ONE driver integer.
     * Mirrored exactly in the oracle SQL (the rfac CTE), so q107/q110
     * stay hash-checked through the derived default.
     */
   def derivedRefineFactor(
       embeddings: DataFrame, m: Int = M, codes: Int = Codes,
-      iters: Int = Iters, floor: Int = 0): Int = {
+      iters: Int = Iters, floor: Int = 0): Int =
+    derivedFactor(embeddings, models(embeddings, m, codes, iters), m, floor)
+
+  /** [[derivedRefineFactor]] under already-trained codebooks. */
+  private def derivedFactor(
+      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
+      m: Int, floor: Int): Int = {
     // floor 0 (the default since r14) = SAMPLE-CALIBRATE the floor from
     // measured ADC ranks of the tune sample's true neighbors
     // ([[calibratedRefineFloor]]); a positive value is the explicit
     // constant override (the pre-r14 behavior at floor = RefineFactor)
-    val f =
-      if (floor > 0) floor
-      else calibratedRefineFloor(embeddings, m, codes, iters)
-    val key = (embeddings.queryExecution.analyzed.canonicalized, m, codes, iters, f)
-    refineCache.computeIfAbsent(key, _ => {
-      val enc = pqEncode(embeddings, m, codes, iters)
-      val codeCols = (0 until m).map(s => col(s"code_$s"))
-      val tup = enc.groupBy(codeCols: _*).agg(count(lit(1)).as("cnt"))
-      val tk = concat_ws("|",
-        (0 until m).map(s => col(s"code_$s").cast("string")): _*)
-      val pks = array((0 until m).map { s =>
-        concat_ws("|", (0 until m).filter(_ != s)
-          .map(j => col(s"code_$j").cast("string")): _*)
-      }: _*)
-      val expl = tup
-        .select(col("cnt"), tk.as("tk"), posexplode(pks).as(Seq("s", "pk")))
-      val wc = expl.groupBy("s", "pk").agg(sum("cnt").as("g"))
-      val fam = expl.join(wc, Seq("s", "pk"))
-        .groupBy("tk").agg(max("cnt").as("cnt"), sum("g").as("gs"))
-      val row = fam.agg(max(col("gs") - lit(m - 1) * col("cnt"))).head()
-      val depth = if (row.isNullAt(0)) 0L else row.getLong(0)
-      math.max(f.toLong, math.min(depth, Int.MaxValue.toLong)).toInt
-    })
+    val f = if (floor > 0) floor else calibratedFloor(embeddings, mods, m)
+    val enc = encoded(embeddings, mods, m)
+    val codeCols = (0 until m).map(s => col(s"code_$s"))
+    val tup = enc.groupBy(codeCols: _*).agg(count(lit(1)).as("cnt"))
+    val tk = concat_ws("|",
+      (0 until m).map(s => col(s"code_$s").cast("string")): _*)
+    val pks = array((0 until m).map { s =>
+      concat_ws("|", (0 until m).filter(_ != s)
+        .map(j => col(s"code_$j").cast("string")): _*)
+    }: _*)
+    val expl = tup
+      .select(col("cnt"), tk.as("tk"), posexplode(pks).as(Seq("s", "pk")))
+    val wc = expl.groupBy("s", "pk").agg(sum("cnt").as("g"))
+    val fam = expl.join(wc, Seq("s", "pk"))
+      .groupBy("tk").agg(max("cnt").as("cnt"), sum("g").as("gs"))
+    val row = fam.agg(max(col("gs") - lit(m - 1) * col("cnt"))).head()
+    val depth = if (row.isNullAt(0)) 0L else row.getLong(0)
+    math.max(f.toLong, math.min(depth, Int.MaxValue.toLong)).toInt
   }
 
   /** The tune-sample calibration ([[calibratedRefineFloor]]) as oracle
@@ -861,15 +829,16 @@ object PQ {
     // constant override. queryFrom > 0 serves the window
     // [queryFrom, nQueries) — the out-of-sample evaluation hook (PQTune's
     // holdout arm; the registered queries all serve from 0).
+    val mods = models(embeddings, m, codes, iters)
     val r =
       if (refineFactor > 0) refineFactor
-      else derivedRefineFactor(embeddings, m, codes, iters)
+      else derivedFactor(embeddings, mods, m, 0)
     // tie-inclusive cutoff (rank, ordered by adc_dist ALONE): the whole
     // ADC-distance class at the R·k boundary enters the shortlist — see
     // the RefineFactor note for why a strict row_number cutoff caps
     // recall on clone-heavy corpora
     val sw = Window.partitionBy(col("query_id")).orderBy(col("adc_dist"))
-    val short = adcDists(embeddings, nQueries, m, codes, iters, queryFrom)
+    val short = adcDists(embeddings, mods, nQueries, m, queryFrom)
       .withColumn("srank", rank().over(sw))
       .filter(col("srank") <= lit(topK.toLong * r)) // long: R can be corpus-deep
       .select(col("query_id"), col("neighbor_id"))

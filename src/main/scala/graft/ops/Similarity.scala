@@ -837,47 +837,25 @@ object Similarity {
   def adaptiveSubPlanes(n: Long, budget: Long = CellBudget): Int =
     (0 to MaxSubPlanes).find(p => n <= budget * (1L << p)).getOrElse(MaxSubPlanes)
 
-  /** Session memo for [[tuneGridRows]] — the [[graft.ops.PQ]] `refineCache`
-    * pattern verbatim: the grid is deterministic in (corpus plan, budget),
-    * ten small rows, so memoization only skips repeated tune jobs, never
-    * changes a result. Bounded LRU for the same reason (the key retains
-    * the analyzed plan); same same-plan-same-data assumption — corpus
-    * snapshots are immutable paths, new snapshot = new plan = fresh tune.
+  /** The derivation's inputs, computed once per call: the corpus-derived
+    * sub-plane count p, and the [[MaxDerivedNprobe]]-ranked assignment,
+    * cached — the tune grid reads it from two join sides, and the serving
+    * search needs exactly this relation filtered to `cell_rank ≤ np`. The
+    * caller frees the cache once its last reader has run.
     */
-  private val tuneCache = graft.util.BoundedLru[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
-    Seq[(Int, Long)]]()
-
-  /** The MaxDerivedNprobe-ranked assignment behind the tune grid, memoized
-    * beside [[tuneCache]] (r18): the serving search needs exactly this
-    * relation filtered to `cell_rank ≤ np`, so sharing the cached handle
-    * lets [[ivfTopKAdaptive]] skip rebuilding the centroid + assignment
-    * pipeline after the derivation already ran it. Same key, same
-    * lifetime, same same-plan-same-data assumption as the grid memo; a
-    * session `clearCache()` only drops the blocks — the handle then
-    * recomputes lazily with unchanged semantics.
-    */
-  private val rankedCache = graft.util.BoundedLru[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
-    (Int, DataFrame)]()
-
-  /** (derived sub-plane count p, the memoized ranked assignment). */
   private def rankedForTune(
       embeddings: DataFrame, budget: Long): (Int, DataFrame) = {
-    val key = (embeddings.queryExecution.analyzed, budget)
-    rankedCache.computeIfAbsent(key, _ => {
-      val p = graft.util.JobDesc.labeled(embeddings.sparkSession,
-        "ivf-derive: corpus size")(
-        adaptiveSubPlanes(embeddings.count(), budget))
-      // NOT eagerly materialized (r19, measured): the grid's concurrent
-      // broadcast builds LOOK like they race this cache (several
-      // overlapping ~0.65 s jobs in q121's profile), but the block
-      // manager locks each cached partition while the first task
-      // computes it — the others wait, then read. An up-front count()
-      // A/B'd flat (q121 4.52→4.71 s, q36 3.15→3.20 s medians) while
-      // paying one extra job, so the lazy cache stands.
-      (p, ivfCellsRanked(embeddings, MaxDerivedNprobe, p).cache())
-    })
+    val p = graft.util.JobDesc.labeled(embeddings.sparkSession,
+      "ivf-derive: corpus size")(
+      adaptiveSubPlanes(embeddings.count(), budget))
+    // NOT eagerly materialized (r19, measured): the grid's concurrent
+    // broadcast builds LOOK like they race this cache (several
+    // overlapping ~0.65 s jobs in q121's profile), but the block
+    // manager locks each cached partition while the first task
+    // computes it — the others wait, then read. An up-front count()
+    // A/B'd flat (q121 4.52→4.71 s, q36 3.15→3.20 s medians) while
+    // paying one extra job, so the lazy cache stands.
+    (p, ivfCellsRanked(embeddings, MaxDerivedNprobe, p).cache())
   }
 
   /** The derivation measurement behind [[derivedNprobe]]: per candidate
@@ -887,22 +865,27 @@ object Similarity {
     * of the rank-≤[[MaxDerivedNprobe]] one (filter, re-rank, intersect;
     * no extra corpus passes). Cost: one broadcast-query truth scan + one
     * sample-sized cell join — the same order as the search being tuned.
+    * The ranked cache is freed before this returns.
     */
   private def tuneGridRows(
       embeddings: DataFrame, budget: Long = CellBudget): Seq[(Int, Long)] = {
-    val key = (embeddings.queryExecution.analyzed, budget)
-    tuneCache.computeIfAbsent(key, _ =>
-      tuneGridFromRanked(embeddings, rankedForTune(embeddings, budget)._2))
+    val (_, ranked) = rankedForTune(embeddings, budget)
+    try tuneGridFromRanked(embeddings, ranked)
+    finally ranked.unpersist(blocking = false)
   }
 
-  /** The grid computation itself, parameterized by the ranked cell
-    * assignment — shared between the label-cell router above and the
-    * TRAINED-cell router ([[KMeans.trainedTuneGridRows]], r18): any
-    * (vec_id, cell, cell_rank ≤ [[MaxDerivedNprobe]]) relation whose
-    * rank-1 row is the vector's single home cell measures its per-nprobe
-    * tune-sample recall through the identical joins.
+  /** The smallest grid nprobe whose sample hits meet [[TuneHitBar]]; −1
+    * when none does.
     */
-  private[ops] def tuneGridFromRanked(
+  private def chosenNprobe(grid: Seq[(Int, Long)]): Int =
+    grid.find(_._2 >= TuneHitBar).map(_._1).getOrElse(-1)
+
+  /** The grid computation itself, parameterized by the ranked cell
+    * assignment: any (vec_id, cell, cell_rank ≤ [[MaxDerivedNprobe]])
+    * relation whose rank-1 row is the vector's single home cell measures
+    * its per-nprobe tune-sample recall through the identical joins.
+    */
+  private def tuneGridFromRanked(
       embeddings: DataFrame, ranked: DataFrame): Seq[(Int, Long)] = {
     val emb2 = embeddings.select(col("vec_id"), col("embedding"))
     val qside = emb2.filter(col("vec_id") < TuneQueries).join(ranked, "vec_id")
@@ -948,8 +931,7 @@ object Similarity {
     * silently returning 20–30% of the true neighbors.
     */
   def derivedNprobe(embeddings: DataFrame, budget: Long = CellBudget): Int =
-    tuneGridRows(embeddings, budget)
-      .find(_._2 >= TuneHitBar).map(_._1).getOrElse(-1)
+    chosenNprobe(tuneGridRows(embeddings, budget))
 
   /** The derivation grid as a relation — (np, sample_hits, chosen), the
     * q102-style observability twin of [[derivedNprobe]]: users see the
@@ -961,7 +943,7 @@ object Similarity {
   def nprobeTuneGrid(
       embeddings: DataFrame, budget: Long = CellBudget): DataFrame = {
     val rows = tuneGridRows(embeddings, budget)
-    val chosen = rows.find(_._2 >= TuneHitBar).map(_._1).getOrElse(-1)
+    val chosen = chosenNprobe(rows)
     val spark = embeddings.sparkSession
     import spark.implicits._
     rows.map { case (np, h) => (np, h, np == chosen) }
@@ -1081,57 +1063,51 @@ object Similarity {
     // cluster scale 5 passes over columnar blocks vs 5 parquet scans is
     // the standard persist-when-reused trade (guide §5) and
     // MEMORY_AND_DISK degrades to local-disk blocks, never OOM.
-    // Query-scoped (r19, VERDICT r18 #5): the cache previously leaned on
-    // the session owner's clearCache() — a library caller that never
-    // clears kept a MEMORY_AND_DISK COPY OF THE CORPUS pinned per
-    // adaptive query. CacheScope frees it after the caller's action (the
-    // memoized rankedForTune handle is deliberately NOT freed — it is the
-    // cross-query tune-grid memo, ~3 small columns, documented in Bench).
+    // Query-scoped (r19, VERDICT r18 #5): CacheScope frees it, and in the
+    // derived mode the ranked assignment too, after the caller's action.
     val e = embeddings.cache()
+    if (nprobe > 0) {
+      val p = graft.util.JobDesc.labeled(e.sparkSession,
+        "ivf: corpus size")(adaptiveSubPlanes(e.count(), budget))
+      return graft.util.CacheScope.freeAfterUse(ivfTopK(e, k, nprobe, p), Seq(e))
+    }
+    // one ranked assignment serves both the tune grid and the search
+    val (p, ranked) = rankedForTune(e, budget)
+    val np = chosenNprobe(tuneGridFromRanked(e, ranked))
     val res =
-      if (nprobe > 0) {
-        val p = graft.util.JobDesc.labeled(e.sparkSession,
-          "ivf: corpus size")(adaptiveSubPlanes(e.count(), budget))
-        ivfTopK(e, k, nprobe, p)
-      } else {
-        val np = derivedNprobe(e, budget)
-        if (np > 0)
-          // serve from the derivation's own cached ranked assignment (r18):
-          // rank ≤ np is a filter over the MaxDerivedNprobe ranking, so the
-          // centroid + assignment pipeline is not rebuilt for the search
-          ivfTopKFromRanked(e,
-            rankedForTune(e, budget)._2.filter(col("cell_rank") <= np), k)
-        else {
-          org.slf4j.LoggerFactory.getLogger(getClass)
-            .warn(s"adaptive-IVF degrade: tune-sample recall < $TuneHitBar/" +
-              s"${TuneQueries * TuneK} hits at every nprobe <= $MaxDerivedNprobe " +
-              s"- serving EXACT top-$k via ALL label cells (full-scan " +
-              "cost); prefer trained-IVF (KMeans.ivfTopKTrained) or the PQ " +
-              "refine path for corpora without label-metric structure")
-          // Degrade serving reuses the derivation's memoized ranking when
-          // it provably IS the complete one (r19): with p = 0 the memo's
-          // cells are the plain label cells the degrade wants, and when
-          // the corpus has ≤ MaxDerivedNprobe distinct cells every
-          // (vector, cell) pair already carries a rank ≤ cell count ≤
-          // MaxDerivedNprobe — so rank ≤ MaxValue over a SECOND
-          // centroid + assignment pipeline is the identical relation to
-          // the unfiltered memo. One tiny census aggregation over cached
-          // blocks replaces the duplicate pipeline (guide §2.4). p > 0 or
-          // more cells than the memo ranks → the unchanged full rebuild.
-          val (p, ranked) = rankedForTune(e, budget)
-          val cells = graft.util.JobDesc.labeled(e.sparkSession,
-            "ivf: degrade cell census")(
-            ranked.agg(countDistinct(col("cell"))).head().getLong(0))
-          if (p == 0 && cells <= MaxDerivedNprobe)
-            ivfTopKFromRanked(e, ranked, k)
-          else
-            // nprobe = Int.MaxValue probes every cell without paying a
-            // distinct count job first — cell_rank ≤ MaxValue keeps every
-            // window row, the identical relation to nprobe = <cell count>
-            ivfTopK(e, k, Int.MaxValue, 0)
-        }
+      if (np > 0)
+        // rank ≤ np is a filter over the MaxDerivedNprobe ranking, so the
+        // centroid + assignment pipeline is not rebuilt for the search
+        ivfTopKFromRanked(e, ranked.filter(col("cell_rank") <= np), k)
+      else {
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"adaptive-IVF degrade: tune-sample recall < $TuneHitBar/" +
+            s"${TuneQueries * TuneK} hits at every nprobe <= $MaxDerivedNprobe " +
+            s"- serving EXACT top-$k via ALL label cells (full-scan " +
+            "cost); prefer trained-IVF (KMeans.ivfTopKTrained) or the PQ " +
+            "refine path for corpora without label-metric structure")
+        // Degrade serving reuses the derivation's ranking when it
+        // provably IS the complete one (r19): with p = 0 its cells are
+        // the plain label cells the degrade wants, and when the corpus
+        // has ≤ MaxDerivedNprobe distinct cells every (vector, cell) pair
+        // already carries a rank ≤ cell count ≤ MaxDerivedNprobe — so
+        // rank ≤ MaxValue over a SECOND centroid + assignment pipeline is
+        // the identical relation to the unfiltered ranking. One tiny
+        // census aggregation over cached blocks replaces the duplicate
+        // pipeline (guide §2.4). p > 0 or more cells than the derivation
+        // ranks → the unchanged full rebuild.
+        val cells = graft.util.JobDesc.labeled(e.sparkSession,
+          "ivf: degrade cell census")(
+          ranked.agg(countDistinct(col("cell"))).head().getLong(0))
+        if (p == 0 && cells <= MaxDerivedNprobe)
+          ivfTopKFromRanked(e, ranked, k)
+        else
+          // nprobe = Int.MaxValue probes every cell without paying a
+          // distinct count job first — cell_rank ≤ MaxValue keeps every
+          // window row, the identical relation to nprobe = <cell count>
+          ivfTopK(e, k, Int.MaxValue, 0)
       }
-    graft.util.CacheScope.freeAfterUse(res, Seq(e))
+    graft.util.CacheScope.freeAfterUse(res, Seq(e, ranked))
   }
 
   /** Oracle for [[ivfTopKAdaptive]]: p is computed IN SQL from COUNT(*)

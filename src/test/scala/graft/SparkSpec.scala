@@ -9,24 +9,37 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // session is shared across suites
 
-  /** Job ids Spark started under job group `group` while `f` ran. A
-    * sentinel job in another group flushes the listener bus: its start
+  /** Job ids Spark started under job group `group` while `f` ran. */
+  def jobsInGroup(group: String)(f: => Unit): Seq[Int] =
+    jobStartsInGroup(group)(f).map(_._1)
+
+  /** The description of each job Spark started under job group `group`
+    * while `f` ran: a phase's `JobDesc` label, else the group name.
+    */
+  def jobLabelsInGroup(group: String)(f: => Unit): Seq[String] =
+    jobStartsInGroup(group)(f).map(_._2)
+
+  /** (job id, description) per job started under `group` while `f` ran.
+    * A sentinel job in another group flushes the listener bus: its start
     * event arrives after every event posted before it.
     */
-  def jobsInGroup(group: String)(f: => Unit): Seq[Int] = {
+  private def jobStartsInGroup(group: String)(f: => Unit): Seq[(Int, String)] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
     val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
     val sentinel = s"$group-sentinel"
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.add(e.jobId)
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` =>
+            jobs.add((e.jobId, props.map(_.getProperty("spark.job.description")).orNull))
           case `sentinel` => sentinelSeen.countDown()
           case _ => ()
         }
+      }
     }
     sc.addSparkListener(listener)
     try {

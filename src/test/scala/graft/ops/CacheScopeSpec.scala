@@ -67,10 +67,14 @@ class CacheScopeSpec extends SparkSpec {
 
   test("adaptive IVF with explicit nprobe frees the corpus cache " +
     "after the action (no external clearCache)") {
-    spark.catalog.clearCache()
-    val before = pinned()
-    assert(Similarity.ivfTopKAdaptive(emb, k = 2, nprobe = 1).count() >= 0)
-    assertEventuallyFreed(before, "ivfTopKAdaptive(nprobe=1)")
+    // nprobe = 0 is the derived mode: its tune grid and search share one
+    // cached ranked assignment, freed with the corpus cache
+    for (nprobe <- Seq(1, 0)) {
+      spark.catalog.clearCache()
+      val before = pinned()
+      assert(Similarity.ivfTopKAdaptive(emb, k = 2, nprobe = nprobe).count() >= 0)
+      assertEventuallyFreed(before, s"ivfTopKAdaptive(nprobe=$nprobe)")
+    }
   }
 
   test("embedding near-dup grid frees the block cache after the action") {
@@ -88,7 +92,6 @@ class CacheScopeSpec extends SparkSpec {
       v(2 + i % 5) = 0.01f * i
       (i.toLong, v.toSeq)
     }.toDF("vec_id", "embedding")
-    KMeans.trainedModel(df, k = 2, iters = 2) // memoized outside the window
     spark.catalog.clearCache()
     val before = pinned()
     val kept = KMeans.semanticDedup(df, k = 2, iters = 2, tau = 0.9)

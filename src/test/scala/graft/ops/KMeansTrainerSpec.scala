@@ -79,7 +79,7 @@ class KMeansTrainerSpec extends SparkSpec {
     assert(model(df, 2, 2) == Seq(0 -> Seq(0L, 0L), 1 -> Seq(1000000L, 0L)))
   }
 
-  test("training runs one Spark job, and a memo hit runs none") {
+  test("training runs one labelled Spark job, and every call trains") {
     val dir = Files.createTempDirectory("kmeans-trainer-spec").resolve("emb")
     corpus(
       4L -> Seq(0.0f, 0.0f), 3L -> Seq(0.25f, 0.0f), 1L -> Seq(0.5f, 0.0f),
@@ -90,7 +90,10 @@ class KMeansTrainerSpec extends SparkSpec {
     val cold = jobsInGroup("kmeans-trainer-cold") { trained = model(df, 2, 2) }
     assert(cold.size == 1, s"jobs: $cold")
     assert(trained == Seq(0 -> Seq(125000L, 0L), 1 -> Seq(750000L, -166667L)))
-    val warm = jobsInGroup("kmeans-trainer-memo") { model(df, 2, 2) }
-    assert(warm.isEmpty, s"jobs: $warm")
+    // no memo: a second call on the same frame trains again, the same model
+    val again = jobLabelsInGroup("kmeans-trainer-again") {
+      assert(model(df, 2, 2) == trained)
+    }
+    assert(again == Seq("k-means: train sample"), s"jobs: $again")
   }
 }

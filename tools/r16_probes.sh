@@ -2,9 +2,10 @@
 # Round-16 probe refresh, serial (host-noise policy: one timing-sensitive
 # run at a time): media A/B x5 on the restructured MediaIngest (per-kind
 # fetch pinning + audio branch — digests must stay bit-identical), the
-# derivation-family variance profile (q36/q121 5-rep medians, VERDICT r15
-# #4), the 50x headline decade and the 10x full ScaleProbe (carry the
-# corpus-scaled PQ floor holdout rows).
+# 50x headline decade and the 10x full ScaleProbe (carry the
+# corpus-scaled PQ floor holdout rows). The derivation-family variance
+# profile this round also ran is committed as DERIVPROF_r16.json; its
+# main is gone.
 # The full STREAMPROBE (with the new media_ingest_audio probe and the
 # crawl-loop stage attribution) runs separately first — see the round log.
 set -uo pipefail
@@ -20,13 +21,6 @@ for rep in 0 1 2 3 4; do
 done
 python3 tools/r16_assemble.py && log "MEDIA_AB_r16 assembled" \
   || log "ASSEMBLE FAILED (digest mismatch?)"
-
-log "DerivProf q36/q121 medians (sf0.1, 5 reps)"
-SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=16g \
-  tools/runmain.sh graft.DerivProf /root/testdata/sf0.1 5 \
-  > /tmp/derivprof_r16.log 2>&1 || log "DerivProf FAILED"
-grep '^{' /tmp/derivprof_r16.log | tail -1 | python3 -m json.tool \
-  > DERIVPROF_r16.json && log "DERIVPROF_r16 written"
 
 log "ScaleProbe 50x headline"
 SPARK_GRAFT_SCALEPROBE_OUT=SCALEPROBE_r16_50x.json SPARK_DRIVER_MEM=24g \

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Queries run in sorted name order after a small
@@ -8,29 +8,35 @@ import org.apache.spark.sql.SparkSession
   * session startup.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parsed ONCE, fail-fast (ADVICE r17: the raw env string was
-    // interpolated unquoted into the JSON line, so '*' or stray
-    // whitespace produced invalid JSON the sf1/frozen consumers die on)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toIntOption
-      .getOrElse(sys.error(
-        s"SPARK_GRAFT_CPUS must be a bare integer (local[*] is not " +
-          s"supported here - bench thread counts must be recordable), got " +
-          s"'${sys.env("SPARK_GRAFT_CPUS")}'"))
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup: parquet reader + codegen + shuffle machinery
+  /** JVM, codegen, parquet-reader and shuffle warmup before the first
+    * timed query.
+    */
+  def warmup(spark: SparkSession, sfDir: String): Unit =
     try {
       spark.range(1 << 18).selectExpr("sum(id)").collect()
       graft.sources.Tables.lineitem(spark, sfDir).limit(1000)
         .groupBy("l_returnflag").count().collect()
     } catch { case _: Throwable => () }
+
+  /** The timed region: one `count()` of the query's result, then the
+    * session cache cleared outside the timing so every query starts cold.
+    * Returns the row count (or what the query threw) and the seconds.
+    */
+  def timed(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): (Either[Throwable, Long], Double) = {
+    val t0 = System.nanoTime()
+    val n = try Right(fn(spark, sfDir).count()) catch { case e: Throwable => Left(e) }
+    val dt = (System.nanoTime() - t0) / 1e9
+    try spark.catalog.clearCache() catch { case _: Throwable => () }
+    (n, dt)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = graft.util.SessionTuning.local(defaultCpus = 4)
+    // the session's shuffle partition count is its core count
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    warmup(spark, sfDir)
     // SPARK_GRAFT_BENCH_REPS full passes (default 3), report the
     // per-query MEDIAN with the raw runs kept beside it (VERDICT r16 #5:
     // single-run rows proved ±20% on this host and the old min-of-2 both
@@ -45,16 +51,12 @@ object Bench {
     val errors = scala.collection.mutable.Map[String, String]()
     def onePass(): Seq[(String, Double)] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch {
-          case e: Throwable =>
-            errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-              .linesIterator.next().take(200)
-            false
+        val (n, dt) = timed(spark, sfDir, fn)
+        n.left.foreach { e =>
+          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+            .linesIterator.next().take(200)
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        try spark.catalog.clearCache() catch { case _: Throwable => () }
-        name -> (if (ok) dt else -1.0)
+        name -> (if (n.isRight) dt else -1.0)
       }
     val passes: Seq[Map[String, Double]] =
       (0 until math.max(1, reps)).map(_ => onePass().toMap)

@@ -1,15 +1,17 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** r18 optimization-round diagnostic: per-query JOB breakdown.
+import graft.util.ListenerFence
+
+/** Per-query profiler: the formatted physical plan, then a JOB breakdown.
   *
-  * For each named query, runs `fn(spark, sfDir).count()` exactly as Bench
-  * does and prints every Spark job the invocation launched — wall time,
-  * stage count, task count, shuffle read/write bytes — so the optimization
-  * work targets where the time measurably goes (guide §1: measure first)
-  * instead of the widest-looking operator. Usage:
+  * For each named query, prints `df.explain("formatted")`, then runs
+  * Bench's timed region ([[Bench.timed]]: `fn(spark, sfDir).count()`, then
+  * `clearCache()`) after Bench's warmup, and prints every Spark job the
+  * timed run launched — wall time, stage count, task count, input and
+  * shuffle read/write bytes — so optimization work targets where the time
+  * measurably goes instead of the widest-looking operator. Usage:
   *
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.OptProf /root/testdata/sf0.1 q36_ann_ivf_topk ..."
   */
@@ -17,20 +19,11 @@ object OptProf {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq else Seq("q36_ann_ivf_topk")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup (Bench-identical)
-    try {
-      spark.range(1 << 18).selectExpr("sum(id)").collect()
-      graft.sources.Tables.lineitem(spark, sfDir).limit(1000)
-        .groupBy("l_returnflag").count().collect()
-    } catch { case _: Throwable => () }
+    val spark = graft.util.SessionTuning.local(defaultCpus = 32)
+    val sc = spark.sparkContext
+    def drainListenerBus(): Unit =
+      if (!ListenerFence.await(sc)) System.err.println("[optprof] listener bus did not drain")
+    Bench.warmup(spark, sfDir)
 
     case class JobRec(id: Int, desc: String, var started: Long = 0L,
         var ended: Long = 0L, var stages: Int = 0, var tasks: Int = 0,
@@ -38,7 +31,7 @@ object OptProf {
     val jobs = scala.collection.concurrent.TrieMap[Int, JobRec]()
     val stageToJob = scala.collection.concurrent.TrieMap[Int, Int]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
+      override def onJobStart(e: SparkListenerJobStart): Unit = if (!ListenerFence.isFence(e)) {
         val desc = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
         val r = JobRec(e.jobId, desc, e.time)
@@ -58,29 +51,31 @@ object OptProf {
         }
       }
     }
-    spark.sparkContext.addSparkListener(listener)
+    sc.addSparkListener(listener)
 
-    // SPARK_GRAFT_PROF_REPS > 1: run each query REPS times (cache cleared
-    // between reps, Bench-identical) and report the MEDIAN wall beside the
-    // LAST rep's job table — single-shot numbers are codegen-cold and
-    // overstate by 1.5-2x vs the bench's 3-rep medians.
+    // SPARK_GRAFT_PROF_REPS > 1: run each query REPS times and report the
+    // MEDIAN wall beside the LAST rep's job table — single-shot numbers are
+    // codegen-cold and overstate by 1.5-2x vs the bench's 3-rep medians.
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROF_REPS", "1").toInt
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => println(s"== $name: unknown query ==")
         case Some(fn) =>
+          println(s"\n========== $name ==========")
+          fn(spark, sfDir).explain("formatted")
+          // building the plan may run eager phases; start the timing cold
+          spark.catalog.clearCache()
           var n = 0L
           val walls = (0 until math.max(1, reps)).map { _ =>
+            drainListenerBus()
             jobs.clear(); stageToJob.clear()
-            val t0 = System.nanoTime()
-            n = fn(spark, sfDir).count()
-            val w = (System.nanoTime() - t0) / 1e9
-            try spark.catalog.clearCache() catch { case _: Throwable => () }
+            val (rows, w) = Bench.timed(spark, sfDir, fn)
+            n = rows.fold(e => throw e, identity)
             w
           }
           val dt = walls.sorted.apply(walls.length / 2)
-          Thread.sleep(300) // let listener events drain
-          println(f"%n========== $name: $n rows, median $dt%.2f s of ${walls.map(w => f"$w%.2f").mkString("/")}, ${jobs.size} jobs ==========")
+          drainListenerBus()
+          println(f"== $name: $n rows, median $dt%.2f s of ${walls.map(w => f"$w%.2f").mkString("/")}, ${jobs.size} jobs ==")
           val recs = jobs.values.toSeq.sortBy(_.id)
           recs.foreach { r =>
             val w = (r.ended - r.started) / 1e3

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.JsonlSource
@@ -45,11 +45,7 @@ import graft.sources.JsonlSource
 object PipelineProbe {
   def main(args: Array[String]): Unit = {
     val docMult = args.headOption.map(_.toInt).getOrElse(200)
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.SessionTuning.local(defaultCpus = 32)
     graft.streaming.StateStores.useRocksDB(spark)
     val base = "/root/testdata/sf0.1"
     val out = "/tmp/graft-pipeline"

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main: measured scaling probe for the extension operators.
@@ -125,11 +125,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val headlineOnly = args.contains("headline")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.SessionTuning.local(defaultCpus = 32)
     val base = "/root/testdata/sf0.1"
     val out = s"/tmp/graft-scale$mult"
 
@@ -196,33 +192,8 @@ object ScaleProbe {
       measurements += ((name, n, dt, Some(info)))
       println(f"[scale] $name: $n rows in $dt%.1fs  $info")
     }
-    // ±95% half-width over per-query recalls (the stated interval of the
-    // widened holdout rows, VERDICT r14 #6): the normal ±1.96·SE, FLOORED
-    // by a Wilson half-width so an all-1.0 boundary never reports a
-    // zero-width interval. The Wilson N is the number of QUERIES, not
-    // queries×trials (ADVICE r16): a query's 5 hit trials are correlated
-    // (same neighborhood, and some queries have <5 true neighbors), so
-    // pooling them as independent Bernoulli draws understated the honest
-    // floor — per-query means as the draws is the conservative bound
-    // (≈ z²/n ≈ ±0.072 at n=50 all-1.0, vs the pooled ±0.015).
-    def holdoutCi95(rec: Array[Double]): Double = {
-      val n = rec.length
-      if (n < 2) return 0.0
-      val mean = rec.sum / n
-      val se = 1.96 * math.sqrt(
-        rec.map(r => (r - mean) * (r - mean)).sum / (n.toDouble * (n - 1)))
-      val bigN = n.toDouble
-      val z = 1.96
-      val p = math.min(1.0, math.max(0.0, mean))
-      val denom = 1 + z * z / bigN
-      val center = (p + z * z / (2 * bigN)) / denom
-      val half = z * math.sqrt(
-        p * (1 - p) / bigN + z * z / (4 * bigN * bigN)) / denom
-      val wilson = math.max(center + half - p, p - (center - half))
-      math.max(se, wilson)
-    }
     // one row → {"n_shingles": …, …, "derived_cap": …}
-    def capStatsJson(docs: org.apache.spark.sql.DataFrame): (Long, String) = {
+    def capStatsJson(docs: DataFrame): (Long, String) = {
       val r = graft.ops.NearDup.dfCapStats(docs).head()
       val cols = r.schema.fieldNames
       (1L, cols.indices.map(i => s""""${cols(i)}": ${r.getLong(i)}""")
@@ -373,13 +344,9 @@ object ScaleProbe {
         // driver-local — seconds, where the distributed loop's ≈3 job
         // schedules + fresh codegen PER SEQUENTIAL MERGE cost >15 min at
         // 50k docs however cheap each merge's data work is (measured,
-        // graft.BpeCapProbe / SURVEY §8). The distributed-256 stage stays
-        // available behind SPARK_GRAFT_BPE256=1 as the honest contrast.
+        // SURVEY §8).
         time(s"$label bpe_merges_local=256")(
           graft.ops.BPE.bpeMergesLocal(docs, merges = 256).count())
-        if (label != "1x" && sys.env.getOrElse("SPARK_GRAFT_BPE256", "0") == "1")
-          time(s"$label bpe_merges=256")(
-            graft.ops.BPE.bpeMerges(docs, merges = 256).count())
         // 32k merges — production tokenizer depth (VERDICT r12 #6). The
         // testdata vocabulary is 31 distinct words (every merge path
         // exhausts at ~130 steps), so DEPTH is probed on a deterministic
@@ -472,38 +439,6 @@ object ScaleProbe {
         val mean = rows.map(_.getDouble(2)).sum / math.max(1, rows.length)
         (rows.length.toLong,
           f"""{"mean_recall": $mean%.3f, "derived_nprobe": $np}""")
-      })
-      // OUT-OF-SAMPLE check of the derived default (r14; widened in r15,
-      // VERDICT r14 #6): the knob is tuned on queries 0..9, so the row
-      // above is in-sample by construction — this one scores a DISJOINT
-      // 50-query window (the r14 10-query window's σ ≈ 0.04 at n=50 hits
-      // left the committed 0.92 with a wide interval; 50 queries × k=5 =
-      // 250 hit trials tightens ±1.96·SE ~√5×), interval stated in the row
-      timeInfo(s"$label ann_recall_adaptive_holdout")({
-        val rows = graft.ops.Similarity.annRecallHoldout(
-          emb, until = graft.ops.Similarity.TuneQueries + 50).collect()
-        val rec = rows.map(_.getDouble(2))
-        val mean = rec.sum / math.max(1, rec.length)
-        val ci = holdoutCi95(rec)
-        (rows.length.toLong,
-          f"""{"mean_recall": $mean%.3f, "n_queries": ${rec.length}, "ci95": $ci%.3f}""")
-      })
-      // the same out-of-sample contract for the PQ refine-floor family
-      // (VERDICT r14 #6): the calibrated floor is derived on queries
-      // 0..9; this row serves the DISJOINT 50-query window through the
-      // full derived default and states the interval
-      timeInfo(s"$label pq_refine_recall_holdout")({
-        // window starts at the corpus-scaled tune width (r16): the
-        // widened [0, 40) calibration sample on large corpora must stay
-        // disjoint from the holdout
-        val pnq = graft.ops.Similarity.tuneQueriesFor(emb.count())
-        val rows = graft.ops.PQ.pqRefineRecallHoldout(
-          emb, from = pnq, until = pnq + 50).collect()
-        val rec = rows.map(_.getDouble(2))
-        val mean = rec.sum / math.max(1, rec.length)
-        val ci = holdoutCi95(rec)
-        (rows.length.toLong,
-          f"""{"mean_recall": $mean%.3f, "n_queries": ${rec.length}, "ci95": $ci%.3f, "window_from": $pnq}""")
       })
       timeInfo(s"$label pq_recall")({
         val rows = graft.ops.PQ.pqRecall(emb).collect()

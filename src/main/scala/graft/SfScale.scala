@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic FK-consistent corpus scaler: writes a `mult`× copy of a
@@ -39,11 +39,7 @@ object SfScale {
     val base = args(0)
     val out = args(1)
     val mult = args(2).toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.SessionTuning.local(defaultCpus = 32)
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$base/$t.parquet")
     def wr(df: DataFrame, t: String): Unit =

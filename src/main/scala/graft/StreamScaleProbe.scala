@@ -174,12 +174,9 @@ object StreamScaleProbe {
   def main(args: Array[String]): Unit = {
     val eventMult = args.headOption.map(_.toInt).getOrElse(10)
     val docMult = args.drop(1).headOption.map(_.toInt).getOrElse(200)
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.SessionTuning.local(defaultCpus = 32)
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     StateStores.useRocksDB(spark) // the 100-TB state-store configuration
     val base = "/root/testdata/sf0.1"
     val out = "/tmp/graft-streamprobe"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,14 +8,7 @@ object Verify {
     // only; the driver passes two) restrict the run to matching queries
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.SessionTuning.local(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // Failures must leave a durable artifact, not just a stderr line — a
     // query missing from a 96-entry compare is invisible; errors.json and

@@ -745,7 +745,7 @@ object Multimodal {
     // consumers halve where those exchanges were the bigger fraction
     // (sf1 bench q118 −55%, q119 −45%); the 50× keep-list TOTAL is
     // neutral within host noise because codec + closure dominate there
-    // (AudioProf: the collision join is ~7 s of ~120).
+    // (r15 stage profile, SURVEY r15: the collision join is ~7 s of ~120).
     fp.select(col("media_id"), explode(array(keys: _*)).as("bpk"),
       col("fp_hi"), col("fp_lo"))
   }
@@ -821,42 +821,10 @@ object Multimodal {
   }
 
   /** The keep-list's verified pair relation over an already-fingerprinted
-    * corpus (hub-budgeted band-pair candidates, in-join bit_count verify)
-    * — factored out so [[graft.AudioProf]] can time candidates and the
-    * star-rounds closure separately. Lazy; [[audioDedupKeepList]]'s plan
-    * is unchanged by the refactor.
+    * corpus: hub-budgeted band-pair candidates, verified by bit_count
+    * inside the collision join. Lazy.
     */
-  /** Decode → fingerprint over the variant corpus, for [[graft.AudioProf]]. */
-  private[graft] def audioFingerprintsOfVariants(documents: DataFrame): DataFrame =
-    audioFingerprintsOf(audioVariantCorpus(documents))
-
-  /** (collision rows, within-radius collision rows) of the keep-list's
-    * hub-budgeted candidate join — the [[graft.AudioProf]] census that
-    * says how much of the multiset a de-clustered key could still cut.
-    */
-  private[graft] def audioKeepListCandidateCensus(
-      fp: DataFrame, maxHamming: Int = MaxHamming,
-      bucketBudget: Int = graft.ops.NearDup.BucketBudget): (Long, Long) = {
-    import org.apache.spark.sql.expressions.Window
-    val bp = afpBandPairKeys(
-      fp.select(col("media_id"), col("fp_hi"), col("fp_lo")))
-    val w = Window.partitionBy("bpk").orderBy("media_id")
-    val hubs = bp
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= bucketBudget)
-      .select(col("media_id").as("media_a"), col("bpk"),
-        col("fp_hi").as("hi_a"), col("fp_lo").as("lo_a"))
-    val r = bp.toDF("media_b", "bpk", "hi_b", "lo_b")
-      .join(hubs, Seq("bpk"))
-      .filter(col("media_a") < col("media_b"))
-      .agg(count(lit(1)).as("n_all"),
-        count(when(expr("bit_count(hi_a ^ hi_b)") +
-          expr("bit_count(lo_a ^ lo_b)") <= maxHamming, 1)).as("n_true"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  private[graft] def audioKeepListPairs(
+  private def audioKeepListPairs(
       fp: DataFrame, maxHamming: Int = MaxHamming,
       bucketBudget: Int = graft.ops.NearDup.BucketBudget): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -871,7 +839,7 @@ object Multimodal {
     // hub candidates verify INSIDE the collision join (fps ride the band
     // rows — [[afpBandPairKeys]]): the collision multiset never hits an
     // exchange — bit_count filters it to within-radius rows in the join
-    // stage (AudioProf 50× census: 518M collision rows scanned in ~7 s;
+    // stage (r15 50× census, SURVEY r15: 518M collision rows scanned in ~7 s;
     // 59.5% are within-radius — multi-key duplicates of 32.1M unique true
     // pairs, so no band layout has anything material left to cut). NO
     // distinct here: the only consumer is [[NearDup.components]], whose

@@ -393,12 +393,13 @@ object NearDup {
     * Why this replaces the raw posting self-join (the engine's former
     * shape): a full inverted-index join costs Σ_w df(w)² — quadratic on
     * hot shingles (a 2-gram corpus here concentrates 99.997% of Σdf² in
-    * hot keys, see CapDemo). Under a rarest-first global token order, each
-    * doc joins only on its first |A| − ⌊t·|A|⌋ + 1 tokens — any pair
-    * sharing NONE of those has overlap ≤ ⌈t·|A|⌉ − 1 < t·|A|, hence
-    * Jaccard < t (J ≥ t ⟹ |∩| ≥ t·|union| ≥ t·|A|). Hot tokens sort
-    * LAST, so they effectively vanish from the join keys: posting volume
-    * is Σ_w df_prefix(w)², which tracks the threshold and the match
+    * hot keys, see [[ngramJaccardPairsCapped]]). Under a rarest-first
+    * global token order, each doc joins only on its first
+    * |A| − ⌊t·|A|⌋ + 1 tokens — any pair sharing NONE of those has
+    * overlap ≤ ⌈t·|A|⌉ − 1 < t·|A|, hence Jaccard < t
+    * (J ≥ t ⟹ |∩| ≥ t·|union| ≥ t·|A|). Hot tokens sort LAST, so they
+    * effectively vanish from the join keys: posting volume is
+    * Σ_w df_prefix(w)², which tracks the threshold and the match
     * structure, not corpus². The df-capped q38 remains the recall-trading
     * escape hatch for adversarial corpora where even prefixes collide.
     *
@@ -917,11 +918,16 @@ object NearDup {
     * discriminative signal anyway); the posting join cost drops from
     * Σdf² to Σ min(df,cap)² over the capped vocabulary.
     *
-    * When the cap actually binds (measured — [[graft.CapDemo]]): on this
-    * corpus's degenerate 2-gram vocabulary, 99.997% of the uncapped Σdf²
-    * (73.2M of 73.2M posting pairs) comes from hot shingles, and hot df
-    * grows linearly with corpus size — so the uncapped join cost is
-    * QUADRATIC in corpus scale while the capped index stays ≤ cap²·vocab.
+    * When the cap actually binds (measured at sf0.1, local[32], 2026-08-12):
+    * the documents corpus has a degenerate 2-gram vocabulary of 931
+    * distinct shingles, and 99.997% of the uncapped Σdf² (73,198,557 of
+    * 73,200,955 posting pairs) comes from shingles with df > 100. Exact
+    * 2-gram Jaccard at t = 0.5 ran 19.0 s uncapped for 256 pairs; maxDf =
+    * 400 ran 15.6 s for the SAME 256 pairs (the cap bound only
+    * non-discriminative keys); maxDf = 100 ran 6.5 s for 13 pairs (hot-only
+    * pairs dropped — the recall contract). Hot df grows linearly with
+    * corpus size, so the uncapped join cost is QUADRATIC in corpus scale
+    * while the capped index stays ≤ cap²·vocab.
     * On the 3-gram default the cap barely binds (avg df ≈ 37 < 100), so
     * q38 costs ≈ q32 plus the df/doc-stats overhead — the escalation is
     * insurance you buy for hot-key distributions, not a free speedup.
@@ -1028,7 +1034,7 @@ object NearDup {
       .groupBy("shingle").agg(count(lit(1)).as("df"))
     if (maxDf0 > 0) {
       // Explicit constant cap: fully LAZY — no Spark job runs at
-      // DataFrame-construction time, so plan-only consumers (Explain,
+      // DataFrame-construction time, so plan-only consumers (`explain`,
       // plan-shape specs, composition into bigger dataflows) cost
       // nothing (ADVICE r9). The price: no clean-corpus fast path and no
       // plan-time cost gate — both need driver statistics. A caller who

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.LongArrayDot.dotLong
@@ -239,7 +239,7 @@ object PQ {
     */
   private def lutDf(
       embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
-      nQueries: Int, m: Int, queryFrom: Int = 0): DataFrame = {
+      nQueries: Int, m: Int): DataFrame = {
     val spark = embeddings.sparkSession
     val subDim = KMeans.Dim / m
     val cbRows = for {
@@ -249,8 +249,7 @@ object PQ {
     val codebook = spark.createDataFrame(cbRows)
       .toDF("s", "code", "cq", "cc")
     val queries = embeddings
-      .filter(col("vec_id") >= queryFrom && col("vec_id") < nQueries &&
-        col("embedding").isNotNull &&
+      .filter(col("vec_id") < nQueries && col("embedding").isNotNull &&
         size(col("embedding")) === KMeans.Dim)
       .select(col("vec_id").as("query_id"), col("embedding"))
     val qSubs = (0 until m).map { s =>
@@ -295,8 +294,8 @@ object PQ {
     */
   private def adcDists(
       embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
-      nQueries: Int, m: Int, queryFrom: Int = 0): DataFrame = {
-    val lut = lutDf(embeddings, mods, nQueries, m, queryFrom)
+      nQueries: Int, m: Int): DataFrame = {
+    val lut = lutDf(embeddings, mods, nQueries, m)
     val enc = encLong(embeddings, mods, m)
     enc.join(broadcast(lut), Seq("s", "code"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -822,13 +821,11 @@ object PQ {
   def pqAdcRefineTopK(
       embeddings: DataFrame, nQueries: Int = 10, topK: Int = 5,
       refineFactor: Int = 0, m: Int = M, codes: Int = Codes,
-      iters: Int = Iters, queryFrom: Int = 0): DataFrame = {
+      iters: Int = Iters): DataFrame = {
     // refineFactor 0 (the default) = DERIVE R from the code-frequency
     // histogram so the shortlist covers the corpus's deepest near-tie
     // family ([[derivedRefineFactor]]); a positive value is the explicit
-    // constant override. queryFrom > 0 serves the window
-    // [queryFrom, nQueries) — the out-of-sample evaluation hook (PQTune's
-    // holdout arm; the registered queries all serve from 0).
+    // constant override.
     val mods = models(embeddings, m, codes, iters)
     val r =
       if (refineFactor > 0) refineFactor
@@ -838,13 +835,12 @@ object PQ {
     // the RefineFactor note for why a strict row_number cutoff caps
     // recall on clone-heavy corpora
     val sw = Window.partitionBy(col("query_id")).orderBy(col("adc_dist"))
-    val short = adcDists(embeddings, mods, nQueries, m, queryFrom)
+    val short = adcDists(embeddings, mods, nQueries, m)
       .withColumn("srank", rank().over(sw))
       .filter(col("srank") <= lit(topK.toLong * r)) // long: R can be corpus-deep
       .select(col("query_id"), col("neighbor_id"))
     val queries = embeddings
-      .filter(col("vec_id") >= queryFrom && col("vec_id") < nQueries &&
-        col("embedding").isNotNull &&
+      .filter(col("vec_id") < nQueries && col("embedding").isNotNull &&
         size(col("embedding")) === KMeans.Dim)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val w = Window.partitionBy(col("query_id"))
@@ -901,41 +897,6 @@ object PQ {
       graft.ops.Similarity.bruteForceTopK(embeddings, nQueries, k),
       pqAdcRefineTopK(embeddings, nQueries, k, refineFactor, m, codes, iters),
       k)
-
-  /** OUT-OF-SAMPLE recall of the refine-path default on a DISJOINT query
-    * window `[from, until)` (r15, VERDICT r14 #6 — one shared
-    * implementation for PQTune's holdout arm and the scale probes, with
-    * the window width a parameter so the probes can run the 50-query
-    * window whose ±1.96·SE band is ~3× tighter than the 10-query one).
-    * The truth is the window's own brute-force top-k (one broadcast-
-    * queries corpus scan); the serving arm is [[pqAdcRefineTopK]] with
-    * the given refine factor (0 = the full derived default, exactly what
-    * production serves).
-    */
-  def pqRefineRecallHoldout(
-      embeddings: DataFrame,
-      from: Int = graft.ops.Similarity.TuneQueries,
-      until: Int = 2 * graft.ops.Similarity.TuneQueries,
-      k: Int = graft.ops.Similarity.TuneK,
-      refineFactor: Int = 0): DataFrame = {
-    val inWindow = (c: Column) => c >= from && c < until
-    val queries = embeddings.filter(inWindow(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_emb"))
-    val scored = embeddings.repartition(col("vec_id"))
-      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        graft.ops.Similarity.dot(col("query_emb"), col("embedding"))
-          .as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val truth = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-    graft.ops.Similarity.recallVsTruth(
-      truth,
-      pqAdcRefineTopK(embeddings, nQueries = until, topK = k,
-        refineFactor = refineFactor, queryFrom = from),
-      k)
-  }
 
   def pqRefineRecallSql(
       nQueries: Int = 10, k: Int = 5, refineFactor: Int = 0,

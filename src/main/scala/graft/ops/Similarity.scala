@@ -395,35 +395,6 @@ object Similarity {
         .filter(col("query_id") < nQueries),
       k)
 
-  /** OUT-OF-SAMPLE recall of the derived-default search: [[derivedNprobe]]
-    * tunes on queries `vec_id < TuneQueries`, so measuring the tuned
-    * default on that same sample would be circular (hits ≥ bar by
-    * construction). This variant scores a DISJOINT query window
-    * `[from, until)` against its own brute-force truth — the number the
-    * scale probes report as evidence the derivation generalizes, beside
-    * the in-sample q106 row that hash-checks the computation itself.
-    */
-  def annRecallHoldout(
-      embeddings: DataFrame, from: Int = TuneQueries, until: Int = 2 * TuneQueries,
-      k: Int = TuneK, nprobe: Int = 0): DataFrame = {
-    val inWindow = (c: Column) => c >= from && c < until
-    val queries = embeddings.filter(inWindow(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_emb"))
-    val scored = embeddings.repartition(col("vec_id"))
-      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        dot(col("query_emb"), col("embedding")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val truth = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-    recallVsTruth(
-      truth,
-      ivfTopKAdaptive(embeddings, k = k, nprobe = nprobe)
-        .filter(inWindow(col("query_id"))),
-      k)
-  }
-
   /** The shared recall-vs-truth machine ([[annRecall]] and
     * [[graft.ops.PQ.pqRecall]] — ONE place to fix recall semantics, so
     * the Scala forms and the [[recallSqlFrom]] oracles cannot drift

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sink.ParquetSink
@@ -19,14 +18,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val nBatches = args.headOption.map(_.toInt).getOrElse(3)
     val rows = args.lift(1).map(_.toInt).getOrElse(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.local(defaultCpus = 4)
 
     val in = Files.createTempDirectory("graft-stream-in")
     val cp = Files.createTempDirectory("graft-stream-cp")

@@ -28,7 +28,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - re-execution safe: unpersist only drops blocks; a second action on
   *    the same DataFrame recomputes through the un-cached plan with
   *    identical semantics (and re-populates nothing — one-shot scope);
-  *  - plan-only safe: a consumer that never executes (Explain, plan
+  *  - plan-only safe: a consumer that never executes (`explain`, plan
   *    specs) registers no blocks, so the unfired listener holds only a
   *    plan reference, and at most [[MaxPending]] such listeners stay
   *    registered — the oldest is forgotten without a free;
@@ -52,7 +52,7 @@ object CacheScope {
   // (q119 +0.37 s, q114 +0.22 s, q121/q36 flat). Lazy caches stand.
 
   /** Most scopes left pending at once. A scope whose result never
-    * executes (Explain, plan specs) would stay registered for the session,
+    * executes (`explain`, plan specs) would stay registered for the session,
     * its plan tested by `sameResult` on every later execution; past this
     * many the oldest is forgotten — deregistered WITHOUT a free, so its
     * handles stay cached until the owner's `clearCache()`.

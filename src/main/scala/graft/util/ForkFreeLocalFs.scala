@@ -7,7 +7,8 @@ import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, FSLinkResolver, LocalFileSystem, Path, RawLocalFileSystem}
+  FSDataInputStream, FsServerDefaults, FSLinkResolver, LocalFileSystem, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -95,4 +96,13 @@ class ForkFreeRawLocalFs(conf: Configuration) extends DelegateToFileSystem(
   * implementation; like `LocalFs`, this one is always `file:///`.
   */
 class ForkFreeLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new ForkFreeRawLocalFs(conf))
+    extends ChecksumFs(new ForkFreeRawLocalFs(conf)) {
+
+  /** Reads through `ChecksumFs`' verifying `open(path, bufferSize)`.
+    * `FilterFs.open(path)` hands the raw file system's stream out
+    * unverified (in Hadoop's `LocalFs` too), and it is the call
+    * `FileContext.open(path)` and Spark's checkpoint file manager make.
+    */
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}

@@ -2,8 +2,10 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Session tuning shared by the mains that build a session (Bench /
-  * Verify / Explain / OptProf, the streaming demo and probes).
+/** The one local session every main builds ([[local]]: Bench, Verify,
+  * OptProf, SfScale, the probes and the streaming demo), and the tuning it
+  * carries ([[tuned]], which the benchmark harness applies to its own
+  * session).
   *
   * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (Spark
   * default 1 MB) is AQE's floor on coalesced-partition size. With
@@ -59,8 +61,39 @@ object SessionTuning {
     "fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName,
     "fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName)
 
+  private val TunedConf: Map[String, String] =
+    LocalFileSystemConf.map { case (k, v) => s"spark.hadoop.$k" -> v } +
+      ("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> MinCoalescedPartitionSize)
+
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
-    LocalFileSystemConf.foldLeft(
-      b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        MinCoalescedPartitionSize)) { case (acc, (k, v)) => acc.config(s"spark.hadoop.$k", v) }
+    TunedConf.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+
+  /** The core count in `SPARK_GRAFT_CPUS` (`raw`), or `default` when it is
+    * unset. It must be a bare integer: it becomes `local[n]`, the shuffle
+    * partition count and the `cpus` field of Bench's JSON line, so `*` or a
+    * stray suffix fails here, naming the value, instead of producing an
+    * unrecordable thread count or invalid JSON.
+    */
+  def cpus(raw: Option[String], default: Int): Int =
+    raw.fold(default)(v => v.trim.toIntOption.getOrElse(sys.error(
+      s"SPARK_GRAFT_CPUS must be a bare integer (local[*] is not supported " +
+        s"here - thread counts must be recordable), got '$v'")))
+
+  /** Everything [[local]] sets on its builder for `cpus` cores. */
+  def localConf(cpus: Int): Map[String, String] = TunedConf ++ Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  /** The tuned local session on `SPARK_GRAFT_CPUS` cores (`defaultCpus`
+    * when unset), log level WARN.
+    */
+  def local(defaultCpus: Int): SparkSession = {
+    val spark = localConf(cpus(sys.env.get("SPARK_GRAFT_CPUS"), defaultCpus))
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -19,35 +19,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def jobLabelsInGroup(group: String)(f: => Unit): Seq[String] =
     jobStartsInGroup(group)(f).map(_._2)
 
-  /** (job id, description) per job started under `group` while `f` ran.
-    * A sentinel job in another group flushes the listener bus: its start
-    * event arrives after every event posted before it.
+  /** (job id, description) per job started under `group` while `f` ran,
+    * read once the listener bus has delivered every earlier event.
     */
   private def jobStartsInGroup(group: String)(f: => Unit): Seq[(Int, String)] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val sentinel = s"$group-sentinel"
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
-        props.map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` =>
-            jobs.add((e.jobId, props.map(_.getProperty("spark.job.description")).orNull))
-          case `sentinel` => sentinelSeen.countDown()
-          case _ => ()
-        }
+        if (props.map(_.getProperty("spark.jobGroup.id")).orNull == group)
+          jobs.add((e.jobId, props.map(_.getProperty("spark.job.description")).orNull))
       }
     }
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, group)
       try f finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(graft.util.ListenerFence.await(sc))
     } finally sc.removeSparkListener(listener)
     jobs.asScala.toSeq
   }

@@ -13,8 +13,9 @@ import scala.util.Try
 import jdk.jfr.consumer.RecordingStream
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileAlreadyExistsException,
-  FileContext, FileSystem, Options, Path, RawLocalFileSystem}
+  FileContext, FileSystem, FSDataInputStream, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.functions.lit
 
 import graft.SparkSpec
@@ -53,12 +54,13 @@ class ForkFreeLocalFsSpec extends SparkSpec {
 
   /** Reads through `open(p, bufferSize)`, ChecksumFs' verifying open.
     * (`FileContext.open(p)` without a buffer size reaches `FilterFs.open`,
-    * which hands the raw stream out unverified, in Hadoop's `LocalFs` too.)
+    * which hands the raw stream out unverified in Hadoop's `LocalFs`.)
     */
-  private def read(fc: FileContext, p: Path): String = {
-    val in = fc.open(p, 4096)
+  private def read(fc: FileContext, p: Path): String =
+    readAll(fc.open(p, 4096))
+
+  private def readAll(in: FSDataInputStream): String =
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
 
   private def posix(p: Path): String =
     PosixFilePermissions.toString(Files.getPosixFilePermissions(Paths.get(p.toUri)))
@@ -118,7 +120,7 @@ class ForkFreeLocalFsSpec extends SparkSpec {
       val body = "v1\n" + """{"logOffset":0}""" * 40
       write(fc, p, body.getBytes("UTF-8"))
       assert(Files.exists(dir.resolve(".0.crc")))
-      assert(read(fc, p) == body)
+      assert(read(fc, p) == body && readAll(fc.open(p)) == body)
       val raf = new RandomAccessFile(dir.resolve("0").toFile, "rw")
       try {
         raf.seek(100)
@@ -127,6 +129,12 @@ class ForkFreeLocalFsSpec extends SparkSpec {
         raf.write(b ^ 0x01)
       } finally raf.close()
       intercept[ChecksumException](read(fc, p))
+      if (forkFree) {
+        // the one-argument open, which Spark's checkpoint reads make
+        intercept[ChecksumException](readAll(fc.open(p)))
+        val checkpoints = CheckpointFileManager.create(new Path(dir.toUri), conf(forkFree))
+        intercept[ChecksumException](readAll(checkpoints.open(p)))
+      }
     }
   }
 

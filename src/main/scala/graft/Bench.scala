@@ -73,12 +73,9 @@ object Bench {
       // median over reps; any failed rep poisons the slot
       n -> (if (rs.exists(_ < 0)) -1.0 else med(rs))
     }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Verify.jsonString(k)}:${Verify.jsonString(v)}" }
+      .mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     def line(keyOf: String => String, fmt: Double => String,
         withRuns: Boolean): String = {

@@ -189,7 +189,7 @@ object PipelineProbe {
           min("shard_pos").as("mn"), max("shard_pos").as("mx"))
         .filter(col("nd") =!= col("n") || col("mn") =!= 1 || col("mx") =!= col("n"))
         .count()
-      joined.unpersist()
+      graft.util.CacheScope.release(joined)
       val files = new java.io.File(s"$out/shards").listFiles()
         .filter(_.getName.startsWith("shard="))
         .map(d => d.listFiles().count(_.getName.endsWith(".parquet"))).sum

@@ -3,6 +3,21 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** A JSON string literal: backslash, quote, `\n`/`\r`/`\t` and every
+    * other control char (< 0x20, as `\u00XX`) escaped — a tab or CR in an
+    * oracle's SQL text would otherwise make `oracle_sql.json` unparseable
+    * for the compare tool. Bench's JSON line uses it too.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryNamePrefix...] — extra args (local use
     // only; the driver passes two) restrict the run to matching queries
@@ -25,31 +40,14 @@ object Verify {
         errors(name) = msg.linesIterator.next().take(500)
         Files.writeString(Paths.get(s"$outDir/$name.error"), msg)
       }
-      // Cache convention (central note — ops reference it): operators
-      // cache() relations their own plan reads 2-3× (shingle sets, ranked
-      // postings, fingerprint indexes) and deliberately do NOT unpersist —
-      // the returned DataFrame is lazy, so the builder cannot know when
-      // the caller's action has run. The session owner frees them between
-      // independent workloads, which is exactly what this does per query.
+      // each query starts from an empty cache
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} quer${if (errors.size == 1) "y" else "ies"} FAILED: ${errors.keys.toSeq.sorted.mkString(", ")}")

@@ -29,10 +29,7 @@ object TextFunctions {
     when(size(toks) >= n, array_distinct(grams)).otherwise(array().cast("array<string>"))
   }
 
-  /** Hex char (1-based position p of a hex string) → 0..15 int. */
-  def hexNibble(hexStr: Column, p: Int): Column =
-    (instr(lit("0123456789abcdef"), substring(hexStr, p, 1)) - 1).cast("int")
-
+  /** Hex char (1-based position p of a hex string) → 0..15 int, as SQL. */
   def hexNibbleSql(hexExpr: String, p: Int): String =
     s"(strpos('0123456789abcdef', substr($hexExpr, $p, 1)) - 1)"
 }

@@ -33,7 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    strips spaces only;
   *  - rolling fingerprint folds `acc = (acc·31 + v) mod (2³¹−1)` over
   *    `v = hi + lo·16` of each token's first md5 byte (the hex-nibble
-  *    formula of [[TextFunctions.hexNibble]]).
+  *    formula of [[TextFunctions.hexNibbleSql]]).
   */
 case class TextStats(
     child: Expression,

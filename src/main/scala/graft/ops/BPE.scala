@@ -65,13 +65,6 @@ object BPE {
         concat(slice(acc, lit(1), size(acc) - 1), array(lit(p1 + p2))))
         .otherwise(concat(acc, array(x))))
 
-  /** Release a localCheckpoint'ed relation's blocks — shared
-    * warning-suppressed implementation in [[graft.util.Checkpoints]]
-    * (r13 hygiene item).
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    graft.util.Checkpoints.free(df)
-
   /** `exists i: syms[i] = p1 ∧ syms[i+1] = p2` — the words whose symbol
     * sequence [[applyMerge]] would change. Guarded on size ≥ 2 because
     * Spark's `sequence(1, 0)` counts DOWN (and index 0 is illegal).
@@ -100,7 +93,7 @@ object BPE {
     * Returns (merge table, final vocabulary) so appliers reuse the
     * already-merged vocabulary relation instead of retraining
     * ([[bpeTokenize]]). Callers that don't consume the vocabulary must
-    * [[releaseCheckpoint]] it.
+    * [[graft.util.CacheScope.release]] it.
     */
   private[ops] def trainBpe(
       documents: DataFrame,
@@ -134,21 +127,24 @@ object BPE {
     // (orderBy/limit/collect) is a full-evaluation action, so it is also
     // the job that materializes the maintained counts — the former eager
     // checkpoint paid one extra job per merge for the same blocks. The
-    // parents a lazy counts still reads (previous v + counts blocks) are
-    // freed one generation LATE (prevFree) so materialization never
-    // races a release.
-    var counts = pairCounts(v).localCheckpoint(false)
+    // checkpoint is declared right before that argmax, so the loop never
+    // leaves a declared-but-unmaterialized checkpoint behind (release
+    // cannot free one: a later action could still need it). The parents
+    // a lazy counts still reads (previous v + counts blocks) are freed one
+    // generation LATE (prevFree) so materialization never races a release.
+    var countsPlan = pairCounts(v)
     var prevFree: Seq[DataFrame] = Nil
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var step = 1
     var exhausted = false
     while (step <= merges && !exhausted) {
+      val counts = countsPlan.localCheckpoint(false)
       val best = counts
         .orderBy(col("pair_count").desc, col("p1"), col("p2"))
         .limit(1).collect()
       // counts is materialized now — its parents' blocks are dead
-      prevFree.foreach(releaseCheckpoint)
-      prevFree = Nil
+      prevFree.foreach(graft.util.CacheScope.release)
+      prevFree = Seq(counts)
       if (best.isEmpty) exhausted = true // single-symbol vocab: no pairs left
       else {
         val (p1, p2, n) = (best(0).getString(0), best(0).getString(1),
@@ -162,23 +158,19 @@ object BPE {
         val delta = pairCounts(merged).union(
           pairCounts(affected).select(col("p1"), col("p2"),
             (-col("pair_count")).as("pair_count")))
-        val nextCounts = counts.union(delta)
+        countsPlan = counts.union(delta)
           .groupBy("p1", "p2").agg(sum("pair_count").as("pair_count"))
           .filter(col("pair_count") > 0)
-          .localCheckpoint(false)
-        // BOTH old blocks are parents of the lazy nextCounts (counts via
-        // the union, v via delta's affected/merged subtrees), so their
+        // BOTH old blocks are parents of the next counts (counts via the
+        // union, v via delta's affected/merged subtrees), so their
         // release waits for the next argmax to materialize it
         prevFree = Seq(counts, v)
         v = nextV
-        counts = nextCounts
       }
       step += 1
     }
-    // the final lazy counts may be unmaterialized; freeing is still safe
-    // (release is a storage-level op) and the learned table is driver-side
-    prevFree.foreach(releaseCheckpoint)
-    releaseCheckpoint(counts)
+    // the learned table is driver-side
+    prevFree.foreach(graft.util.CacheScope.release)
     (learned.toSeq, v)
   }
 
@@ -189,7 +181,7 @@ object BPE {
       documents: DataFrame, merges: Int = Merges, trainCap: Int = 0): DataFrame = {
     val spark = documents.sparkSession
     val (learned, finalVocab) = trainBpe(documents, merges, trainCap)
-    releaseCheckpoint(finalVocab) // merge table is driver-side already
+    graft.util.CacheScope.release(finalVocab) // merge table is driver-side already
     spark.createDataFrame(learned)
       .toDF("step", "p1", "p2", "pair_count")
       .orderBy("step")

@@ -422,12 +422,14 @@ object Curate {
       .select(col("doc_id"),
         aggregate(col("ts"), lit(0.0d),
           (acc, x) => acc + x.getField("term")).as("importance"))
-    base.select("doc_id", "source")
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"),
-        coalesce(col("importance"), lit(0.0d)).as("importance"),
-        (coalesce(col("importance"), lit(0.0d)) > 0).as("selected"))
-      .orderBy("doc_id")
+    graft.util.CacheScope.freeAfterUse(
+      base.select("doc_id", "source")
+        .join(perDoc, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("source"),
+          coalesce(col("importance"), lit(0.0d)).as("importance"),
+          (coalesce(col("importance"), lit(0.0d)) > 0).as("selected"))
+        .orderBy("doc_id"),
+      Seq(counts))
   }
 
   def dsirImportanceSql(
@@ -657,8 +659,8 @@ object Curate {
       }
       w.toSeq.sortBy(_._1).toDF("f", "w")
     } finally {
-      graft.util.Checkpoints.free(feats)
-      graft.util.Checkpoints.free(samp)
+      graft.util.CacheScope.release(feats)
+      graft.util.CacheScope.release(samp)
     }
   }
 
@@ -906,8 +908,8 @@ object Curate {
       (w.toSeq.sortBy(_._1).map { case ((c, f), v) => (c, f, v) }
         .toDF("cls", "f", "w"), classes)
     } finally {
-      graft.util.Checkpoints.free(feats)
-      graft.util.Checkpoints.free(samp)
+      graft.util.CacheScope.release(feats)
+      graft.util.CacheScope.release(samp)
     }
   }
 

@@ -229,7 +229,7 @@ object KMeans {
       .join(sizes, Seq("cluster_id"), "left")
       .na.fill(0L, Seq("cluster_size"))
       .orderBy("cluster_id", "dim")
-    xq.unpersist()
+    graft.util.CacheScope.release(xq)
     out
   }
 
@@ -248,7 +248,7 @@ object KMeans {
     // the quantized-corpus cache: callers joining the assignment
     // re-read checkpoint blocks instead of pinning the corpus in storage
     val out = assign(xq, cents).localCheckpoint()
-    xq.unpersist()
+    graft.util.CacheScope.release(xq)
     out.orderBy("vec_id")
   }
 

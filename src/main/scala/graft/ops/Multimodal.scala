@@ -391,15 +391,6 @@ object Multimodal {
     df.as[MediaRow]
   }
 
-  /** Feature extraction as a DataFrame op (the `queries()` surface). */
-  def mediaFeatures(documents: DataFrame): DataFrame = {
-    val feats = extractFeatures(asMedia(mediaFromDocuments(documents)))
-    feats.toDF().select(
-        col("media_id"), col("kind"), col("n_bytes"),
-        col("mean_byte"), col("byte_histogram"))
-      .orderBy("media_id")
-  }
-
   /** Metadata-only projection that a SQL oracle can mirror (payload
     * length is text length for the UTF-8 stub payloads; the codecs fall
     * back to raw bytes on text payloads, so decoded length ≡ payload
@@ -409,7 +400,7 @@ object Multimodal {
     * every payload (ImageIO/WAV/Y4M parse attempts per row) for three
     * scalar columns — measured 13× growth at 10× corpus. This is manual
     * column pruning at the operator boundary: decode only on the paths
-    * whose ANSWER needs decoded bytes ([[mediaFeatures]], q75/q79/q85).
+    * whose ANSWER needs decoded bytes (q75/q79/q85).
     */
   def mediaFeaturesMeta(documents: DataFrame): DataFrame =
     mediaFromDocuments(documents)
@@ -1450,8 +1441,7 @@ object Multimodal {
       .write.mode("overwrite").parquet(s"$path/sig")
     budgetedImageHubs(base, bucketBudget)
       .write.mode("overwrite").parquet(s"$path/bands")
-    base.unpersist()
-    ()
+    graft.util.CacheScope.release(base)
   }
 
   /** Append a batch's KEPT signatures — the crawl write-back. Same
@@ -1523,21 +1513,21 @@ object Multimodal {
   }
 
   /** COMBINED within-batch + against-index image verdicts in ONE pass
-    * (r13 — the media loop previously ran [[intraBatchImageDedup]] and
-    * [[incrementalImageDedupAgainstIndex]] as separate stages, ~10 extra
-    * shuffles + an eager checkpoint per micro-batch of pure scheduling
-    * overhead): the match side is the persisted index ∪ the batch
-    * itself, with admissibility (index: `ix_id ≠ media_id`, the replay
-    * self-match rule; batch: `ix_id < media_id`, the intra canonical
-    * rule). `dup_of` = the smallest admissible match — exact (identical
-    * hash) wins over near (banded Hamming), exactly the two-stage
-    * semantics after root resolution: batch-side targets may themselves
-    * be duplicates, and the caller's [[NearDup.resolveDupRoots]] lands
-    * them on the same roots the staged form reached hop by hop (exact
-    * copies share hashes, so a near match to a copy is a near match to
-    * its canonical at the SAME Hamming distance — kept sets are
-    * identical). Index bands stay hub-budgeted from write time; batch
-    * bands are complete.
+    * (r13 — the media loop previously ran a within-batch pass and an
+    * against-index pass as separate stages, ~10 extra shuffles + an
+    * eager checkpoint per micro-batch of pure scheduling overhead): the
+    * match side is the persisted index ∪ the batch itself, with
+    * admissibility (index: `ix_id ≠ media_id`, the replay self-match
+    * rule; batch: `ix_id < media_id`, the intra canonical rule).
+    * `dup_of` = the smallest admissible match — exact (identical hash)
+    * wins over near (banded Hamming), exactly the two-stage semantics
+    * after root resolution: batch-side targets may themselves be
+    * duplicates, and the caller's [[NearDup.resolveDupRootsCounted]]
+    * lands them on the same roots the staged form reached hop by hop
+    * (exact copies share hashes, so a near match to a copy is a near
+    * match to its canonical at the SAME Hamming distance — kept sets
+    * are identical). Index bands stay hub-budgeted from write time;
+    * batch bands are complete.
     *
     * Two r14 admissibility refinements:
     *  - the batch MATCH side is SIGNATURE-CANONICALIZED (one row per
@@ -1554,10 +1544,16 @@ object Multimodal {
     *    old `ix_id ≠ media_id` replay self-match rule: if an indexed id
     *    reappears in a batch beside a smaller near-dup id (id reuse
     *    across distinct content), mutual pointers A→ixB and B→A could
-    *    otherwise form a dup_of cycle that resolveDupRoots rejects,
+    *    otherwise form a dup_of cycle that resolveDupRootsCounted rejects,
     *    poisoning the micro-batch on every replay (ADVICE r13). Replayed
     *    rows still verdict exactly as pre-crash: their own index entries
     *    are the excluded ones.
+    *
+    * `batchHashes` should be PINNED by the caller (eager
+    * `localCheckpoint`, as [[graft.streaming.MediaIngest.processBatch]]
+    * does): the verdict plan reads it several times AND the caller
+    * appends to `path` afterwards, and a plain cache would be invalidated
+    * by that append (the read-modify-write recache hazard).
     */
   def imageDedupVerdicts(
       batchHashes: DataFrame, path: String,
@@ -1588,7 +1584,7 @@ object Multimodal {
       .groupBy("media_id").agg(min("ix_id").as("exact_of"))
       .localCheckpoint(true)
     // The pinned block outlives this call (the returned plan reads it) —
-    // hand it to the caller so a streaming loop can Checkpoints.free it
+    // hand it to the caller so a streaming loop can CacheScope.release it
     // once the batch's routing appends land, instead of accruing one
     // orphaned block per micro-batch until RDD GC (ADVICE r16).
     onPin(exact)
@@ -1631,103 +1627,6 @@ object Multimodal {
     val near = cand
       .join(batch, Seq("media_id"))
       .join(sideHashes, Seq("ix_id"))
-      .filter(expr("bit_count(dhash_hi ^ ix_hi)") +
-        expr("bit_count(dhash_lo ^ ix_lo)") <= maxHamming)
-      .groupBy("media_id").agg(min("ix_id").as("near_of"))
-    batch.select("media_id")
-      .join(exact, Seq("media_id"), "left")
-      .join(near, Seq("media_id"), "left")
-      .select(col("media_id"),
-        when(col("exact_of").isNotNull, lit("exact_dup"))
-          .when(col("near_of").isNotNull, lit("near_dup"))
-          .otherwise(lit("kept")).as("status"),
-        coalesce(col("exact_of"), col("near_of")).as("dup_of"))
-  }
-
-  /** WITHIN-batch image dedup verdicts — the image edition of
-    * [[NearDup.intraBatchDedup]], over an already-hashed batch: identical
-    * 64-bit hashes resolve to the smallest media_id (`exact_dup`), then
-    * banded-Hamming pairs among the exact survivors resolve each image to
-    * its smallest verified partner (`near_dup`, no component closure
-    * needed — kept rows are pairwise non-similar by the same argument).
-    * EAGER (localCheckpoint-pinned) for the streaming read-modify-write
-    * callers; unpersist when done.
-    */
-  def intraBatchImageDedup(
-      hashes: DataFrame, maxHamming: Int = MaxHamming): DataFrame = {
-    val h = hashes.select(col("media_id"), col("dhash_hi"), col("dhash_lo"))
-    val exCanon = h.groupBy("dhash_hi", "dhash_lo")
-      .agg(min("media_id").as("canon"))
-    val exact = h.join(exCanon, Seq("dhash_hi", "dhash_lo"))
-      .filter(col("media_id") =!= col("canon"))
-      .select(col("media_id"), lit("exact_dup").as("status"),
-        col("canon").as("dup_of"))
-    val survivors = h.join(exact.select(col("media_id").as("xid")),
-      col("media_id") === col("xid"), "left_anti")
-    val bands = dhashBands(survivors)
-    val near = bands.toDF("media_a", "band_idx", "band_val")
-      .join(bands.toDF("media_b", "band_idx", "band_val"),
-        Seq("band_idx", "band_val"))
-      .filter(col("media_a") < col("media_b"))
-      .select("media_a", "media_b").distinct()
-      .join(survivors.select(col("media_id").as("media_a"),
-        col("dhash_hi").as("hi_a"), col("dhash_lo").as("lo_a")), Seq("media_a"))
-      .join(survivors.select(col("media_id").as("media_b"),
-        col("dhash_hi").as("hi_b"), col("dhash_lo").as("lo_b")), Seq("media_b"))
-      .filter(expr("bit_count(hi_a ^ hi_b)") + expr("bit_count(lo_a ^ lo_b)")
-        <= maxHamming)
-      .groupBy(col("media_b").as("media_id"))
-      .agg(min("media_a").as("dup_of"))
-      .select(col("media_id"), lit("near_dup").as("status"), col("dup_of"))
-    h.select("media_id")
-      .join(exact.unionByName(near), Seq("media_id"), "left")
-      .select(col("media_id"),
-        coalesce(col("status"), lit("kept")).as("status"),
-        col("dup_of"))
-      .localCheckpoint(true)
-  }
-
-  /** Verdicts for a hashed batch against the persisted signature index:
-    *  - `exact_dup` — identical 64-bit dHash in the index (`dup_of` =
-    *    smallest such ix_id);
-    *  - `near_dup`  — shares a band bucket with an index hub and the
-    *    exact Hamming distance is ≤ `maxHamming`;
-    *  - `kept`      — neither.
-    * Self-matches (ix_id == media_id — only possible when a crashed
-    * batch replays after its index append landed) are excluded in both
-    * joins, so replay re-verdicts kept docs kept: the same at-least-once
-    * routing contract as [[NearDup.incrementalDedupAgainstIndex]].
-    * Every join's small side is the batch; the index relations are
-    * streamed, never shuffled.
-    *
-    * `batchHashes` should be PINNED by the caller (eager
-    * `localCheckpoint`, as [[graft.streaming.MediaIngest.processBatch]]
-    * does) — the verdict plan reads it several times AND the caller
-    * appends to `path` afterwards (the read-modify-write recache
-    * hazard). No cache is taken here: a per-batch `.cache()` in a
-    * streaming loop leaks one cached frame per micro-batch unless every
-    * caller unpersists, and pinned inputs make it redundant.
-    */
-  def incrementalImageDedupAgainstIndex(
-      batchHashes: DataFrame, path: String,
-      maxHamming: Int = MaxHamming): DataFrame = {
-    val spark = batchHashes.sparkSession
-    val batch = batchHashes
-      .select(col("media_id"), col("dhash_hi"), col("dhash_lo"))
-    val ixSig = spark.read.parquet(s"$path/sig")
-    val ixBands = spark.read.parquet(s"$path/bands")
-    val exact = batch
-      .join(ixSig, Seq("dhash_hi", "dhash_lo"))
-      .filter(col("ix_id") =!= col("media_id"))
-      .groupBy("media_id").agg(min("ix_id").as("exact_of"))
-    val cand = dhashBands(batch)
-      .join(ixBands, Seq("band_idx", "band_val"))
-      .filter(col("ix_id") =!= col("media_id"))
-      .select(col("media_id"), col("ix_id")).distinct()
-    val near = cand
-      .join(batch, Seq("media_id"))
-      .join(ixSig.select(col("ix_id"), col("dhash_hi").as("ix_hi"),
-        col("dhash_lo").as("ix_lo")), Seq("ix_id"))
       .filter(expr("bit_count(dhash_hi ^ ix_hi)") +
         expr("bit_count(dhash_lo ^ ix_lo)") <= maxHamming)
       .groupBy("media_id").agg(min("ix_id").as("near_of"))
@@ -1952,7 +1851,7 @@ object Multimodal {
   }
 
   /** WITHIN-batch video dedup verdicts over decoded frame hashes — the
-    * containment edition of [[intraBatchImageDedup]]: clip `a` is a
+    * containment edition of [[NearDup.intraBatchDedup]]: clip `a` is a
     * `near_dup` when ≥ `minContainment` of its distinct keyframe hashes
     * appear in a clip with MORE distinct hashes (a truncation resolves
     * against its original, never the reverse) or an equal-hash-count
@@ -1960,7 +1859,8 @@ object Multimodal {
     * largest such container, ties to the smallest id. Kept clips are
     * pairwise non-contained under this order (the relation is strict on
     * (n_hashes, −id)), so only canonicals face the index. EAGER
-    * (localCheckpoint-pinned); callers unpersist.
+    * (localCheckpoint-pinned); callers free the result with
+    * [[graft.util.CacheScope.release]].
     */
   def intraBatchVideoDedup(
       frameHashes: DataFrame,
@@ -2169,7 +2069,7 @@ object Multimodal {
     * shape, carried into the streaming path from day one).
     *
     * `batchFps` should be PINNED by the caller (the read-modify-write
-    * recache note on [[incrementalImageDedupAgainstIndex]]).
+    * recache note on [[imageDedupVerdicts]]).
     */
   def audioDedupVerdicts(
       batchFps: DataFrame, path: String,

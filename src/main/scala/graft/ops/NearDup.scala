@@ -338,20 +338,22 @@ object NearDup {
     val sh = shingled(documents).cache()
     val shA = sh.toDF("doc_a_s", "shingles_a")
     val shB = sh.toDF("doc_b_s", "shingles_b")
-    lshCandidatesFrom(sh)
-      .join(shA, col("doc_a") === col("doc_a_s"))
-      .join(shB, col("doc_b") === col("doc_b_s"))
-      // |∩| via the native merge kernel (arrays come kernel-sorted);
-      // |∪| = |A| + |B| − |∩| — same values as the intersect/union pair,
-      // one codegen'd pass per candidate instead of two hash sets
-      .withColumn("n_common", graft.functions.SortedIntersectCount
-        .sortedIntersectCount(col("shingles_a"), col("shingles_b")))
-      .select(col("doc_a"), col("doc_b"),
-        (col("n_common").cast("double") /
-          (size(col("shingles_a")) + size(col("shingles_b")) - col("n_common")))
-          .as("jaccard"))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .orderBy("doc_a", "doc_b")
+    graft.util.CacheScope.freeAfterUse(
+      lshCandidatesFrom(sh)
+        .join(shA, col("doc_a") === col("doc_a_s"))
+        .join(shB, col("doc_b") === col("doc_b_s"))
+        // |∩| via the native merge kernel (arrays come kernel-sorted);
+        // |∪| = |A| + |B| − |∩| — same values as the intersect/union pair,
+        // one codegen'd pass per candidate instead of two hash sets
+        .withColumn("n_common", graft.functions.SortedIntersectCount
+          .sortedIntersectCount(col("shingles_a"), col("shingles_b")))
+        .select(col("doc_a"), col("doc_b"),
+          (col("n_common").cast("double") /
+            (size(col("shingles_a")) + size(col("shingles_b")) - col("n_common")))
+            .as("jaccard"))
+        .filter(col("jaccard") >= JaccardThreshold)
+        .orderBy("doc_a", "doc_b"),
+      Seq(sh))
   }
 
   def minhashNearDupsSql: String = {
@@ -676,7 +678,7 @@ object NearDup {
       val labels = nodes.keysIterator
         .map(n => (n, find(n))).toSeq
         .toDF("doc_id", "label")
-      freeLocalCheckpoint(e)
+      graft.util.CacheScope.release(e)
       return (labels, 0)
     }
     var rounds = 0
@@ -708,10 +710,8 @@ object NearDup {
       val ssCount = ss.count()
       converged = ssCount == eCount && ss.except(e).isEmpty
       // the superseded round's checkpointed blocks are dead — free them
-      // instead of waiting for GC. Dataset.unpersist would be a no-op here
-      // (it only talks to the CacheManager; localCheckpoint blocks belong
-      // to the underlying RDD), so unpersist the checkpointed RDD itself.
-      freeLocalCheckpoint(e)
+      // instead of waiting for GC
+      graft.util.CacheScope.release(e)
       e = ss
       eCount = ssCount
     }
@@ -722,14 +722,6 @@ object NearDup {
       .distinct()
     (labels, rounds)
   }
-
-  /** Frees the block storage behind a `localCheckpoint()`ed DataFrame —
-    * shared warning-suppressed implementation in
-    * [[graft.util.Checkpoints]] (r13 hygiene item: the deliberate frees
-    * flooded the logs with the benign cannot-be-recomputed warning).
-    */
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
-    graft.util.Checkpoints.free(df)
 
   /** The deduplicated corpus: per near-dup component only the lowest doc_id
     * survives; documents in no component pass through. This is the actual
@@ -1077,7 +1069,7 @@ object NearDup {
     val (capL, joinedPairs) = capFromHistogram(hist, fanoutBudget)
     val maxDf: Int = capL.toInt // capFromHistogram caps at Int.MaxValue
     if (joinedPairs > pairBudget) {
-      dfc.unpersist(); sh.unpersist()
+      graft.util.CacheScope.release(dfc); graft.util.CacheScope.release(sh)
       throw new IllegalArgumentException(
         s"derived-cap pair stage refused at plan time: the capped posting " +
         s"self-join would emit $joinedPairs rows (> pairBudget $pairBudget). " +
@@ -1087,7 +1079,7 @@ object NearDup {
     }
     val nHot = hist.collect { case (df, nw) if df > maxDf => nw }.sum
     if (nHot == 0) {
-      dfc.unpersist()
+      graft.util.CacheScope.release(dfc)
       val sizes = sh.select(col("doc_id"), size(col("shingles")).cast("long").as("n_sh"))
       // cache: BOTH sides of the posting self-join read this relation, and
       // the toDF renames below give the two subtrees different attribute
@@ -1372,7 +1364,7 @@ object NearDup {
       .join(exRare.toDF("shingle_b", "doc_b"),
         col("shingle") === col("shingle_b") && col("doc_a") < col("doc_b"))
       .count()
-    ex.unpersist(); dfTab.unpersist()
+    graft.util.CacheScope.release(ex); graft.util.CacheScope.release(dfTab)
     Seq((cap, est, measured))
       .toDF("derived_cap", "est_joined_rows", "measured_joined_rows")
   }
@@ -1420,8 +1412,8 @@ object NearDup {
 
   /** Oracle for `ngramContainmentCapped(maxDf = 0)` — the derived-cap
     * default: same in-SQL cap derivation as
-    * [[ngramJaccardPairsDerivedSql]], same directed containment output as
-    * [[ngramContainmentCappedSql]].
+    * [[ngramJaccardPairsDerivedSql]], and [[ngramContainmentSql]]'s
+    * directed containment output with BIGINT set sizes.
     */
   def ngramContainmentDerivedSql(
       n: Int = 3, minContainment: Double = 0.9,
@@ -1496,41 +1488,6 @@ object NearDup {
        |FROM tot, cap""".stripMargin
   }
 
-  def ngramContainmentCappedSql(
-      n: Int = 3, minContainment: Double = 0.9, maxDf: Int = 100): String = {
-    val gram = (0 until n).map(i => s"toks[i+$i]").mkString(" || ' ' || ")
-    s"""WITH sh AS (
-       |  SELECT doc_id,
-       |    CASE WHEN len(toks) >= $n
-       |      THEN list_distinct(list_transform(generate_series(1, len(toks)-${n - 1}), i -> $gram))
-       |      ELSE [] END AS shingles
-       |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS toks FROM documents)),
-       |ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE len(shingles) > 0),
-       |rare AS (SELECT shingle FROM ex GROUP BY shingle HAVING count(*) <= $maxDf),
-       |exc AS (SELECT e.doc_id, e.shingle FROM ex e JOIN rare r ON e.shingle = r.shingle),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM exc a JOIN exc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id),
-       |pc AS (
-       |  SELECT c.doc_a, c.doc_b,
-       |    len(list_intersect(x.shingles, y.shingles)) AS n_common,
-       |    len(x.shingles) AS n_a, len(y.shingles) AS n_b
-       |  FROM cand c JOIN sh x ON c.doc_a = x.doc_id JOIN sh y ON c.doc_b = y.doc_id),
-       |directed AS (
-       |  SELECT doc_a AS contained, doc_b AS container, n_common,
-       |    n_a AS n_contained, n_b AS n_container FROM pc
-       |  UNION ALL
-       |  SELECT doc_b AS contained, doc_a AS container, n_common,
-       |    n_b AS n_contained, n_a AS n_container FROM pc)
-       |SELECT contained, container, CAST(n_common AS BIGINT) AS n_common,
-       |  CAST(n_contained AS BIGINT) AS n_contained,
-       |  CAST(n_container AS BIGINT) AS n_container,
-       |  CAST(n_common AS DOUBLE) / n_contained AS containment
-       |FROM directed
-       |WHERE CAST(n_common AS DOUBLE) / n_contained >= $minContainment
-       |ORDER BY contained, container""".stripMargin
-  }
-
   // ---------------------------------------------------------------- SimHash
 
   /** 64-bit SimHash over the token stream as a 16-nibble hex string: for
@@ -1570,13 +1527,15 @@ object NearDup {
     val b = banded.toDF("doc_b", "sl_b", "q_idx_b", "q_key_b")
     // hamming filter BEFORE the distinct: one xor+popcount per candidate
     // row prunes map-side, so the dedup shuffle only carries survivors
-    a.join(b,
-        a("q_idx") === b("q_idx_b") && a("q_key") === b("q_key_b") &&
-          a("doc_a") < b("doc_b"))
-      .withColumn("hamming", bit_count(col("sl_a").bitwiseXOR(col("sl_b"))))
-      .filter(col("hamming") <= MaxHamming)
-      .select("doc_a", "doc_b", "hamming").distinct()
-      .orderBy("doc_a", "doc_b")
+    graft.util.CacheScope.freeAfterUse(
+      a.join(b,
+          a("q_idx") === b("q_idx_b") && a("q_key") === b("q_key_b") &&
+            a("doc_a") < b("doc_b"))
+        .withColumn("hamming", bit_count(col("sl_a").bitwiseXOR(col("sl_b"))))
+        .filter(col("hamming") <= MaxHamming)
+        .select("doc_a", "doc_b", "hamming").distinct()
+        .orderBy("doc_a", "doc_b"),
+      Seq(sh))
   }
 
   def simhashNearDupsSql: String = {
@@ -1672,8 +1631,8 @@ object NearDup {
     * streaming caller calls this every micro-batch inside a
     * read-modify-write loop — see [[appendDedupIndex]]'s recache note)
     * and the internal shingle cache is freed before returning, so a
-    * long-running stream leaks nothing per batch. Callers unpersist the
-    * result when done.
+    * long-running stream leaks nothing per batch. Callers free the result
+    * with [[graft.util.CacheScope.release]] when done.
     */
   def intraBatchDedup(batchDocs: DataFrame): DataFrame = {
     val norm = batchDocs.select(col("doc_id"), normHash.as("norm_h"))
@@ -1686,9 +1645,8 @@ object NearDup {
     val survivors = batchDocs.join(
       exact.select(col("doc_id").as("xid")),
       col("doc_id") === col("xid"), "left_anti")
-    // minhashNearDups' pipeline with an explicitly-managed shingle cache
-    // (the shared entry point caches internally and leaves the entry for
-    // session GC — fine for one-shot queries, a per-batch leak here)
+    // minhashNearDups' pipeline with a shingle cache released here, once
+    // the eager checkpoint below has read it
     val sh = shingled(survivors).cache()
     val near = lshCandidatesFrom(sh)
       .join(sh.toDF("doc_a_s", "shingles_a"), col("doc_a") === col("doc_a_s"))
@@ -1707,7 +1665,7 @@ object NearDup {
         coalesce(col("status"), lit("kept")).as("status"),
         col("dup_of"))
       .localCheckpoint(true)
-    sh.unpersist()
+    graft.util.CacheScope.release(sh)
     out
   }
 
@@ -1733,17 +1691,14 @@ object NearDup {
     * no cycles (a defensive round cap turns a violated invariant into
     * an exception instead of an infinite loop). Index-side targets (ids
     * absent from `verdicts`) are already roots and pass through
-    * untouched. Input should be pinned (localCheckpoint) by the caller;
-    * superseded rounds' blocks are freed eagerly.
-    */
-  def resolveDupRoots(
-      verdicts: DataFrame, idCol: String = "doc_id",
-      freeInput: Boolean = false): DataFrame =
-    resolveDupRootsCounted(verdicts, idCol, freeInput)._1
-
-  /** [[resolveDupRoots]] plus per-`status` row counts, at ONE Spark job
-    * per round. The streaming loops need both outputs — counts gate the
-    * routing branches and fill the batch metrics — and at micro-batch
+    * untouched. The input should be pinned (localCheckpoint) by the
+    * caller, who also frees it; the rounds this op superseded are freed
+    * here, and the caller frees the returned relation with
+    * [[graft.util.CacheScope.release]].
+    *
+    * Returns the resolved relation plus per-`status` row counts, at ONE
+    * Spark job per round. The streaming loops need both outputs — counts
+    * gate the routing branches and fill the batch metrics — and at micro-batch
     * cadence every extra scheduled job is pure fixed cost, so the
     * round's checkpoint job carries the bookkeeping as an `Observation`
     * on its own plan: per-status row counts over `statusDomain` (counts
@@ -1757,7 +1712,6 @@ object NearDup {
     */
   def resolveDupRootsCounted(
       verdicts: DataFrame, idCol: String = "doc_id",
-      freeInput: Boolean = false,
       statusDomain: Seq[String] =
         Seq("kept", "exact_dup", "near_dup", "decode_error"))
       : (DataFrame, Map[String, Long]) = {
@@ -1784,14 +1738,13 @@ object NearDup {
               count(when(col("status") === s, 1)).as(s"n_$s"))): _*)
         .select(col(idCol), col("status"), col("dup_of"))
         .localCheckpoint(true)
-      // `freeInput` lets a streaming caller hand over its pinned verdict
-      // frame wholesale: the superseded blocks are freed here instead of
-      // leaking per micro-batch until the ContextCleaner gets to them
-      if ((cur ne verdicts) || freeInput) freeLocalCheckpoint(cur)
+      // a superseded round's blocks are freed here; the caller's input is
+      // the caller's to free
+      if (cur ne verdicts) graft.util.CacheScope.release(cur)
       cur = next
       rounds += 1
       require(rounds <= 40,
-        s"resolveDupRoots: chains unresolved after $rounds rounds — " +
+        s"resolveDupRootsCounted: chains unresolved after $rounds rounds — " +
           "a dup_of cycle would violate the strictly-decreasing intra order")
       val m = obs.get
       val total = m("n_total").asInstanceOf[Long]
@@ -1819,13 +1772,15 @@ object NearDup {
       .cache()
     val batch = base.filter(col("is_batch"))
     val index = base.filter(!col("is_batch"))
-    incrementalVerdicts(batch,
-      index.select(col("doc_id").as("ix_id"), col("norm_h")),
-      budgetedHubs(
-        lshBands(signaturesFrom(index.select("doc_id", "shingles")))
-          .select(col("doc_id").as("ix_id"), col("band_idx"), col("band_key")),
-        bucketBudget),
-      index.select(col("doc_id").as("ix_id"), col("shingles").as("sh_i")))
+    graft.util.CacheScope.freeAfterUse(
+      incrementalVerdicts(batch,
+        index.select(col("doc_id").as("ix_id"), col("norm_h")),
+        budgetedHubs(
+          lshBands(signaturesFrom(index.select("doc_id", "shingles")))
+            .select(col("doc_id").as("ix_id"), col("band_idx"), col("band_key")),
+          bucketBudget),
+        index.select(col("doc_id").as("ix_id"), col("shingles").as("sh_i"))),
+      Seq(base))
   }
 
   /** The [[BucketBudget]] hub selection over an index band relation —
@@ -1932,8 +1887,7 @@ object NearDup {
       .write.mode("overwrite").parquet(s"$path/bands")
     base.select(col("doc_id").as("ix_id"), col("shingles").as("sh_i"))
       .write.mode("overwrite").parquet(s"$path/shingles")
-    base.unpersist()
-    ()
+    graft.util.CacheScope.release(base)
   }
 
   /** Append a new batch's KEPT documents to a persisted index — the
@@ -1978,10 +1932,7 @@ object NearDup {
         .write.mode("append").parquet(s"$path/bands")
       base.select(col("doc_id").as("ix_id"), col("shingles").as("sh_i"))
         .write.mode("append").parquet(s"$path/shingles")
-    } finally {
-      base.unpersist()
-      ()
-    }
+    } finally graft.util.CacheScope.release(base)
   }
 
   /** Compact an appended index: rebuild `bands/` from the STORED shingle
@@ -2018,7 +1969,7 @@ object NearDup {
       bucketBudget)
       .repartition(nFiles)
       .write.mode("overwrite").parquet(s"$tmp/bands")
-    sh.unpersist()
+    graft.util.CacheScope.release(sh)
     // swap: live → _old (index intact on failure), tmp → live (rolled
     // back on failure), then drop _old. Hadoop FS ops signal failure by
     // RETURNING false, not throwing — every step is checked (r10 review
@@ -2115,10 +2066,13 @@ object NearDup {
       batchDocs: DataFrame, indexPath: String): DataFrame = {
     val spark = batchDocs.sparkSession
     recoverCompactSwap(spark, indexPath) // heal a half-swapped index first
-    incrementalVerdicts(normShingled(batchDocs).cache(),
-      spark.read.parquet(s"$indexPath/norm"),
-      spark.read.parquet(s"$indexPath/bands"),
-      spark.read.parquet(s"$indexPath/shingles"))
+    val batch = normShingled(batchDocs).cache()
+    graft.util.CacheScope.freeAfterUse(
+      incrementalVerdicts(batch,
+        spark.read.parquet(s"$indexPath/norm"),
+        spark.read.parquet(s"$indexPath/bands"),
+        spark.read.parquet(s"$indexPath/shingles")),
+      Seq(batch))
   }
 
   def incrementalDedupSql(

@@ -842,7 +842,7 @@ object Similarity {
       embeddings: DataFrame, budget: Long = CellBudget): Seq[(Int, Long)] = {
     val (_, ranked) = rankedForTune(embeddings, budget)
     try tuneGridFromRanked(embeddings, ranked)
-    finally ranked.unpersist(blocking = false)
+    finally graft.util.CacheScope.release(ranked)
   }
 
   /** The smallest grid nprobe whose sample hits meet [[TuneHitBar]]; −1

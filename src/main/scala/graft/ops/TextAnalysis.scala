@@ -375,15 +375,17 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_grams"),
         count(when(col("in_vocab").isNull, 1)).as("n_oov"))
-    documents.select("doc_id")
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        coalesce(col("n_oov"), lit(0L)).as("n_oov"))
-      .withColumn("oov_rate",
-        when(col("n_grams") === 0, 0.0)
-          .otherwise(col("n_oov").cast("double") / col("n_grams")))
-      .orderBy("doc_id")
+    graft.util.CacheScope.freeAfterUse(
+      documents.select("doc_id")
+        .join(perDoc, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("n_grams"), lit(0L)).as("n_grams"),
+          coalesce(col("n_oov"), lit(0L)).as("n_oov"))
+        .withColumn("oov_rate",
+          when(col("n_grams") === 0, 0.0)
+            .otherwise(col("n_oov").cast("double") / col("n_grams")))
+        .orderBy("doc_id"),
+      Seq(postings))
   }
 
   def vocabOovSql(n: Int = 2, vocabSize: Int = 512): String = {
@@ -545,9 +547,7 @@ object TextAnalysis {
     // cache: the fingerprint pipeline (tokenize + per-gram md5 + window
     // minima) feeds the hot-df aggregate AND both sides of the posting
     // self-join — without it the expensive pass runs up to three times
-    // (same reasoning as minhashNearDups' sh.cache()). Lifetime: session-
-    // scoped by convention — the lazily-returned plan can't unpersist
-    // behind itself; owners clearCache() between workloads (see Verify)
+    // (same reasoning as minhashNearDups' sh.cache())
     val fps = winnowedCore(documents, k, w)
       .select(col("doc_id"), col("fp")).distinct()
       .cache()
@@ -671,10 +671,12 @@ object TextAnalysis {
       .select(explode(col("grams")).as("g")).distinct()
     val train = sh.filter(col("doc_id") % 10 =!= 0)
       .select(col("doc_id"), explode(col("grams")).as("g"))
-    train.join(broadcast(bench), "g")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_overlapping"))
-      .orderBy("doc_id")
+    graft.util.CacheScope.freeAfterUse(
+      train.join(broadcast(bench), "g")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_overlapping"))
+        .orderBy("doc_id"),
+      Seq(sh))
   }
 
   def decontaminateSql(n: Int = 8): String =
@@ -834,13 +836,15 @@ object TextAnalysis {
       .select(col("doc_id"), col("kept_tokens"),
         concat_ws(" ", transform(col("ks"), s => s.getField("tok")))
           .as("clean_text"))
-    base.select("doc_id", "n_tokens")
-      .join(kept, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        (col("n_tokens") - coalesce(col("kept_tokens"), lit(0L)))
-          .as("removed_tokens"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"))
-      .orderBy("doc_id")
+    graft.util.CacheScope.freeAfterUse(
+      base.select("doc_id", "n_tokens")
+        .join(kept, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_tokens"),
+          (col("n_tokens") - coalesce(col("kept_tokens"), lit(0L)))
+            .as("removed_tokens"),
+          coalesce(col("clean_text"), lit("")).as("clean_text"))
+        .orderBy("doc_id"),
+      Seq(base))
   }
 
   def exciseDuplicatedSpansSql(l: Int = 8): String =
@@ -920,15 +924,17 @@ object TextAnalysis {
       .join(unis.withColumnRenamed("w", "w1"), Seq("w1"))
       .withColumn("inv_p",
         (col("c1") + lit(vocabSize)).cast("double") / (col("c2") + 1L))
-    scored
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("pos"), col("inv_p"))))
-        .as("terms"), count(lit(1)).as("n_bigrams"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (aggregate(col("terms"), lit(0.0d),
-          (acc, x) => acc + x.getField("inv_p")) / col("n_bigrams"))
-          .as("mean_inv_prob"))
-      .orderBy("doc_id")
+    graft.util.CacheScope.freeAfterUse(
+      scored
+        .groupBy("doc_id")
+        .agg(sort_array(collect_list(struct(col("pos"), col("inv_p"))))
+          .as("terms"), count(lit(1)).as("n_bigrams"))
+        .select(col("doc_id"), col("n_bigrams"),
+          (aggregate(col("terms"), lit(0.0d),
+            (acc, x) => acc + x.getField("inv_p")) / col("n_bigrams"))
+            .as("mean_inv_prob"))
+        .orderBy("doc_id"),
+      Seq(toks, unis))
   }
 
   def lmQualityScoreSql: String =

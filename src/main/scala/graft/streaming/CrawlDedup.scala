@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.NearDup
 import graft.sink.Sink
+import graft.util.CacheScope
 
 /** The continuous-crawl dedup LOOP as a streaming query (r10 VERDICT #3
   * — until r11 the loop's pieces existed only as batch code driven by
@@ -37,7 +38,7 @@ import graft.sink.Sink
   * duplicate sink with `dup_of` at the chain's ROOT (r13, ADVICE r12):
   * if a copy's in-batch canonical itself duplicates the index, the
   * sinked `dup_of` is resolved through the chain
-  * ([[NearDup.resolveDupRoots]] — pointer-jumping over the batch-sized
+  * ([[NearDup.resolveDupRootsCounted]] — pointer-jumping over the batch-sized
   * verdicts), so duplicate-sink consumers never chain-follow; `status`
   * still records the verdict that dropped the doc.
   * [[graft.ops.Dedup.streamingContentDedup]]
@@ -80,7 +81,7 @@ object CrawlDedup {
     //    face the index; same-batch copies resolve immediately with
     //    dup_of at their in-batch canonical. intraBatchDedup returns an
     //    eagerly-pinned frame — the rows feed both the verdict union and
-    //    the routing joins below; unpersisted in the finally.
+    //    the routing joins below; released in the finally.
     val intra = timings.time("intra_batch")(
       NearDup.intraBatchDedup(batchDf))
     // one verdict pass, pinned with an EAGER localCheckpoint (not a
@@ -100,12 +101,13 @@ object CrawlDedup {
     // same resolved frame.
     // the resolve loop's convergence aggregation doubles as the
     // status-count job (resolveDupRootsCounted) — no separate count
-    val (verdicts, counts) = timings.time("verdicts")(
-      NearDup.resolveDupRootsCounted(
-        NearDup.incrementalDedupAgainstIndex(canon, indexPath)
-          .unionByName(intra.filter(col("status") =!= "kept"))
-          .localCheckpoint(true),
-        freeInput = true))
+    val (verdicts, counts) = timings.time("verdicts") {
+      val unresolved = NearDup.incrementalDedupAgainstIndex(canon, indexPath)
+        .unionByName(intra.filter(col("status") =!= "kept"))
+        .localCheckpoint(true)
+      try NearDup.resolveDupRootsCounted(unresolved)
+      finally CacheScope.release(unresolved)
+    }
     try {
       val nKept = counts.getOrElse("kept", 0L)
       val nExact = counts.getOrElse("exact_dup", 0L)
@@ -144,9 +146,8 @@ object CrawlDedup {
       // verdict row) — no extra batch scan for the metric
       CrawlBatchMetrics(batchId, nKept + nExact + nNear, nKept, nExact, nNear, compact)
     } finally {
-      verdicts.unpersist()
-      intra.unpersist()
-      ()
+      CacheScope.release(verdicts)
+      CacheScope.release(intra)
     }
   }
 
@@ -179,7 +180,7 @@ object CrawlDedup {
         try {
           if (!pinned.isEmpty)
             metricsOut(processBatch(pinned, id, indexPath, sink, compactEvery, timings))
-        } finally { pinned.unpersist(); () }
+        } finally CacheScope.release(pinned)
       }
     trigger.fold(writer)(writer.trigger).start()
   }

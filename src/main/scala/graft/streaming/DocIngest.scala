@@ -179,7 +179,7 @@ object DocIngest {
             counts("bloom_bits").asInstanceOf[Array[Byte]])))
         (Some(m), next)
       }
-    } finally flags.unpersist()
+    } finally graft.util.CacheScope.release(flags)
   }
 
   /** Wire the full streaming query: dedup-within-watermark → foreachBatch

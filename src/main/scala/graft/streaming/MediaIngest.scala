@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Multimodal
 import graft.sink.Sink
+import graft.util.CacheScope
 
 /** The MEDIA branch of streaming ingest (VERDICT r11 #6 — [[DocIngest]]
   * is text-only, but a crawl yields mixed text+media): each micro-batch
@@ -173,7 +174,7 @@ object MediaIngest {
     val nAud = censusRow("n_aud").asInstanceOf[Long]
     val nPass = censusRow("n_all").asInstanceOf[Long] - nImg - nVid - nAud
     if (nImg + nVid + nAud == 0) {
-      pay.unpersist()
+      CacheScope.release(pay)
       if (nPass > 0)
         timings.time("passthrough_append")(
           sink.append(passthrough, "accepted_media"))
@@ -466,9 +467,9 @@ object MediaIngest {
               when(col("bad_id").isNotNull, lit(null).cast("long"))
                 .otherwise(raw("dup_of")).as("dup_of"))
             .localCheckpoint(true)
-          vintra.foreach(_.unpersist())
-          graft.ops.NearDup.resolveDupRootsCounted(
-            adj, idCol = "media_id", freeInput = true)
+          vintra.foreach(CacheScope.release)
+          try graft.ops.NearDup.resolveDupRootsCounted(adj, idCol = "media_id")
+          finally CacheScope.release(adj)
         }
         try {
           val nKept = counts.getOrElse("kept", 0L)
@@ -535,23 +536,13 @@ object MediaIngest {
           }
           MediaBatchMetrics(batchId, nImg + nVid + nAud + nPass, nImg, nVid,
             nAud, nPass, nDecodeErr, nExact, nNear, nKept + nPass)
-        } finally {
-          verdicts.unpersist()
-          ()
-        }
+        } finally CacheScope.release(verdicts)
       } finally {
-        hashed.unpersist()
-        vhashed.unpersist()
-        ahashed.unpersist()
         // the per-batch pins are superseded once the routing appends
-        // land — free their blocks now, not at the next GC
-        verdictPins.foreach(graft.util.Checkpoints.free)
-        if (nIxImg > 0) graft.util.Checkpoints.free(knownImg)
-        if (nIxVid > 0) graft.util.Checkpoints.free(knownVid)
-        if (nIxAud > 0) graft.util.Checkpoints.free(knownAud)
-        if (payloadGate) graft.util.Checkpoints.free(payMatch)
-        pay.unpersist()
-        ()
+        // land — free their blocks now, not at the next GC (the empty
+        // local relations of absent kinds hold nothing to free)
+        (Seq(hashed, vhashed, ahashed, knownImg, knownVid, knownAud,
+          payMatch, pay) ++ verdictPins).foreach(CacheScope.release)
       }
     }
     } finally {
@@ -587,7 +578,7 @@ object MediaIngest {
         try {
           val m = processBatch(pinned, id, indexPath, sink, timings, payloadGate)
           if (m.nIn > 0) metricsOut(m)
-        } finally { pinned.unpersist(); () }
+        } finally CacheScope.release(pinned)
       }
     trigger.fold(writer)(writer.trigger).start()
   }

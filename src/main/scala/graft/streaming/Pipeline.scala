@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.ops.{Enrich, Quality, Validate}
 import graft.sink.{Sink, SinkColumns}
-import graft.util.{BatchMetrics, ParJobs, PipelineMonitor}
+import graft.util.{BatchMetrics, CacheScope, ParJobs, PipelineMonitor}
 
 /** The streaming pipeline: directory CSV stream → validate → enrich →
   * watermark+dedup → `foreachBatch` into a [[graft.sink.Sink]].
@@ -136,7 +136,7 @@ object Pipeline {
         monitor.foreach(_.record(metrics))
         Some(metrics)
       }
-    } finally cached.unpersist()
+    } finally CacheScope.release(cached)
   }
 
   /** S6 — wire the full query: stream → transform → dedup → foreachBatch,

@@ -394,9 +394,13 @@ class PlanShapeSpec extends SparkSpec {
       .toDF("media_id", "dhash_hi", "dhash_lo")
     graft.ops.Multimodal.writeImageSigIndex(hashes, tmp)
     val batch = Seq((101L, 37L, 91L)).toDF("media_id", "dhash_hi", "dhash_lo")
-    val p = graft.ops.Multimodal.incrementalImageDedupAgainstIndex(batch, tmp)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("Window"), p)
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+    // the fused within-batch + against-index pass the media loop runs
+    val pins = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
+    try {
+      val p = graft.ops.Multimodal.imageDedupVerdicts(batch, tmp, onPin = pins += _)
+        .queryExecution.executedPlan.toString
+      assert(!p.contains("Window"), p)
+      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+    } finally pins.foreach(graft.util.CacheScope.release)
   }
 }

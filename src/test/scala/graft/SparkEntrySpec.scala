@@ -3,7 +3,8 @@ package graft
 import graft.SparkSpec
 
 /** Driver-contract invariants: the flagship entry returns rows, every query
-  * runs at sf0.001, every oracle key names a real query, and result column
+  * runs at sf0.001 and answers a second action the same way without leaving
+  * anything pinned, every oracle key names a real query, and result column
   * names match what each oracle SQL aliases (the driver hash-compares by
   * sorted column name).
   */
@@ -19,20 +20,53 @@ class SparkEntrySpec extends SparkSpec {
   }
 
   test("all queries execute at sf0.001 without error") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
+    // One action: row count plus an order-insensitive row digest (sum of
+    // xxhash64 over every column, exact as a decimal).
+    def answer(df: DataFrame): (Long, BigDecimal) = {
+      val r = df.agg(count(lit(1)),
+          sum(xxhash64(df.columns.toSeq.map(c => df.col(s"`$c`")): _*)
+            .cast("decimal(38,0)")))
+        .head()
+      (r.getLong(0), Option(r.getDecimal(1)).fold(BigDecimal(0))(BigDecimal(_)))
+    }
+    // Every result is acted on twice with no clearCache() in between: a
+    // scoped free after the first action must not change the second
+    // answer. Once the listener bus has delivered the frees, nothing the
+    // query pinned may remain — no CacheManager entry, and no pinned RDD
+    // other than the checkpoints the result's own plan reads.
+    spark.catalog.clearCache()
+    val problems = scala.collection.mutable.ArrayBuffer[String]()
+    val counts = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val before = pinnedRdds().keySet
+      val df = fn(spark, dir)
+      val first = answer(df)
+      val second = answer(df)
+      if (first != second) problems += s"$name answered $first, then $second"
+      assert(graft.util.ListenerFence.await(spark.sparkContext))
+      val own = df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }
+      val left = pinnedRdds() -- before -- own
+      if (left.nonEmpty) problems += s"$name left pinned RDDs ${left.values.mkString(", ")}"
+      if (!spark.sharedState.cacheManager.isEmpty) {
+        problems += s"$name left CacheManager entries"
+        spark.catalog.clearCache()
+      }
+      name -> first._1
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
     // q02 may legitimately be empty (no invalid rows in the small sample);
     // emptiness elsewhere is suspicious but the oracle compare owns value
     // correctness — here we pin that every plan analyzes and runs.
-    val counts = SparkEntry.queries.map { case (name, fn) =>
-      name -> fn(spark, dir).count()
-    }
     // q116: identical-video families need doc ids ≥ 768 apart (the Y4M
     // corpus formula repeats mod lcm(256,16,12,6) = 768), so the tiny
     // samples legitimately hold zero containment pairs — the sf0.1 bench
     // corpus measures 9,240 pairs and MultimodalSpec plants truncated /
     // re-encoded clips for the value semantics.
     val mayBeEmpty = Set("q02_dead_letter", "q116_video_near_dups")
-    val empty = counts.filter(_._2 == 0).keySet -- mayBeEmpty
+    val empty = counts.filter(_._2 == 0).map(_._1).toSet -- mayBeEmpty
     assert(empty.isEmpty, s"unexpectedly empty queries: $empty")
   }
 }

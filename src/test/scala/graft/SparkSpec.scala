@@ -9,6 +9,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // session is shared across suites
 
+  /** Persistent RDDs that still hold a storage level, by id → name: what a
+    * cache or local checkpoint leaves pinned until something frees it.
+    */
+  def pinnedRdds(): Map[Int, String] =
+    spark.sparkContext.getPersistentRDDs.collect {
+      case (id, r) if r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE =>
+        id -> s"$id:${r.name}"
+    }.toMap
+
+  /** Once the listener bus has delivered every scoped free: no RDD pinned
+    * since `before` ([[pinnedRdds]]) and no CacheManager entry remains.
+    */
+  def assertNothingPinnedSince(before: Map[Int, String]): Unit = {
+    assert(graft.util.ListenerFence.await(spark.sparkContext))
+    val left = pinnedRdds() -- before.keySet
+    assert(left.isEmpty, s"pinned RDDs left: ${left.values.mkString(", ")}")
+    assert(spark.sharedState.cacheManager.isEmpty, "CacheManager entries left")
+  }
+
   /** Job ids Spark started under job group `group` while `f` ran. */
   def jobsInGroup(group: String)(f: => Unit): Seq[Int] =
     jobStartsInGroup(group)(f).map(_._1)
@@ -45,11 +64,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  /** The mains' session conf ([[graft.util.SessionTuning.localConf]]) on 4
+    * cores, so specs pin the plans and partitionings the mains run.
+    */
+  lazy val session: SparkSession = graft.util.SessionTuning.localConf(4)
+    .foldLeft(SparkSession.builder().appName("graft-test")) {
+      case (b, (k, v)) => b.config(k, v)
+    }
     .getOrCreate()
 }

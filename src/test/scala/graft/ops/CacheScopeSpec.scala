@@ -113,6 +113,34 @@ class CacheScopeSpec extends SparkSpec {
     assert(ckDocs.count() == 5)
   }
 
+  test("release frees an eager checkpoint, a lazy checkpoint after its " +
+    "action and a cache, and leaves a caller's persisted RDD alone") {
+    import graft.util.CacheScope
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    spark.catalog.clearCache()
+    def ckRdd(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+    val eager = docs.localCheckpoint(true)
+    val lazyCk = docs.localCheckpoint(false)
+    assert(lazyCk.count() == 5)
+    val cached = docs.filter($"doc_id" > 1).cache()
+    assert(cached.count() == 4)
+    val callerRdd = spark.sparkContext.parallelize(Seq(Row(1L), Row(2L))).persist()
+    val callerDf = spark.createDataFrame(callerRdd,
+      StructType(Seq(StructField("x", LongType))))
+    assert(callerDf.count() == 2)
+    Seq(eager, lazyCk, cached, callerDf).foreach(CacheScope.release)
+    val persistent = spark.sparkContext.getPersistentRDDs
+    assert(!persistent.contains(ckRdd(eager)), "eager checkpoint still pinned")
+    assert(!persistent.contains(ckRdd(lazyCk)), "lazy checkpoint still pinned")
+    assert(cached.storageLevel == StorageLevel.NONE, "cache still registered")
+    assert(persistent.contains(callerRdd.id),
+      "release unpersisted the caller's RDD under a createDataFrame")
+    assert(callerDf.count() == 2)
+    callerRdd.unpersist()
+  }
+
   test("scopes that never execute stay bounded, are forgotten without a " +
     "free, and an executed scope still frees its handles") {
     import graft.util.CacheScope

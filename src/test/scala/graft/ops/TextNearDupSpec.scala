@@ -818,7 +818,7 @@ class TextNearDupSpec extends SparkSpec {
       (5L, "exact_dup", Some(4L)), (6L, "kept", None),
       (7L, "near_dup", Some(6L)), (9L, "exact_dup", Some(100L)))
       .toDF("doc_id", "status", "dup_of")
-    val r = NearDup.resolveDupRoots(v.localCheckpoint(true))
+    val r = NearDup.resolveDupRootsCounted(v.localCheckpoint(true))._1
       .collect().map(x => x.getLong(0) ->
         ((x.getString(1), if (x.isNullAt(2)) -1L else x.getLong(2)))).toMap
     assert(r(2L) == (("near_dup", 1L)) && r(3L) == (("exact_dup", 1L)) &&

@@ -64,6 +64,39 @@ class CrawlDedupSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("per-batch pinned blocks are freed once the batch lands: no " +
+    "persistent RDD storage or CacheManager entry accumulates across " +
+    "micro-batches") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val dir = java.nio.file.Files.createTempDirectory("graft-crawlpins").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-crawlpinsck").toString
+    CrawlDedup.initIndex(spark, dir)
+    val sink = new InMemorySink
+    spark.catalog.clearCache()
+    // no GC first: a free that only the ContextCleaner would complete
+    // must show up here as a leak
+    val before = pinnedRdds()
+    val metrics = scala.collection.mutable.ArrayBuffer[CrawlDedup.CrawlBatchMetrics]()
+    val mem = MemoryStream[(Long, String)]
+    // through start, so the foreachBatch pin is covered too; compactEvery
+    // = 2 runs one compaction among the batches
+    val q = CrawlDedup.start(spark, mem.toDF().toDF("doc_id", "text"),
+      ckpt, dir, sink, compactEvery = 2, metricsOut = metrics += _)
+    try {
+      // kept docs, then exact / near / in-batch copies against them
+      mem.addData((1L, base), (2L, other))
+      q.processAllAvailable()
+      mem.addData((10L, base.toUpperCase), (11L, nearBase), (12L, "zz yy xx"))
+      q.processAllAvailable()
+      mem.addData((20L, nearBase), (21L, "zz yy xx"), (22L, "zz yy xx"),
+        (23L, "brand new words here"))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(metrics.size == 3, metrics)
+    assertNothingPinnedSince(before)
+  }
+
   test("hostile payloads through the crawl loop (VERDICT r17 #5): null " +
     "texts are KEPT and never collapse with each other or the index, " +
     "empty-string duplicates resolve exact in-batch and cross-batch") {

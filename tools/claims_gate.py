@@ -25,7 +25,7 @@ PATTERNS = [
      "hot-path window must carry a real partition key (r12 hygiene item)"),
     ("was locally checkpointed, its lineage has been",
      "deliberate frees of superseded localCheckpoint blocks go through "
-     "graft.util.Checkpoints.free, which suppresses this known-benign "
+     "graft.util.CacheScope.release, which suppresses this known-benign "
      "warning for the one synchronous unpersist call - 222 copies per run "
      "were burying real warnings in the tails (r13 hygiene item)"),
 ]

@@ -314,25 +314,6 @@ object StreamScaleProbe {
       }
     }
 
-    // ---- probe 4b: express-lane doc ingest (r10 VERDICT #7) --------------
-    // acceptedOnly drops the rejected append: a micro-batch is exactly ONE
-    // cache scan (the observed accepted append) — the single-scan path for
-    // callers who treat rejections as a counter, not a dataset.
-    if (want("doc_ingest_express")) locally {
-      val sink = new CountingSink
-      val timings = new DocIngest.StageTimings
-      def stagesJson: Option[String] = Some(timings.snapshot.map {
-        case (stage, c, s) => f""""$stage": {"batches": $c, "sec": $s%.2f}"""
-      }.mkString("{", ", ", "}"))
-      results += runProbe("doc_ingest_express",
-        () => sink.counts("accepted_documents"),
-        expectedInput = nDocs, info = () => stagesJson) {
-        DocIngest.startAvailableNow(spark,
-          docStream().select(col("doc_id"), col("ingest_ts"), col("text")),
-          ckpt("ingest-express"), sink, timings, acceptedOnly = true)
-      }
-    }
-
     // ---- probe 4c: streaming continuous-crawl dedup loop (r10 VERDICT #3)
     // CrawlDedup at probe volume: per-batch verdicts against the persisted
     // index, kept docs written BACK so later batches resolve against them,

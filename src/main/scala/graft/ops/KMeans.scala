@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.LongArrayDot.dotLong
 
 /** Lloyd's k-means over the embedding corpus — the in-engine trainer for
@@ -18,11 +19,12 @@ import graft.functions.LongArrayDot.dotLong
   *    nondeterminism across partitionings or engines.
   *  - Assignment is one argmin loop ([[Centroids.nearest]]) over the k×Dim
   *    centroid table (`|x−c|² = x·x − 2x·c + c·c`, the x·x term
-  *    precomputed once per vector; ties to the smallest cluster id). The
-  *    driver-side trainer and the compiled per-partition kernels
-  *    ([[assign]], [[assignTrainedCellsKernel]], [[PQ]]'s encoder, the
-  *    trained-IVF router) all run that loop — n·k·Dim fused integer
-  *    multiply-adds with NO n×k row materialization.
+  *    precomputed once per vector; ties to the smallest cluster id). It
+  *    is the only nearest-centroid code: the driver-side trainer, the
+  *    per-partition home-cell kernel ([[assignTrainedCells]]), the ranked
+  *    probe ([[trainedCellsRanked]], via [[Centroids.nearestN]]) and
+  *    [[PQ]]'s encoder all run it — n·k·Dim fused integer multiply-adds
+  *    with NO n×k row materialization.
   *  - Update = per-cluster, per-dimension sums and counts over the sample
   *    (`Math.addExact`, so an overflow fails loudly as ANSI `sum` does).
   *  - Centroid means divide in double (`floor(sum/count)`): both sum
@@ -61,19 +63,6 @@ object KMeans {
   private[ops] def quantize(emb: org.apache.spark.sql.Column) =
     transform(emb, x => floor(x.cast("double") * 1e6).cast("long"))
 
-  /** Quantized corpus: (vec_id, xq, x·x), malformed vectors dropped up
-    * front (a NULL distance would otherwise win Spark's nulls-first argmin
-    * while losing DuckDB's nulls-last one). `dim` ≠ [[Dim]] when training
-    * a PQ subspace on pre-sliced vectors ([[PQ]]).
-    */
-  private def corpus(embeddings: DataFrame, dim: Int = Dim): DataFrame =
-    embeddings
-      .filter(col("embedding").isNotNull && size(col("embedding")) === dim)
-      .repartition(col("vec_id")) // single-split parquet → spread the work
-      .select(col("vec_id"), quantize(col("embedding")).as("xq"))
-      .withColumn("xx", dotLong(col("xq"), col("xq")))
-      .cache()
-
   /** A model laid out for the argmin loop: centroids in ascending
     * cluster-id order, row-major in one flat k×dim array, with c·c
     * precomputed per centroid. Positions index [[ids]]; serializable, so
@@ -96,7 +85,7 @@ object KMeans {
     }
 
     /** Position of the nearest centroid. Strict < over ascending cluster
-      * ids == min(struct(dist, c)): equal distances keep the smaller id.
+      * ids: equal distances keep the smaller id.
       */
     def nearest(x: Array[Long], off: Int, xx: Long): Int = {
       var best = 0
@@ -109,6 +98,23 @@ object KMeans {
       }
       best
     }
+
+    /** Positions of the `n` nearest centroids (all k when n ≥ k) in
+      * (dist, id) order: equal distances keep the smaller id first, so
+      * position 0 is [[nearest]]'s.
+      */
+    def nearestN(x: Array[Long], off: Int, xx: Long, n: Int): Array[Int] = {
+      val d = Array.tabulate(k)(c => dist(x, off, xx, c))
+      Array.range(0, k).sortBy(c => (d(c), c)).take(n)
+    }
+
+    /** x·x of the vector read from `x(off until off + dim)`. */
+    def norm(x: Array[Long], off: Int): Long = {
+      var xx = 0L
+      var d = 0
+      while (d < dim) { val q = x(off + d); xx += q * q; d += 1 }
+      xx
+    }
   }
 
   private[ops] object Centroids {
@@ -119,28 +125,31 @@ object KMeans {
     }
   }
 
-  /** Nearest-centroid assignment: (vec_id, cluster) — a compiled
-    * per-partition argmin kernel. Replaces the r1–r10
-    * crossJoin(broadcast centroids) → groupBy-min form, whose cost was
-    * MATERIALIZING n·k candidate rows through an aggregation: at the 200×
-    * probe (1M vectors × adaptive k=512) that aggregation alone ran ~75 s
-    * (`SCALEPROBE_r10_200x.json` ann_ivf_trained) while the useful work —
-    * n·k·Dim integer multiply-adds — is ~2 s of JIT-compiled loop across
-    * 32 threads. Bit-identical results (same fixed-point integers, same
-    * smallest-(dist, cluster) tie-break), so every trained-model oracle
-    * hash is unchanged; only the n·k row blowup is gone.
+  /** The per-partition kernels' quantizer: reads the `dim`-long float or
+    * double array in column `embCol` of a row into `x` as `floor(v·1e6)`
+    * longs — the same IEEE double ops as the [[quantize]] Column. A null
+    * element reads as 0 (a null boxed Float or Double unboxes to 0), in
+    * every kernel.
     */
-  private def assign(xq: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame = {
-    val spark = xq.sparkSession
-    import spark.implicits._
-    val model = Centroids(cents, cents.head._2.length)
-    xq.select(col("vec_id"), col("xq"), col("xx"))
-      .as[(Long, scala.collection.Seq[Long], Long)]
-      .mapPartitions { it =>
-        it.map { case (id, xqSeq, xx) =>
-          (id, model.ids(model.nearest(xqSeq.toArray, 0, xx)))
-        }
-      }.toDF("vec_id", "cluster")
+  private[ops] def rowQuantizer(
+      schema: StructType, embCol: String, dim: Int): (Row, Array[Long]) => Unit = {
+    val idx = schema.fieldIndex(embCol)
+    val isFloat = schema(idx).dataType match {
+      case ArrayType(FloatType, _) => true
+      case ArrayType(DoubleType, _) => false
+      case t => throw new IllegalArgumentException(s"$embCol has unsupported type $t")
+    }
+    (row, x) => {
+      val seq = row.getSeq[Any](idx)
+      var d = 0
+      while (d < dim) {
+        val v =
+          if (isFloat) seq(d).asInstanceOf[Float].toDouble
+          else seq(d).asInstanceOf[Double]
+        x(d) = math.floor(v * 1e6).toLong
+        d += 1
+      }
+    }
   }
 
   /** One Lloyd's iteration over the driver-side sample (vectors
@@ -193,8 +202,9 @@ object KMeans {
   /** Seeding and `iters` Lloyd's iterations on the driver over sampled
     * vectors in seed-hash order (row-major `dim`-wide in `xs`, x·x in
     * `xx`): the seeds are the first k vectors. The quantization and x·x
-    * are the [[corpus]] columns, so the model is the one a distributed
-    * Lloyd's over the same sample learns.
+    * are the integers the assignment kernels compute ([[rowQuantizer]],
+    * [[Centroids.norm]]), so the model is the one a distributed Lloyd's
+    * over the same sample learns.
     */
   private[ops] def lloyd(
       xs: Array[Long], xx: Array[Long], dim: Int, k: Int,
@@ -212,25 +222,21 @@ object KMeans {
   def kmeansCentroids(
       embeddings: DataFrame, k: Int = K, iters: Int = Iters): DataFrame = {
     val cents = trainedModel(embeddings, k, iters)
-    val xq = corpus(embeddings)
-    // materialize the k-row size relation NOW (localCheckpoint is eager)
-    // while the corpus cache is hot, so unpersisting xq below cannot force
-    // a later evaluation to recompute the quantization pipeline
-    val sizes = assign(xq, cents)
-      .groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
-      .withColumnRenamed("cluster", "cluster_id")
+    // materialize the k-row size relation NOW (localCheckpoint is eager),
+    // so the output re-reads k rows instead of re-running the assignment
+    val sizes = assignTrainedCells(spread(embeddings), cents)
+      .groupBy("cell").agg(count(lit(1)).as("cluster_size"))
+      .withColumnRenamed("cell", "cluster_id")
       .localCheckpoint()
     val spark = embeddings.sparkSession
     val centRows = cents.toSeq.flatMap { case (c, arr) =>
       arr.toSeq.zipWithIndex.map { case (v, d) => (c, d, v) }
     }
-    val out = spark.createDataFrame(centRows)
+    spark.createDataFrame(centRows)
       .toDF("cluster_id", "dim", "centroid_q")
       .join(sizes, Seq("cluster_id"), "left")
       .na.fill(0L, Seq("cluster_size"))
       .orderBy("cluster_id", "dim")
-    graft.util.CacheScope.release(xq)
-    out
   }
 
   /** The final assignment relation (vec_id → trained cluster) for library
@@ -243,14 +249,19 @@ object KMeans {
   /** [[kmeansAssignments]] under an already-trained model. */
   private[ops] def assignments(
       embeddings: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame = {
-    val xq = corpus(embeddings)
-    // eager-materialize the final (vec_id, cluster) relation, then release
-    // the quantized-corpus cache: callers joining the assignment
-    // re-read checkpoint blocks instead of pinning the corpus in storage
-    val out = assign(xq, cents).localCheckpoint()
-    graft.util.CacheScope.release(xq)
-    out.orderBy("vec_id")
+    // eager-materialize the final (vec_id, cluster) relation: callers
+    // joining the assignment re-read checkpoint blocks, not the corpus
+    assignTrainedCells(spread(embeddings), cents)
+      .select(col("vec_id"), col("cell").as("cluster"))
+      .localCheckpoint()
+      .orderBy("vec_id")
   }
+
+  /** (vec_id, embedding) hash-spread on vec_id: a single-split parquet
+    * corpus would otherwise run the n·k distance pass in one task.
+    */
+  private def spread(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"), col("embedding")).repartition(col("vec_id"))
 
   /** Train and return the raw model: k fixed-point centroids, driver-side
     * (k×Dim longs — tiny by definition). The broadcastable artifact the
@@ -266,97 +277,33 @@ object KMeans {
     lloyd(rows.flatMap(_.getSeq[Long](1)), rows.map(_.getLong(2)), dim, k, iters)
   }
 
-  /** Nearest-trained-centroid assignment as a PER-ROW expression: the k
-    * candidate distances unroll into a `least(struct(dist, cluster)...)`
-    * over array-literal centroids — no aggregation, no shuffle, codegen
-    * throughout. Exactly the batch argmin's semantics (smallest distance,
-    * ties to the smallest cluster id), but legal inside an append-mode
-    * streaming plan, which is what lets the trained quantizer route
-    * streams. Malformed vectors are filtered, mirroring training.
+  /** Nearest-trained-centroid assignment as a narrow per-partition pass:
+    * every input column is kept and `cell` appended (+ `cent_dist`, the
+    * exact fixed-point `|x−c|²` the SemDeDup / prototype-pruning curation
+    * ops rank by). Vectors that are null or not [[Dim]] long are filtered,
+    * mirroring training. Each row is quantized once ([[rowQuantizer]])
+    * and routed by [[Centroids.nearest]] — smallest distance, ties to the
+    * smallest cluster id. No aggregation, no shuffle: deterministic and
+    * narrow, so it is legal inside an append-mode stream, which is what
+    * lets the trained quantizer route streams.
     */
-  /** Above this model size [[assignTrainedCells]] switches from the
-    * unrolled `least(struct…)` expression (codegen-friendly at the k ≤ 16
-    * the fixed-k operators and streams use — their plans stay exactly as
-    * pinned) to the compiled argmin kernel: a 256-wide unrolled expression
-    * tree (the PQ codebook default) blows past JIT method limits and pays
-    * per-candidate Catalyst overhead for identical integer results.
-    */
-  val ExprAssignMaxK = 16
-
   def assignTrainedCells(
       vectors: DataFrame, model: Array[(Int, Array[Long])],
-      embCol: String = "embedding", withDist: Boolean = false,
-      dim: Int = Dim): DataFrame = {
-    if (model.length > ExprAssignMaxK)
-      return assignTrainedCellsKernel(vectors, model, embCol, withDist, dim)
-    val candidates = model.map { case (c, cq) =>
-      val cc = cq.map(v => v * v).sum // ≤ Dim·(1e6)² ≪ 2^63
-      struct(
-        (col("__xx") - lit(2L) * dotLong(col("__xq"), typedLit(cq.toSeq)) + lit(cc)).as("d"),
-        lit(c).as("c"))
-    }
-    // Spark's least() rejects a single argument — a k=1 model routes
-    // everything to its only cell
-    val best =
-      if (candidates.length == 1) candidates(0) else least(candidates: _*)
-    // materialize the argmin struct ONCE behind a projection boundary —
-    // CollapseProject keeps a multiply-referenced non-cheap alias, so the
-    // k-wide least(...) is not duplicated when both fields are read
-    val assigned = vectors
-      .filter(col(embCol).isNotNull && size(col(embCol)) === dim)
-      .withColumn("__xq", quantize(col(embCol)))
-      .withColumn("__xx", dotLong(col("__xq"), col("__xq")))
-      .withColumn("__best", best)
-      .withColumn("cell", col("__best").getField("c"))
-    // cent_dist = |x−c|² in exact fixed-point longs — the "distance to
-    // prototype" the SemDeDup / prototype-pruning curation ops rank by
-    val withD =
-      if (withDist) assigned.withColumn("cent_dist", col("__best").getField("d"))
-      else assigned
-    withD.drop("__xq", "__xx", "__best")
-  }
-
-  /** [[assignTrainedCells]]'s large-k twin: the same filter, the same
-    * fixed-point quantization (`floor(x·1e6)` per element — identical
-    * IEEE double ops to the [[quantize]] Column), the same
-    * smallest-(dist, cell) argmin, as a per-partition compiled loop that
-    * preserves every input column and appends `cell` (+`cent_dist`).
-    * Deterministic and narrow, so it is exactly as streaming-append-legal
-    * as the expression form.
-    */
-  private[ops] def assignTrainedCellsKernel(
-      vectors: DataFrame, model: Array[(Int, Array[Long])],
-      embCol: String, withDist: Boolean, dim: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.{Encoders, Row}
-    val filtered = vectors.filter(col(embCol).isNotNull && size(col(embCol)) === dim)
+      embCol: String = "embedding", withDist: Boolean = false): DataFrame = {
+    val filtered = vectors.filter(col(embCol).isNotNull && size(col(embCol)) === Dim)
     val base = filtered.schema
     val schema =
       if (withDist)
         base.add("cell", IntegerType, nullable = false)
           .add("cent_dist", LongType, nullable = false)
       else base.add("cell", IntegerType, nullable = false)
-    val embIdx = base.fieldIndex(embCol)
-    val elemIsFloat = base(embIdx).dataType match {
-      case ArrayType(FloatType, _) => true
-      case ArrayType(DoubleType, _) => false
-      case t => throw new IllegalArgumentException(
-        s"assignTrainedCellsKernel: $embCol has unsupported type $t")
-    }
-    val cents = Centroids(model, dim)
+    val quant = rowQuantizer(base, embCol, Dim)
+    val cents = Centroids(model, Dim)
     filtered.mapPartitions { it =>
-      val x = new Array[Long](dim)
+      val x = new Array[Long](Dim)
       it.map { row =>
-        val seq = row.getSeq[Any](embIdx)
-        var xx = 0L
-        var d = 0
-        while (d < dim) {
-          val v =
-            if (elemIsFloat) seq(d).asInstanceOf[Float].toDouble
-            else seq(d).asInstanceOf[Double]
-          val q = math.floor(v * 1e6).toLong
-          x(d) = q; xx += q * q; d += 1
-        }
+        quant(row, x)
+        val xx = cents.norm(x, 0)
         val c = cents.nearest(x, 0, xx)
         // Seq[Any] — plain Seq(cell, dist) would numeric-widen the Int
         // cell to Long and break the row encoder's INT field
@@ -368,9 +315,9 @@ object KMeans {
   }
 
   /** Per-vector trained cell as a query surface: train on the corpus, then
-    * assign every vector through the expression path — which pins
-    * expression-assign ≡ batch groupBy-argmin ≡ the oracle's unrolled
-    * window-argmin, the equivalence streaming serving relies on.
+    * assign every vector through [[assignTrainedCells]] — the same kernel
+    * streaming serving routes by, pinned against the oracle's unrolled
+    * window-argmin.
     */
   def trainedCells(
       embeddings: DataFrame, k: Int = K, iters: Int = Iters): DataFrame =
@@ -387,35 +334,35 @@ object KMeans {
   /** Ranked trained-cell assignment — (vec_id, cell, cell_rank ≤
     * maxRank): the probe order over TRAINED centroids by exact
     * fixed-point distance (ties to the smaller cell id; rank 1 is the
-    * [[assignTrainedCells]] home cell by construction — same argmin,
-    * same tie-break). This is [[Similarity.ivfCellsRanked]]'s contract
-    * with the learned router instead of the label one, which is what
-    * lets the nprobe tune grid and the probed search below run
-    * unchanged over trained cells (r18, VERDICT r17 #3).
+    * [[assignTrainedCells]] home cell by construction — same quantizer,
+    * same distances, same tie-break). This is
+    * [[Similarity.ivfCellsRanked]]'s contract with the learned router
+    * instead of the label one, which is what lets the nprobe tune grid
+    * and the probed search below run unchanged over trained cells.
     *
-    * Per row: k struct(d, c) candidates → sort_array → slice(1, maxRank)
-    * → posexplode. All exact integer arithmetic; no shuffle (the model
-    * is a driver-side array riding in as literals).
+    * One narrow per-partition pass: each row is quantized once and
+    * [[Centroids.nearestN]] emits its maxRank nearest cells in order. All
+    * exact integer arithmetic; no shuffle beyond the spread on vec_id.
     */
   def trainedCellsRanked(
       embeddings: DataFrame, maxRank: Int, k: Int = K,
-      iters: Int = Iters, dim: Int = Dim): DataFrame = {
-    val model = trainedModel(embeddings, k, iters, dim)
-    val candidates = model.map { case (c, cq) =>
-      val cc = cq.map(v => v * v).sum
-      struct(
-        (col("__xx") - lit(2L) * dotLong(col("__xq"), typedLit(cq.toSeq)) + lit(cc)).as("d"),
-        lit(c).as("c"))
-    }
-    embeddings
-      .filter(col("embedding").isNotNull && size(col("embedding")) === dim)
-      .repartition(col("vec_id")) // single-split parquet → spread the n·k dots
-      .withColumn("__xq", quantize(col("embedding")))
-      .withColumn("__xx", dotLong(col("__xq"), col("__xq")))
-      .select(col("vec_id"),
-        posexplode(slice(sort_array(array(candidates: _*)), 1, maxRank)))
-      .select(col("vec_id"), col("col.c").as("cell"),
-        (col("pos") + 1).cast("int").as("cell_rank"))
+      iters: Int = Iters): DataFrame = {
+    val cents = Centroids(trainedModel(embeddings, k, iters), Dim)
+    val vectors = spread(embeddings
+      .filter(col("embedding").isNotNull && size(col("embedding")) === Dim))
+    val schema = StructType(Seq(vectors.schema("vec_id"),
+      StructField("cell", IntegerType, nullable = false),
+      StructField("cell_rank", IntegerType, nullable = false)))
+    val quant = rowQuantizer(vectors.schema, "embedding", Dim)
+    vectors.mapPartitions { it =>
+      val x = new Array[Long](Dim)
+      it.flatMap { row =>
+        quant(row, x)
+        val id = row.get(0)
+        cents.nearestN(x, 0, cents.norm(x, 0), maxRank).iterator.zipWithIndex
+          .map { case (c, r) => Row(id, cents.ids(c), r + 1) }
+      }
+    }(Encoders.row(schema))
   }
 
   /** nprobe-probed trained-IVF top-k: each query probes its `nprobe`
@@ -640,7 +587,7 @@ object KMeans {
     * cells instead of the testdata's pre-assigned `label`): every vector
     * searches its home cell only — [[ivfTopKTrainedProbed]]'s result at
     * nprobe = 1, served without a ranked assignment to cache or join: the
-    * compiled argmin ([[assignTrainedCellsKernel]]) routes each vector,
+    * compiled argmin ([[assignTrainedCells]]) routes each vector,
     * and the salt rule reads the corpus size and the model's cell count.
     *
     * Execution: one shuffle of the n vectors keyed on their trained cell
@@ -666,8 +613,7 @@ object KMeans {
   private def trainedSearch(
       embeddings: DataFrame, topK: Int, k: Int, iters: Int, n: Long): DataFrame = {
     val model = trainedModel(embeddings, k, iters)
-    val cells = assignTrainedCellsKernel(embeddings.select(col("vec_id"), col("embedding")),
-        model, "embedding", withDist = false, Dim)
+    val cells = assignTrainedCells(embeddings.select(col("vec_id"), col("embedding")), model)
       .withColumn("cell_rank", lit(1))
     Similarity.cellTopK(cells, topK,
       Similarity.saltsFor(embeddings.sparkSession, n, n, model.length), 1)
@@ -714,7 +660,7 @@ object KMeans {
   /** Oracle for [[ivfTopKTrainedProbed]]: the ranked assignment is a
     * row_number over the SAME exact integer distances (Σ(x−c)² ≡
     * x·x − 2x·c + c·c, ties to the smaller cluster id — the
-    * [[trainedCellsRanked]] sort_array order), probe rows rn ≤ nprobe,
+    * [[trainedCellsRanked]] order), probe rows rn ≤ nprobe,
     * home rows rn = 1, equi-join on the cell. A (query, neighbor) pair
     * meets at most once because the neighbor has ONE home cell.
     */

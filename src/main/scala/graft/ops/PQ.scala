@@ -120,10 +120,8 @@ object PQ {
   }
 
   /** The encoded corpus: (vec_id, code_0 … code_{M-1}) — one pass, every
-    * subspace assignment a per-row `least(struct(dist, code))` over its
-    * broadcast codebook (the [[KMeans.assignTrainedCells]] expression
-    * path, chained once per subspace). This relation IS the index a PQ
-    * deployment stores: M small ints per vector.
+    * subspace assigned to its nearest code ([[encode]]). This relation IS
+    * the index a PQ deployment stores: M small ints per vector.
     */
   def pqEncode(
       embeddings: DataFrame, m: Int = M, codes: Int = Codes,
@@ -135,45 +133,17 @@ object PQ {
       embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
       m: Int): DataFrame =
     encode(
-      embeddings.repartition(col("vec_id")), // spread before the M×Codes-wide exprs
+      embeddings.repartition(col("vec_id")), // spread the n·M·Codes distance pass
       mods, m)
 
-  /** Shared slice+assign fold: filter well-formed vectors, slice each of
-    * the `m` subspaces, assign each against its subspace codebook, project
-    * (vec_id, code_0 … code_{m-1}). Two engines, identical integers: with
-    * small codebooks (≤ [[KMeans.ExprAssignMaxK]] codes) the original
-    * per-subspace [[KMeans.assignTrainedCells]] expression chain; at the
-    * default 256 codes a single fused per-partition kernel — one row
-    * pass quantizes the vector once and runs all M subspace argmins
-    * (m·codes-wide unrolled expressions would blow JIT method limits and
-    * pay Catalyst overhead per candidate for the same results).
+  /** The encoder: filter well-formed vectors, then one compiled pass per
+    * row quantizes the vector once ([[KMeans.rowQuantizer]]) and runs all
+    * M subspace argmins ([[KMeans.Centroids.nearest]] over each subspace
+    * codebook — smallest distance, ties to the smaller code), projecting
+    * (vec_id, code_0 … code_{m-1}). Narrow and deterministic, so it is
+    * legal in an append-mode stream.
     */
   private def encode(
-      vectors: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
-      m: Int): DataFrame = {
-    if (mods.head._2.length > KMeans.ExprAssignMaxK)
-      return encodeKernel(vectors, mods, m)
-    val subDim = KMeans.Dim / m
-    val base = vectors.filter(col("embedding").isNotNull &&
-      size(col("embedding")) === KMeans.Dim)
-    val withSubs = (0 until m).foldLeft(base) { (df, s) =>
-      df.withColumn(s"__sub$s",
-        slice(col("embedding"), s * subDim + 1, subDim))
-    }
-    val encoded = mods.foldLeft(withSubs) { case (df, (s, model)) =>
-      KMeans.assignTrainedCells(df, model, embCol = s"__sub$s", dim = subDim)
-        .withColumnRenamed("cell", s"code_$s")
-    }
-    encoded.select(
-      col("vec_id") +: (0 until m).map(s => col(s"code_$s")): _*)
-  }
-
-  /** The fused large-codebook encoder: same filter, same fixed-point
-    * quantization, same smallest-(dist, code) argmin per subspace as the
-    * expression fold — as one compiled pass over the rows. Narrow and
-    * deterministic, so exactly as streaming-append-legal.
-    */
-  private[ops] def encodeKernel(
       vectors: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
       m: Int): DataFrame = {
     import org.apache.spark.sql.types._
@@ -183,38 +153,22 @@ object PQ {
     val filtered = vectors
       .filter(col("embedding").isNotNull && size(col("embedding")) === dim)
       .select(col("vec_id"), col("embedding"))
-    val elemIsFloat = filtered.schema(1).dataType match {
-      case ArrayType(FloatType, _) => true
-      case ArrayType(DoubleType, _) => false
-      case t => throw new IllegalArgumentException(
-        s"pq encode: embedding has unsupported type $t")
-    }
     val schema = StructType(filtered.schema.fields(0) +:
       (0 until m).map(s => StructField(s"code_$s", IntegerType, nullable = false)))
+    val quant = KMeans.rowQuantizer(filtered.schema, "embedding", dim)
     val subModels = mods.sortBy(_._1)
       .map { case (_, model) => KMeans.Centroids(model, subDim) }.toArray
     filtered.mapPartitions { it =>
       val x = new Array[Long](dim)
       it.map { row =>
-        val seq = row.getSeq[Any](1)
-        var d = 0
-        while (d < dim) {
-          val v =
-            if (elemIsFloat) seq(d).asInstanceOf[Float].toDouble
-            else seq(d).asInstanceOf[Double]
-          x(d) = math.floor(v * 1e6).toLong
-          d += 1
-        }
+        quant(row, x)
         val out = new Array[Any](1 + m)
         out(0) = row.get(0)
         var s = 0
         while (s < m) {
           val cents = subModels(s)
-          val off0 = s * subDim
-          var xx = 0L
-          var i = 0
-          while (i < subDim) { val q = x(off0 + i); xx += q * q; i += 1 }
-          out(1 + s) = cents.ids(cents.nearest(x, off0, xx))
+          val off = s * subDim
+          out(1 + s) = cents.ids(cents.nearest(x, off, cents.norm(x, off)))
           s += 1
         }
         Row.fromSeq(out.toIndexedSeq)
@@ -222,10 +176,9 @@ object PQ {
     }(Encoders.row(schema))
   }
 
-  /** PQ-encode a STREAM with codebooks trained on a static corpus: every
-    * subspace assignment is the [[KMeans.assignTrainedCells]] per-row
-    * `least(struct)` expression — no aggregation, so the encode is legal
-    * in an append-mode streaming plan. This is the ingest path of a PQ
+  /** PQ-encode a STREAM with codebooks trained on a static corpus: the
+    * [[encode]] pass has no aggregation, so the encode is legal in an
+    * append-mode streaming plan. This is the ingest path of a PQ
     * deployment: vectors arrive, codes leave, the index only ever stores
     * M small ints per vector.
     */

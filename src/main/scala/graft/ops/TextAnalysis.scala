@@ -281,36 +281,21 @@ object TextAnalysis {
     * term.
     */
   def tfidfTopTerms(
-      documents: DataFrame, topK: Int = 5, classic: Boolean = false): DataFrame = {
+      documents: DataFrame, topK: Int = 5): DataFrame = {
     val tf = documents
       .repartition(col("doc_id")) // single-split parquet → spread the explode
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .filter(col("term") =!= "")
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df_docs"))
-    // classic = true: the textbook tf·ln(N/df) weight, for library users —
-    // spec-tested within Spark but kept OUT of the graded oracle query
-    // (libm ln is not bit-portable across engines; see the scoring note)
-    val joined =
-      if (classic) {
-        val n = documents.count()
-        tf.join(df, "term")
-          .withColumn("score",
-            col("tf") * log(lit(n.toDouble) / col("df_docs")))
-      } else {
-        tf.join(df, "term")
-          .withColumn("score", expr("(tf * 1000000) div df_docs"))
-      }
-    val scoreName = if (classic) "score" else "score_scaled"
-    val ranked = joined
-      .withColumnRenamed("score", scoreName)
+    tf.join(df, "term")
+      .withColumn("score_scaled", expr("(tf * 1000000) div df_docs"))
       .withColumn("rank",
         row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-            .orderBy(col(scoreName).desc, col("term"))))
+            .orderBy(col("score_scaled").desc, col("term"))))
       .filter(col("rank") <= topK)
-    ranked
-      .select("doc_id", "term", "tf", "df_docs", scoreName, "rank")
+      .select("doc_id", "term", "tf", "df_docs", "score_scaled", "rank")
       .orderBy("doc_id", "rank")
   }
 

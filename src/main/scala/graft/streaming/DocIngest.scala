@@ -78,22 +78,13 @@ object DocIngest {
     * metrics observation is delivered by that action, and `Observation
     * .get` blocks until one runs.
     */
-  /** Express lane (r10 VERDICT #7): `acceptedOnly = true` drops the
-    * two-sink routing contract — rejected rows are COUNTED (the metrics
-    * row still carries n_flagged_dup/n_low_quality) but never appended to
-    * a rejected_documents table, so a micro-batch costs exactly ONE cache
-    * scan (the observed accepted append). For callers who treat
-    * rejections as a counter, not a dataset, this removes the second
-    * per-batch scan the default pays for the dead-letter contract.
-    */
   def processBatch(
       batchDf: DataFrame,
       batchId: Long,
       filter: Array[Long],
       sink: Sink,
       minQuality: Double = 0.4,
-      timings: StageTimings = new StageTimings,
-      acceptedOnly: Boolean = false): (Option[DocBatchMetrics], Array[Long]) = {
+      timings: StageTimings = new StageTimings): (Option[DocBatchMetrics], Array[Long]) = {
     // The Bloom filter is a DRIVER ARRAY (16 K longs — Bloom.NumWords),
     // probed row-wise inside codegen (Bloom.probeHits): the round-8
     // DataFrame-filter form paid two shuffles (probe agg + join back) plus
@@ -159,7 +150,7 @@ object DocIngest {
         // before it runs without paying a third cache scan per batch, and
         // a long-running 100%-rejection stream is the degenerate regime
         // (the stream is doing no useful work; compact its output).
-        if (!acceptedOnly && m.nIn > m.nAccepted)
+        if (m.nIn > m.nAccepted)
           timings.time("rejected_append")(
             sink.append(flags.filter(col("reject_reason").isNotNull)
               .select("doc_id", "reject_reason"),
@@ -201,9 +192,7 @@ object DocIngest {
       bloomBits: Long = Bloom.BloomBits,
       // observability hook: receives the filter after every batch, so the
       // caller can watch Bloom.fillRatio approach saturation in production
-      filterOut: java.util.concurrent.atomic.AtomicReference[Array[Long]] = null,
-      // express lane: count rejections in metrics, never append them
-      acceptedOnly: Boolean = false)
+      filterOut: java.util.concurrent.atomic.AtomicReference[Array[Long]] = null)
       : StreamingQuery = {
     var filter = Bloom.emptyWords(bloomBits)
     val writer = Dedup.streamingContentDedup(docs, watermark = watermarkDelay)
@@ -211,7 +200,7 @@ object DocIngest {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val (_, next) =
-          processBatch(batch, id, filter, sink, minQuality, timings, acceptedOnly)
+          processBatch(batch, id, filter, sink, minQuality, timings)
         filter = next
         if (filterOut != null) filterOut.set(filter)
       }
@@ -225,11 +214,9 @@ object DocIngest {
       spark: SparkSession, docs: DataFrame, checkpointDir: String,
       sink: Sink, timings: StageTimings = new StageTimings,
       bloomBits: Long = Bloom.BloomBits,
-      filterOut: java.util.concurrent.atomic.AtomicReference[Array[Long]] = null,
-      acceptedOnly: Boolean = false)
+      filterOut: java.util.concurrent.atomic.AtomicReference[Array[Long]] = null)
       : StreamingQuery =
     start(spark, docs, checkpointDir, sink,
       trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-      timings = timings, bloomBits = bloomBits, filterOut = filterOut,
-      acceptedOnly = acceptedOnly)
+      timings = timings, bloomBits = bloomBits, filterOut = filterOut)
 }

@@ -172,9 +172,9 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("trained-cell assignment (q76) is aggregation- and window-free") {
-    // the serving property: nearest-centroid via least(struct) is a pure
-    // per-row projection — no argmin aggregate, no rank window — which is
-    // what makes the same expression legal in an append-mode stream
+    // the serving property: nearest-centroid is a narrow per-partition
+    // pass — no argmin aggregate, no rank window — which is what makes
+    // the same kernel legal in an append-mode stream
     val p = plan("q76_trained_cells")
     assert(!p.contains("HashAggregate") && !p.contains("Window"), p)
   }

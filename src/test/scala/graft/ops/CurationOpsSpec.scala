@@ -283,23 +283,19 @@ class CurationOpsSpec extends SparkSpec {
     assert(d1 == Seq("alpha", "common"))
   }
 
-  test("classic tf·ln(N/df) mode ranks tf/df trade-offs the textbook way") {
-    // the documented divergence case, constructed: N=3; in doc 1, 'alpha'
-    // has tf=10 but appears in every doc (df=3 → idf = ln(1) = 0) while
-    // 'beta' has tf=3, df=1 (idf = ln 3). Classic tf·idf: alpha scores 0,
-    // beta ≈ 3.30 → beta wins. Integer tf/df: alpha 10e6 div 3 ≈ 3.33e6 >
-    // beta 3e6 → alpha wins. The two modes MUST disagree here.
+  test("integer tf/df score ranks a ubiquitous high-tf term above a rare one") {
+    // the documented divergence from textbook tf·ln(N/df), constructed:
+    // N=3; in doc 1, 'alpha' has tf=10 but appears in every doc (df=3,
+    // textbook idf = ln(1) = 0) while 'beta' has tf=3, df=1. Integer
+    // tf/df: alpha 10e6 div 3 ≈ 3.33e6 > beta 3e6 → alpha wins.
     val a = Array.fill(10)("alpha").mkString(" ")
     val docs = Seq(
       (1L, a + " beta beta beta"),
       (2L, "alpha filler"),
       (3L, "alpha other")
     ).toDF("doc_id", "text")
-    val classic = TextAnalysis.tfidfTopTerms(docs, topK = 1, classic = true)
-      .filter(col("doc_id") === 1L).select("term").as[String].head()
     val integer = TextAnalysis.tfidfTopTerms(docs, topK = 1)
       .filter(col("doc_id") === 1L).select("term").as[String].head()
-    assert(classic == "beta")  // alpha's idf = ln(3/3) = 0
     assert(integer == "alpha") // 10e6 div 3 = 3.33e6 beats beta's 3e6
   }
 

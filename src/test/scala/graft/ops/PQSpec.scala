@@ -121,35 +121,6 @@ class PQSpec extends SparkSpec {
     }
   }
 
-  test("encode kernel == expression fold: identical codes for the same " +
-    "trained codebooks") {
-    // the same (m=4, 8-code) codebooks pushed through BOTH encode engines:
-    // the per-subspace least(struct) expression chain (pqEncode at small
-    // codes) and the fused per-partition kernel (the default path at 256
-    // codes) must agree code-for-code — this is the equivalence that lets
-    // the kernel claim every oracle hash unchanged
-    val df = corpus(64)
-    val mods = PQ.models(df, m = 4, codes = 8)
-    val viaExpr = PQ.pqEncode(df, m = 4, codes = 8)
-      .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getInt)).toMap
-    val viaKernel = PQ.encodeKernel(df.repartition(col("vec_id")), mods, 4)
-      .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getInt)).toMap
-    assert(viaExpr == viaKernel)
-  }
-
-  test("assignTrainedCells kernel == expression: identical cells and " +
-    "distances for the same model") {
-    val df = corpus(64)
-    val model = KMeans.trainedModel(df)
-    def toMap(d: org.apache.spark.sql.DataFrame) = d
-      .select("vec_id", "cell", "cent_dist")
-      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2)))).toMap
-    val viaExpr = toMap(KMeans.assignTrainedCells(df, model, withDist = true))
-    val viaKernel = toMap(
-      KMeans.assignTrainedCellsKernel(df, model, "embedding", true, KMeans.Dim))
-    assert(viaExpr == viaKernel)
-  }
-
   test("refine topk with a corpus-covering shortlist equals exact brute " +
     "force; default shortlist results are exact-ranked within it") {
     val df = corpus(64)

@@ -254,8 +254,8 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("trained-cell expression assignment == batch groupBy argmin assignment") {
-    // two tight clusters in Dim-space; the per-row least(struct) path must
-    // reproduce kmeansAssignments' aggregate argmin exactly
+    // two tight clusters in Dim-space; the q76 query surface (trainedCells)
+    // must reproduce the library assignment relation exactly
     val dim = KMeans.Dim
     def v(seed: Int, bump: Int) = Seq.tabulate(dim)(i =>
       (if (i % 2 == 0) seed.toFloat else -seed.toFloat) + bump * 0.01f)

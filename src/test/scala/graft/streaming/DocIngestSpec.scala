@@ -118,31 +118,4 @@ class DocIngestSpec extends SparkSpec {
         Set(16L, 17L, 19L))
     } finally q.stop()
   }
-
-  test("express lane (acceptedOnly): same accepted rows and metrics, " +
-    "zero rejected appends") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val sink = new InMemorySink
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-express").toString
-    val q = DocIngest.start(spark,
-      mem.toDF().toDF("doc_id", "ingest_ts", "text"), ckpt, sink,
-      acceptedOnly = true)
-    try {
-      mem.addData(
-        (1L, ts("2024-01-01 10:00:00"), good),
-        (3L, ts("2024-01-01 10:01:00"), "x x"), // low quality — counted only
-        (4L, ts("2024-01-01 10:02:00"), good2))
-      q.processAllAvailable()
-      // accepted multiset identical to the default mode's
-      val acc = sink.tables("accepted_documents").map(_.getLong(0)).sorted
-      assert(acc == Seq(1L, 4L), acc)
-      // the rejection is COUNTED in the metrics row but never appended
-      assert(!sink.tables.contains("rejected_documents"))
-      val m = sink.tables("doc_quality_metrics").head
-      assert(m.getLong(1) == 3 && m.getLong(3) == 1 && m.getLong(4) == 2,
-        m.toString) // n_in, n_low_quality, n_accepted
-    } finally q.stop()
-  }
 }

@@ -59,6 +59,18 @@ object KMeans {
     */
   val TrainCap = 4096
 
+  /** A well-formed vector: non-null, `dim` long and without a null
+    * element. The trainer, every kernel and the PQ query paths keep only
+    * these; [[wellFormedSql]] is the oracle SQL's twin.
+    */
+  private[ops] def wellFormed(emb: Column, dim: Int = Dim): Column =
+    emb.isNotNull && size(emb) === dim && !exists(emb, _.isNull)
+
+  /** [[wellFormed]] over the `embedding` column, in the oracle's SQL. */
+  private[ops] def wellFormedSql(dim: Int = Dim): String =
+    s"embedding IS NOT NULL AND len(embedding) = $dim" +
+      " AND len(list_filter(embedding, x -> x IS NULL)) = 0"
+
   /** floor(x·1e6) per element — the QuantizedDot fixed-point convention. */
   private[ops] def quantize(emb: org.apache.spark.sql.Column) =
     transform(emb, x => floor(x.cast("double") * 1e6).cast("long"))
@@ -127,9 +139,8 @@ object KMeans {
 
   /** The per-partition kernels' quantizer: reads the `dim`-long float or
     * double array in column `embCol` of a row into `x` as `floor(v·1e6)`
-    * longs — the same IEEE double ops as the [[quantize]] Column. A null
-    * element reads as 0 (a null boxed Float or Double unboxes to 0), in
-    * every kernel.
+    * longs — the same IEEE double ops as the [[quantize]] Column. Every
+    * kernel passes it only [[wellFormed]] rows, so no element is null.
     */
   private[ops] def rowQuantizer(
       schema: StructType, embCol: String, dim: Int): (Row, Array[Long]) => Unit = {
@@ -183,7 +194,7 @@ object KMeans {
   }
 
   /** The training sample: one Spark job, labelled `label`, collects the
-    * first [[TrainCap]] valid (`dim`-long, non-null) vectors in seed-hash
+    * first [[TrainCap]] [[wellFormed]] vectors in seed-hash
     * order (`md5("km|" ++ vec_id)`, then vec_id). Each row is vec_id
     * followed by `cols`, evaluated over `xq`, the fixed-point vector.
     */
@@ -192,7 +203,7 @@ object KMeans {
       cols: Seq[Column]): Array[Row] =
     graft.util.JobDesc.labeled(embeddings.sparkSession, label)(
       embeddings
-        .filter(col("embedding").isNotNull && size(col("embedding")) === dim)
+        .filter(wellFormed(col("embedding"), dim))
         .select(col("vec_id"), quantize(col("embedding")).as("xq"))
         .select(col("vec_id") +: cols: _*)
         .orderBy(md5(concat(lit("km|"), col("vec_id").cast("string"))), col("vec_id"))
@@ -280,7 +291,7 @@ object KMeans {
   /** Nearest-trained-centroid assignment as a narrow per-partition pass:
     * every input column is kept and `cell` appended (+ `cent_dist`, the
     * exact fixed-point `|x−c|²` the SemDeDup / prototype-pruning curation
-    * ops rank by). Vectors that are null or not [[Dim]] long are filtered,
+    * ops rank by). Vectors that are not [[wellFormed]] are filtered,
     * mirroring training. Each row is quantized once ([[rowQuantizer]])
     * and routed by [[Centroids.nearest]] — smallest distance, ties to the
     * smallest cluster id. No aggregation, no shuffle: deterministic and
@@ -290,7 +301,7 @@ object KMeans {
   def assignTrainedCells(
       vectors: DataFrame, model: Array[(Int, Array[Long])],
       embCol: String = "embedding", withDist: Boolean = false): DataFrame = {
-    val filtered = vectors.filter(col(embCol).isNotNull && size(col(embCol)) === Dim)
+    val filtered = vectors.filter(wellFormed(col(embCol)))
     val base = filtered.schema
     val schema =
       if (withDist)
@@ -340,17 +351,25 @@ object KMeans {
     * instead of the label one, which is what lets the nprobe tune grid
     * and the probed search below run unchanged over trained cells.
     *
-    * One narrow per-partition pass: each row is quantized once and
-    * [[Centroids.nearestN]] emits its maxRank nearest cells in order. All
-    * exact integer arithmetic; no shuffle beyond the spread on vec_id.
+    * One narrow per-partition pass ([[rankedCells]]), all exact integer
+    * arithmetic; no shuffle beyond the spread on vec_id.
     */
   def trainedCellsRanked(
       embeddings: DataFrame, maxRank: Int, k: Int = K,
-      iters: Int = Iters): DataFrame = {
-    val cents = Centroids(trainedModel(embeddings, k, iters), Dim)
-    val vectors = spread(embeddings
-      .filter(col("embedding").isNotNull && size(col("embedding")) === Dim))
-    val schema = StructType(Seq(vectors.schema("vec_id"),
+      iters: Int = Iters): DataFrame =
+    rankedCells(spread(embeddings.filter(wellFormed(col("embedding")))),
+      trainedModel(embeddings, k, iters), maxRank)
+
+  /** The `maxRank` nearest cells of `model` for every (id, embedding) row
+    * of well-formed `vectors`, in order: (id, cell, cell_rank) rows, rank
+    * 1 nearest. One narrow per-partition pass: each row is quantized once
+    * and [[Centroids.nearestN]] emits its cells.
+    */
+  private[ops] def rankedCells(
+      vectors: DataFrame, model: Array[(Int, Array[Long])],
+      maxRank: Int): DataFrame = {
+    val cents = Centroids(model, Dim)
+    val schema = StructType(Seq(vectors.schema.fields(0),
       StructField("cell", IntegerType, nullable = false),
       StructField("cell_rank", IntegerType, nullable = false)))
     val quant = rowQuantizer(vectors.schema, "embedding", Dim)
@@ -558,7 +577,7 @@ object KMeans {
     s"""xq$p AS (
        |  SELECT vec_id, list_transform($embExpr,
        |    x -> CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT)) AS xq
-       |  FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = $vd),
+       |  FROM embeddings WHERE ${wellFormedSql(vd)}),
        |xs$p AS (
        |  SELECT vec_id, xq FROM xq$p
        |  ORDER BY md5('km|' || CAST(vec_id AS VARCHAR)), vec_id LIMIT $cap),

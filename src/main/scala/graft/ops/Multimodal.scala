@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Multimodal (image/audio/video) columns for a training-data pipeline:
   * media payloads are opaque `binary` columns with typed metadata, and
@@ -573,7 +574,7 @@ object Multimodal {
 
   /** Fixed amplitude-window count: 65 windows → 64 sign-of-delta bits,
     * the audio twin of the 9×8 dHash grid (so the 64-bit fingerprint
-    * reuses the same 8×8-bit banded Hamming machinery end to end).
+    * runs the same dedup path as the dHash, [[AudioSig]]).
     */
   private val AFpWindows = 65
 
@@ -614,6 +615,13 @@ object Multimodal {
     fp
   }
 
+  /** Decode → (n_samples, fingerprint) of one WAV payload; None when the
+    * container does not parse. The corpus path fails on None, the stream
+    * routes it to the dead-letter sink ([[hashBatch]]).
+    */
+  private def audioSignature(bytes: Array[Byte]): Option[(Long, Long)] =
+    MediaCodec.decodeWav(bytes).map(pcm => (pcm.length.toLong, audioFp64(pcm)))
+
   /** Decode → fingerprint, one partition-local pass (payloads never
     * shuffle) — shared by the corpus and variant entry points.
     */
@@ -621,10 +629,9 @@ object Multimodal {
     import media.sparkSession.implicits._
     media
       .map { m =>
-        val pcm = MediaCodec.decodeWav(m.content).getOrElse(
+        val (n, fp) = audioSignature(m.content).getOrElse(
           sys.error(s"undecodable WAV for media_id=${m.media_id}"))
-        val fp = audioFp64(pcm)
-        (m.media_id, pcm.length.toLong, fp >>> 32, fp & 0xFFFFFFFFL)
+        (m.media_id, n, fp >>> 32, fp & 0xFFFFFFFFL)
       }
       .toDF("media_id", "n_samples", "fp_hi", "fp_lo")
   }
@@ -719,67 +726,29 @@ object Multimodal {
 
   /** One packed BIGINT key per (i < j) band pair:
     * `(i·9 + j)·2¹⁶ + val_i·2⁸ + val_j` (band values < 2⁸) — 36 rows per
-    * clip, a single-column equi-join key.
+    * clip, a single-column equi-join key: [[AudioSig]]'s band keys.
     */
-  private[ops] def afpBandPairKeys(fp: DataFrame): DataFrame = {
-    val hi = col("fp_hi"); val lo = col("fp_lo")
-    val keys = for (i <- 0 until AudioBands; j <- i + 1 until AudioBands)
-      yield (lit((i * AudioBands + j).toLong * 65536L) +
-        afpBandVal(i, hi, lo) * 256L + afpBandVal(j, hi, lo))
-    // the fingerprint halves RIDE THE BAND ROWS (r15; VERDICT r14 #2):
-    // carrying 16 extra bytes per band row lets every consumer verify
-    // bit_count(candidate) INSIDE the collision join — the pre-r15 shape
-    // shuffled the candidate set through a distinct and two fp
-    // equi-joins before the (cheap) verify. Same candidates, same
-    // verify, same output — only the exchanges move. Measured effect
-    // (interleaved same-corpus medians, SURVEY r15): the pair-relation
-    // consumers halve where those exchanges were the bigger fraction
-    // (sf1 bench q118 −55%, q119 −45%); the 50× keep-list TOTAL is
-    // neutral within host noise because codec + closure dominate there
-    // (r15 stage profile, SURVEY r15: the collision join is ~7 s of ~120).
-    fp.select(col("media_id"), explode(array(keys: _*)).as("bpk"),
-      col("fp_hi"), col("fp_lo"))
-  }
+  private def afpBandPairKeys(hi: Column, lo: Column): Column =
+    explode(array((for (i <- 0 until AudioBands; j <- i + 1 until AudioBands)
+      yield lit((i * AudioBands + j).toLong * 65536L) +
+        afpBandVal(i, hi, lo) * 256L + afpBandVal(j, hi, lo)): _*))
 
   /** Near-duplicate audio pairs over the corpus + planted variants:
     * every (a < b) within fingerprint Hamming ≤ `maxHamming`, candidates
     * from the 2-of-9 band-pair multi-index ([[afpBandPairKeys]] — recall
     * EXACT for hamming ≤ 7: ≤ 7 damaged bands of 9 leave an intact pair;
     * the measured layout choice is documented at [[AudioBandLens]]),
-    * verified by exact bit_count. Re-encodes land at hamming 0;
-    * amplitude-halves land within a few bits (each bit flips only when
-    * floor-rounding crosses an amplitude near-tie). Scale shape: the
-    * PAIR relation is inherently corpus-quadratic in the clone-heavy
+    * verified by exact bit_count ([[nearDupPairs]]). Re-encodes land at
+    * hamming 0; amplitude-halves land within a few bits (each bit flips
+    * only when floor-rounding crosses an amplitude near-tie). Scale shape:
+    * the PAIR relation is inherently corpus-quadratic in the clone-heavy
     * regime, so the keep-list twin ([[audioDedupKeepList]]) is the scale
     * path, exactly as q113 vs q114 for images.
     */
   def audioNearDups(
-      documents: DataFrame, maxHamming: Int = MaxHamming): DataFrame = {
-    // cached; freed after the caller's action (r19 §5). NOT eagerly
-    // materialized: the self-join's two concurrent map stages look like
-    // they race the decode, but the block manager locks each cached
-    // partition while the first task computes it (the second waits, then
-    // reads) — an up-front count() only added a job (+0.3 s A/B'd, r19).
-    val fp = audioFingerprintsOf(audioVariantCorpus(documents))
-      .select(col("media_id"), col("fp_hi"), col("fp_lo")).cache()
-    val bp = afpBandPairKeys(fp)
-    // verify INSIDE the collision join (the fps ride the band rows —
-    // [[afpBandPairKeys]]): the length-class collision multiset never
-    // hits an exchange, only the surviving true pairs reach the distinct
-    graft.util.CacheScope.freeAfterUse(
-      bp.toDF("media_a", "bpk", "hi_a", "lo_a")
-        .join(bp.toDF("media_b", "bpk", "hi_b", "lo_b"),
-          Seq("bpk"))
-        .filter(col("media_a") < col("media_b"))
-        .select(col("media_a"), col("media_b"),
-          (expr("bit_count(hi_a ^ hi_b)") + expr("bit_count(lo_a ^ lo_b)"))
-            .cast("int").as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        .distinct() // hamming is a function of (a, b): multi-key collisions
-        // collapse to the same 3-tuple
-        .orderBy("media_a", "media_b"),
-      Seq(fp))
-  }
+      documents: DataFrame, maxHamming: Int = MaxHamming): DataFrame =
+    nearDupPairs(AudioSig,
+      audioFingerprintsOf(audioVariantCorpus(documents)), maxHamming)
 
   /** The deduplicated AUDIO corpus — q118's pairs closed into survivors
     * via the shared star-rounds components, with the same HUB-BUDGETED
@@ -795,56 +764,9 @@ object Multimodal {
     */
   def audioDedupKeepList(
       documents: DataFrame, maxHamming: Int = MaxHamming,
-      bucketBudget: Int = graft.ops.NearDup.BucketBudget): DataFrame = {
-    // cached; freed after the caller's action (r19 §5 — see
-    // [[audioNearDups]] on why NOT eagerly materialized)
-    val fp = audioFingerprintsOf(audioVariantCorpus(documents)).cache()
-    val pairs = audioKeepListPairs(fp, maxHamming, bucketBudget)
-    val losers = graft.ops.NearDup.components(pairs)
-      .filter(col("doc_id") =!= col("label"))
-      .select(col("doc_id").as("loser_id"))
-    graft.util.CacheScope.freeAfterUse(
-      fp.select("media_id", "n_samples")
-        .join(losers, col("media_id") === col("loser_id"), "left_anti")
-        .select("media_id", "n_samples")
-        .orderBy("media_id"),
-      Seq(fp))
-  }
-
-  /** The keep-list's verified pair relation over an already-fingerprinted
-    * corpus: hub-budgeted band-pair candidates, verified by bit_count
-    * inside the collision join. Lazy.
-    */
-  private def audioKeepListPairs(
-      fp: DataFrame, maxHamming: Int = MaxHamming,
-      bucketBudget: Int = graft.ops.NearDup.BucketBudget): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bp = afpBandPairKeys(
-      fp.select(col("media_id"), col("fp_hi"), col("fp_lo")))
-    val w = Window.partitionBy("bpk").orderBy("media_id")
-    val hubs = bp
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= bucketBudget)
-      .select(col("media_id").as("media_a"), col("bpk"),
-        col("fp_hi").as("hi_a"), col("fp_lo").as("lo_a"))
-    // hub candidates verify INSIDE the collision join (fps ride the band
-    // rows — [[afpBandPairKeys]]): the collision multiset never hits an
-    // exchange — bit_count filters it to within-radius rows in the join
-    // stage (r15 50× census, SURVEY r15: 518M collision rows scanned in ~7 s;
-    // 59.5% are within-radius — multi-key duplicates of 32.1M unique true
-    // pairs, so no band layout has anything material left to cut). NO
-    // distinct here: the only consumer is [[NearDup.components]], whose
-    // first step canonicalizes + distincts + checkpoints the edge set
-    // itself — a distinct here would pay a second full exchange of the
-    // same 32M rows (q118's pair RELATION keeps its distinct; that output
-    // is the contract there).
-    bp.toDF("media_b", "bpk", "hi_b", "lo_b")
-      .join(hubs, Seq("bpk"))
-      .filter(col("media_a") < col("media_b"))
-      .filter(expr("bit_count(hi_a ^ hi_b)") + expr("bit_count(lo_a ^ lo_b)")
-        <= maxHamming)
-      .select(col("media_a").as("doc_a"), col("media_b").as("doc_b"))
-  }
+      bucketBudget: Int = graft.ops.NearDup.BucketBudget): DataFrame =
+    dedupKeepList(AudioSig, audioFingerprintsOf(audioVariantCorpus(documents)),
+      Seq("n_samples"), maxHamming, bucketBudget)
 
   /** The shared audio-fingerprint CTE chain (adoc → avar → awin → aamp →
     * afp): the closed-form sample formula, identical window boundaries,
@@ -1166,14 +1088,21 @@ object Multimodal {
     import documents.sparkSession.implicits._
     imageCorpus(documents)
       .map { m =>
-        val d = MediaCodec.decodeImage(m.content).getOrElse(
+        val (w, h, dh) = imageSignature(m.content).getOrElse(
           sys.error(s"undecodable PNG for media_id=${m.media_id}"))
-        val dh = dHash64(d.pixels, d.width, d.height)
-        (m.media_id, d.width, d.height, dh >>> 32, dh & 0xFFFFFFFFL)
+        (m.media_id, w, h, dh >>> 32, dh & 0xFFFFFFFFL)
       }
       .toDF("media_id", "width", "height", "dhash_hi", "dhash_lo")
       .orderBy("media_id")
   }
+
+  /** Decode → (width, height, dHash) of one PNG payload; None when it does
+    * not decode. The corpus path fails on None, the stream routes it to
+    * the dead-letter sink ([[hashBatch]]).
+    */
+  private def imageSignature(bytes: Array[Byte]): Option[(Int, Int, Long)] =
+    MediaCodec.decodeImage(bytes).map(d =>
+      (d.width, d.height, dHash64(d.pixels, d.width, d.height)))
 
   /** The shared dHash CTE chain (imgs → cells → avgs → dh): closed-form
     * pixel formula, identical grid/floor/guard arithmetic to [[dHash64]].
@@ -1222,55 +1151,30 @@ object Multimodal {
        |FROM imgs i JOIN dh d USING (media_id)
        |ORDER BY media_id""".stripMargin
 
+  /** The 8×8-bit band split of a (dhash_hi, dhash_lo) pair — the
+    * multi-index join key (band_idx, band_val) of [[ImageSig]].
+    */
+  private def dhashBands(hi: Column, lo: Column): Column =
+    posexplode(array((0 until DHashBands).map { b =>
+      shiftright(if (b < 4) lo else hi, (b % 4) * 8) % 256
+    }: _*))
+
   /** Perceptual near-duplicate image pairs: every (a < b) with
     * dHash Hamming distance ≤ `maxHamming`, found by the banded
     * equi-join — each hash splits into [[DHashBands]] 8-bit band values,
     * candidates share ≥1 (band, value), and the exact `bit_count(xor)`
-    * verify keeps true pairs only. For `maxHamming` ≤ bands−1 (the
-    * default 7) the pigeonhole argument makes recall EXACT — this is the
-    * all-pairs relation computed without an all-pairs join, the same
-    * candidates-then-verify shape as the MinHash/SimHash text paths.
-    * Scale: the join is keyed on (band_idx, band_val); per-bucket
+    * verify keeps true pairs only ([[nearDupPairs]]). For `maxHamming` ≤
+    * bands−1 (the default 7) the pigeonhole argument makes recall EXACT —
+    * this is the all-pairs relation computed without an all-pairs join,
+    * the same candidates-then-verify shape as the MinHash/SimHash text
+    * paths. Scale: the join is keyed on (band_idx, band_val); per-bucket
     * population is bounded by corpus hash diversity, and a skewed bucket
     * (a constant-image corpus) is exactly the clone-heavy regime where
     * the output itself is quadratic — cap with a hub budget upstream if
     * pairs are not the goal (the keep-list ops pattern).
     */
-  /** The 8×8-bit band split of a (dhash_hi, dhash_lo) relation — the
-    * multi-index join key shared by the pair relation, the keep-list and
-    * the streaming image gate.
-    */
-  private[graft] def dhashBands(dh: DataFrame): DataFrame =
-    dh.select(col("media_id"),
-      posexplode(array((0 until DHashBands).map { b =>
-        val src = if (b < 4) col("dhash_lo") else col("dhash_hi")
-        (shiftright(src, (b % 4) * 8) % 256).as(s"b$b")
-      }: _*)).as(Seq("band_idx", "band_val")))
-
-  def imageNearDups(documents: DataFrame, maxHamming: Int = MaxHamming): DataFrame = {
-    // cached; freed after the caller's action (r19 §5 — see
-    // [[audioNearDups]] on why NOT eagerly materialized)
-    val dh = imageDHashes(documents)
-      .select(col("media_id"), col("dhash_hi"), col("dhash_lo"))
-      .cache()
-    val bands = dhashBands(dh)
-    val cand = bands.toDF("media_a", "band_idx", "band_val")
-      .join(bands.toDF("media_b", "band_idx_b", "band_val_b"),
-        col("band_idx") === col("band_idx_b") &&
-          col("band_val") === col("band_val_b") &&
-          col("media_a") < col("media_b"))
-      .select("media_a", "media_b").distinct()
-    graft.util.CacheScope.freeAfterUse(
-      cand
-        .join(dh.toDF("media_a", "hi_a", "lo_a"), Seq("media_a"))
-        .join(dh.toDF("media_b", "hi_b", "lo_b"), Seq("media_b"))
-        .select(col("media_a"), col("media_b"),
-          (expr("bit_count(hi_a ^ hi_b)") + expr("bit_count(lo_a ^ lo_b)"))
-            .cast("int").as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        .orderBy("media_a", "media_b"),
-      Seq(dh))
-  }
+  def imageNearDups(documents: DataFrame, maxHamming: Int = MaxHamming): DataFrame =
+    nearDupPairs(ImageSig, imageDHashes(documents), maxHamming)
 
   def imageNearDupsSql(maxHamming: Int = MaxHamming): String =
     s"""WITH $dHashCtesSql,
@@ -1320,39 +1224,9 @@ object Multimodal {
     */
   def imageDedupKeepList(
       documents: DataFrame, maxHamming: Int = MaxHamming,
-      bucketBudget: Int = graft.ops.NearDup.BucketBudget): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // cached; freed after the caller's action (r19 §5)
-    val dh = imageDHashes(documents).cache()
-    val bands = dhashBands(
-      dh.select(col("media_id"), col("dhash_hi"), col("dhash_lo")))
-    val w = Window.partitionBy("band_idx", "band_val").orderBy("media_id")
-    val hubs = bands
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= bucketBudget)
-      .select(col("media_id").as("media_a"), col("band_idx"), col("band_val"))
-    val cand = bands.toDF("media_b", "band_idx", "band_val")
-      .join(hubs, Seq("band_idx", "band_val"))
-      .filter(col("media_a") < col("media_b"))
-      .select("media_a", "media_b").distinct()
-    val pairs = cand
-      .join(dh.select(col("media_id").as("media_a"), col("dhash_hi").as("hi_a"),
-        col("dhash_lo").as("lo_a")), Seq("media_a"))
-      .join(dh.select(col("media_id").as("media_b"), col("dhash_hi").as("hi_b"),
-        col("dhash_lo").as("lo_b")), Seq("media_b"))
-      .filter(expr("bit_count(hi_a ^ hi_b)") + expr("bit_count(lo_a ^ lo_b)")
-        <= maxHamming)
-      .select(col("media_a").as("doc_a"), col("media_b").as("doc_b"))
-    val losers = graft.ops.NearDup.components(pairs)
-      .filter(col("doc_id") =!= col("label"))
-      .select(col("doc_id").as("loser_id"))
-    graft.util.CacheScope.freeAfterUse(
-      dh.select("media_id", "width", "height")
-        .join(losers, col("media_id") === col("loser_id"), "left_anti")
-        .select("media_id", "width", "height")
-        .orderBy("media_id"),
-      Seq(dh))
-  }
+      bucketBudget: Int = graft.ops.NearDup.BucketBudget): DataFrame =
+    dedupKeepList(ImageSig, imageDHashes(documents), Seq("width", "height"),
+      maxHamming, bucketBudget)
 
   def imageDedupKeepListSql(
       maxHamming: Int = MaxHamming,
@@ -1386,71 +1260,240 @@ object Multimodal {
        |ORDER BY i.media_id""".stripMargin
 
   // ------------------------------------------------------------------
-  // Persisted image-signature index (r12, VERDICT r11 #6): the image
-  // twin of NearDup's writeDedupIndex / incrementalDedupAgainstIndex —
-  // what a crawl persists so each media micro-batch pays batch-sized
-  // joins against a streaming scan of the index, never a corpus pass.
-  // Two relations under `path`:
-  //   sig/   (ix_id, dhash_hi, dhash_lo)      — the exact-hash index;
-  //   bands/ (ix_id, band_idx, band_val)      — the multi-index Hamming
-  //          join side, HUB-BUDGETED at write time like the text bands.
+  // One dedup path for the two 64-bit signature kinds — image dHash and
+  // audio amplitude fingerprint. Both run the same algorithm on the same
+  // kind of value: band-keyed candidates, an exact bit_count Hamming
+  // verify inside the collision join, a hub budget per band bucket, a
+  // persisted index and one fused within-batch + against-index verdict
+  // pass. A [[SigKind]] names what differs — the signature's column
+  // names, its band-key generator and its index relations — and every
+  // stage below serves both kinds. The band layouts stay per kind because
+  // their recall arguments differ: 8 single 8-bit bands for images, 36
+  // band-pair keys for audio ([[AudioBandLens]]).
+  //
+  // The persisted index (r12, the media twin of NearDup's writeDedupIndex
+  // / incrementalDedupAgainstIndex) is what a crawl keeps so each media
+  // micro-batch pays batch-sized joins against a streaming scan of the
+  // index, never a corpus pass. Per kind, two relations under `path`:
+  //   sig/   asig/    (ix_id, hi, lo)         — the exact-signature index;
+  //   bands/ abands/  (ix_id, keys…, hi, lo)  — the multi-index Hamming
+  //          join side, HUB-BUDGETED at write time like the text bands,
+  //          with the signature halves riding every row.
   // ------------------------------------------------------------------
 
-  /** Decode + dHash a batch of raw image payloads: one partition-local
-    * pass (payloads never shuffle), `decoded = false` rows for
-    * undecodable bytes (the caller's dead-letter branch) — hash halves
-    * are 0 there and never join anything.
+  /** A 64-bit signature kind: `name` is the declared media kind it serves,
+    * `hi`/`lo` name the columns of the signature's two unsigned 32-bit
+    * halves, `bandKeys` explodes a signature into its band-key rows
+    * (columns `keys`), `sigRel`/`bandRel` name its index relations, and
+    * `signature` decodes one payload to its signature (None when the
+    * payload does not decode).
     */
-  def hashImageBatch(batch: DataFrame): DataFrame = {
+  private[graft] final case class SigKind(
+      name: String, hi: String, lo: String, keys: Seq[String],
+      bandKeys: (Column, Column) => Column, sigRel: String, bandRel: String,
+      signature: Array[Byte] => Option[Long]) {
+    /** Band-row column names, with the id and the halves renamed. */
+    def bandCols(id: String, h: String, l: String): Seq[String] =
+      (id +: keys) ++ Seq(h, l)
+  }
+
+  val ImageSig: SigKind = SigKind("image", "dhash_hi", "dhash_lo",
+    Seq("band_idx", "band_val"), dhashBands, "sig", "bands",
+    imageSignature(_).map(_._3))
+
+  val AudioSig: SigKind = SigKind("audio", "fp_hi", "fp_lo", Seq("bpk"),
+    afpBandPairKeys, "asig", "abands", audioSignature(_).map(_._2))
+
+  val SigKinds: Seq[SigKind] = Seq(ImageSig, AudioSig)
+
+  /** The band rows of a (media_id, hi, lo) relation: one row per band key,
+    * the signature halves RIDING every row (r15; VERDICT r14 #2). The 16
+    * extra bytes per band row let every consumer verify bit_count INSIDE
+    * the collision join — the pre-r15 shape shuffled the candidate set
+    * through a distinct and two signature equi-joins before the (cheap)
+    * verify. Same candidates, same verify, same output — only the
+    * exchanges move. Measured on audio (interleaved same-corpus medians,
+    * SURVEY r15): the pair-relation consumers halve where those exchanges
+    * were the bigger fraction (sf1 bench q118 −55%, q119 −45%); the 50×
+    * keep-list TOTAL is neutral within host noise because codec + closure
+    * dominate there (the collision join is ~7 s of ~120).
+    */
+  private[graft] def bandRows(kind: SigKind, sigs: DataFrame): DataFrame =
+    sigs.select(col("media_id"),
+      kind.bandKeys(col(kind.hi), col(kind.lo)).as(kind.keys),
+      col(kind.hi), col(kind.lo))
+
+  /** The hub rows of a (media_id, hi, lo) relation: its band rows cut to
+    * the `bucketBudget` smallest media_ids per band bucket
+    * ([[NearDup.budgetedHubs]]) — the keep-list's representatives and the
+    * persisted band relation.
+    */
+  private[graft] def hubBands(
+      kind: SigKind, sigs: DataFrame, bucketBudget: Int): DataFrame =
+    graft.ops.NearDup.budgetedHubs(
+      bandRows(kind, sigs), kind.keys, "media_id", bucketBudget)
+
+  /** Hamming distance of two signatures given as 32-bit half columns. */
+  private def hamming(hiA: String, loA: String, hiB: String, loB: String): Column =
+    bit_count(col(hiA) bitwiseXOR col(hiB)) + bit_count(col(loA) bitwiseXOR col(loB))
+
+  /** Every (media_a < media_b, hamming) band-row collision of `as` with
+    * `bs` within Hamming ≤ `maxHamming`, verified INSIDE the collision
+    * join ([[bandRows]]): the collision multiset never reaches an
+    * exchange. A pair colliding on several keys repeats.
+    */
+  private def collide(
+      kind: SigKind, as: DataFrame, bs: DataFrame, maxHamming: Int): DataFrame =
+    as.toDF(kind.bandCols("media_a", "hi_a", "lo_a"): _*)
+      .join(bs.toDF(kind.bandCols("media_b", "hi_b", "lo_b"): _*), kind.keys)
+      .filter(col("media_a") < col("media_b"))
+      .select(col("media_a"), col("media_b"),
+        hamming("hi_a", "lo_a", "hi_b", "lo_b").cast("int").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+
+  /** Every near-duplicate pair (a < b within Hamming ≤ `maxHamming`) of a
+    * signature relation — q113 and q118. The signatures are cached and
+    * freed after the caller's action (r19 §5), NOT eagerly materialized:
+    * the self-join's two concurrent map stages look like they race the
+    * decode, but the block manager locks each cached partition while the
+    * first task computes it (the second waits, then reads) — an up-front
+    * count() only added a job (+0.3 s A/B'd, r19).
+    */
+  private def nearDupPairs(
+      kind: SigKind, sigs: DataFrame, maxHamming: Int): DataFrame = {
+    val sig = sigs.select(col("media_id"), col(kind.hi), col(kind.lo)).cache()
+    val bands = bandRows(kind, sig)
+    graft.util.CacheScope.freeAfterUse(
+      collide(kind, bands, bands, maxHamming)
+        .distinct() // hamming is a function of (a, b): multi-key collisions
+        // collapse to the same 3-tuple
+        .orderBy("media_a", "media_b"),
+      Seq(sig))
+  }
+
+  /** The deduplicated corpus of a signature relation (media_id, `extras`,
+    * hi, lo) — q114 and q119: hub candidates ([[hubBands]] against every
+    * band row, verified in-join) closed into components
+    * ([[NearDup.components]]); the lowest media_id of each component
+    * survives with its `extras`. NO distinct on the pairs: components'
+    * first step canonicalizes + distincts + checkpoints the edge set
+    * itself — a distinct here would pay a second full exchange of the same
+    * rows (r15 50× audio census, SURVEY r15: 518M collision rows scanned in
+    * ~7 s, 59.5% of them within-radius multi-key duplicates of 32.1M unique
+    * true pairs). The signatures are cached and freed after the caller's
+    * action.
+    */
+  private def dedupKeepList(
+      kind: SigKind, sigs: DataFrame, extras: Seq[String],
+      maxHamming: Int, bucketBudget: Int): DataFrame = {
+    val cached = sigs.cache()
+    val sig = cached.select(col("media_id"), col(kind.hi), col(kind.lo))
+    val pairs = collide(kind, hubBands(kind, sig, bucketBudget),
+        bandRows(kind, sig), maxHamming)
+      .select(col("media_a").as("doc_a"), col("media_b").as("doc_b"))
+    val losers = graft.ops.NearDup.components(pairs)
+      .filter(col("doc_id") =!= col("label"))
+      .select(col("doc_id").as("loser_id"))
+    val out = ("media_id" +: extras).map(col)
+    graft.util.CacheScope.freeAfterUse(
+      cached.select(out: _*)
+        .join(losers, col("media_id") === col("loser_id"), "left_anti")
+        .select(out: _*)
+        .orderBy("media_id"),
+      Seq(cached))
+  }
+
+  /** Decode → signature for a raw streaming batch (media_id, content):
+    * one partition-local pass (payloads never shuffle), `decoded = false`
+    * rows for undecodable bytes (the caller's dead-letter branch) — the
+    * signature halves are 0 there and never join anything.
+    */
+  def hashBatch(kind: SigKind, batch: DataFrame): DataFrame = {
     import batch.sparkSession.implicits._
+    val signature = kind.signature
     batch.select(col("media_id"), col("content"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          MediaCodec.decodeImage(bytes) match {
-            case Some(d) =>
-              val dh = dHash64(d.pixels, d.width, d.height)
-              (id, true, dh >>> 32, dh & 0xFFFFFFFFL)
-            case None => (id, false, 0L, 0L)
-          }
-        }
+      .map { case (id, bytes) =>
+        signature(bytes).fold((id, false, 0L, 0L))(s =>
+          (id, true, s >>> 32, s & 0xFFFFFFFFL))
       }
-      .toDF("media_id", "decoded", "dhash_hi", "dhash_lo")
+      .toDF("media_id", "decoded", kind.hi, kind.lo)
   }
 
-  private def budgetedImageHubs(
-      hashes: DataFrame, bucketBudget: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("band_idx", "band_val").orderBy("media_id")
-    dhashBands(hashes)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= bucketBudget)
-      .select(col("media_id").as("ix_id"), col("band_idx"), col("band_val"))
-  }
-
-  /** Materialize the image-signature index of a hashed corpus snapshot
-    * ((media_id, dhash_hi, dhash_lo) rows — [[imageDHashes]] or
-    * [[hashImageBatch]] output).
+  /** The media index's relations and their schemas, as
+    * [[graft.streaming.MediaIngest.initIndex]] writes them empty: each
+    * signature kind's two relations, the `payload/` byte-identity relation
+    * ([[payloadHashes]]) and the video `vframes/` keyframe-hash relation.
     */
-  def writeImageSigIndex(
-      hashes: DataFrame, path: String,
+  val IndexRelations: Seq[(String, StructType)] = Seq(
+    "sig" -> "ix_id BIGINT, dhash_hi BIGINT, dhash_lo BIGINT",
+    "bands" ->
+      "ix_id BIGINT, band_idx INT, band_val BIGINT, dhash_hi BIGINT, dhash_lo BIGINT",
+    "asig" -> "ix_id BIGINT, fp_hi BIGINT, fp_lo BIGINT",
+    "abands" -> "ix_id BIGINT, bpk BIGINT, fp_hi BIGINT, fp_lo BIGINT",
+    "payload" -> "ix_id BIGINT, payload_hash STRING",
+    "vframes" -> "ix_id BIGINT, dhash_hi BIGINT, dhash_lo BIGINT")
+    .map { case (rel, ddl) => rel -> StructType.fromDDL(ddl) }
+
+  /** Relation `rel` of the media index at `path`. One that does not exist
+    * yet reads empty with its [[IndexRelations]] schema, so an index
+    * written before the relation existed keeps working: its rows are all
+    * novel there (the payload gate decodes every payload, a clip faces an
+    * empty index).
+    */
+  def readIndex(spark: SparkSession, path: String, rel: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/$rel")
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.parquet(p.toString)
+    else spark.createDataFrame(
+      java.util.List.of[Row](), IndexRelations.toMap.apply(rel))
+  }
+
+  /** The two index writes of a kind's (media_id, hi, lo, …) rows: the
+    * exact relation and the hub-budgeted band relation, hub budget within
+    * the written rows.
+    */
+  private def sigIndexWrites(
+      kind: SigKind, sigs: DataFrame, path: String, mode: String,
+      bucketBudget: Int): Seq[() => Unit] = {
+    val base = sigs.select(col("media_id"), col(kind.hi), col(kind.lo))
+    Seq(
+      () => base.withColumnRenamed("media_id", "ix_id")
+        .write.mode(mode).parquet(s"$path/${kind.sigRel}"),
+      () => hubBands(kind, base, bucketBudget).withColumnRenamed("media_id", "ix_id")
+        .write.mode(mode).parquet(s"$path/${kind.bandRel}"))
+  }
+
+  /** Materialize a kind's index relations from a signature snapshot
+    * ((media_id, hi, lo) rows — [[imageDHashes]] or [[hashBatch]] output).
+    * Also the rebuild of an image `bands/` relation written before its
+    * rows carried the signature halves: pass the index's own `sig/` rows
+    * with `ix_id` renamed to `media_id`.
+    */
+  def writeSigIndex(
+      kind: SigKind, sigs: DataFrame, path: String,
       bucketBudget: Int = graft.ops.NearDup.BucketBudget): Unit = {
-    val base = hashes
-      .select(col("media_id"), col("dhash_hi"), col("dhash_lo")).cache()
-    base.select(col("media_id").as("ix_id"), col("dhash_hi"), col("dhash_lo"))
-      .write.mode("overwrite").parquet(s"$path/sig")
-    budgetedImageHubs(base, bucketBudget)
-      .write.mode("overwrite").parquet(s"$path/bands")
-    graft.util.CacheScope.release(base)
+    val base = sigs.select(col("media_id"), col(kind.hi), col(kind.lo)).cache()
+    try sigIndexWrites(kind, base, path, "overwrite", bucketBudget).foreach(_())
+    finally graft.util.CacheScope.release(base)
   }
 
   /** Append a batch's KEPT signatures — the crawl write-back. Same
-    * LSM/budget semantics as [[NearDup.appendDedupIndex]] (budget within
-    * each appended snapshot; recall only improves vs a fresh write), and
-    * the same read-modify-write pin: the caller derives keptHashes FROM
-    * verdicts against THIS index, so the rows are eagerly checkpointed
-    * before any write lands and freed in a finally.
+    * LSM/budget semantics as [[NearDup.appendDedupIndex]]: budget within
+    * each appended snapshot; recall only improves vs a fresh write.
+    * `keptSigs` must not read anything under `path` (every caller passes
+    * the batch's pinned signature checkpoint joined with the pinned
+    * verdict frame) — then the two appends evaluate it independently and
+    * run as CONCURRENT jobs: no checkpoint job, no ordering between the
+    * writes, and neither write can invalidate the other's input (the
+    * recache hazard needs a reader of the appended path).
     */
+  def appendSigIndex(
+      kind: SigKind, keptSigs: DataFrame, path: String,
+      bucketBudget: Int = graft.ops.NearDup.BucketBudget): Unit =
+    graft.util.ParJobs.run(
+      sigIndexWrites(kind, keptSigs, path, "append", bucketBudget): _*)
+
   /** md5 of the RAW payload bytes — the byte-identity key for the media
     * pre-gate (VERDICT r12 #1): a re-crawl that ships the exact same
     * bytes (the dominant duplicate class in any crawl) is provably an
@@ -1462,25 +1505,8 @@ object Multimodal {
     batch.select(col("media_id"), col("kind"),
       md5(col("content")).as("payload_hash"))
 
-  /** The index's `payload/` relation — (ix_id, payload_hash) of every
-    * kept image, the byte-identity side of the pre-gate. Reads empty
-    * (same schema) when the relation doesn't exist yet, so indexes
-    * written before the payload gate existed keep working: every batch
-    * payload is then "novel" and pays decode, exactly the pre-gate-less
-    * behavior.
-    */
-  def payloadIndex(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/payload")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(s"$path/payload")
-    else {
-      import spark.implicits._
-      Seq.empty[(Long, String)].toDF("ix_id", "payload_hash")
-    }
-  }
-
   /** Append a batch's KEPT payload hashes — the `payload/` twin of
-    * [[appendImageSigIndex]]'s write-back, same crash-safe at-least-once
+    * [[appendSigIndex]]'s write-back, same crash-safe at-least-once
     * discipline: re-appending on replay only duplicates rows for the
     * same ix_id (min(ix_id) verdicts unchanged), and the verdict join
     * excludes self-matches so a replayed kept image still verdicts kept.
@@ -1492,53 +1518,34 @@ object Multimodal {
     ()
   }
 
-  def appendImageSigIndex(
-      keptHashes: DataFrame, path: String,
-      bucketBudget: Int = graft.ops.NearDup.BucketBudget): Unit = {
-    // `keptHashes` must not read anything under `path` (every caller
-    // passes the batch's pinned hash checkpoint joined with the pinned
-    // verdict frame) — then the two appends can evaluate it
-    // independently and run as CONCURRENT jobs: no checkpoint job, no
-    // ordering between the sig and bands writes, and neither write can
-    // invalidate the other's input (the recache hazard needs a reader
-    // of the appended path; both plans read only pinned batch blocks).
-    val base = keptHashes
-      .select(col("media_id"), col("dhash_hi"), col("dhash_lo"))
-    graft.util.ParJobs.run(
-      () => base
-        .select(col("media_id").as("ix_id"), col("dhash_hi"), col("dhash_lo"))
-        .write.mode("append").parquet(s"$path/sig"),
-      () => budgetedImageHubs(base, bucketBudget)
-        .write.mode("append").parquet(s"$path/bands"))
-  }
-
-  /** COMBINED within-batch + against-index image verdicts in ONE pass
-    * (r13 — the media loop previously ran a within-batch pass and an
+  /** COMBINED within-batch + against-index verdicts in ONE pass (r13 —
+    * the media loop previously ran a within-batch pass and an
     * against-index pass as separate stages, ~10 extra shuffles + an
     * eager checkpoint per micro-batch of pure scheduling overhead): the
     * match side is the persisted index ∪ the batch itself, with
-    * admissibility (index: `ix_id ≠ media_id`, the replay self-match
-    * rule; batch: `ix_id < media_id`, the intra canonical rule).
-    * `dup_of` = the smallest admissible match — exact (identical hash)
-    * wins over near (banded Hamming), exactly the two-stage semantics
-    * after root resolution: batch-side targets may themselves be
-    * duplicates, and the caller's [[NearDup.resolveDupRootsCounted]]
-    * lands them on the same roots the staged form reached hop by hop
-    * (exact copies share hashes, so a near match to a copy is a near
-    * match to its canonical at the SAME Hamming distance — kept sets
-    * are identical). Index bands stay hub-budgeted from write time;
-    * batch bands are complete.
+    * admissibility (index: any row, see below; batch: `ix_id < media_id`,
+    * the intra canonical rule). `dup_of` = the smallest admissible match
+    * — exact (identical signature) wins over near (band collision within
+    * `maxHamming`, verified inside the collision join: the signature
+    * halves ride both the batch band rows and the persisted band rows),
+    * exactly the two-stage semantics after root resolution: batch-side
+    * targets may themselves be duplicates, and the caller's
+    * [[NearDup.resolveDupRootsCounted]] lands them on the same roots the
+    * staged form reached hop by hop (exact copies share signatures, so a
+    * near match to a copy is a near match to its canonical at the SAME
+    * Hamming distance — kept sets are identical). Index bands stay
+    * hub-budgeted from write time; batch bands are complete.
     *
     * Two r14 admissibility refinements:
     *  - the batch MATCH side is SIGNATURE-CANONICALIZED (one row per
-    *    distinct hash, at its min media_id). For any probe this changes
-    *    nothing — copies share their canon's signature and carry larger
-    *    ids, so the set and the min of admissible matches are preserved
-    *    — but it makes the match relation independent of which upstream
-    *    gate decoded the rows: the payloadGate=false arm's decoded
-    *    byte-copies previously contributed unbudgeted batch-side band
-    *    rows that resurrected budget-dropped index pairs, diverging the
-    *    A/B arms by ~0.16% of survivors (VERDICT r13 #4).
+    *    distinct signature, at its min media_id). For any probe this
+    *    changes nothing — copies share their canon's signature and carry
+    *    larger ids, so the set and the min of admissible matches are
+    *    preserved — but it makes the match relation independent of which
+    *    upstream gate decoded the rows: the payloadGate=false arm's
+    *    decoded byte-copies previously contributed unbudgeted batch-side
+    *    band rows that resurrected budget-dropped index pairs, diverging
+    *    the A/B arms by ~0.16% of survivors (VERDICT r13 #4).
     *  - index rows whose ix_id is ALSO in the current batch are excluded
     *    wholesale (a broadcast anti-join on batch ids), subsuming the
     *    old `ix_id ≠ media_id` replay self-match rule: if an indexed id
@@ -1549,37 +1556,36 @@ object Multimodal {
     *    rows still verdict exactly as pre-crash: their own index entries
     *    are the excluded ones.
     *
-    * `batchHashes` should be PINNED by the caller (eager
-    * `localCheckpoint`, as [[graft.streaming.MediaIngest.processBatch]]
-    * does): the verdict plan reads it several times AND the caller
-    * appends to `path` afterwards, and a plain cache would be invalidated
-    * by that append (the read-modify-write recache hazard).
+    * `batchSigs` should be PINNED by the caller (eager `localCheckpoint`,
+    * as [[graft.streaming.MediaIngest.processBatch]] does): the verdict
+    * plan reads it several times AND the caller appends to `path`
+    * afterwards, and a plain cache would be invalidated by that append
+    * (the read-modify-write recache hazard).
     */
-  def imageDedupVerdicts(
-      batchHashes: DataFrame, path: String,
+  def dedupVerdicts(
+      kind: SigKind, batchSigs: DataFrame, path: String,
       maxHamming: Int = MaxHamming,
       onPin: DataFrame => Unit = _ => ()): DataFrame = {
-    val spark = batchHashes.sparkSession
-    val batch = batchHashes
-      .select(col("media_id"), col("dhash_hi"), col("dhash_lo"))
-    val batchIds = batch.select(col("media_id").as("bid"))
-    val matchBatch = batch.groupBy("dhash_hi", "dhash_lo")
-      .agg(min("media_id").as("ix_id"))
-    val ixSig = spark.read.parquet(s"$path/sig")
-      .join(broadcast(batchIds), col("ix_id") === col("bid"), "left_anti")
-    val sideSig = ixSig.select(col("ix_id"), col("dhash_hi"),
-        col("dhash_lo"), lit(true).as("from_ix"))
-      .unionByName(matchBatch.select(col("ix_id"), col("dhash_hi"),
-        col("dhash_lo"), lit(false).as("from_ix")))
+    val spark = batchSigs.sparkSession
+    val (hi, lo) = (kind.hi, kind.lo)
+    val batch = batchSigs.select(col("media_id"), col(hi), col(lo))
+    val batchIds = broadcast(batch.select(col("media_id").as("bid")))
+    def ixRel(rel: String) = readIndex(spark, path, rel)
+      .join(batchIds, col("ix_id") === col("bid"), "left_anti")
+    val matchBatch = batch.groupBy(hi, lo).agg(min("media_id").as("ix_id"))
+    val sideSig = ixRel(kind.sigRel)
+      .select(col("ix_id"), col(hi), col(lo), lit(true).as("from_ix"))
+      .unionByName(matchBatch.select(col("ix_id"), col(hi), col(lo),
+        lit(false).as("from_ix")))
     val admissible = col("from_ix") || col("ix_id") < col("media_id")
-    // PINNED (r15): `exact` is consumed twice — as the band-probe skip's
+    // PINNED (r15): `exact` is consumed twice — as the band probe's
     // anti-join side and in the final verdict combine — and the r14 claim
     // that its exchange is "reused, not recomputed" was measured FALSE
     // (the executed plan shows the agg and its index-sig scan twice; only
     // the matchBatch exchange and the batch-id broadcasts reuse). One
     // eager checkpoint of the small (media_id, exact_of) relation beats
     // re-running the exact join per consumer.
-    val exact = batch.join(sideSig, Seq("dhash_hi", "dhash_lo"))
+    val exact = batch.join(sideSig, Seq(hi, lo))
       .filter(admissible)
       .groupBy("media_id").agg(min("ix_id").as("exact_of"))
       .localCheckpoint(true)
@@ -1588,47 +1594,26 @@ object Multimodal {
     // once the batch's routing appends land, instead of accruing one
     // orphaned block per micro-batch until RDD GC (ADVICE r16).
     onPin(exact)
-    // Band-candidate PROBE side: only rows with NO admissible exact match.
-    // The verdict combiner below discards near_of whenever exact_of exists
-    // (exact wins both status and dup_of), so probing exact-matched rows
-    // through the banded join buys nothing — and on re-crawl-dominated
-    // media streams (the production shape: most of every batch is
-    // byte- or pixel-identical to the index) those rows ARE the batch,
-    // turning the near join from the verdict stage's dominant cost into
-    // one over genuinely novel rows. The match SIDE below still carries
-    // every batch canonical, so other rows' candidates are unchanged —
-    // output is bit-identical. The `exact` subplan appears twice in the
-    // DAG and is PINNED above (r15, ADVICE r14): the r14 claim that its
-    // exchange would be reused was measured false — the executed plan
-    // carried the aggregate and its index-sig scan twice (only the
-    // matchBatch exchange and the batch-id broadcasts reuse under AQE).
-    val batchBands = dhashBands(
+    // Band PROBE side: only rows with NO admissible exact match. The
+    // combiner below discards near_of whenever exact_of exists (exact wins
+    // both status and dup_of), so probing exact-matched rows buys nothing
+    // — and on re-crawl-dominated media streams (most of every batch is
+    // byte- or signature-identical to the index) those rows ARE the
+    // batch. The match SIDE still carries every batch canonical, so other
+    // rows' candidates are unchanged. No distinct on candidates: a pair
+    // colliding on several keys re-verifies the same cheap bit_count and
+    // the min-aggregation dedupes.
+    val probe = bandRows(kind,
       batch.join(exact.select("media_id"), Seq("media_id"), "left_anti"))
-    val sideBands = spark.read.parquet(s"$path/bands")
-      .join(broadcast(batchIds), col("ix_id") === col("bid"), "left_anti")
-      .select(col("ix_id"), col("band_idx"), col("band_val"))
+    val sideCols = kind.bandCols("ix_id", hi, lo).map(col)
+    val sideBands = ixRel(kind.bandRel).select(sideCols: _*)
       .withColumn("from_ix", lit(true))
-      .unionByName(
-        dhashBands(matchBatch.withColumnRenamed("ix_id", "media_id"))
-          .select(col("media_id").as("ix_id"),
-            col("band_idx"), col("band_val"), lit(false).as("from_ix")))
-    // no distinct on candidates: duplicate (media, ix) rows from multi-
-    // band collisions (≤ 8) re-verify the same cheap bit_count and the
-    // min-aggregation dedupes — cheaper than a dedicated exchange+agg
-    // stage per micro-batch
-    val cand = batchBands
-      .join(sideBands, Seq("band_idx", "band_val"))
-      .filter(admissible)
-      .select(col("media_id"), col("ix_id"))
-    val sideHashes = ixSig
-      .select(col("ix_id"), col("dhash_hi").as("ix_hi"), col("dhash_lo").as("ix_lo"))
-      .unionByName(matchBatch.select(col("ix_id"),
-        col("dhash_hi").as("ix_hi"), col("dhash_lo").as("ix_lo")))
-    val near = cand
-      .join(batch, Seq("media_id"))
-      .join(sideHashes, Seq("ix_id"))
-      .filter(expr("bit_count(dhash_hi ^ ix_hi)") +
-        expr("bit_count(dhash_lo ^ ix_lo)") <= maxHamming)
+      .unionByName(bandRows(kind, matchBatch.withColumnRenamed("ix_id", "media_id"))
+        .withColumnRenamed("media_id", "ix_id").select(sideCols: _*)
+        .withColumn("from_ix", lit(false)))
+      .toDF(kind.bandCols("ix_id", "ix_hi", "ix_lo") :+ "from_ix": _*)
+    val near = probe.join(sideBands, kind.keys)
+      .filter(admissible && hamming(hi, lo, "ix_hi", "ix_lo") <= maxHamming)
       .groupBy("media_id").agg(min("ix_id").as("near_of"))
     batch.select("media_id")
       .join(exact, Seq("media_id"), "left")
@@ -1650,14 +1635,23 @@ object Multimodal {
   // frame IS the colliding key, no all-pairs join anywhere.
   // ------------------------------------------------------------------
 
-  /** Per-keyframe perceptual hashes from DECODED Y4M payloads: frame
-    * planes come out of the real container parse
-    * ([[MediaCodec.decodeY4m]]), each sampled plane runs the same
-    * [[dHash64]] grid as still images, and the oracle recomputes the
-    * closed-form luma formula — decode→hash verified bit-for-bit like
-    * q112. `every = 1` hashes every frame (the synthetic clips are 2–7
-    * frames; at production clip lengths pass the keyframe stride).
+  /** Decode → (frame_idx, dHash) of every `every`-th frame of one Y4M
+    * payload; None when the container does not parse. Each sampled plane
+    * runs the same [[dHash64]] grid as still images. The corpus path fails
+    * on None, the stream routes it to the dead-letter sink
+    * ([[hashVideoBatch]]).
     */
+  private def videoSignatures(bytes: Array[Byte], every: Int): Option[Seq[(Int, Long)]] =
+    MediaCodec.decodeY4m(bytes).map { v =>
+      (0 until v.frames.length by every).map { f =>
+        val plane = v.frames(f)
+        val px = new Array[Int](plane.length)
+        var i = 0
+        while (i < plane.length) { px(i) = plane(i) & 0xff; i += 1 }
+        (f, dHash64(px, v.width, v.height))
+      }
+    }
+
   /** Decode + per-keyframe dHash over an arbitrary media lake — the
     * [[videoFrameDHashes]] kernel, exposed at the [[MediaRow]] level so
     * callers (specs planting truncated/re-encoded clips, the streaming
@@ -1668,20 +1662,21 @@ object Multimodal {
     import media.sparkSession.implicits._
     media
       .flatMap { m =>
-        val v = MediaCodec.decodeY4m(m.content).getOrElse(
+        videoSignatures(m.content, every).getOrElse(
           sys.error(s"undecodable Y4M for media_id=${m.media_id}"))
-        (0 until v.frames.length by every).map { f =>
-          val plane = v.frames(f)
-          val px = new Array[Int](plane.length)
-          var i = 0
-          while (i < plane.length) { px(i) = plane(i) & 0xff; i += 1 }
-          val dh = dHash64(px, v.width, v.height)
-          (m.media_id, f, dh >>> 32, dh & 0xFFFFFFFFL)
-        }
+          .map { case (f, dh) => (m.media_id, f, dh >>> 32, dh & 0xFFFFFFFFL) }
       }
       .toDF("media_id", "frame_idx", "dhash_hi", "dhash_lo")
   }
 
+  /** Per-keyframe perceptual hashes from DECODED Y4M payloads: frame
+    * planes come out of the real container parse
+    * ([[MediaCodec.decodeY4m]]), each sampled plane runs the same
+    * [[dHash64]] grid as still images, and the oracle recomputes the
+    * closed-form luma formula — decode→hash verified bit-for-bit like
+    * q112. `every = 1` hashes every frame (the synthetic clips are 2–7
+    * frames; at production clip lengths pass the keyframe stride).
+    */
   def videoFrameDHashes(documents: DataFrame, every: Int = 1): DataFrame =
     frameDHashesOf(videoCorpus(documents), every)
       .orderBy("media_id", "frame_idx")
@@ -1825,27 +1820,15 @@ object Multimodal {
   /** Decode + per-keyframe dHash for a raw streaming batch: one
     * partition-local pass, `decoded = false` marker rows (frame_idx −1,
     * zero hashes) for unparseable payloads — the dead-letter branch,
-    * like [[hashImageBatch]].
+    * like [[hashBatch]].
     */
   def hashVideoBatch(batch: DataFrame, every: Int = 1): DataFrame = {
     import batch.sparkSession.implicits._
     batch.select(col("media_id"), col("content"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          MediaCodec.decodeY4m(bytes) match {
-            case Some(v) =>
-              (0 until v.frames.length by every).map { f =>
-                val plane = v.frames(f)
-                val px = new Array[Int](plane.length)
-                var i = 0
-                while (i < plane.length) { px(i) = plane(i) & 0xff; i += 1 }
-                val dh = dHash64(px, v.width, v.height)
-                (id, true, f, dh >>> 32, dh & 0xFFFFFFFFL)
-              }
-            case None => Seq((id, false, -1, 0L, 0L))
-          }
-        }
+      .flatMap { case (id, bytes) =>
+        videoSignatures(bytes, every).fold(Seq((id, false, -1, 0L, 0L)))(
+          _.map { case (f, dh) => (id, true, f, dh >>> 32, dh & 0xFFFFFFFFL) })
       }
       .toDF("media_id", "decoded", "frame_idx", "dhash_hi", "dhash_lo")
   }
@@ -1892,19 +1875,6 @@ object Multimodal {
       .localCheckpoint(true)
   }
 
-  /** The index's per-clip frame-hash relation — reads empty when absent
-    * (pre-video indexes keep working; every clip is then novel).
-    */
-  def videoFrameIndex(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/vframes")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(s"$path/vframes")
-    else {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Long)].toDF("ix_id", "dhash_hi", "dhash_lo")
-    }
-  }
-
   /** Append a batch's KEPT clips' distinct keyframe hashes — the video
     * write-back. Replays re-append the same rows; the verdict join
     * counts DISTINCT shared hashes per (clip, ix clip), so duplicated
@@ -1940,7 +1910,7 @@ object Multimodal {
       .select(col("media_id"), col("dhash_hi"), col("dhash_lo")).distinct()
     val counts = fh.groupBy("media_id").agg(count(lit(1)).as("n_hashes"))
     val shared = fh
-      .join(videoFrameIndex(spark, path), Seq("dhash_hi", "dhash_lo"))
+      .join(readIndex(spark, path, "vframes"), Seq("dhash_hi", "dhash_lo"))
       .filter(col("ix_id") =!= col("media_id"))
       .groupBy("media_id", "ix_id")
       .agg(countDistinct(col("dhash_hi"), col("dhash_lo")).as("n_shared"))
@@ -1955,174 +1925,5 @@ object Multimodal {
         when(col("dup_of").isNotNull, lit("near_dup"))
           .otherwise(lit("kept")).as("status"),
         col("dup_of"))
-  }
-
-  // ------------------------------------------------------------------
-  // Streaming AUDIO dedup (r16, VERDICT r15 #1): the q117–q119 batch
-  // machinery wired for the MediaIngest loop, to the image/video
-  // standard — tolerant WAV decode (dead-letter instead of sys.error),
-  // fused within-batch + against-index verdicts over the persisted
-  // fingerprint relations (`asig/`: ix_id, fp_hi, fp_lo — 16 bytes per
-  // kept clip; `abands/`: the 36 band-PAIR rows per kept clip with the
-  // fingerprint halves RIDING them, so the against-index candidate
-  // join verifies bit_count INSIDE the collision join exactly like the
-  // batch path — r15's exchange-elision shape), and the same
-  // crash-safe at-least-once append discipline as sig/bands/payload.
-  // ------------------------------------------------------------------
-
-  /** Decode + fingerprint for a raw streaming batch: one partition-local
-    * pass over the payloads (never shuffled), `decoded = false` marker
-    * rows (zero fingerprint) for unparseable containers — the
-    * dead-letter branch, like [[hashImageBatch]].
-    */
-  def hashAudioBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch.select(col("media_id"), col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          MediaCodec.decodeWav(bytes) match {
-            case Some(pcm) =>
-              val fp = audioFp64(pcm)
-              (id, true, fp >>> 32, fp & 0xFFFFFFFFL)
-            case None => (id, false, 0L, 0L)
-          }
-        }
-      }
-      .toDF("media_id", "decoded", "fp_hi", "fp_lo")
-  }
-
-  /** The index's per-clip audio fingerprint relation — reads empty when
-    * absent (pre-audio indexes keep working; every clip is then novel).
-    */
-  def audioFpIndex(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/asig")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(s"$path/asig")
-    else {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Long)].toDF("ix_id", "fp_hi", "fp_lo")
-    }
-  }
-
-  /** The index's band-pair relation (`abands/`): one row per (kept clip,
-    * band-pair key), fingerprint halves riding the rows so consumers
-    * verify in-join. Empty when absent, like [[audioFpIndex]].
-    */
-  def audioBandIndex(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/abands")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(s"$path/abands")
-    else {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Long, Long)]
-        .toDF("ix_id", "bpk", "fp_hi", "fp_lo")
-    }
-  }
-
-  /** Hub-budgeted band-pair rows of a fingerprint relation — the audio
-    * twin of [[budgetedImageHubs]], applied per band-PAIR bucket within
-    * each appended snapshot (the same LSM/budget semantics: recall only
-    * improves vs a fresh write; pair buckets sit far below the budget on
-    * real volumes — the [[AudioBandLens]] measurement).
-    */
-  private def budgetedAudioHubs(
-      fps: DataFrame, bucketBudget: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("bpk").orderBy("media_id")
-    afpBandPairKeys(fps)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= bucketBudget)
-      .select(col("media_id").as("ix_id"), col("bpk"),
-        col("fp_hi"), col("fp_lo"))
-  }
-
-  /** Append a batch's KEPT audio fingerprints — the asig/abands
-    * write-back, same contract as [[appendImageSigIndex]]: `keptFps`
-    * must read nothing under `path` (callers pass pinned batch blocks),
-    * so the two appends evaluate independently as CONCURRENT jobs and
-    * neither can invalidate the other's input.
-    */
-  def appendAudioFpIndex(
-      keptFps: DataFrame, path: String,
-      bucketBudget: Int = graft.ops.NearDup.BucketBudget): Unit = {
-    val base = keptFps.select(col("media_id"), col("fp_hi"), col("fp_lo"))
-    graft.util.ParJobs.run(
-      () => base
-        .select(col("media_id").as("ix_id"), col("fp_hi"), col("fp_lo"))
-        .write.mode("append").parquet(s"$path/asig"),
-      () => budgetedAudioHubs(base, bucketBudget)
-        .write.mode("append").parquet(s"$path/abands"))
-  }
-
-  /** COMBINED within-batch + against-index audio verdicts in ONE pass —
-    * the [[imageDedupVerdicts]] shape over the band-pair multi-index:
-    * the match side is the persisted index ∪ the batch's
-    * signature-canonicalized fingerprints, admissibility is identical
-    * (index: ix ids also in the batch excluded wholesale — the ADVICE
-    * r13 cycle rule; batch: `ix_id < media_id`), exact (identical
-    * fingerprint) wins over near (band-pair collision within
-    * `maxHamming`). The near probe verifies bit_count INSIDE the
-    * collision join — the fingerprint halves ride both the batch band
-    * rows ([[afpBandPairKeys]]) and the persisted `abands/` rows, so
-    * the collision multiset never hits an exchange (the r15 q118/q119
-    * shape, carried into the streaming path from day one).
-    *
-    * `batchFps` should be PINNED by the caller (the read-modify-write
-    * recache note on [[imageDedupVerdicts]]).
-    */
-  def audioDedupVerdicts(
-      batchFps: DataFrame, path: String,
-      maxHamming: Int = MaxHamming,
-      onPin: DataFrame => Unit = _ => ()): DataFrame = {
-    val spark = batchFps.sparkSession
-    val batch = batchFps.select(col("media_id"), col("fp_hi"), col("fp_lo"))
-    val batchIds = batch.select(col("media_id").as("bid"))
-    val matchBatch = batch.groupBy("fp_hi", "fp_lo")
-      .agg(min("media_id").as("ix_id"))
-    val ixSig = audioFpIndex(spark, path)
-      .join(broadcast(batchIds), col("ix_id") === col("bid"), "left_anti")
-    val sideSig = ixSig.select(col("ix_id"), col("fp_hi"), col("fp_lo"),
-        lit(true).as("from_ix"))
-      .unionByName(matchBatch.select(col("ix_id"), col("fp_hi"),
-        col("fp_lo"), lit(false).as("from_ix")))
-    val admissible = col("from_ix") || col("ix_id") < col("media_id")
-    // pinned for the same measured reason as the image `exact` (r15,
-    // ADVICE r14): it is consumed as the band probe's anti-join side AND
-    // in the final combine, and the exchange is not reused across those
-    val exact = batch.join(sideSig, Seq("fp_hi", "fp_lo"))
-      .filter(admissible)
-      .groupBy("media_id").agg(min("ix_id").as("exact_of"))
-      .localCheckpoint(true)
-    // caller-freed once the batch lands, as in [[imageDedupVerdicts]]
-    onPin(exact)
-    // band-pair probe side: only rows with NO admissible exact match
-    // (exact wins both status and dup_of — probing them buys nothing,
-    // and on re-crawl-dominated streams they ARE the batch)
-    val probeBands = afpBandPairKeys(
-      batch.join(exact.select("media_id"), Seq("media_id"), "left_anti"))
-    val sideBands = audioBandIndex(spark, path)
-      .join(broadcast(batchIds), col("ix_id") === col("bid"), "left_anti")
-      .select(col("ix_id"), col("bpk"), col("fp_hi").as("ix_hi"),
-        col("fp_lo").as("ix_lo"), lit(true).as("from_ix"))
-      .unionByName(afpBandPairKeys(
-          matchBatch.withColumnRenamed("ix_id", "media_id"))
-        .select(col("media_id").as("ix_id"), col("bpk"),
-          col("fp_hi").as("ix_hi"), col("fp_lo").as("ix_lo"),
-          lit(false).as("from_ix")))
-    val near = probeBands
-      .join(sideBands, Seq("bpk"))
-      .filter(admissible)
-      .filter(expr("bit_count(fp_hi ^ ix_hi)") +
-        expr("bit_count(fp_lo ^ ix_lo)") <= maxHamming)
-      .groupBy("media_id").agg(min("ix_id").as("near_of"))
-    batch.select("media_id")
-      .join(exact, Seq("media_id"), "left")
-      .join(near, Seq("media_id"), "left")
-      .select(col("media_id"),
-        when(col("exact_of").isNotNull, lit("exact_dup"))
-          .when(col("near_of").isNotNull, lit("near_dup"))
-          .otherwise(lit("kept")).as("status"),
-        coalesce(col("exact_of"), col("near_of")).as("dup_of"))
   }
 }

@@ -1778,26 +1778,32 @@ object NearDup {
         budgetedHubs(
           lshBands(signaturesFrom(index.select("doc_id", "shingles")))
             .select(col("doc_id").as("ix_id"), col("band_idx"), col("band_key")),
-          bucketBudget),
+          TextBandKeys, "ix_id", bucketBudget),
         index.select(col("doc_id").as("ix_id"), col("shingles").as("sh_i"))),
       Seq(base))
   }
 
-  /** The [[BucketBudget]] hub selection over an index band relation —
-    * `bucketBudget` smallest ix_ids per (band_idx, band_key) bucket, via
-    * WindowGroupLimit-friendly row_number ≤ k. Applied ONCE per index
-    * derivation: in-plan by [[incrementalDedup]], at WRITE time by
-    * [[writeDedupIndex]] — so the per-batch path never re-windows the
-    * index (r10: the budget used to be applied per batch, an index-sized
-    * shuffle+sort on every increment).
+  /** The bucket key of the text LSH band relations. */
+  private val TextBandKeys = Seq("band_idx", "band_key")
+
+  /** The [[BucketBudget]] hub selection over a band relation — the
+    * `bucketBudget` smallest `id`s per bucket (the `keys` columns), via
+    * WindowGroupLimit-friendly row_number ≤ k; every band column is kept.
+    * Text, image and audio bands all pass through it. Applied ONCE per
+    * index derivation: in-plan by [[incrementalDedup]] and the media
+    * keep-lists, at WRITE time by [[writeDedupIndex]] and the media index
+    * writes — so the per-batch path never re-windows the index (r10: the
+    * budget used to be applied per batch, an index-sized shuffle+sort on
+    * every increment).
     */
-  private def budgetedHubs(ixBands: DataFrame, bucketBudget: Int): DataFrame = {
-    val w = Window.partitionBy("band_idx", "band_key").orderBy("ix_id")
-    ixBands
-      .withColumn("rk", row_number().over(w))
+  private[ops] def budgetedHubs(
+      bands: DataFrame, keys: Seq[String], id: String,
+      bucketBudget: Int): DataFrame =
+    bands
+      .withColumn("rk",
+        row_number().over(Window.partitionBy(keys.map(col): _*).orderBy(id)))
       .filter(col("rk") <= bucketBudget)
-      .select(col("ix_id"), col("band_idx"), col("band_key"))
-  }
+      .drop("rk")
 
   /** The shared verdict machine: batch docs (doc_id, norm_h, shingles)
     * against the three index relations — (ix_id, norm_h), the ALREADY
@@ -1883,7 +1889,7 @@ object NearDup {
     budgetedHubs(
       lshBands(signaturesFrom(base.select("doc_id", "shingles")))
         .select(col("doc_id").as("ix_id"), col("band_idx"), col("band_key")),
-      bucketBudget)
+      TextBandKeys, "ix_id", bucketBudget)
       .write.mode("overwrite").parquet(s"$path/bands")
     base.select(col("doc_id").as("ix_id"), col("shingles").as("sh_i"))
       .write.mode("overwrite").parquet(s"$path/shingles")
@@ -1928,7 +1934,7 @@ object NearDup {
       budgetedHubs(
         lshBands(signaturesFrom(base.select("doc_id", "shingles")))
           .select(col("doc_id").as("ix_id"), col("band_idx"), col("band_key")),
-        bucketBudget)
+        TextBandKeys, "ix_id", bucketBudget)
         .write.mode("append").parquet(s"$path/bands")
       base.select(col("doc_id").as("ix_id"), col("shingles").as("sh_i"))
         .write.mode("append").parquet(s"$path/shingles")
@@ -1966,7 +1972,7 @@ object NearDup {
       lshBands(signaturesFrom(
         sh.select(col("ix_id").as("doc_id"), col("sh_i").as("shingles"))))
         .select(col("doc_id").as("ix_id"), col("band_idx"), col("band_key")),
-      bucketBudget)
+      TextBandKeys, "ix_id", bucketBudget)
       .repartition(nFiles)
       .write.mode("overwrite").parquet(s"$tmp/bands")
     graft.util.CacheScope.release(sh)

@@ -151,7 +151,7 @@ object PQ {
     val dim = KMeans.Dim
     val subDim = dim / m
     val filtered = vectors
-      .filter(col("embedding").isNotNull && size(col("embedding")) === dim)
+      .filter(KMeans.wellFormed(col("embedding")))
       .select(col("vec_id"), col("embedding"))
     val schema = StructType(filtered.schema.fields(0) +:
       (0 until m).map(s => StructField(s"code_$s", IntegerType, nullable = false)))
@@ -202,8 +202,7 @@ object PQ {
     val codebook = spark.createDataFrame(cbRows)
       .toDF("s", "code", "cq", "cc")
     val queries = embeddings
-      .filter(col("vec_id") < nQueries && col("embedding").isNotNull &&
-        size(col("embedding")) === KMeans.Dim)
+      .filter(col("vec_id") < nQueries && KMeans.wellFormed(col("embedding")))
       .select(col("vec_id").as("query_id"), col("embedding"))
     val qSubs = (0 until m).map { s =>
       queries.select(col("query_id"), lit(s).as("s"),
@@ -277,27 +276,21 @@ object PQ {
       embeddings: DataFrame, nQueries: Int = 10, topK: Int = 5,
       nprobe: Int = 2, kCoarse: Int = KMeans.K, m: Int = M,
       codes: Int = Codes, iters: Int = Iters): DataFrame = {
-    val spark = embeddings.sparkSession
     val coarse = KMeans.trainedModel(embeddings, kCoarse, iters)
     val cells = KMeans.assignments(embeddings, coarse)
       .withColumnRenamed("cluster", "cell")
-    val centDf = spark.createDataFrame(coarse.toSeq).toDF("cell", "cq")
-      .withColumn("cc", dotLong(col("cq"), col("cq")))
-    val queries = embeddings
-      .filter(col("vec_id") < nQueries && col("embedding").isNotNull &&
-        size(col("embedding")) === KMeans.Dim)
-      .select(col("vec_id").as("query_id"),
-        KMeans.quantize(col("embedding")).as("qx"))
-    val pw = Window.partitionBy(col("query_id"))
-      .orderBy(col("cdist"), col("cell"))
-    val probed = queries.crossJoin(broadcast(centDf)) // k-row broadcast
-      .withColumn("cdist",
-        dotLong(col("qx"), col("qx")) - lit(2L) * dotLong(col("qx"), col("cq"))
-          + col("cc"))
-      .withColumn("crank", row_number().over(pw))
-      .filter(col("crank") <= nprobe)
+    // each query's nprobe nearest coarse cells, ties to the smaller cell,
+    // hash-spread on query_id: the joins below stream this side against
+    // broadcast cells, so the per-query aggregate and top-k need no
+    // further exchange
+    val probed = KMeans.rankedCells(
+        embeddings
+          .filter(col("vec_id") < nQueries && KMeans.wellFormed(col("embedding")))
+          .select(col("vec_id").as("query_id"), col("embedding")),
+        coarse, nprobe)
       .select(col("query_id"), col("cell"))
-    val cands = probed.join(cells, "cell")
+      .repartition(col("query_id"))
+    val cands = probed.join(broadcast(cells), "cell")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
     val mods = models(embeddings, m, codes, iters)
@@ -346,8 +339,7 @@ object PQ {
        |    list_transform(embedding,
        |      x -> CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT)) AS qx
        |  FROM embeddings
-       |  WHERE vec_id < $nQueries AND embedding IS NOT NULL
-       |    AND len(embedding) = ${KMeans.Dim}),
+       |  WHERE vec_id < $nQueries AND ${KMeans.wellFormedSql()}),
        |probed AS (
        |  SELECT query_id, cell FROM (
        |    SELECT q.query_id, c.cluster AS cell,
@@ -428,8 +420,7 @@ object PQ {
          |          list_transform(embedding[${s * subDim + 1}:${(s + 1) * subDim}],
          |            x -> CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT)) AS qx
          |        FROM embeddings
-         |        WHERE vec_id < $window AND embedding IS NOT NULL
-         |          AND len(embedding) = ${KMeans.Dim}) q
+         |        WHERE vec_id < $window AND ${KMeans.wellFormedSql()}) q
          |  CROSS JOIN c${iters}_s$s c)""".stripMargin
     }.mkString(",\n")
     val lutJoins = (1 until m).map(s =>
@@ -793,8 +784,7 @@ object PQ {
       .filter(col("srank") <= lit(topK.toLong * r)) // long: R can be corpus-deep
       .select(col("query_id"), col("neighbor_id"))
     val queries = embeddings
-      .filter(col("vec_id") < nQueries && col("embedding").isNotNull &&
-        size(col("embedding")) === KMeans.Dim)
+      .filter(col("vec_id") < nQueries && KMeans.wellFormed(col("embedding")))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))

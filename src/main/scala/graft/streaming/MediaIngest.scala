@@ -20,7 +20,7 @@ import graft.util.CacheScope
   *      index's `payload/` relation + within-batch payload groups) —
   *      byte-identical re-crawls of ANY examined kind skip the codec
   *      and INHERIT their signature (copies from their within-batch
-  *      canonical, cross-batch matches from the sig/vframes/asig
+  *      canonical, cross-batch matches from the sig/asig/vframes
   *      index: same bytes ⇒ same signature), then take the ordinary
   *      verdict path — the gate changes WHO pays the codec, never a
   *      verdict (r14; the verdict stage's input relation is
@@ -29,22 +29,23 @@ import graft.util.CacheScope
   *      a crash, externally pruned index) falls back to the decode
   *      path instead of vanishing (r16, ADVICE r15);
   *   3. decode → signature for novel payloads only
-  *      ([[Multimodal.hashImageBatch]] dHash / [[Multimodal.hashVideoBatch]]
-  *      per-keyframe dHash / [[Multimodal.hashAudioBatch]] amplitude
-  *      fingerprint — one partition-local pass, payloads never
-  *      shuffle); undecodable bytes route to the rejected sink as
-  *      `decode_error` (the dead-letter pattern);
-  *   4. the PERSISTED-signature gates
-  *      ([[Multimodal.imageDedupVerdicts]] — fused exact-hash +
-  *      hub-budgeted banded Hamming;
-  *      [[Multimodal.incrementalVideoDedupAgainstIndex]] — directed
+  *      ([[Multimodal.hashBatch]] — image dHash or audio amplitude
+  *      fingerprint — / [[Multimodal.hashVideoBatch]] per-keyframe dHash;
+  *      one partition-local pass, payloads never shuffle); undecodable
+  *      bytes route to the rejected sink as `decode_error` (the
+  *      dead-letter pattern);
+  *   4. the PERSISTED-signature gates: images and audio are the two
+  *      64-bit [[Multimodal.SigKind]]s and run one loop over the same
+  *      code ([[Multimodal.dedupVerdicts]] — fused exact-signature +
+  *      hub-budgeted band Hamming over sig/+bands/ or asig/+abands/, the
+  *      signature halves riding the band rows, the q113/q118 semantics);
+  *      video keeps its own rule
+  *      ([[Multimodal.incrementalVideoDedupAgainstIndex]] — directed
   *      frame-hash containment over the `vframes/` relation, the q116
-  *      semantics; [[Multimodal.audioDedupVerdicts]] — fused exact-
-  *      fingerprint + band-pair Hamming over `asig/`+`abands/`, the
-  *      q118 semantics with the fps riding the band rows): kept media
-  *      append their signatures back so the NEXT batch sees them;
-  *      duplicates land in the duplicate sink with `dup_of` resolved
-  *      to the ROOT canonical.
+  *      semantics). Kept media append their signatures back so the NEXT
+  *      batch sees them; duplicates land in the duplicate sink with
+  *      `dup_of` resolved to the ROOT canonical. Every index relation is
+  *      read through [[Multimodal.readIndex]].
   *
   * Scale shape per batch: decode cost is batch-linear and partition-
   * local; the index joins stream the signature relations with
@@ -52,7 +53,7 @@ import graft.util.CacheScope
   * write-back is a batch-sized parquet append. The index stores
   * signatures, never payloads: 16 bytes + 8 band rows per kept image,
   * 16 bytes per kept keyframe, 16 bytes + 36 band-pair rows per kept
-  * audio clip.
+  * audio clip, every band row carrying the 16-byte signature.
   *
   * Crash/replay: write-back-first ordering plus the verdict joins'
   * self-match exclusion make replays idempotent for routing, exactly as
@@ -72,6 +73,10 @@ object MediaIngest {
     * passthrough.
     */
   private val ExaminedKinds = Seq("image", "video", "audio")
+
+  /** The [[DocIngest.StageTimings]] stage each kind's decode is timed in. */
+  private val DecodeStage =
+    Map("image" -> "decode_hash", "video" -> "decode_video", "audio" -> "decode_audio")
 
   /** Run `body` (plan compilation AND its eager actions) with the given
     * shuffle-partition setting, restoring the current one after.
@@ -96,24 +101,15 @@ object MediaIngest {
       nNearDup: Long,
       nAccepted: Long)
 
-  /** Create an EMPTY persisted signature index at `path` (image sig/ +
-    * bands/, the payload/ byte-identity relation, video vframes/, audio
-    * asig/ + abands/).
+  /** Create an EMPTY persisted signature index at `path`: every
+    * [[Multimodal.IndexRelations]] relation (image sig/ + bands/, audio
+    * asig/ + abands/, the payload/ byte-identity relation, video vframes/).
     */
-  def initIndex(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    Multimodal.writeImageSigIndex(
-      Seq.empty[(Long, Long, Long)].toDF("media_id", "dhash_hi", "dhash_lo"),
-      path)
-    Seq.empty[(Long, String)].toDF("ix_id", "payload_hash")
-      .write.mode("overwrite").parquet(s"$path/payload")
-    Seq.empty[(Long, Long, Long)].toDF("ix_id", "dhash_hi", "dhash_lo")
-      .write.mode("overwrite").parquet(s"$path/vframes")
-    Seq.empty[(Long, Long, Long)].toDF("ix_id", "fp_hi", "fp_lo")
-      .write.mode("overwrite").parquet(s"$path/asig")
-    Seq.empty[(Long, Long, Long, Long)].toDF("ix_id", "bpk", "fp_hi", "fp_lo")
-      .write.mode("overwrite").parquet(s"$path/abands")
-  }
+  def initIndex(spark: SparkSession, path: String): Unit =
+    Multimodal.IndexRelations.foreach { case (rel, schema) =>
+      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
+        .write.mode("overwrite").parquet(s"$path/$rel")
+    }
 
   /** Process one micro-batch (directly unit-testable): kind gate →
     * decode/hash → index verdicts → route → signature write-back.
@@ -146,11 +142,8 @@ object MediaIngest {
     // and the volume metrics cost no job of their own. (Gate off: the
     // same job pins only (media_id) — the census still rides it.)
     val census = org.apache.spark.sql.Observation()
-    val observed = batchDf.observe(census,
-      count(when(col("kind") === "image", 1)).as("n_img"),
-      count(when(col("kind") === "video", 1)).as("n_vid"),
-      count(when(col("kind") === "audio", 1)).as("n_aud"),
-      count(lit(1)).as("n_all"))
+    val observed = batchDf.observe(census, count(lit(1)).as("all"),
+      ExaminedKinds.map(k => count(when(col("kind") === k, 1)).as(k)): _*)
     val passthrough = batchDf.filter(!col("kind").isin(ExaminedKinds: _*))
     // BYTE-LEVEL PRE-GATE (VERDICT r12 #1 — re-crawl traffic is
     // dominated by byte-identical copies that got fully decoded before
@@ -169,10 +162,9 @@ object MediaIngest {
           .select(col("media_id")))
         .localCheckpoint(true))
     val censusRow = census.get
-    val nImg = censusRow("n_img").asInstanceOf[Long]
-    val nVid = censusRow("n_vid").asInstanceOf[Long]
-    val nAud = censusRow("n_aud").asInstanceOf[Long]
-    val nPass = censusRow("n_all").asInstanceOf[Long] - nImg - nVid - nAud
+    val n = ExaminedKinds.map(k => k -> censusRow(k).asInstanceOf[Long]).toMap
+    val (nImg, nVid, nAud) = (n("image"), n("video"), n("audio"))
+    val nPass = censusRow("all").asInstanceOf[Long] - nImg - nVid - nAud
     if (nImg + nVid + nAud == 0) {
       CacheScope.release(pay)
       if (nPass > 0)
@@ -211,7 +203,7 @@ object MediaIngest {
     // decoding — byte-identical bytes ⇒ identical pixels/frames/PCM ⇒
     // identical signatures — so payload-matched rows INHERIT their
     // signatures (within-batch copies from their canonical, cross-batch
-    // matches from the sig/vframes/asig index) and flow through the
+    // matches from the sig/asig/vframes index) and flow through the
     // SAME verdict relation the decode path feeds. The verdict stage
     // then sees a bit-identical input whether the gate is on or off —
     // the r13 A/B's 0.16% survivor divergence came from pre-judged
@@ -251,30 +243,21 @@ object MediaIngest {
         val canonRows = pay.join(copies.select(col("media_id").as("xid")),
           col("media_id") === col("xid"), "left_anti")
         // self-match excluded (replay: own payload rows already appended)
-        val payIx = Multimodal.payloadIndex(spark, indexPath)
+        val payIx = Multimodal.readIndex(spark, indexPath, "payload")
         val ixKnown = canonRows.join(payIx, Seq("payload_hash"))
           .filter(col("ix_id") =!= col("media_id"))
           .groupBy(col("media_id"), col("kind"))
           .agg(min("ix_id").as("canon"))
           .select(col("media_id"), col("kind"), col("canon"),
             lit("ix").as("src"))
+        val ixCounts = ExaminedKinds.map(k =>
+          count(when(col("src") === "ix" && col("kind") === k, 1)).as(k))
         copies.unionByName(ixKnown)
-          .observe(payMatchObs,
-            count(when(col("src") === "ix" && col("kind") === "image", 1))
-              .as("n_ix_img"),
-            count(when(col("src") === "ix" && col("kind") === "video", 1))
-              .as("n_ix_vid"),
-            count(when(col("src") === "ix" && col("kind") === "audio", 1))
-              .as("n_ix_aud"))
+          .observe(payMatchObs, ixCounts.head, ixCounts.tail: _*)
           .localCheckpoint(true)
       }
-    val (nIxImg, nIxVid, nIxAud) =
-      if (!payloadGate) (0L, 0L, 0L)
-      else {
-        val r = payMatchObs.get
-        (r("n_ix_img").asInstanceOf[Long], r("n_ix_vid").asInstanceOf[Long],
-          r("n_ix_aud").asInstanceOf[Long])
-      }
+    val nIx: Map[String, Long] = ExaminedKinds.map(k => k ->
+      (if (payloadGate) payMatchObs.get(k).asInstanceOf[Long] else 0L)).toMap
     val payCopies = payMatch.filter(col("src") === "copy")
       .select(col("media_id"), col("canon"), col("kind"))
     // index-known rows fetch their (known) signature from the index BY
@@ -283,43 +266,35 @@ object MediaIngest {
     // (r16): the fetch is consumed by the novel anti-join AND the
     // verdict probe relations, and pinning the fetch itself (instead of
     // the r15 shape's pinned probe-side union) is what lets a fetch
-    // MISS fall back to decode — an ix-known row whose sig/vframes/asig
+    // MISS fall back to decode — an ix-known row whose sig/asig/vframes
     // row is missing (partial concurrent append before a crash,
     // externally pruned index) simply isn't in the fetched relation, so
     // the anti-join below routes it into the decode path instead of
     // silently dropping it from every sink (ADVICE r15). Same job
     // count: one pin per present kind either way.
-    val knownImg =
-      if (nIxImg == 0)
-        Seq.empty[(Long, Boolean, Long, Long)]
-          .toDF("media_id", "decoded", "dhash_hi", "dhash_lo")
-      else payMatch.filter(col("src") === "ix" && col("kind") === "image")
+    def ixKnown(kind: String, rel: String): DataFrame =
+      payMatch.filter(col("src") === "ix" && col("kind") === kind)
         .select(col("media_id"), col("canon").as("ix_id"))
-        .join(spark.read.parquet(s"$indexPath/sig"), Seq("ix_id"))
-        .select(col("media_id"), lit(true).as("decoded"),
-          col("dhash_hi"), col("dhash_lo"))
-        .localCheckpoint(true)
+        .join(Multimodal.readIndex(spark, indexPath, rel), Seq("ix_id"))
+        .withColumn("decoded", lit(true))
+    // the signature kinds (image dHash, audio fingerprint) present in
+    // the batch share every step below; video keeps its own branch
+    // (containment is a different rule)
+    val sigKinds = Multimodal.SigKinds.filter(k => n(k.name) > 0)
+    val knownSig: Map[String, DataFrame] =
+      sigKinds.filter(k => nIx(k.name) > 0).map(k => k.name ->
+        ixKnown(k.name, k.sigRel)
+          .select(col("media_id"), col("decoded"), col(k.hi), col(k.lo))
+          .localCheckpoint(true)).toMap
     val knownVid =
-      if (nIxVid == 0)
+      if (nIx("video") == 0)
         Seq.empty[(Long, Boolean, Int, Long, Long)]
           .toDF("media_id", "decoded", "frame_idx", "dhash_hi", "dhash_lo")
-      else payMatch.filter(col("src") === "ix" && col("kind") === "video")
-        .select(col("media_id"), col("canon").as("ix_id"))
-        .join(spark.read.parquet(s"$indexPath/vframes"), Seq("ix_id"))
-        .select(col("media_id"), lit(true).as("decoded"),
+      else ixKnown("video", "vframes")
+        .select(col("media_id"), col("decoded"),
           lit(-1).as("frame_idx"), col("dhash_hi"), col("dhash_lo"))
         .distinct() // a clip's own repeated frame hashes collapse, as the
         // decode path's distinct frame relation has them collapsed
-        .localCheckpoint(true)
-    val knownAud =
-      if (nIxAud == 0)
-        Seq.empty[(Long, Boolean, Long, Long)]
-          .toDF("media_id", "decoded", "fp_hi", "fp_lo")
-      else payMatch.filter(col("src") === "ix" && col("kind") === "audio")
-        .select(col("media_id"), col("canon").as("ix_id"))
-        .join(Multimodal.audioFpIndex(spark, indexPath), Seq("ix_id"))
-        .select(col("media_id"), lit(true).as("decoded"),
-          col("fp_hi"), col("fp_lo"))
         .localCheckpoint(true)
     locally {
       val verdictPins = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -329,52 +304,39 @@ object MediaIngest {
       // the row back here, decoded like any novel payload. Pinned
       // eagerly: hashes feed the verdict joins, the routing joins and
       // the index write-backs. Absent kinds skip their whole branch —
-      // zero jobs, local empty relations instead.
+      // zero jobs.
       val novel =
-        if (payloadGate) {
-          val matched = payCopies.select("media_id")
-            .unionByName(knownImg.select("media_id"))
-            .unionByName(knownVid.select("media_id").distinct())
-            .unionByName(knownAud.select("media_id"))
-          examined.join(matched, Seq("media_id"), "left_anti")
-        } else examined
+        if (payloadGate)
+          examined.join(
+            (Seq(payCopies.select("media_id"),
+              knownVid.select("media_id").distinct()) ++
+              knownSig.values.map(_.select("media_id"))).reduce(_ unionByName _),
+            Seq("media_id"), "left_anti")
+        else examined
       // the DECODE chains run at the SESSION's partitioning, not the
       // batch-sized one: the codec pass is CPU-bound and partition-local
       // (decode parallelism = the novel relation's partition count, which
       // the anti-join sets to spark.sql.shuffle.partitions), so shrinking
       // it starves cores exactly where the heavy-payload arm spends its
       // time — measured 46 → 76 s on the heavy probe before this carve-out
-      val hashed =
-        if (nImg > 0) withShuffleParts(spark, prevShuffleParts)(
-          timings.time("decode_hash")(
-            Multimodal.hashImageBatch(novel.filter(col("kind") === "image"))
-              .localCheckpoint(true)))
-        else Seq.empty[(Long, Boolean, Long, Long)]
-          .toDF("media_id", "decoded", "dhash_hi", "dhash_lo")
+      def decode(kind: String)(hash: DataFrame => DataFrame): DataFrame =
+        withShuffleParts(spark, prevShuffleParts)(timings.time(DecodeStage(kind))(
+          hash(novel.filter(col("kind") === kind)).localCheckpoint(true)))
+      val hashed: Map[String, DataFrame] = sigKinds.map(k =>
+        k.name -> decode(k.name)(Multimodal.hashBatch(k, _))).toMap
       val vhashed =
-        if (nVid > 0) withShuffleParts(spark, prevShuffleParts)(
-          timings.time("decode_video")(
-            Multimodal.hashVideoBatch(novel.filter(col("kind") === "video"))
-              .localCheckpoint(true)))
+        if (nVid > 0) decode("video")(Multimodal.hashVideoBatch(_))
         else Seq.empty[(Long, Boolean, Int, Long, Long)]
           .toDF("media_id", "decoded", "frame_idx", "dhash_hi", "dhash_lo")
-      val ahashed =
-        if (nAud > 0) withShuffleParts(spark, prevShuffleParts)(
-          timings.time("decode_audio")(
-            Multimodal.hashAudioBatch(novel.filter(col("kind") === "audio"))
-              .localCheckpoint(true)))
-        else Seq.empty[(Long, Boolean, Long, Long)]
-          .toDF("media_id", "decoded", "fp_hi", "fp_lo")
       try {
         // undecodable payloads become verdict rows themselves (one
         // relation carries every routing decision — no separate
         // dead-letter count jobs), and payload copies of an undecodable
         // canonical inherit decode_error exactly as the pre-gate-less
         // path decoded-and-failed each of them
-        val badCanon = hashed.filter(!col("decoded")).select("media_id")
-          .unionByName(
-            vhashed.filter(!col("decoded")).select("media_id").distinct())
-          .unionByName(ahashed.filter(!col("decoded")).select("media_id"))
+        val badCanon = (vhashed.filter(!col("decoded")).select("media_id").distinct() +:
+          sigKinds.map(k => hashed(k.name).filter(!col("decoded")).select("media_id")))
+          .reduce(_ unionByName _)
         val badVerdicts = badCanon
           .unionByName(payCopies
             .join(badCanon.select(col("media_id").as("bc")),
@@ -402,39 +364,28 @@ object MediaIngest {
         // verdict joins' many scans re-evaluate only the union — no
         // extra pin needed (the r15 shape pinned the union instead,
         // which is why a fetch miss had nowhere to fall back to).
-        val imgAll = hashed.filter(col("decoded")).unionByName(knownImg)
+        val sigAll = sigKinds.map(k => k -> knownSig.get(k.name)
+          .foldLeft(hashed(k.name).filter(col("decoded")))(_ unionByName _))
         val vidAll = vhashed.filter(col("decoded")).unionByName(knownVid)
-        val audAll = ahashed.filter(col("decoded")).unionByName(knownAud)
         val copyVerdicts = payCopies
-          .join(imgAll.select(col("media_id").as("canon"))
-            .unionByName(vidAll.select(col("media_id").as("canon")).distinct())
-            .unionByName(audAll.select(col("media_id").as("canon"))),
+          .join((vidAll.select(col("media_id").as("canon")).distinct() +:
+            sigAll.map(_._2.select(col("media_id").as("canon"))))
+            .reduce(_ unionByName _),
             Seq("canon"))
           .select(col("media_id"),
             when(col("kind") === "video", lit("near_dup"))
               .otherwise(lit("exact_dup")).as("status"),
             col("canon").as("dup_of"))
-        // image: fused within-batch + against-index verdicts (ONE pass —
-        // Multimodal.imageDedupVerdicts); audio: same fused shape over
-        // the band-pair multi-index (Multimodal.audioDedupVerdicts);
-        // video: intra containment, then canonicals face the frame-hash
-        // index
-        // the fused verdict passes pin their internal `exact` relation;
+        // image and audio: fused within-batch + against-index verdicts
+        // (ONE pass each — Multimodal.dedupVerdicts); video: intra
+        // containment, then canonicals face the frame-hash index.
+        // The fused verdict passes pin their internal `exact` relation;
         // collect those pins so the finally below frees their blocks when
-        // the batch lands, like knownImg/knownVid/knownAud (ADVICE r16 —
+        // the batch lands, like the signature fetches (ADVICE r16 —
         // previously they lingered until RDD GC, one block per micro-batch)
-        val imgVerdicts =
-          if (nImg > 0)
-            Multimodal.imageDedupVerdicts(imgAll, indexPath,
-              onPin = verdictPins += _)
-          else Seq.empty[(Long, String, Option[Long])]
-            .toDF("media_id", "status", "dup_of")
-        val audVerdicts =
-          if (nAud > 0)
-            Multimodal.audioDedupVerdicts(audAll, indexPath,
-              onPin = verdictPins += _)
-          else Seq.empty[(Long, String, Option[Long])]
-            .toDF("media_id", "status", "dup_of")
+        val sigVerdicts = sigAll.map { case (k, all) =>
+          Multimodal.dedupVerdicts(k, all, indexPath, onPin = verdictPins += _)
+        }
         val (vidVerdicts, vintra) =
           if (nVid > 0) {
             val vi = timings.time("intra_batch_video")(
@@ -454,11 +405,8 @@ object MediaIngest {
         // schedules a separate count. Everything materializes before the
         // first index append lands (the recache discipline).
         val (verdicts, counts) = timings.time("verdicts") {
-          val raw = imgVerdicts
-            .unionByName(vidVerdicts)
-            .unionByName(audVerdicts)
-            .unionByName(copyVerdicts)
-            .unionByName(badVerdicts)
+          val raw = ((vidVerdicts +: sigVerdicts) :+ copyVerdicts :+ badVerdicts)
+            .reduce(_ unionByName _)
           val badIds = badVerdicts.select(col("media_id").as("bad_id"))
           val adj = raw.join(badIds, raw("dup_of") === col("bad_id"), "left")
             .select(raw("media_id"),
@@ -480,12 +428,11 @@ object MediaIngest {
             .select("media_id")
           // kept-by-kind gates the per-kind index appends; single-kind
           // batches need no extra job for it
-          val presentKinds = Seq("image" -> nImg, "video" -> nVid,
-            "audio" -> nAud).filter(_._2 > 0)
+          val presentKinds = ExaminedKinds.filter(n(_) > 0)
           val keptByKind: Map[String, Long] =
             if (nKept == 0) Map.empty
             else if (presentKinds.sizeIs == 1)
-              Map(presentKinds.head._1 -> nKept)
+              Map(presentKinds.head -> nKept)
             else keptIds
               .join(examined.select("media_id", "kind"), "media_id")
               .groupBy("kind").count()
@@ -498,15 +445,12 @@ object MediaIngest {
             // any routing append starts.
             timings.time("index_append") {
               val jobs = Seq.newBuilder[() => Unit]
-              if (keptByKind.getOrElse("image", 0L) > 0)
-                jobs += (() => Multimodal.appendImageSigIndex(
-                  hashed.join(keptIds, "media_id"), indexPath))
+              for (k <- sigKinds if keptByKind.getOrElse(k.name, 0L) > 0)
+                jobs += (() => Multimodal.appendSigIndex(k,
+                  hashed(k.name).join(keptIds, "media_id"), indexPath))
               if (keptByKind.getOrElse("video", 0L) > 0)
                 jobs += (() => Multimodal.appendVideoFrameIndex(
                   vhashed.join(keptIds, "media_id"), indexPath))
-              if (keptByKind.getOrElse("audio", 0L) > 0)
-                jobs += (() => Multimodal.appendAudioFpIndex(
-                  ahashed.join(keptIds, "media_id"), indexPath))
               if (payloadGate)
                 jobs += (() => Multimodal.appendPayloadIndex(
                   pay.join(keptIds, "media_id"), indexPath))
@@ -541,8 +485,8 @@ object MediaIngest {
         // the per-batch pins are superseded once the routing appends
         // land — free their blocks now, not at the next GC (the empty
         // local relations of absent kinds hold nothing to free)
-        (Seq(hashed, vhashed, ahashed, knownImg, knownVid, knownAud,
-          payMatch, pay) ++ verdictPins).foreach(CacheScope.release)
+        (Seq(vhashed, knownVid, payMatch, pay) ++ hashed.values ++
+          knownSig.values ++ verdictPins).foreach(CacheScope.release)
       }
     }
     } finally {
@@ -551,9 +495,10 @@ object MediaIngest {
   }
 
   /** Wire the full streaming query: foreachBatch(kind gate → hash →
-    * verdicts → route → write-back), checkpointed. The index at
-    * `indexPath` must exist ([[initIndex]] or a prior
-    * [[Multimodal.writeImageSigIndex]] snapshot).
+    * verdicts → route → write-back), checkpointed. [[initIndex]] or a
+    * prior [[Multimodal.writeSigIndex]] snapshot creates the index at
+    * `indexPath`; a relation still missing there reads empty
+    * ([[Multimodal.readIndex]]).
     */
   def start(
       spark: SparkSession,

@@ -274,15 +274,15 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
-  test("IVF-PQ (q95): cell routing and LUT scoring are hash joins; the " +
-    "only nested loop is the k-row centroid broadcast") {
+  test("IVF-PQ (q95): cell routing and LUT scoring are hash joins, no nested loop") {
     val p = plan("q95_ivf_pq_topk")
     assert(p.contains("BroadcastHashJoin"), p)
     assert(p.contains("WindowGroupLimit"), p)
     assert(!p.contains("CartesianProduct"), p)
-    // exactly one BNLJ: queries × k coarse centroids (bounded by
-    // construction) — a second one would mean a corpus-sized nested loop
-    assert(countOf(p, "BroadcastNestedLoopJoin") == 1, p)
+    // the queries' probe cells come from the per-partition argmin kernel
+    // (KMeans.rankedCells), so no nested loop is left: one would mean a
+    // corpus-sized pair relation
+    assert(countOf(p, "BroadcastNestedLoopJoin") == 0, p)
   }
 
   test("incremental dedup (q99) is all equi-joins on short keys") {
@@ -361,17 +361,14 @@ class PlanShapeSpec extends SparkSpec {
 
   test("image hub candidates rank-limit map-side (WindowGroupLimit), the " +
     "q24-family contract for the banded Hamming buckets") {
-    import spark.implicits._
-    val dh = (1L to 40L).map(i => (i, i * 37 % 251, i * 91 % 251))
-      .toDF("media_id", "dhash_hi", "dhash_lo")
-    // the same hub selection imageDedupKeepList applies before components
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("band_idx", "band_val").orderBy("media_id")
-    val hubs = graft.ops.Multimodal.dhashBands(dh)
-      .withColumn("rk", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(org.apache.spark.sql.functions.col("rk") <= 2)
-    assert(hubs.queryExecution.executedPlan.toString.contains("WindowGroupLimit"),
-      hubs.queryExecution.executedPlan.toString)
+    // both signature kinds: image and audio share the hub selection the
+    // keep-lists and the index writes apply
+    for (kind <- graft.ops.Multimodal.SigKinds) {
+      val sigs = sigRows(kind, 40)
+      val hubs = graft.ops.Multimodal.hubBands(kind, sigs, 2)
+      assert(hubs.queryExecution.executedPlan.toString.contains("WindowGroupLimit"),
+        s"${kind.name}: ${hubs.queryExecution.executedPlan}")
+    }
   }
 
   test("audio near-dup pairs (q118) build candidates through equi-joins " +
@@ -388,19 +385,28 @@ class PlanShapeSpec extends SparkSpec {
 
   test("media ingest index verdicts (image incremental) carry NO window " +
     "and no index-sized sort in the per-batch plan") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-imixplan").toString
+    // both signature kinds: image and audio share the verdict pass
     import spark.implicits._
-    val hashes = (1L to 20L).map(i => (i, i * 37 % 251, i * 91 % 251))
-      .toDF("media_id", "dhash_hi", "dhash_lo")
-    graft.ops.Multimodal.writeImageSigIndex(hashes, tmp)
-    val batch = Seq((101L, 37L, 91L)).toDF("media_id", "dhash_hi", "dhash_lo")
-    // the fused within-batch + against-index pass the media loop runs
-    val pins = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
-    try {
-      val p = graft.ops.Multimodal.imageDedupVerdicts(batch, tmp, onPin = pins += _)
-        .queryExecution.executedPlan.toString
-      assert(!p.contains("Window"), p)
-      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
-    } finally pins.foreach(graft.util.CacheScope.release)
+    for (kind <- graft.ops.Multimodal.SigKinds) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-imixplan").toString
+      graft.ops.Multimodal.writeSigIndex(kind, sigRows(kind, 20), tmp)
+      val batch = Seq((101L, 37L, 91L)).toDF("media_id", kind.hi, kind.lo)
+      // the fused within-batch + against-index pass the media loop runs
+      val pins = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
+      try {
+        val p = graft.ops.Multimodal.dedupVerdicts(kind, batch, tmp, onPin = pins += _)
+          .queryExecution.executedPlan.toString
+        assert(!p.contains("Window"), s"${kind.name}: $p")
+        assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+          s"${kind.name}: $p")
+      } finally pins.foreach(graft.util.CacheScope.release)
+    }
+  }
+
+  /** `n` synthetic (media_id, hi, lo) signature rows of `kind`. */
+  private def sigRows(kind: graft.ops.Multimodal.SigKind, n: Long) = {
+    import spark.implicits._
+    (1L to n).map(i => (i, i * 37 % 251, i * 91 % 251))
+      .toDF("media_id", kind.hi, kind.lo)
   }
 }

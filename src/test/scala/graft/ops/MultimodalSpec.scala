@@ -296,7 +296,7 @@ class MultimodalSpec extends SparkSpec {
     def fpDf(id: Long, fp: Long) =
       Seq((id, fp >>> 32, fp & 0xffffffffL)).toDF("media_id", "fp_hi", "fp_lo")
     def keys(id: Long, fp: Long): Set[Long] =
-      Multimodal.afpBandPairKeys(fpDf(id, fp)).collect()
+      Multimodal.bandRows(Multimodal.AudioSig, fpDf(id, fp)).collect()
         .map(_.getAs[Long]("bpk")).toSet
     val rnd = new scala.util.Random(42)
     for (trial <- 0 until 8) {

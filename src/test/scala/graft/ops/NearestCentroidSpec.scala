@@ -98,25 +98,21 @@ class NearestCentroidSpec extends SparkSpec {
     }
   }
 
-  test("a null element of a Dim-long vector reads as 0 in every kernel") {
-    val df = corpus(64)
-    val model = KMeans.trainedModel(df, 3)
+  test("a vector with a null element is dropped by the trainer and kernels") {
     val v = Seq.tabulate(dim)(d => 0.01f * (d + 1))
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
     val probe = spark.createDataFrame(
-      java.util.List.of(Row(100L, v.updated(5, null))),
-      StructType(Seq(StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType, containsNull = true)))))
-    val asZero = v.updated(5, 0f).map(q)
-    val (cell, dist) = refNearest(asZero, model)
-    val got = KMeans.assignTrainedCells(probe, model, withDist = true)
-      .select("cell", "cent_dist").as[(Int, Long)].collect()
-    assert(got.toSeq == Seq((cell, dist)))
-    val mods = PQ.models(df, 4, 8)
-    val codes = PQ.streamingPqEncode(probe, df, 4, 8).collect()
-      .map(r => (1 to 4).map(r.getInt))
-    val subDim = dim / 4
-    assert(codes.toSeq == Seq(mods.sortBy(_._1).map { case (s, cb) =>
-      refNearest(asZero.slice(s * subDim, (s + 1) * subDim), cb)._1
-    }))
+      java.util.List.of(Row(100L, v.updated(5, null))), schema)
+    // in the training sample it would otherwise fail the driver trainer
+    val withNull = corpus(64).union(probe)
+    val model = KMeans.trainedModel(withNull, 3)
+    assert(model.map(_._2.toSeq).toSeq ==
+      KMeans.trainedModel(corpus(64), 3).map(_._2.toSeq).toSeq)
+    assert(KMeans.assignTrainedCells(probe, model, withDist = true).count() == 0)
+    assert(KMeans.trainedCellsRanked(withNull, 2, 3)
+      .filter($"vec_id" === 100L).count() == 0)
+    assert(PQ.streamingPqEncode(probe, corpus(64), 4, 8).count() == 0)
   }
+
 }

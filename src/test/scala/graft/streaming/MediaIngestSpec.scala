@@ -30,7 +30,8 @@ class MediaIngestSpec extends SparkSpec {
     rows.toDF("media_id", "kind", "content")
 
   private def hashOf(f: (Int, Int) => Int): (Long, Long) = {
-    val r = Multimodal.hashImageBatch(mediaDf((0L, "image", png(f)))).head()
+    val r = Multimodal.hashBatch(Multimodal.ImageSig,
+      mediaDf((0L, "image", png(f)))).head()
     (r.getLong(2), r.getLong(3))
   }
 

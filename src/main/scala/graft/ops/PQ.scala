@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.functions.LongArrayDot.dotLong
 
 /** Product quantization for embedding compression + search (Jégou,
@@ -24,11 +24,13 @@ import graft.functions.LongArrayDot.dotLong
   *
   * Why this is THE 100-TB embedding answer: the stored index is M small
   * ints per vector (8 one-byte codes against 256 bytes of floats, a 32×
-  * compression), codebooks are M·Codes·SubDim longs (broadcast
-  * trivially), and scoring shuffles only (query × M × corpus) lookup
-  * rows for a bounded query batch — linear in the corpus, constant per
-  * vector. Everything is fixed-point (floor(x·1e6) longs), so codebooks,
-  * code assignments and ADC distances are EXACT integers, hash-identical
+  * compression), codebooks are M·Codes·SubDim longs, and a bounded query
+  * batch's lookup tables (queries × M × Codes longs) are built on the
+  * driver and ship to the corpus in the [[Similarity.queryTopK]] kernel:
+  * each partition encodes its rows, scores them by M lookups per query
+  * and keeps a bounded top-k, so no (query, vector) row is ever shuffled.
+  * Everything is fixed-point (floor(x·1e6) longs), so codebooks, code
+  * assignments and ADC distances are EXACT integers, hash-identical
   * cross-engine.
   *
   * DEFAULT SIZING (r11): M=8 subspaces × 256 codes = 8 bits/subspace —
@@ -83,7 +85,8 @@ object PQ {
     val spark = embeddings.sparkSession
     val subDim = KMeans.Dim / m
     val mods = models(embeddings, m, codes, iters)
-    val sizes: Map[(Int, Int), Long] = encLong(embeddings, mods, m)
+    val sizes: Map[(Int, Int), Long] = encoded(embeddings, new Codebooks(mods, m))
+      .select(posexplode(array((0 until m).map(s => col(s"code_$s")): _*)).as(Seq("s", "code")))
       .groupBy("s", "code").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     val rows = for {
@@ -126,54 +129,65 @@ object PQ {
   def pqEncode(
       embeddings: DataFrame, m: Int = M, codes: Int = Codes,
       iters: Int = Iters): DataFrame =
-    encoded(embeddings, models(embeddings, m, codes, iters), m)
+    encoded(embeddings, new Codebooks(models(embeddings, m, codes, iters), m))
 
   /** [[pqEncode]] under already-trained codebooks. */
-  private def encoded(
-      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
-      m: Int): DataFrame =
+  private def encoded(embeddings: DataFrame, books: Codebooks): DataFrame =
     encode(
       embeddings.repartition(col("vec_id")), // spread the n·M·Codes distance pass
-      mods, m)
+      books)
 
-  /** The encoder: filter well-formed vectors, then one compiled pass per
-    * row quantizes the vector once ([[KMeans.rowQuantizer]]) and runs all
-    * M subspace argmins ([[KMeans.Centroids.nearest]] over each subspace
-    * codebook — smallest distance, ties to the smaller code), projecting
-    * (vec_id, code_0 … code_{m-1}). Narrow and deterministic, so it is
-    * legal in an append-mode stream.
+  /** The M subspace codebooks laid out for the per-row kernels, one
+    * [[KMeans.Centroids]] each. Codes are centroid POSITIONS inside the
+    * kernels and cluster ids in every relation (`subs(s).ids`).
     */
-  private def encode(
-      vectors: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
-      m: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.{Encoders, Row}
-    val dim = KMeans.Dim
-    val subDim = dim / m
+  private final class Codebooks(
+      mods: Seq[(Int, Array[(Int, Array[Long])])], val m: Int) extends Serializable {
+    private val subDim = KMeans.Dim / m
+    val subs: Array[KMeans.Centroids] = mods.sortBy(_._1)
+      .map { case (_, model) => KMeans.Centroids(model, subDim) }.toArray
+    private val width = subs.map(_.k).foldLeft(0)(math.max)
+
+    /** Per subspace, the position of the code nearest to the fixed-point
+      * vector x (smallest distance, ties to the smaller code).
+      */
+    def encode(x: Array[Long]): Array[Int] =
+      Array.tabulate(m)(s => subs(s).nearest(x, s * subDim, subs(s).norm(x, s * subDim)))
+
+    /** The ADC lookup table of the fixed-point query x: the exact
+      * ||x_s − c||² = x·x − 2x·c + c·c per (subspace, code position).
+      */
+    def lut(x: Array[Long]): Array[Long] = {
+      val t = new Array[Long](m * width)
+      for (s <- 0 until m; c <- 0 until subs(s).k)
+        t(s * width + c) = subs(s).dist(x, s * subDim, subs(s).norm(x, s * subDim), c)
+      t
+    }
+
+    /** The ADC distance of encoded `codes` under table t: M lookups. */
+    def dist(t: Array[Long], codes: Array[Int]): Long = {
+      var d = 0L
+      var s = 0
+      while (s < m) { d += t(s * width + codes(s)); s += 1 }
+      d
+    }
+  }
+
+  /** The encoder: filter well-formed vectors, then one pass per row
+    * quantizes the vector once and runs all M subspace argmins
+    * ([[Codebooks.encode]]), projecting (vec_id, code_0 … code_{m-1}).
+    * Narrow and deterministic, so it is legal in an append-mode stream.
+    */
+  private def encode(vectors: DataFrame, books: Codebooks): DataFrame = {
     val filtered = vectors
       .filter(KMeans.wellFormed(col("embedding")))
       .select(col("vec_id"), col("embedding"))
     val schema = StructType(filtered.schema.fields(0) +:
-      (0 until m).map(s => StructField(s"code_$s", IntegerType, nullable = false)))
-    val quant = KMeans.rowQuantizer(filtered.schema, "embedding", dim)
-    val subModels = mods.sortBy(_._1)
-      .map { case (_, model) => KMeans.Centroids(model, subDim) }.toArray
-    filtered.mapPartitions { it =>
-      val x = new Array[Long](dim)
-      it.map { row =>
-        quant(row, x)
-        val out = new Array[Any](1 + m)
-        out(0) = row.get(0)
-        var s = 0
-        while (s < m) {
-          val cents = subModels(s)
-          val off = s * subDim
-          out(1 + s) = cents.ids(cents.nearest(x, off, cents.norm(x, off)))
-          s += 1
-        }
-        Row.fromSeq(out.toIndexedSeq)
-      }
-    }(Encoders.row(schema))
+      (0 until books.m).map(s => StructField(s"code_$s", IntegerType, nullable = false)))
+    filtered.mapPartitions(_.map { row =>
+      val codes = books.encode(Similarity.quantizedAt(row, 1))
+      Row.fromSeq(row.get(0) +: codes.indices.map(s => books.subs(s).ids(codes(s))))
+    })(Encoders.row(schema))
   }
 
   /** PQ-encode a STREAM with codebooks trained on a static corpus: the
@@ -185,74 +199,72 @@ object PQ {
   def streamingPqEncode(
       probes: DataFrame, corpusDf: DataFrame, m: Int = M,
       codes: Int = Codes, iters: Int = Iters): DataFrame =
-    encode(probes, models(corpusDf, m, codes, iters), m)
+    encode(probes, new Codebooks(models(corpusDf, m, codes, iters), m))
 
-  /** Query LUT relation: exact fixed-point ||q_s − c||² per (query,
-    * subspace, code) — nQueries·M·Codes rows, always broadcast.
+  /** The ADC kernels' query batch: the well-formed queries (vec_id <
+    * nQueries), collected once, with their fixed-point vectors and
+    * [[Codebooks.lut]] lookup tables.
     */
-  private def lutDf(
-      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
-      nQueries: Int, m: Int): DataFrame = {
-    val spark = embeddings.sparkSession
-    val subDim = KMeans.Dim / m
-    val cbRows = for {
-      (s, model) <- mods
-      (code, cq) <- model
-    } yield (s, code, cq.toSeq, cq.map(v => v * v).sum)
-    val codebook = spark.createDataFrame(cbRows)
-      .toDF("s", "code", "cq", "cc")
-    val queries = embeddings
-      .filter(col("vec_id") < nQueries && KMeans.wellFormed(col("embedding")))
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val qSubs = (0 until m).map { s =>
-      queries.select(col("query_id"), lit(s).as("s"),
-        KMeans.quantize(
-          slice(col("embedding"), s * subDim + 1, subDim)).as("qx"))
-    }.reduce(_ union _)
-    qSubs.join(codebook, "s")
-      .select(col("query_id"), col("s"), col("code"),
-        (dotLong(col("qx"), col("qx")) - lit(2L) * dotLong(col("qx"), col("cq"))
-          + col("cc")).as("ld"))
+  private final case class Queries(
+      ids: Array[Long], x: Array[Array[Long]], luts: Array[Array[Long]])
+
+  private def queries(embeddings: DataFrame, books: Codebooks, nQueries: Int): Queries = {
+    val rows = Similarity.queryRows(
+      embeddings.filter(col("vec_id") < nQueries && KMeans.wellFormed(col("embedding"))),
+      "pq: query batch")
+    val x = rows.map(Similarity.quantizedAt(_, 1))
+    Queries(rows.map(_.getLong(0)), x, x.map(books.lut))
   }
 
-  /** Encoded corpus in long format: (vec_id, s, code). */
-  private def encLong(
-      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
-      m: Int): DataFrame =
-    encoded(embeddings, mods, m)
-      .select(col("vec_id"), posexplode(
-        array((0 until m).map(s => col(s"code_$s")): _*)).as(Seq("s", "code")))
+  /** The well-formed corpus as (vec_id BIGINT, embedding), hash-spread on
+    * vec_id: the ADC passes have no exchange before them, so a corpus
+    * arriving as one parquet split would encode and score on one core.
+    */
+  private def vectors(embeddings: DataFrame): DataFrame =
+    embeddings.repartition(col("vec_id"))
+      .filter(KMeans.wellFormed(col("embedding")))
+      .select(col("vec_id").cast("long"), col("embedding"))
+
+  /** The ADC kernels' [[Similarity.queryTopK]] pass over [[vectors]],
+    * merged to k rows per query: each row is quantized and encoded once,
+    * then `score(x, codes)` offers it to the [[Similarity.Best]] of every
+    * query other than itself, as (query index, best, vec_id).
+    */
+  private def adcKernel(embeddings: DataFrame, books: Codebooks, qs: Queries, k: Int)(
+      score: (Array[Long], Array[Int]) => (Int, Similarity.Best, Long) => Unit): DataFrame =
+    Similarity.mergedTopK(Similarity.queryTopK(vectors(embeddings), qs.ids, 1, k) { (r, best) =>
+      val x = Similarity.quantizedAt(r, 1)
+      val offer = score(x, books.encode(x))
+      val id = r.getLong(0)
+      for (q <- qs.ids.indices if qs.ids(q) != id) offer(q, best(q), id)
+    }, k)
 
   /** ADC top-k search: queries (vec_id < nQueries) score the encoded
     * corpus through their (subspace, code) → squared-distance lookup
-    * tables. The LUT is nQueries·M·Codes rows — broadcast; the only
-    * shuffle is the per-(query, vector) sum of M lookup rows, linear in
-    * the corpus for a bounded query batch. All-integer arithmetic end to
-    * end, so ranks (ties to the smaller neighbor_id) are engine-exact.
+    * tables in the [[Similarity.queryTopK]] kernel, which keeps each
+    * query's topK smallest distances (ties to the smaller neighbor_id) per
+    * partition and merges them. All-integer arithmetic end to end, so
+    * ranks are engine-exact.
     */
   def pqAdcTopK(
       embeddings: DataFrame, nQueries: Int = 10, topK: Int = 5,
       m: Int = M, codes: Int = Codes, iters: Int = Iters): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-    adcDists(embeddings, models(embeddings, m, codes, iters), nQueries, m)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .orderBy("query_id", "rank")
+    val books = new Codebooks(models(embeddings, m, codes, iters), m)
+    val qs = queries(embeddings, books, nQueries)
+    adcRows(embeddings)(adcKernel(embeddings, books, qs, topK) { (_, c) =>
+      (q, best, id) => best.offer(isNull = false, -books.dist(qs.luts(q), c), id)
+    })
   }
 
-  /** The shared ADC scoring stage: (query_id, neighbor_id, adc_dist) for
-    * every corpus vector against every query's lookup tables.
+  /** Merged ADC-keyed kernel rows as (query_id, neighbor_id, adc_dist,
+    * rank), ids in the corpus's vec_id type.
     */
-  private def adcDists(
-      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
-      nQueries: Int, m: Int): DataFrame = {
-    val lut = lutDf(embeddings, mods, nQueries, m)
-    val enc = encLong(embeddings, mods, m)
-    enc.join(broadcast(lut), Seq("s", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum("ld").as("adc_dist"))
+  private def adcRows(embeddings: DataFrame)(merged: DataFrame): DataFrame = {
+    val idType = embeddings.schema("vec_id").dataType
+    merged.select(col("query_id").cast(idType).as("query_id"),
+        col("neighbor_id").cast(idType).as("neighbor_id"),
+        (-col("key")).as("adc_dist"), col("rank"))
+      .orderBy("query_id", "rank")
   }
 
   /** IVF-PQ composed search (the FAISS-style billion-scale index layout:
@@ -264,47 +276,29 @@ object PQ {
     * Non-residual variant (codes quantize the raw vectors, not the
     * coarse residuals), stated plainly: residual encoding would need a
     * second codebook family per coarse cell and buys accuracy, not
-    * scale shape — the shuffle/broadcast structure is identical.
+    * scale shape.
     *
     * Scale shape: candidate volume drops from n to Σ probed-cell sizes
     * (nprobe/k of the corpus on balanced cells); everything else is
-    * q92's bounded-LUT machinery. This is the operator a 100-TB corpus
-    * actually serves ANN from: cells bound the scan, codes bound the
-    * bytes.
+    * q92's kernel, which finds each row's home cell in the same pass.
+    * This is the operator a 100-TB corpus actually serves ANN from: cells
+    * bound the scan, codes bound the bytes.
     */
   def ivfPqTopK(
       embeddings: DataFrame, nQueries: Int = 10, topK: Int = 5,
       nprobe: Int = 2, kCoarse: Int = KMeans.K, m: Int = M,
       codes: Int = Codes, iters: Int = Iters): DataFrame = {
-    val coarse = KMeans.trainedModel(embeddings, kCoarse, iters)
-    val cells = KMeans.assignments(embeddings, coarse)
-      .withColumnRenamed("cluster", "cell")
-    // each query's nprobe nearest coarse cells, ties to the smaller cell,
-    // hash-spread on query_id: the joins below stream this side against
-    // broadcast cells, so the per-query aggregate and top-k need no
-    // further exchange
-    val probed = KMeans.rankedCells(
-        embeddings
-          .filter(col("vec_id") < nQueries && KMeans.wellFormed(col("embedding")))
-          .select(col("vec_id").as("query_id"), col("embedding")),
-        coarse, nprobe)
-      .select(col("query_id"), col("cell"))
-      .repartition(col("query_id"))
-    val cands = probed.join(broadcast(cells), "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"))
-    val mods = models(embeddings, m, codes, iters)
-    val lut = lutDf(embeddings, mods, nQueries, m)
-    val enc = encLong(embeddings, mods, m)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-    cands.join(enc, "vec_id")
-      .join(broadcast(lut), Seq("query_id", "s", "code"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum("ld").as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .orderBy("query_id", "rank")
+    val coarse = KMeans.Centroids(KMeans.trainedModel(embeddings, kCoarse, iters), KMeans.Dim)
+    val books = new Codebooks(models(embeddings, m, codes, iters), m)
+    val qs = queries(embeddings, books, nQueries)
+    // each query's nprobe nearest coarse cells, ties to the smaller cell
+    // (KMeans.rankedCells' order)
+    val probes = qs.x.map(x => coarse.nearestN(x, 0, coarse.norm(x, 0), nprobe).toSet)
+    adcRows(embeddings)(adcKernel(embeddings, books, qs, topK) { (x, c) =>
+      val cell = coarse.nearest(x, 0, coarse.norm(x, 0))
+      (q, best, id) =>
+        if (probes(q)(cell)) best.offer(isNull = false, -books.dist(qs.luts(q), c), id)
+    })
   }
 
   def ivfPqTopKSql(
@@ -489,8 +483,9 @@ object PQ {
     * BOUNDED at R·k dot products regardless of corpus size, while recall
     * recovers most of what the lossy codes lose.
     *
-    * The shortlist cutoff is RANK-WITH-TIES on adc_dist (not row_number):
-    * near-identical documents quantize to identical codes and therefore
+    * The shortlist cutoff is RANK-WITH-TIES on adc_dist — `rank() ≤ R·k`,
+    * every row whose distance is at most the query's R·k-th smallest
+    * ([[shortlistBounds]]), not a row_number cut: near-identical documents quantize to identical codes and therefore
     * EXACTLY equal ADC distances, and a strict R·k cutoff would split
     * such a tie class arbitrarily by vec_id — bounding recall at
     * ~R·k/family-depth no matter how exact the re-rank (measured: the
@@ -550,34 +545,25 @@ object PQ {
     * corpora, where true neighbors sit deeper in ADC order, RAISE the
     * floor from evidence instead of silently losing recall.
     *
-    * Cost: exact truth for the sample is one broadcast-queries corpus
-    * scan (the price [[pqRefineRecall]] already pays per evaluation), the
-    * ranks come from the same ADC relation serving computes, and the
-    * result is one driver integer, derived per call. Mirrored
-    * integer-for-integer in the oracle
-    * ([[derivedCutoffCtesSql]]'s ctruth/cneed/cfl CTEs), so q107/q110
-    * stay hash-checked THROUGH the calibrated floor, and exposed as a
-    * relation by q122 (the q120-style observability contract).
+    * Cost: two corpus passes ([[calibration]]) and one driver integer,
+    * derived per call. Mirrored integer-for-integer in the
+    * oracle ([[derivedCutoffCtesSql]]'s ctruth/cneed/cfl CTEs), so
+    * q107/q110 stay hash-checked THROUGH the calibrated floor, and
+    * exposed as a relation by q122 (the q120-style observability
+    * contract).
     */
   def calibratedRefineFloor(
       embeddings: DataFrame, m: Int = M, codes: Int = Codes,
       iters: Int = Iters): Int =
-    calibratedFloor(embeddings, models(embeddings, m, codes, iters), m)
+    floorOf(calibration(embeddings, new Codebooks(models(embeddings, m, codes, iters), m)))
 
-  /** [[calibratedRefineFloor]] under already-trained codebooks. The
-    * sample WIDTH is corpus-scaled (r16, VERDICT r15 #2): one count picks
-    * 10 queries below [[Similarity.TuneCorpusLarge]] (every oracle-checked
-    * volume) and 40 above it, where PQTUNE_r15 measured the 50-pair
-    * quantile under-resolving the needed_r tail. Bar = the 48/50 ratio of
-    * the pair count ([[Similarity.tuneHitBarFor]]).
+  /** The bar-quantile floor of a [[calibration]]: the
+    * [[Similarity.tuneHitBarFor]]-th smallest needed_r, at least
+    * [[RefineFactor]].
     */
-  private def calibratedFloor(
-      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
-      m: Int): Int = {
-    val nq = Similarity.tuneQueriesFor(embeddings.count())
-    val needed = neededRanksDf(embeddings, mods, nq, m)
-      .select(col("needed_r"))
-      .collect().map(_.getLong(0)).sorted
+  private def floorOf(cal: (Int, Seq[(Long, Long, Long, Long)])): Int = {
+    val (nq, rows) = cal
+    val needed = rows.map(_._4).sorted
     if (needed.isEmpty) RefineFactor
     else {
       val pos = math.min(
@@ -587,38 +573,76 @@ object PQ {
     }
   }
 
-  /** The calibration relation behind [[calibratedRefineFloor]]: one row
-    * per (tune query, true neighbor) with the neighbor's tie-inclusive
-    * ADC rank and the refine factor that would have shortlisted it.
+  /** The calibration behind [[calibratedRefineFloor]]: the sample width nq
+    * and one (query_id, neighbor_id, adc_rank, needed_r) row per (tune
+    * query, true neighbor) pair where both sides are well-formed, in
+    * (query_id, neighbor_id) order. The width is corpus-scaled (r16,
+    * VERDICT r15 #2): one count picks [[Similarity.TuneQueries]] queries
+    * below [[Similarity.TuneCorpusLarge]] (every oracle-checked volume)
+    * and [[Similarity.TuneQueriesLarge]] above it, where PQTUNE_r15
+    * measured the 50-pair quantile under-resolving the needed_r tail.
+    *
+    * Two passes: the sample's exact truth ([[Similarity.exactTopK]]),
+    * each kept neighbor carrying its ADC distance (−1 when it has none);
+    * then, per pair, the count of well-formed rows other than the query
+    * with a strictly smaller distance — `rank()` is 1 plus that count.
     */
-  private def neededRanksDf(
-      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
-      nq: Int, m: Int): DataFrame = {
-    val truth = Similarity
-      .bruteForceTopK(embeddings, nq, Similarity.TuneK)
-      .select(col("query_id"), col("neighbor_id"))
-    val sw = Window.partitionBy(col("query_id")).orderBy(col("adc_dist"))
-    adcDists(embeddings, mods, nq, m)
-      .withColumn("srank", rank().over(sw))
-      .join(truth, Seq("query_id", "neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        col("srank").cast("long").as("adc_rank"),
-        ceil(col("srank").cast("double") / Similarity.TuneK).as("needed_r"))
+  private def calibration(
+      embeddings: DataFrame, books: Codebooks): (Int, Seq[(Long, Long, Long, Long)]) = {
+    val nq = Similarity.tuneQueriesFor(embeddings.count())
+    val sample = Similarity.queryRows(embeddings.filter(col("vec_id") < nq), "pq: tune sample")
+    val luts = sample.map(r => if (wellFormedRow(r)) books.lut(Similarity.quantizedAt(r, 1)) else null)
+    val truth = Similarity.mergedLocal(
+      Similarity.exactTopK(embeddings, sample, Similarity.TuneK) { (r, y) =>
+        val codes = if (wellFormedRow(r)) books.encode(y) else null
+        q => if (codes == null || luts(q) == null) -1L else books.dist(luts(q), codes)
+      }, Similarity.TuneK, "pq: calibration truth").filter(_.getLong(5) >= 0)
+    val pairQ = truth.map(r => sample.indexWhere(_.getLong(0) == r.getLong(0))).toArray
+    val pairD = truth.map(_.getLong(5)).toArray
+    val closer = graft.util.JobDesc.labeled(embeddings.sparkSession, "pq: calibration ranks")(
+      vectors(embeddings).mapPartitions { it =>
+        val n = new Array[Long](pairQ.length)
+        it.foreach { r =>
+          val codes = books.encode(Similarity.quantizedAt(r, 1))
+          for (i <- pairQ.indices; q = pairQ(i) if sample(q).getLong(0) != r.getLong(0))
+            if (books.dist(luts(q), codes) < pairD(i)) n(i) += 1
+        }
+        Iterator.single(Row(n.toSeq))
+      }(Encoders.row(StructType.fromDDL("n ARRAY<BIGINT>"))).collect())
+      .map(_.getSeq[Long](0))
+    val rows = truth.indices.map { i =>
+      val rank = 1 + closer.map(_(i)).sum
+      (truth(i).getLong(0), truth(i).getLong(2), rank,
+        math.ceil(rank.toDouble / Similarity.TuneK).toLong)
+    }
+    (nq, rows.sortBy(p => (p._1, p._2)))
   }
+
+  /** [[KMeans.wellFormed]] on a collected (vec_id, embedding) row. */
+  private def wellFormedRow(r: Row): Boolean =
+    !r.isNullAt(1) && {
+      val v = r.getSeq[Any](1)
+      v.length == KMeans.Dim && !v.contains(null)
+    }
 
   /** The calibration as a registered relation (q122): every tune-sample
     * true neighbor's ADC rank, the per-pair needed refine factor, and the
     * floor the corpus derived — the derivation users' serving default
     * came from, hash-checked cross-engine like the search it configures.
+    * Driver-held: at most [[Similarity.TuneQueriesLarge]] ×
+    * [[Similarity.TuneK]] rows.
     */
   def pqFloorCalibration(
       embeddings: DataFrame, m: Int = M, codes: Int = Codes,
       iters: Int = Iters): DataFrame = {
-    val mods = models(embeddings, m, codes, iters)
-    val f = calibratedFloor(embeddings, mods, m)
-    val nq = Similarity.tuneQueriesFor(embeddings.count())
-    neededRanksDf(embeddings, mods, nq, m)
-      .withColumn("floor_r", lit(f.toLong))
+    val cal = calibration(embeddings, new Codebooks(models(embeddings, m, codes, iters), m))
+    val f = floorOf(cal).toLong
+    val idType = embeddings.schema("vec_id").dataType
+    embeddings.sparkSession.createDataFrame(cal._2.map { case (q, n, r, need) =>
+        (q, n, r, need, f) })
+      .toDF("query_id", "neighbor_id", "adc_rank", "needed_r", "floor_r")
+      .withColumn("query_id", col("query_id").cast(idType))
+      .withColumn("neighbor_id", col("neighbor_id").cast(idType))
       .orderBy("query_id", "neighbor_id")
   }
 
@@ -652,18 +676,17 @@ object PQ {
   def derivedRefineFactor(
       embeddings: DataFrame, m: Int = M, codes: Int = Codes,
       iters: Int = Iters, floor: Int = 0): Int =
-    derivedFactor(embeddings, models(embeddings, m, codes, iters), m, floor)
+    derivedFactor(embeddings, new Codebooks(models(embeddings, m, codes, iters), m), floor)
 
   /** [[derivedRefineFactor]] under already-trained codebooks. */
-  private def derivedFactor(
-      embeddings: DataFrame, mods: Seq[(Int, Array[(Int, Array[Long])])],
-      m: Int, floor: Int): Int = {
+  private def derivedFactor(embeddings: DataFrame, books: Codebooks, floor: Int): Int = {
+    val m = books.m
     // floor 0 (the default since r14) = SAMPLE-CALIBRATE the floor from
     // measured ADC ranks of the tune sample's true neighbors
     // ([[calibratedRefineFloor]]); a positive value is the explicit
     // constant override (the pre-r14 behavior at floor = RefineFactor)
-    val f = if (floor > 0) floor else calibratedFloor(embeddings, mods, m)
-    val enc = encoded(embeddings, mods, m)
+    val f = if (floor > 0) floor else floorOf(calibration(embeddings, books))
+    val enc = encoded(embeddings, books)
     val codeCols = (0 until m).map(s => col(s"code_$s"))
     val tup = enc.groupBy(codeCols: _*).agg(count(lit(1)).as("cnt"))
     val tk = concat_ws("|",
@@ -745,22 +768,23 @@ object PQ {
   }
 
   /** PQ search with an exact re-rank stage — the DEFAULT serving path: the
-    * all-integer ADC scan produces a `refineFactor·topK` shortlist per
-    * query ([[pqAdcTopK]]'s machinery, identical plan), then ONLY those
-    * rows pay an exact fixed-point dot against the stored vectors and the
-    * final topK ranks by true cosine (ties to the smaller neighbor_id).
+    * all-integer ADC scan bounds a `refineFactor·topK` shortlist per
+    * query, then ONLY shortlisted rows pay an exact fixed-point dot
+    * against the query and the final topK ranks by true cosine (ties to
+    * the smaller neighbor_id).
     *
-    * Scale shape: the shortlist is ≈ nQueries·R·k rows — small on normal
-    * corpora, where AQE broadcasts it for the gather join (one
-    * broadcast-hash join + R·k exact dots per query on top of the linear
-    * ADC scan, no new shuffle of the corpus); on degenerate corpora the
-    * tie expansion grows it and AQE falls back to a shuffle join instead
-    * of OOMing a forced broadcast. This is why it can be the default:
-    * the 100-TB cost profile is the ADC scan's, while the returned
-    * neighbors are exact-ranked within the shortlist (recall measured by
-    * [[pqRefineRecall]] — the codebook only has to put true neighbors in
-    * the top R·k, not the top k; R itself tracks the corpus via
-    * [[derivedRefineFactor]]).
+    * Two passes of the ADC kernel: [[shortlistBounds]] finds each query's
+    * R·k-th smallest ADC distance (the tie-inclusive cutoff, see
+    * [[RefineFactor]]), then one [[Similarity.queryTopK]] pass scores the
+    * rows within the bound exactly and keeps each query's topK. The
+    * shortlist is never materialized, so a degenerate all-tied corpus —
+    * whose shortlist grows toward the corpus (the documented graceful
+    * degrade to exact scoring) — costs exact dots, not a corpus-sized
+    * join. This is why it can be the default: the 100-TB cost profile is
+    * the ADC scan's, while the returned neighbors are exact-ranked within
+    * the shortlist (recall measured by [[pqRefineRecall]] — the codebook
+    * only has to put true neighbors in the top R·k, not the top k; R
+    * itself tracks the corpus via [[derivedRefineFactor]]).
     */
   def pqAdcRefineTopK(
       embeddings: DataFrame, nQueries: Int = 10, topK: Int = 5,
@@ -770,38 +794,47 @@ object PQ {
     // histogram so the shortlist covers the corpus's deepest near-tie
     // family ([[derivedRefineFactor]]); a positive value is the explicit
     // constant override.
-    val mods = models(embeddings, m, codes, iters)
+    val books = new Codebooks(models(embeddings, m, codes, iters), m)
     val r =
       if (refineFactor > 0) refineFactor
-      else derivedFactor(embeddings, mods, m, 0)
-    // tie-inclusive cutoff (rank, ordered by adc_dist ALONE): the whole
-    // ADC-distance class at the R·k boundary enters the shortlist — see
-    // the RefineFactor note for why a strict row_number cutoff caps
-    // recall on clone-heavy corpora
-    val sw = Window.partitionBy(col("query_id")).orderBy(col("adc_dist"))
-    val short = adcDists(embeddings, mods, nQueries, m)
-      .withColumn("srank", rank().over(sw))
-      .filter(col("srank") <= lit(topK.toLong * r)) // long: R can be corpus-deep
-      .select(col("query_id"), col("neighbor_id"))
-    val queries = embeddings
-      .filter(col("vec_id") < nQueries && KMeans.wellFormed(col("embedding")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    // NO broadcast hint on the shortlist: it is ≈ nQueries·R·k rows on
-    // normal corpora, but the tie-inclusive cutoff means a degenerate
-    // all-tied corpus expands it toward corpus size (the documented
-    // graceful degrade to exact scoring) — a forced broadcast would turn
-    // that degrade into a driver/executor OOM (ADVICE r11). AQE sees the
-    // true shortlist size at runtime and broadcasts exactly when small.
-    embeddings.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
-      .join(short, "neighbor_id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        Similarity.dot(col("q_emb"), col("n_emb")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .orderBy("query_id", "rank")
+      else derivedFactor(embeddings, books, 0)
+    val qs = queries(embeddings, books, nQueries)
+    val bound = shortlistBounds(embeddings, books, qs, topK.toLong * r) // long: R can be corpus-deep
+    Similarity.cosineRows(adcKernel(embeddings, books, qs, topK) { (x, c) =>
+      (q, best, id) =>
+        if (books.dist(qs.luts(q), c) <= bound(q)) Similarity.offerDot(best, qs.x(q), x, id)
+    }, embeddings.schema("vec_id").dataType).orderBy("query_id", "rank")
+  }
+
+  /** Each query's shortlist bound: the n-th smallest ADC distance over the
+    * well-formed rows other than itself, or Long.MaxValue when there are
+    * fewer. A row is in the tie-inclusive shortlist `rank() ≤ n` (ordered
+    * by distance alone) exactly when its distance is at most this bound.
+    * Each partition keeps its n smallest distances per query in a bounded
+    * max-heap; the n-th smallest of their union is the bound.
+    */
+  private def shortlistBounds(
+      embeddings: DataFrame, books: Codebooks, qs: Queries, n: Long): Array[Long] = {
+    import scala.jdk.CollectionConverters._
+    val kept = vectors(embeddings).mapPartitions { it =>
+      val heaps = Array.fill(qs.ids.length)(new java.util.PriorityQueue[java.lang.Long](
+        java.util.Collections.reverseOrder[java.lang.Long]()))
+      it.foreach { r =>
+        val codes = books.encode(Similarity.quantizedAt(r, 1))
+        for (q <- qs.ids.indices if qs.ids(q) != r.getLong(0) && n > 0) {
+          val d = books.dist(qs.luts(q), codes)
+          if (heaps(q).size < n) heaps(q).add(d)
+          else if (d < heaps(q).peek) { heaps(q).poll(); heaps(q).add(d) }
+        }
+      }
+      Iterator.tabulate(heaps.length)(q => Row(q, heaps(q).asScala.map(_.longValue).toSeq))
+    }(Encoders.row(StructType.fromDDL("q INT, dists ARRAY<BIGINT>")))
+    val byQuery = graft.util.JobDesc.labeled(embeddings.sparkSession, "pq: shortlist bounds")(
+      kept.collect()).groupBy(_.getInt(0))
+    Array.tabulate(qs.ids.length) { q =>
+      val all = byQuery.getOrElse(q, Array.empty[Row]).flatMap(_.getSeq[Long](1)).sorted
+      if (all.length < n) Long.MaxValue else all((n - 1).toInt)
+    }
   }
 
   def pqAdcRefineTopKSql(

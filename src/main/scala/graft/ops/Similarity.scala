@@ -2,9 +2,10 @@ package graft.ops
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.functions.QuantizedDot.{cosineQ6, cosineQ6Sql}
 
@@ -12,9 +13,10 @@ import graft.functions.QuantizedDot.{cosineQ6, cosineQ6Sql}
   * the testdata so cosine ≡ dot product).
   *
   * Scale design:
-  *  - Brute-force top-k broadcasts the (small) query set and streams the
-  *    corpus once — no corpus self-shuffle; the only shuffle is the tiny
-  *    (query_id-partitioned) top-k window.
+  *  - Brute-force top-k ships the (small) query set to the corpus and
+  *    streams it once ([[queryTopK]]) — no corpus self-shuffle; each
+  *    partition keeps k rows per query and a merge of those replaces the
+  *    rank window.
   *  - The scale path is hyperplane LSH: a deterministic ±1 hyperplane family
   *    (derived from md5 parity, reproducible in any engine) buckets vectors
   *    by sign signature; candidate search touches only same-bucket vectors.
@@ -55,7 +57,7 @@ object Similarity {
 
   /** Auto-tune sample for [[derivedNprobe]]: the fixed deterministic
     * query set (`vec_id < TuneQueries`) whose exact top-[[TuneK]] truth
-    * costs ONE corpus scan ([[bruteForceTopK]] broadcasts the queries) —
+    * costs ONE corpus scan (the queries ship to it in [[queryTopK]]) —
     * the same order of work as the IVF search being tuned, which is what
     * makes measuring recall at derivation time affordable at any corpus
     * size. Production would sample more queries; 10 is this library's
@@ -340,26 +342,42 @@ object Similarity {
        |ORDER BY vec_a, vec_b""".stripMargin
 
   /** Brute-force cosine top-k: for each query vector (vec_id < nQueries),
-    * the k nearest corpus vectors. The query side is broadcast, so the
-    * corpus is scanned exactly once with no self-shuffle.
+    * the k nearest other corpus vectors, as (query_id, neighbor_id,
+    * cosine, rank). The query batch is collected once and ships to the
+    * [[queryTopK]] kernel, so the corpus is scanned exactly once, keeps k
+    * rows per query per partition, and a merge over those rows replaces
+    * the rank window.
     */
   def bruteForceTopK(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val queries = embeddings
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_emb"))
-    // repartition FIRST: the n×q dot products run against a broadcast
-    // side, so there is no exchange before them — a compact corpus
-    // arriving as one parquet split would compute them all on one core
-    val scored = embeddings.repartition(col("vec_id"))
-      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        dot(col("query_emb"), col("embedding")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val qs = queryRows(embeddings.filter(col("vec_id") < nQueries), "ann: query batch")
+    val found = exactTopK(embeddings, qs, k)((_, _) => _ => 0L)
+    cosineRows(mergedTopK(found, k), embeddings.schema("vec_id").dataType)
       .orderBy("query_id", "rank")
+  }
+
+  /** [[bruteForceTopK]]'s kernel pass for the collected query rows `qs`
+    * ([[queryRows]]): every vector with an id other than the query's is a
+    * candidate, keyed by the exact dot (a NULL embedding ranks last). A
+    * kept neighbor carries `aux(row, x)(q)` as its aux long, where x is
+    * the row's fixed-point vector and q the query's index.
+    */
+  private[ops] def exactTopK(embeddings: DataFrame, qs: Array[Row], k: Int)(
+      aux: (Row, Array[Long]) => Int => Long): DataFrame = {
+    val qids = qs.map(_.getLong(0))
+    val qx = qs.map(quantizedAt(_, 1))
+    // repartition FIRST: the kernel has no exchange before it, so a
+    // compact corpus arriving as one parquet split would compute every
+    // n×q dot product on one core
+    val corpus = embeddings.repartition(col("vec_id"))
+      .select(col("vec_id").cast("long"), col("embedding"))
+    queryTopK(corpus, qids, 1, k) { (r, best) =>
+      if (!r.isNullAt(0)) {
+        val id = r.getLong(0)
+        val y = quantizedAt(r, 1)
+        val a = aux(r, y)
+        for (q <- qids.indices if qids(q) != id) offerDot(best(q), qx(q), y, id, a(q))
+      }
+    }
   }
 
   def bruteForceTopKSql(nQueries: Int = 10, k: Int = 5): String =
@@ -536,8 +554,9 @@ object Similarity {
         first("cnt").as("n"))
       .select(col("clabel"), transform(col("ps"), p => p.getField("s")).as("cs"), col("n"))
 
-  /** (vec_id, cell, cell_rank): centroid assignments ranked by similarity
-    * (cell_rank 1 = nearest). The n×k dot products run through
+  /** (vec_id, cell, cell_rank, clabel): centroid assignments ranked by
+    * similarity (cell_rank 1 = nearest), with the centroid's label
+    * (`clabel`, the cell without its sub-bucket key). The n×k dot products run through
     * [[graft.functions.LongArrayDot]] — native codegen — instead of
     * interpreted `aggregate(zip_with(...))` lambdas (the quantization
     * `transform` stays: it runs once per VECTOR in the projection, not once
@@ -568,7 +587,7 @@ object Similarity {
     q.crossJoin(broadcast(ivfCentroids(embeddings)))
       .withColumn("cell_rank", row_number().over(w))
       .filter(col("cell_rank") <= maxRank)
-      .select(col("vec_id"), cellCol.as("cell"), col("cell_rank"))
+      .select(col("vec_id"), cellCol.as("cell"), col("cell_rank"), col("clabel"))
   }
 
   /** (vec_id, cell): nearest-centroid assignment. */
@@ -713,8 +732,6 @@ object Similarity {
     * corpus grows.
     */
   private[ops] def cellKernel(cells: DataFrame, k: Int, salts: Int): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.types.StructType
     val own = pmod(hash(col("vec_id")), lit(salts))
     val prepared = cells
       .filter(col("vec_id").isNotNull && col("cell").isNotNull)
@@ -737,66 +754,156 @@ object Similarity {
     * cell, cell_rank, salt, is_query), home rows first.
     */
   private def cellSearch(rows: Iterator[Row], k: Int): Iterator[Row] = {
-    def quantized(r: Row): Array[Long] =
-      if (r.isNullAt(1)) null
-      else r.getSeq[Any](1).iterator.map(x =>
-        if (x == null) 0L else math.floor(x.asInstanceOf[Number].doubleValue * 1e6).toLong)
-        .toArray
     val in = rows.buffered
     val homes = scala.collection.mutable.ArrayBuffer[(Long, Array[Long], Boolean)]()
     while (in.hasNext && in.head.getInt(3) == 1) {
       val r = in.next()
-      homes += ((r.getLong(0), quantized(r), r.getBoolean(5)))
+      homes += ((r.getLong(0), quantizedAt(r, 1), r.getBoolean(5)))
     }
     val hid = homes.map(_._1).toArray
     val hv = homes.map(_._2).toArray
     def topK(qid: Long, x: Array[Long]): Iterator[Row] = {
-      val best = new Best(math.max(0, k))
+      val best = new Best(k)
       var j = 0
       while (j < hid.length) {
-        val y = hv(j)
-        if (hid(j) != qid) {
-          if (x == null || y == null) best.offer(isNull = true, 0L, hid(j))
-          else {
-            val n = math.min(x.length, y.length)
-            var dot = 0L
-            var d = 0
-            while (d < n) { dot += x(d) * y(d); d += 1 }
-            best.offer(isNull = false, dot, hid(j))
-          }
-        }
+        if (hid(j) != qid) offerDot(best, x, hv(j), hid(j))
         j += 1
       }
       Iterator.tabulate(best.filled)(r =>
-        Row(qid, best.ids(r), if (best.nulls(r)) null else best.dots(r).toDouble / 1e12, r + 1))
+        Row(qid, best.ids(r), if (best.nulls(r)) null else best.keys(r).toDouble / 1e12, r + 1))
     }
     homes.iterator.filter(_._3).flatMap(h => topK(h._1, h._2)) ++
-      in.flatMap(r => topK(r.getLong(0), quantized(r)))
+      in.flatMap(r => topK(r.getLong(0), quantizedAt(r, 1)))
   }
 
-  /** k slots kept sorted by (dot desc, NULL dot last, id asc). */
-  private final class Best(k: Int) {
-    val dots = new Array[Long](k)
+  /** The array at field `idx` of `r` in [[graft.functions.QuantizedDot]]'s
+    * fixed point: `floor(x·1e6)` per element, a NULL element as 0 (the
+    * expression skips it); null for a NULL array.
+    */
+  private[ops] def quantizedAt(r: Row, idx: Int): Array[Long] =
+    if (r.isNullAt(idx)) null
+    else r.getSeq[Any](idx).iterator.map(x =>
+      if (x == null) 0L else math.floor(x.asInstanceOf[Number].doubleValue * 1e6).toLong)
+      .toArray
+
+  /** Offers `id` to `best` keyed by QuantizedDot's exact dot of `x` and `y`
+    * (a long sum over the shorter length; NULL when either side is).
+    */
+  private[ops] def offerDot(
+      best: Best, x: Array[Long], y: Array[Long], id: Long, aux: Long = 0L): Unit =
+    if (x == null || y == null) best.offer(isNull = true, 0L, id, aux)
+    else {
+      val n = math.min(x.length, y.length)
+      var dot = 0L
+      var d = 0
+      while (d < n) { dot += x(d) * y(d); d += 1 }
+      best.offer(isNull = false, dot, id, aux)
+    }
+
+  /** k slots kept sorted by (key desc, NULL key last, id asc), each
+    * carrying an `aux` long. Cosine kernels key by the dot; ADC kernels key
+    * by the negated distance, which orders by (distance asc, id asc).
+    */
+  private[ops] final class Best(k0: Int) {
+    private val k = math.max(0, k0)
+    val keys = new Array[Long](k)
     val nulls = new Array[Boolean](k)
     val ids = new Array[Long](k)
+    val aux = new Array[Long](k)
     var filled = 0
 
-    /** Does (isNull, dot, id) rank before slot p? */
-    private def beats(isNull: Boolean, dot: Long, id: Long, p: Int): Boolean =
+    /** Does (isNull, key, id) rank before slot p? */
+    private def beats(isNull: Boolean, key: Long, id: Long, p: Int): Boolean =
       if (isNull != nulls(p)) !isNull
-      else if (!isNull && dot != dots(p)) dot > dots(p)
+      else if (!isNull && key != keys(p)) key > keys(p)
       else id < ids(p)
 
-    def offer(isNull: Boolean, dot: Long, id: Long): Unit =
-      if (filled < k || (filled > 0 && beats(isNull, dot, id, filled - 1))) {
+    def offer(isNull: Boolean, key: Long, id: Long, x: Long = 0L): Unit =
+      if (filled < k || (filled > 0 && beats(isNull, key, id, filled - 1))) {
         var p = if (filled < k) filled else k - 1
-        while (p > 0 && beats(isNull, dot, id, p - 1)) {
-          dots(p) = dots(p - 1); nulls(p) = nulls(p - 1); ids(p) = ids(p - 1); p -= 1
+        while (p > 0 && beats(isNull, key, id, p - 1)) {
+          keys(p) = keys(p - 1); nulls(p) = nulls(p - 1); ids(p) = ids(p - 1)
+          aux(p) = aux(p - 1); p -= 1
         }
-        dots(p) = dot; nulls(p) = isNull; ids(p) = id
+        keys(p) = key; nulls(p) = isNull; ids(p) = id; aux(p) = x
         if (filled < k) filled += 1
       }
+
+    /** The filled slots as [[SlotSchema]] rows of (query, slot). */
+    def rows(qid: Long, slot: Int): Iterator[Row] =
+      Iterator.tabulate(filled)(r => Row(qid, slot, ids(r), keys(r), nulls(r), aux(r), r + 1))
   }
+
+  /** [[queryTopK]]'s rows: per (query_id, slot), the neighbor at `rank`
+    * with its [[Best]] key, NULL flag and carried `aux` long.
+    */
+  private[ops] val SlotSchema: StructType = StructType.fromDDL(
+    "query_id BIGINT, slot INT, neighbor_id BIGINT, key BIGINT, is_null BOOLEAN, " +
+      "aux BIGINT, rank INT")
+
+  /** The broadcast-query kernel, [[cellKernel]]'s opposite: the query batch
+    * stays on the driver and ships in `visit`'s closure, the corpus
+    * streams through `mapPartitions`, and each partition keeps `slots`
+    * [[Best]] arrays of k per query — `best(q · slots + s)` for query
+    * `qids(q)`, slot s — which `visit` offers each corpus row to. Out come
+    * at most k [[SlotSchema]] rows per (query, slot) per partition;
+    * [[mergeSlots]] over them is the global top-k, because every global
+    * top-k row is in its partition's top-k.
+    *
+    * Memory bound: queries × slots × k slots plus what `visit` captures
+    * (query vectors, ADC lookup tables); the corpus streams.
+    */
+  private[ops] def queryTopK(corpus: DataFrame, qids: Array[Long], slots: Int, k: Int)(
+      visit: (Row, Array[Best]) => Unit): DataFrame =
+    corpus.mapPartitions { it =>
+      val best = Array.fill(qids.length * slots)(new Best(k))
+      it.foreach(visit(_, best))
+      Iterator.range(0, best.length).flatMap(i => best(i).rows(qids(i / slots), i % slots))
+    }(Encoders.row(SlotSchema))
+
+  /** The top-k merge: re-offers [[SlotSchema]] rows per (query_id, slot)
+    * and emits each one's k best, ranked from 1. The order [[Best]] keeps
+    * is total (ids are unique per query), so the merge is exact.
+    */
+  private[ops] def mergeSlots(rows: Iterator[Row], k: Int): Iterator[Row] = {
+    val best = scala.collection.mutable.LinkedHashMap[(Long, Int), Best]()
+    rows.foreach { r =>
+      best.getOrElseUpdate((r.getLong(0), r.getInt(1)), new Best(k))
+        .offer(r.getBoolean(4), r.getLong(3), r.getLong(2), r.getLong(5))
+    }
+    best.iterator.flatMap { case ((q, s), b) => b.rows(q, s) }
+  }
+
+  /** [[mergeSlots]] as a stage: one exchange of at most k × partitions
+    * rows per (query, slot) on query_id.
+    */
+  private[ops] def mergedTopK(found: DataFrame, k: Int): DataFrame =
+    found.repartition(col("query_id"))
+      .mapPartitions(mergeSlots(_, k))(Encoders.row(SlotSchema))
+
+  /** [[mergeSlots]] on the driver, for kernels whose result is a driver
+    * decision: one labelled job collects the kernel's rows.
+    */
+  private[ops] def mergedLocal(found: DataFrame, k: Int, label: String): Seq[Row] =
+    mergeSlots(graft.util.JobDesc.labeled(found.sparkSession, label)(
+      found.collect()).iterator, k).toSeq
+
+  /** Merged cosine-keyed slot rows as (query_id, neighbor_id, cosine,
+    * rank), ids cast back to the corpus's vec_id type.
+    */
+  private[ops] def cosineRows(merged: DataFrame, idType: DataType): DataFrame =
+    merged.select(col("query_id").cast(idType).as("query_id"),
+      col("neighbor_id").cast(idType).as("neighbor_id"),
+      when(!col("is_null"), col("key").cast("double") / 1e12).as("cosine"), col("rank"))
+
+  /** The (vec_id, embedding) rows of `queries` with a non-NULL id,
+    * collected in one labelled job, vec_id cast to long, in id order.
+    */
+  private[ops] def queryRows(queries: DataFrame, label: String): Array[Row] =
+    graft.util.JobDesc.labeled(queries.sparkSession, label)(
+      queries.filter(col("vec_id").isNotNull)
+        .select(col("vec_id").cast("long"), col("embedding")).collect())
+      .sortBy(_.getLong(0))
 
   /** Sub-plane count that keeps expected cell population ≤ `budget`:
     * the smallest p with n ≤ budget·2^p. Cell count then scales ∝ n
@@ -808,39 +915,36 @@ object Similarity {
   def adaptiveSubPlanes(n: Long, budget: Long = CellBudget): Int =
     (0 to MaxSubPlanes).find(p => n <= budget * (1L << p)).getOrElse(MaxSubPlanes)
 
-  /** The derivation's inputs, computed once per call: the corpus-derived
-    * sub-plane count p, and the [[MaxDerivedNprobe]]-ranked assignment,
-    * cached — the tune grid reads it from two join sides, and the serving
-    * search needs exactly this relation filtered to `cell_rank ≤ np`. The
-    * caller frees the cache once its last reader has run.
+  /** The derivation's input, computed once per call: the
+    * [[MaxDerivedNprobe]]-ranked assignment at the corpus-derived
+    * sub-plane count, cached — the tune grid reads its sample rows and
+    * home cells, and the serving search needs exactly this relation
+    * filtered to `cell_rank ≤ np`. The caller frees the cache once its
+    * last reader has run.
     */
-  private def rankedForTune(
-      embeddings: DataFrame, budget: Long): (Int, DataFrame) = {
+  private def rankedForTune(embeddings: DataFrame, budget: Long): DataFrame = {
     val p = graft.util.JobDesc.labeled(embeddings.sparkSession,
       "ivf-derive: corpus size")(
       adaptiveSubPlanes(embeddings.count(), budget))
-    // NOT eagerly materialized (r19, measured): the grid's concurrent
-    // broadcast builds LOOK like they race this cache (several
-    // overlapping ~0.65 s jobs in q121's profile), but the block
-    // manager locks each cached partition while the first task
-    // computes it — the others wait, then read. An up-front count()
-    // A/B'd flat (q121 4.52→4.71 s, q36 3.15→3.20 s medians) while
-    // paying one extra job, so the lazy cache stands.
-    (p, ivfCellsRanked(embeddings, MaxDerivedNprobe, p).cache())
+    // NOT eagerly materialized: the tune grid's sample collect is its
+    // first reader and computes it (an up-front count() A/B'd flat in r19
+    // while paying one extra job)
+    ivfCellsRanked(embeddings, MaxDerivedNprobe, p).cache()
   }
 
   /** The derivation measurement behind [[derivedNprobe]]: per candidate
     * nprobe 1..[[MaxDerivedNprobe]], how many of the tune sample's exact
-    * top-[[TuneK]] the IVF search returns — computed from ONE search at
-    * the maximum nprobe, because the rank-≤np candidate set is a prefix
-    * of the rank-≤[[MaxDerivedNprobe]] one (filter, re-rank, intersect;
-    * no extra corpus passes). Cost: one broadcast-query truth scan + one
-    * sample-sized cell join — the same order as the search being tuned.
-    * The ranked cache is freed before this returns.
+    * top-[[TuneK]] the IVF search returns — computed in ONE
+    * [[queryTopK]] pass with the sample queries shipped to the corpus,
+    * which keeps each query's exact truth and its top-[[TuneK]] per
+    * probe rank; the rank-≤np search is the merge of ranks 1..np. Cost:
+    * one corpus pass plus one sample-sized collect — the same order as
+    * the search being tuned. The ranked cache is freed before this
+    * returns.
     */
   private def tuneGridRows(
       embeddings: DataFrame, budget: Long = CellBudget): Seq[(Int, Long)] = {
-    val (_, ranked) = rankedForTune(embeddings, budget)
+    val ranked = rankedForTune(embeddings, budget)
     try tuneGridFromRanked(embeddings, ranked)
     finally graft.util.CacheScope.release(ranked)
   }
@@ -853,38 +957,53 @@ object Similarity {
 
   /** The grid computation itself, parameterized by the ranked cell
     * assignment: any (vec_id, cell, cell_rank ≤ [[MaxDerivedNprobe]])
-    * relation whose rank-1 row is the vector's single home cell measures
-    * its per-nprobe tune-sample recall through the identical joins.
+    * relation whose rank-1 row is the vector's single home cell. The
+    * sample queries' ranked cells are collected, and one [[queryTopK]]
+    * pass over (vec_id, embedding, home cell) rows keeps per query slot 0,
+    * the exact top-[[TuneK]] over every other vector ([[bruteForceTopK]]'s
+    * truth), and slot r, the top-[[TuneK]] among the homes of its rank-r
+    * cell. A neighbor has one home cell, so it meets a query in at most
+    * one rank slot, and the np-probe search's top-[[TuneK]] is the merge
+    * of slots 1..np.
     */
   private def tuneGridFromRanked(
       embeddings: DataFrame, ranked: DataFrame): Seq[(Int, Long)] = {
     val emb2 = embeddings.select(col("vec_id"), col("embedding"))
-    val qside = emb2.filter(col("vec_id") < TuneQueries).join(ranked, "vec_id")
-      .toDF("query_id", "query_emb", "cell_a", "cell_rank")
-    val home = emb2.join(ranked.filter(col("cell_rank") === 1), "vec_id")
-      .toDF("neighbor_id", "emb_b", "cell_b", "crb")
-    // a (query, neighbor) pair meets at most once (one home cell), so
-    // cell_rank is THE rank of the neighbor's cell in the query's probe
-    // order — filtering cell_rank ≤ np reproduces the np-probe search
-    val cand = qside.join(home,
-        col("cell_a") === col("cell_b") && col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("cell_rank"), col("neighbor_id"),
-        dot(col("query_emb"), col("emb_b")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"), col("np"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val topk = cand
-      .withColumn("np", explode(sequence(lit(1), lit(MaxDerivedNprobe))))
-      .filter(col("cell_rank") <= col("np"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TuneK)
-    val truth = bruteForceTopK(embeddings, TuneQueries, TuneK)
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = graft.util.JobDesc.labeled(embeddings.sparkSession,
-      "ivf-derive: tune grid")(
-      topk.join(truth, Seq("query_id", "neighbor_id"))
-        .groupBy("np").agg(count(lit(1)).as("sample_hits"))
-        .collect()).map(r => r.getInt(0) -> r.getLong(1)).toMap
-    (1 to MaxDerivedNprobe).map(np => np -> hits.getOrElse(np, 0L))
+    // the sample queries with their ranked cells: one row per (query, cell)
+    val sample = graft.util.JobDesc.labeled(embeddings.sparkSession, "ivf-derive: sample")(
+      emb2.filter(col("vec_id") < TuneQueries)
+        .join(ranked.filter(col("vec_id") < TuneQueries), Seq("vec_id"), "left")
+        .select(col("vec_id").cast("long"), col("embedding"), col("cell"), col("cell_rank"))
+        .collect())
+      .groupBy(_.getLong(0)).toArray.sortBy(_._1)
+    val qids = sample.map(_._1)
+    val qx = sample.map(q => quantizedAt(q._2.head, 1))
+    // per sample query: probe cell → its rank
+    val probes = sample.map(_._2.filter(!_.isNullAt(2)).map(r => r.get(2) -> r.getInt(3)).toMap)
+    val homes = emb2.join(
+        ranked.filter(col("cell_rank") === 1).select(col("vec_id"), col("cell")),
+        Seq("vec_id"), "left")
+      .select(col("vec_id").cast("long"), col("embedding"), col("cell"))
+    val slots = 1 + MaxDerivedNprobe
+    val found = queryTopK(homes, qids, slots, TuneK) { (r, best) =>
+      if (!r.isNullAt(0)) {
+        val id = r.getLong(0)
+        val y = quantizedAt(r, 1)
+        for (q <- qids.indices if qids(q) != id) {
+          offerDot(best(q * slots), qx(q), y, id)
+          probes(q).get(r.get(2)).foreach(rank => offerDot(best(q * slots + rank), qx(q), y, id))
+        }
+      }
+    }
+    val merged = mergedLocal(found, TuneK, "ivf-derive: tune grid")
+    val truth = merged.filter(_.getInt(1) == 0).map(r => (r.getLong(0), r.getLong(2))).toSet
+    (1 to MaxDerivedNprobe).map { np =>
+      val topk = mergeSlots(
+        merged.iterator.filter(r => r.getInt(1) >= 1 && r.getInt(1) <= np)
+          .map(r => Row(r.getLong(0), 0, r.getLong(2), r.getLong(3), r.getBoolean(4), 0L, 0)),
+        TuneK)
+      np -> topk.count(r => truth((r.getLong(0), r.getLong(2)))).toLong
+    }
   }
 
   /** MEASUREMENT-DERIVED serving nprobe (VERDICT r13 #1: the hard-coded
@@ -892,10 +1011,10 @@ object Similarity {
     * silent-quality-loss class the PQ family closed with derived R + a
     * measured floor): the smallest nprobe whose tune-sample recall meets
     * [[TuneHitBar]], i.e. auto-tune against exact ground truth on a fixed
-    * sample — affordable because sample truth is one broadcast-query
-    * corpus scan (the FAISS AutoTune recipe, re-expressed as two Spark
-    * joins). Returns −1 when even [[MaxDerivedNprobe]] misses the bar:
-    * the router's cells carry too little of the metric structure for ANY
+    * sample — affordable because the sample's truth and every grid
+    * point come from one corpus scan (the FAISS AutoTune recipe, as one
+    * [[queryTopK]] pass). Returns −1 when even [[MaxDerivedNprobe]]
+    * misses the bar: the router's cells carry too little of the metric structure for ANY
     * probe count to serve honestly (measured on structure-free iid
     * corpora at p > 0, where hyperplane sub-buckets scatter true
     * neighbors), and the caller must degrade to the exact path instead of
@@ -1036,14 +1155,19 @@ object Similarity {
     // MEMORY_AND_DISK degrades to local-disk blocks, never OOM.
     // Query-scoped (r19, VERDICT r18 #5): CacheScope frees it, and in the
     // derived mode the ranked assignment too, after the caller's action.
-    val e = embeddings.cache()
+    // Cached hash-spread on vec_id when it arrives in fewer partitions than
+    // the session has cores: a single-split corpus cached as is makes every
+    // pass over it, the tune grid's kernel included, one task.
+    val par = embeddings.sparkSession.sparkContext.defaultParallelism
+    val e = (if (embeddings.rdd.getNumPartitions >= par) embeddings
+      else embeddings.repartition(par, col("vec_id"))).cache()
     if (nprobe > 0) {
       val p = graft.util.JobDesc.labeled(e.sparkSession,
         "ivf: corpus size")(adaptiveSubPlanes(e.count(), budget))
       return graft.util.CacheScope.freeAfterUse(ivfTopK(e, k, nprobe, p), Seq(e))
     }
     // one ranked assignment serves both the tune grid and the search
-    val (p, ranked) = rankedForTune(e, budget)
+    val ranked = rankedForTune(e, budget)
     val np = chosenNprobe(tuneGridFromRanked(e, ranked))
     val res =
       if (np > 0)
@@ -1058,20 +1182,21 @@ object Similarity {
             "cost); prefer trained-IVF (KMeans.ivfTopKTrained) or the PQ " +
             "refine path for corpora without label-metric structure")
         // Degrade serving reuses the derivation's ranking when it
-        // provably IS the complete one (r19): with p = 0 its cells are
-        // the plain label cells the degrade wants, and when the corpus
-        // has ≤ MaxDerivedNprobe distinct cells every (vector, cell) pair
-        // already carries a rank ≤ cell count ≤ MaxDerivedNprobe — so
-        // rank ≤ MaxValue over a SECOND centroid + assignment pipeline is
-        // the identical relation to the unfiltered ranking. One tiny
-        // census aggregation over cached blocks replaces the duplicate
-        // pipeline (guide §2.4). p > 0 or more cells than the derivation
-        // ranks → the unchanged full rebuild.
-        val cells = graft.util.JobDesc.labeled(e.sparkSession,
-          "ivf: degrade cell census")(
-          ranked.agg(countDistinct(col("cell"))).head().getLong(0))
-        if (p == 0 && cells <= MaxDerivedNprobe)
-          ivfTopKFromRanked(e, ranked, k)
+        // provably IS the complete one: the ranking orders the label
+        // centroids whatever p is, and when the corpus has ≤
+        // MaxDerivedNprobe labels every (vector, label) pair already
+        // carries a rank ≤ label count ≤ MaxDerivedNprobe — so, with the
+        // label as the cell, it is the identical relation to rank ≤
+        // MaxValue over a SECOND centroid + assignment pipeline at p = 0.
+        // One tiny census over cached blocks replaces that pipeline (a
+        // NULL label is a centroid too, so the census counts it). More
+        // labels than the derivation ranks → the full rebuild.
+        val labels = graft.util.JobDesc.labeled(e.sparkSession,
+          "ivf: degrade label census")(
+          ranked.select(col("clabel")).distinct().count())
+        if (labels <= MaxDerivedNprobe)
+          ivfTopKFromRanked(e,
+            ranked.select(col("vec_id"), col("clabel").as("cell"), col("cell_rank")), k)
         else
           // nprobe = Int.MaxValue probes every cell without paying a
           // distinct count job first — cell_rank ≤ MaxValue keeps every

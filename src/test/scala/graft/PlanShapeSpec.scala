@@ -252,16 +252,15 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("HashAggregate"), p)
   }
 
-  test("PQ ADC search (q92): LUT and codebook ride BROADCAST hash joins, " +
-    "top-k lowers to WindowGroupLimit, no nested loop") {
-    // the ADC contract: the corpus is scored by broadcast table lookups
-    // (the LUT is nQueries·M·Codes rows by construction) and the per-query
-    // rank keeps a bounded heap — a nested loop would mean per-pair
-    // vector arithmetic, the thing PQ exists to avoid
+  test("PQ ADC search (q92): hash spread before the kernel, no Window, no nested loop") {
+    // the ADC contract: the query batch's lookup tables ship to the corpus
+    // and each partition keeps a bounded top-k (Similarity.queryTopK) —
+    // a Window would mean a rank over every (query, vector) distance, a
+    // nested loop per-pair vector arithmetic, the thing PQ exists to avoid
     val p = plan("q92_pq_adc_topk")
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(p.contains("WindowGroupLimit"), p)
+    assert(!p.contains("Window"), p)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
+    assert(p.contains("Exchange hashpartitioning(vec_id"), p)
   }
 
   test("winnowing top partners (q96) rank-limits map-side " +
@@ -274,15 +273,14 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
-  test("IVF-PQ (q95): cell routing and LUT scoring are hash joins, no nested loop") {
+  test("IVF-PQ (q95): hash spread before the kernel, no Window, no nested loop") {
+    // the queries' probe cells and each row's home cell come from
+    // KMeans.Centroids inside the per-partition kernel, so neither a
+    // corpus-sized pair relation nor a rank window is left
     val p = plan("q95_ivf_pq_topk")
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(p.contains("WindowGroupLimit"), p)
-    assert(!p.contains("CartesianProduct"), p)
-    // the queries' probe cells come from the per-partition argmin kernel
-    // (KMeans.rankedCells), so no nested loop is left: one would mean a
-    // corpus-sized pair relation
-    assert(countOf(p, "BroadcastNestedLoopJoin") == 0, p)
+    assert(!p.contains("Window"), p)
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
+    assert(p.contains("Exchange hashpartitioning(vec_id"), p)
   }
 
   test("incremental dedup (q99) is all equi-joins on short keys") {

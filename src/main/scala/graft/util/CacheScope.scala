@@ -2,6 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.graftbridge.CacheBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The one release path for storage an op pins: [[release]] frees a
@@ -12,11 +13,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * cache or a local checkpoint.
   *
   * The lazily-returned plan cannot unpersist behind itself, so the scoped
-  * free is event-driven: [[freeAfterUse]] registers a one-shot
+  * free is event-driven: [[freeAfterUse]] registers a
   * [[QueryExecutionListener]] that fires after the FIRST completed
   * execution (success or failure) whose analyzed plan CONTAINS the
   * returned relation's plan — i.e. the caller's action on the query these
-  * caches serve — then releases every handle and deregisters itself.
+  * caches serve — then releases every handle.
   * Multi-read happens only inside that one plan, so after its action the
   * blocks are dead weight by construction. A lazy `localCheckpoint(false)`
   * over the result (`NearDup.components` takes one of its pairs) counts as
@@ -30,10 +31,15 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    listener bus AFTER the action completes;
   *  - re-execution safe: releasing a cache only drops blocks; a second
   *    action on the same DataFrame recomputes through the un-cached plan
-  *    with identical semantics (and re-populates nothing — one-shot
-  *    scope). A released checkpoint cannot be recomputed, so a relation
-  *    the result re-reads on a second action must be a cache, not a
-  *    checkpoint;
+  *    with identical semantics. A second action whose plan took its
+  *    cache substitution before the free ran (the caller acts again while
+  *    the listener bus is still delivering the first action's end) still
+  *    scans the dropped builder, which persists a new RDD no cache entry
+  *    owns; so a fired scope stays registered, clearing its dropped
+  *    builders after every later execution, until [[MaxPending]] newer
+  *    fired scopes displace it. A released checkpoint cannot be
+  *    recomputed, so a relation the result re-reads on a second action
+  *    must be a cache, not a checkpoint;
   *  - plan-only safe: a consumer that never executes (`explain`, plan
   *    specs) registers no blocks, so the unfired listener holds only a
   *    plan reference, and at most [[MaxPending]] such listeners stay
@@ -57,10 +63,13 @@ object CacheScope {
     */
   val MaxPending = 64
 
+  private val lock = new Object
   private val pending = new java.util.LinkedHashMap[QueryExecutionListener, SparkSession]()
+  /** Fired scopes whose dropped cache builders are still re-cleared. */
+  private val watching = new java.util.LinkedHashMap[QueryExecutionListener, SparkSession]()
 
   /** Scopes registered and neither fired nor forgotten. */
-  def pendingCount: Int = pending.synchronized(pending.size)
+  def pendingCount: Int = lock.synchronized(pending.size)
 
   /** Frees the storage `df` itself holds, without blocking: its
     * CacheManager entry, and the RDD at the root of its plan when that RDD
@@ -121,38 +130,59 @@ object CacheScope {
     val spark = result.sparkSession
     val target = result.queryExecution.analyzed
     lazy val listener: QueryExecutionListener = new QueryExecutionListener {
-      private def maybeFree(qe: QueryExecution): Unit = {
-        val hit =
-          try qe.analyzed.exists(_.sameResult(target))
-          catch { case _: Throwable => false }
-        if (hit && deregister(listener))
-          handles.foreach { h =>
-            try release(h) catch { case _: Throwable => () }
+      // clears the cache builders the free dropped; empty until it fires
+      private var dropped = Seq.empty[() => Unit]
+      private def onEnd(qe: QueryExecution): Unit =
+        if (dropped.nonEmpty) dropped.foreach(_())
+        else {
+          val hit =
+            try qe.analyzed.exists(_.sameResult(target))
+            catch { case _: Throwable => false }
+          if (hit && lock.synchronized(pending.remove(listener) != null)) {
+            // builders first: releasing a handle re-caches the handles
+            // that read it under new builders
+            dropped = handles.flatMap { h =>
+              try CacheBridge.clearer(h) catch { case _: Throwable => None }
+            }
+            handles.foreach { h =>
+              try release(h) catch { case _: Throwable => () }
+            }
+            if (dropped.isEmpty) unregister(listener, spark)
+            else admit(watching, listener, spark).foreach((unregister _).tupled)
           }
-      }
+        }
       override def onSuccess(
           funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        maybeFree(qe)
+        onEnd(qe)
       override def onFailure(
           funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        maybeFree(qe)
+        onEnd(qe)
     }
-    val forgotten = pending.synchronized {
-      pending.put(listener, spark)
+    val forgotten = lock.synchronized {
       spark.listenerManager.register(listener)
-      val it = pending.keySet.iterator
-      List.fill(math.max(0, pending.size - MaxPending))(it.next())
+      admit(pending, listener, spark)
     }
-    forgotten.foreach(deregister)
+    forgotten.foreach((unregister _).tupled)
     result
   }
 
-  /** Removes a pending scope; true only for the call that removed it. */
-  private def deregister(listener: QueryExecutionListener): Boolean = {
-    val spark = pending.synchronized(pending.remove(listener))
-    spark != null && {
-      try spark.listenerManager.unregister(listener) catch { case _: Throwable => () }
-      true
+  /** Adds a scope to `scopes` and removes the oldest past [[MaxPending]],
+    * returning those for the caller to unregister outside the lock.
+    */
+  private def admit(
+      scopes: java.util.LinkedHashMap[QueryExecutionListener, SparkSession],
+      listener: QueryExecutionListener,
+      spark: SparkSession): List[(QueryExecutionListener, SparkSession)] =
+    lock.synchronized {
+      scopes.put(listener, spark)
+      val it = scopes.entrySet.iterator
+      List.fill(math.max(0, scopes.size - MaxPending)) {
+        val e = it.next()
+        it.remove()
+        e.getKey -> e.getValue
+      }
     }
-  }
+
+  private def unregister(listener: QueryExecutionListener, spark: SparkSession): Unit =
+    try spark.listenerManager.unregister(listener) catch { case _: Throwable => () }
 }

@@ -160,6 +160,27 @@ class CacheScopeSpec extends SparkSpec {
     assert(CacheScope.pendingCount <= CacheScope.MaxPending)
   }
 
+  test("an action planned before the free does not leave the dropped " +
+    "cache pinned") {
+    import graft.util.{CacheScope, ListenerFence}
+    import org.apache.spark.sql.functions.{count, lit}
+    spark.catalog.clearCache()
+    val before = pinned()
+    val h = spark.range(100).toDF("x").cache()
+    val result = CacheScope.freeAfterUse(h.filter($"x" % 2 === 0), Seq(h))
+    // substituted against the cache while its entry still exists;
+    // collect() runs this same QueryExecution (head() would plan anew)
+    val again = result.agg(count(lit(1)))
+    assert(again.queryExecution.withCachedData.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]))
+    assert(result.count() == 50)
+    assert(ListenerFence.await(spark.sparkContext))
+    assert(h.storageLevel == StorageLevel.NONE, "the scope did not fire")
+    assert(again.collect().head.getLong(0) == 50)
+    assert(ListenerFence.await(spark.sparkContext))
+    assertEventuallyFreed(before, "an action planned before the free")
+  }
+
   test("a second action on the same freed DataFrame still computes the " +
     "identical result (unpersist drops blocks, not semantics)") {
     val df = TextAnalysis.winnowingOverlap(docs, k = 2, w = 2)

@@ -217,14 +217,9 @@ object ScaleProbe {
           graft.ops.Similarity.ivfTopKAdaptive(emb, budget = 125L).count())
         time(s"$label ann_ivf_trained")(
           graft.ops.KMeans.ivfTopKTrainedAdaptive(emb).count())
-        // the explicit CONSTANT-cap override (r10: no longer the default —
-        // the 200× probe proved its zero-recall footgun under heavy
-        // duplication, so maxDf = 0 self-derivation is what q38/q77 run)
-        time(s"$label ngram_jaccard_capped maxDf=100")(
-          graft.ops.NearDup.ngramJaccardPairsCapped(docs, maxDf = 100).count())
-        // the SELF-TUNING DEFAULT (q102/q38/q77). Measured findings on the
+        // the SELF-TUNING derived cap (q102/q38/q77). Measured findings on the
         // clone-mult corpora (SCALEPROBE_r9_200x + attempted 50×/200×
-        // runs): the constant cap 100 has zero recall at 200× (every
+        // runs): a constant cap of 100 had zero recall at 200× (every
         // original shingle is hot — 27 s for 0 rows), and the derived cap
         // restores recall within its budget, but that budget is a COST
         // contract — fanoutBudget·postings joined rows (1.3B at 50×, 5.3B
@@ -238,7 +233,7 @@ object ScaleProbe {
         // stage below is that redirect, measured.
         if (mult <= 10)
           time(s"$label ngram_jaccard_capped derived")(
-            graft.ops.NearDup.ngramJaccardPairsCapped(docs, maxDf = 0).count())
+            graft.ops.NearDup.ngramJaccardPairsCapped(docs).count())
         else
           timeInfo(s"$label derived_default_pair_gate")({
             try {

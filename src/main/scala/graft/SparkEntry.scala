@@ -136,9 +136,8 @@ object SparkEntry {
     "q36_ann_ivf_topk" -> ((s, dir) => Similarity.ivfTopKAdaptive(Tables.embeddings(s, dir))),
     // the curation endpoint: near-dup connected components → keep-list
     "q37_dedup_keeplist" -> ((s, dir) => NearDup.dedupKeepList(Tables.documents(s, dir))),
-    // df-capped inverted index — the hot-key escalation for q32, through
-    // the r10 DEFAULT (maxDf = 0: self-derived cap + plan-time pair-cost
-    // gate), so the oracle checks exactly what production callers run
+    // df-capped inverted index — the hot-key escalation for q32, with the
+    // self-derived cap + plan-time pair-cost gate every caller runs
     "q38_ngram_jaccard_capped" -> ((s, dir) =>
       NearDup.ngramJaccardPairsCapped(Tables.documents(s, dir))),
     // R1 — chained migration v2→v3 (device/geo columns)
@@ -404,7 +403,7 @@ object SparkEntry {
     "q97_bpe_merges_local" -> ((s, dir) =>
       graft.ops.BPE.bpeMergesLocal(Tables.documents(s, dir), trainCap = 0)),
     // cap-pressure observability for the df-capped near-dup machine
-    // (q38/q77): corpus df statistics, what the constant cap trims, the
+    // (q38/q77): corpus df statistics, what a constant cap of 100 trims, the
     // capped/uncapped candidate-pair volumes, and the corpus-DERIVED cap
     // (largest cap within the posting-join fan-out budget; -1 = capping
     // buys nothing here) — the q38 analog of lshBudgetPressure, made a
@@ -432,16 +431,15 @@ object SparkEntry {
     // so the plan stays parallel at any corpus size
     "q101_training_shards" -> ((s, dir) =>
       Curate.trainingShards(Tables.documents(s, dir))),
-    // the SELF-TUNING capped near-dup entry point (maxDf = 0 derives the
-    // cap from the corpus df histogram): the oracle re-derives the cap in
+    // the SELF-TUNING capped near-dup entry point (the cap is derived
+    // from the corpus df histogram): the oracle re-derives the cap in
     // SQL and applies it, so the plan-time adaptation is hash-checked
     // end-to-end — the q46 pattern, for the df cap
     // fanoutBudget = 2 makes the derivation BIND at the driver's sf0.01
     // (cap 4 vs max_df 7), so the trimming branch — not just the
     // uncapped fallback — is what the hash-check exercises
     "q102_jaccard_derived_cap" -> ((s, dir) =>
-      NearDup.ngramJaccardPairsCapped(Tables.documents(s, dir),
-        maxDf = 0, fanoutBudget = 2)),
+      NearDup.ngramJaccardPairsCapped(Tables.documents(s, dir), fanoutBudget = 2)),
     // quality-priority keep-list: within a near-dup component the
     // HIGHEST-quality member survives (ties -> smaller doc_id) - the
     // canonical-copy rule production curation wants, vs q37's min-id

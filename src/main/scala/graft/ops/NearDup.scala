@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions.TextFunctions._
 
 /** Near-duplicate detection for training-data curation: MinHash+LSH over
@@ -259,9 +260,9 @@ object NearDup {
   val BucketBudget = 64
 
   /** Plan-time joined-row budget for the derived-cap pair stage
-    * ([[ngramJaccardPairsCapped]] / [[ngramContainmentCapped]] with
-    * `maxDf = 0`, the default): the posting self-join over the capped
-    * vocabulary produces EXACTLY `Σ_{df≤cap} df·(df−1)/2` rows (shingles
+    * ([[ngramJaccardPairsCapped]] / [[ngramContainmentCapped]]): the
+    * posting self-join over the capped vocabulary produces EXACTLY
+    * `Σ_{df≤cap} df·(df−1)/2` rows (shingles
     * are distinct per document), and on clone-heavy corpora that pair
     * volume is inherently quadratic in the duplication factor — unbounded
     * where the keep-list's output is ≤ n. The entry points compute this
@@ -416,7 +417,7 @@ object NearDup {
   def ngramJaccardPairs(
       documents: DataFrame, n: Int = 3, minJaccard: Double = 0.5): DataFrame = {
     val t = minJaccard
-    val sh = shingleSets(documents, n)
+    val sh = shingleSets(documents, n).cache()
     val posts = rankedPostings(sh)
       // Jaccard prefix: tokens ranked past |A| − ⌊t·|A|⌋ + 1 can never be
       // a qualifying pair's first shared token. ⌊·⌋+1 (not ⌈·⌉) keeps the
@@ -453,15 +454,30 @@ object NearDup {
       Seq(sh, posts))
   }
 
-  /** doc_id + distinct n-shingle set for an arbitrary width (the prefix
-    * machine's input; [[shingled]] is the fixed-width MinHash flavor).
+  /** doc_id + distinct n-shingle set for an arbitrary width, uncached —
+    * the one builder behind the prefix machine, the capped machine and the
+    * df-cap diagnostics ([[shingled]] is the fixed-width MinHash flavor).
+    * Callers that read it more than once cache it themselves.
     */
   private def shingleSets(documents: DataFrame, n: Int): DataFrame =
     documents
       .repartition(col("doc_id"))
       .select(col("doc_id"), graft.functions.ShingleSet.shingles(col("text"), n).as("shingles"))
       .filter(size(col("shingles")) > 0)
-      .cache()
+
+  /** Distinct-shingle document frequencies `(shingle, df)` of a
+    * [[shingleSets]] relation — the inverted-index df table. */
+  private def shingleDf(sh: DataFrame): DataFrame =
+    sh.select(explode(col("shingles")).as("shingle"))
+      .groupBy("shingle").agg(count(lit(1)).as("df"))
+
+  /** The distinct-df histogram `(df, n_words)` of a df table, collected to
+    * the driver sorted by df: it holds one row per distinct df value
+    * (≪ vocabulary), the input of [[capFromHistogram]]. */
+  private def dfHistogram(dfTab: DataFrame): Seq[(Long, Long)] =
+    graft.util.JobDesc.labeled(dfTab.sparkSession, "capped: df histogram")(
+      dfTab.groupBy("df").agg(count(lit(1)).as("n_words")).collect())
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
 
   /** Postings ranked under the global token order (ascending document
     * frequency, ties by shingle text): `(doc_id, shingle, df, pos, n_sh)`
@@ -470,14 +486,12 @@ object NearDup {
     * keys. One linear df aggregation + one per-doc window — no quadratic
     * term anywhere.
     */
-  private def rankedPostings(sh: DataFrame): DataFrame = {
-    val ex = sh.select(col("doc_id"), size(col("shingles")).as("n_sh"),
-      explode(col("shingles")).as("shingle"))
-    val dfTab = ex.groupBy("shingle").agg(count(lit(1)).as("df"))
-    ex.join(dfTab, "shingle")
+  private def rankedPostings(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), size(col("shingles")).as("n_sh"),
+        explode(col("shingles")).as("shingle"))
+      .join(shingleDf(sh), "shingle")
       .withColumn("pos", row_number().over(
         Window.partitionBy("doc_id").orderBy("df", "shingle")))
-  }
 
   /** Exact-verification tail shared by the prefix-filtered ops: join the
     * candidate pairs back to both shingle arrays and count the true
@@ -517,7 +531,7 @@ object NearDup {
   def ngramContainment(
       documents: DataFrame, n: Int = 3, minContainment: Double = 0.9): DataFrame = {
     val t = minContainment
-    val sh = shingleSets(documents, n)
+    val sh = shingleSets(documents, n).cache()
     // both directed sides derive from the same ranked relation — cache so
     // the df-agg + window lineage runs once
     val ranked = rankedPostings(sh).cache()
@@ -548,14 +562,8 @@ object NearDup {
       Seq(sh, ranked))
   }
 
-  def ngramContainmentSql(n: Int = 3, minContainment: Double = 0.9): String = {
-    val gram = (0 until n).map(i => s"toks[i+$i]").mkString(" || ' ' || ")
-    s"""WITH sh AS (
-       |  SELECT doc_id,
-       |    CASE WHEN len(toks) >= $n
-       |      THEN list_distinct(list_transform(generate_series(1, len(toks)-${n - 1}), i -> $gram))
-       |      ELSE [] END AS shingles
-       |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS toks FROM documents)),
+  def ngramContainmentSql(n: Int = 3, minContainment: Double = 0.9): String =
+    s"""WITH ${shingleSetsCte(n)},
        |pc AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |    len(list_intersect(a.shingles, b.shingles)) AS n_common,
@@ -576,16 +584,9 @@ object NearDup {
        |FROM directed
        |WHERE CAST(n_common AS DOUBLE) / n_contained >= $minContainment
        |ORDER BY contained, container""".stripMargin
-  }
 
-  def ngramJaccardPairsSql(n: Int = 3, minJaccard: Double = 0.5): String = {
-    val gram = (0 until n).map(i => s"toks[i+$i]").mkString(" || ' ' || ")
-    s"""WITH sh AS (
-       |  SELECT doc_id,
-       |    CASE WHEN len(toks) >= $n
-       |      THEN list_distinct(list_transform(generate_series(1, len(toks)-${n - 1}), i -> $gram))
-       |      ELSE [] END AS shingles
-       |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS toks FROM documents))
+  def ngramJaccardPairsSql(n: Int = 3, minJaccard: Double = 0.5): String =
+    s"""WITH ${shingleSetsCte(n)}
        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |  CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
        |    / len(list_distinct(a.shingles || b.shingles)) AS jaccard
@@ -594,7 +595,6 @@ object NearDup {
        |  AND CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
        |    / len(list_distinct(a.shingles || b.shingles)) >= $minJaccard
        |ORDER BY doc_a, doc_b""".stripMargin
-  }
 
   /** Connected components over near-dup pairs via alternating
     * large-star / small-star (the public MapReduce formulation: Kiveris et
@@ -904,9 +904,9 @@ object NearDup {
   }
 
   /** The documented scale escalation for [[ngramJaccardPairs]]: drop
-    * shingles whose document frequency exceeds `maxDf` from the inverted
+    * shingles whose document frequency exceeds a cap from the inverted
     * index before the self-join. Candidate recall is exact for any pair
-    * sharing at least one sub-hot shingle (hot shingles carry no
+    * sharing at least one sub-cap shingle (hot shingles carry no
     * discriminative signal anyway); the posting join cost drops from
     * Σdf² to Σ min(df,cap)² over the capped vocabulary.
     *
@@ -914,15 +914,34 @@ object NearDup {
     * the documents corpus has a degenerate 2-gram vocabulary of 931
     * distinct shingles, and 99.997% of the uncapped Σdf² (73,198,557 of
     * 73,200,955 posting pairs) comes from shingles with df > 100. Exact
-    * 2-gram Jaccard at t = 0.5 ran 19.0 s uncapped for 256 pairs; maxDf =
-    * 400 ran 15.6 s for the SAME 256 pairs (the cap bound only
-    * non-discriminative keys); maxDf = 100 ran 6.5 s for 13 pairs (hot-only
+    * 2-gram Jaccard at t = 0.5 ran 19.0 s uncapped for 256 pairs; a cap
+    * of 400 ran 15.6 s for the SAME 256 pairs (the cap bound only
+    * non-discriminative keys); a cap of 100 ran 6.5 s for 13 pairs (hot-only
     * pairs dropped — the recall contract). Hot df grows linearly with
     * corpus size, so the uncapped join cost is QUADRATIC in corpus scale
     * while the capped index stays ≤ cap²·vocab.
     * On the 3-gram default the cap barely binds (avg df ≈ 37 < 100), so
     * q38 costs ≈ q32 plus the df/doc-stats overhead — the escalation is
     * insurance you buy for hot-key distributions, not a free speedup.
+    *
+    * The cap is DERIVED from the corpus df histogram ([[capFromHistogram]],
+    * reported by [[derivedDfCap]] and q98's `derived_cap`): the largest cap
+    * whose capped join cost stays within `fanoutBudget` joined postings per
+    * posting, so recall adapts to the corpus — never tighter than the
+    * budget, uncapped when the uncapped cost already fits. A constant cap
+    * has ZERO recall under heavy duplication: at 200× every original
+    * shingle exceeds df 100, the capped index empties and the op returns 0
+    * rows while near-dup structure exists (`SCALEPROBE_r9_200x.json`).
+    * The keep-list ops ([[dedupKeepList]] /
+    * [[minhashNearDups]]) fit that regime: their hub budget degrades
+    * gracefully and their output is ≤ n by construction.
+    *
+    * The same histogram COST-GATES the pair stage: the joined-row count is
+    * computed exactly before the self-join launches, and the call refuses
+    * above `pairBudget` with a keep-list redirect (see [[PairBudget]]) —
+    * the pair relation is inherently quadratic on clone-heavy corpora, and
+    * that must fail at plan time, not as an executor OOM mid-shuffle. So
+    * constructing the DataFrame runs the histogram job.
     *
     * Reported Jaccard values are still EXACT over the full shingle sets,
     * without ever shuffling a shingle array:
@@ -937,37 +956,10 @@ object NearDup {
     *     (tiny — just the over-cap vocabulary) for the exact hot
     *     correction. The full arrays never leave the document scan.
     */
-  /** DEFAULT CONTRACT (r10, after the r9 200× probe): `maxDf = 0` — the
-    * SELF-TUNING derived cap — is the default. The cap is derived from the
-    * corpus df histogram (same rule as [[derivedDfCap]]: largest cap whose
-    * capped join cost stays within `fanoutBudget` joined postings per
-    * posting), so recall adapts to the corpus: never tighter than the
-    * budget, effectively uncapped when the uncapped cost already fits.
-    *
-    * Passing a CONSTANT `maxDf > 0` is the explicit override, and it
-    * carries a documented footgun: under heavy duplication a constant cap
-    * has ZERO recall — at 200× duplication every original shingle exceeds
-    * df 100, the capped inverted index EMPTIES, and the op returns 0 rows
-    * while real near-dup structure exists (measured:
-    * `SCALEPROBE_r9_200x.json`). Use the constant form only when the cap
-    * is a deliberate, corpus-informed recall trade — or reach for the
-    * keep-list ops ([[dedupKeepList]] / [[minhashNearDups]]), whose hub
-    * budget degrades gracefully and whose output is ≤ n by construction.
-    *
-    * The derived default additionally COST-GATES the pair stage: the
-    * joined-row count is computed exactly from the df histogram before the
-    * self-join launches, and the call refuses above `pairBudget` with a
-    * keep-list redirect (see [[PairBudget]]) — the pair relation is
-    * inherently quadratic on clone-heavy corpora, and that must fail at
-    * plan time, not as an executor OOM mid-shuffle. The constant-cap
-    * override stays fully LAZY (no job at construction time), so it
-    * cannot be cost-gated — documented trade.
-    */
   def ngramJaccardPairsCapped(
       documents: DataFrame, n: Int = 3, minJaccard: Double = 0.5,
-      maxDf: Int = 0, fanoutBudget: Int = 100,
-      pairBudget: Long = PairBudget): DataFrame =
-    cappedCommonCounts(documents, n, maxDf,
+      fanoutBudget: Int = 100, pairBudget: Long = PairBudget): DataFrame =
+    cappedCommonCounts(documents, n,
       mc => mc.cast("double") / (col("n_a") + col("n_b") - mc) >= minJaccard,
       fanoutBudget, pairBudget)
       .select(col("doc_a"), col("doc_b"),
@@ -983,16 +975,12 @@ object NearDup {
     * prune. Shares q38's documented recall contract: pairs overlapping
     * ONLY in over-cap shingles are not candidates — which is exactly the
     * hot-boilerplate overlap containment detection exists to ignore.
-    * Default/override/cost-gate contract identical to
-    * [[ngramJaccardPairsCapped]]: `maxDf = 0` (default) self-derives the
-    * cap and refuses past `pairBudget`; a constant `maxDf` is the lazy,
-    * ungated override with the 200×-measured zero-recall footgun.
+    * Derived cap and plan-time cost gate as in [[ngramJaccardPairsCapped]].
     */
   def ngramContainmentCapped(
       documents: DataFrame, n: Int = 3, minContainment: Double = 0.9,
-      maxDf: Int = 0, fanoutBudget: Int = 100,
-      pairBudget: Long = PairBudget): DataFrame =
-    cappedCommonCounts(documents, n, maxDf,
+      fanoutBudget: Int = 100, pairBudget: Long = PairBudget): DataFrame =
+    cappedCommonCounts(documents, n,
       mc => mc.cast("double") / least(col("n_a"), col("n_b")) >= minContainment,
       fanoutBudget, pairBudget)
       .select(explode(array(
@@ -1014,58 +1002,25 @@ object NearDup {
     * count, so it can only over-keep, never over-drop).
     */
   private def cappedCommonCounts(
-      documents: DataFrame, n: Int, maxDf0: Int,
-      prune: Column => Column, fanoutBudget: Int = 100,
-      pairBudget: Long = Long.MaxValue): DataFrame = {
-    val sh = documents
-      .repartition(col("doc_id"))
-      .select(col("doc_id"), graft.functions.ShingleSet.shingles(col("text"), n).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .cache()
-    val dfTab = sh.select(explode(col("shingles")).as("shingle"))
-      .groupBy("shingle").agg(count(lit(1)).as("df"))
-    if (maxDf0 > 0) {
-      // Explicit constant cap: fully LAZY — no Spark job runs at
-      // DataFrame-construction time, so plan-only consumers (`explain`,
-      // plan-shape specs, composition into bigger dataflows) cost
-      // nothing (ADVICE r9). The price: no clean-corpus fast path and no
-      // plan-time cost gate — both need driver statistics. A caller who
-      // EXPLICITLY tightens pairBudget alongside a constant cap is asking
-      // for a gate this branch cannot provide — refuse loudly rather
-      // than silently ignore the safety argument (r10 review find).
-      if (pairBudget != PairBudget && pairBudget != Long.MaxValue)
-        throw new IllegalArgumentException(
-          "pairBudget is only enforced by the derived default (maxDf = 0): " +
-          "the constant-cap override is lazy and computes no plan-time " +
-          "statistics. Use maxDf = 0, or drop the custom pairBudget.")
-      // The hot-flag relation is derived in-plan from the uncached df
-      // aggregation.
-      return hotCappedCounts(sh,
-        dfTab.filter(col("df") > maxDf0)
-          .select(col("shingle"), lit(true).as("hot_flag")),
-        prune)
-    }
-    // maxDf = 0 (the default): the [[derivedDfCap]] rule, computed on the
-    // DISTINCT-df histogram collected to the driver (≪ vocabulary —
-    // dfCapStats' "driver-trivial at any corpus size" argument, applied
-    // literally). The same histogram then answers, with NO further Spark
-    // jobs: (a) the plan-time pair-cost gate (exact, since shingles are
-    // distinct per doc), and (b) the clean/hot branch statistic — on a
-    // corpus with no over-cap vocabulary the hot machinery (broadcast
-    // flag join, per-doc hot arrays, both correction joins) computes
-    // nothing but still shuffles, so the plan collapses to posting join →
-    // pair counts → row-wise set sizes, with n_common = n_rare exact.
-    val dfc = dfTab.cache()
-    val hist = graft.util.JobDesc.labeled(documents.sparkSession,
-      "capped: df histogram")(
-      dfc.groupBy("df").agg(count(lit(1)).as("n_words"))
-        .collect()).map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      documents: DataFrame, n: Int, prune: Column => Column,
+      fanoutBudget: Int, pairBudget: Long): DataFrame = {
+    val sh = shingleSets(documents, n).cache()
+    // The cap comes from the DISTINCT-df histogram collected to the
+    // driver (≪ vocabulary). The same histogram then answers, with NO
+    // further Spark jobs: (a) the plan-time pair-cost gate (exact, since
+    // shingles are distinct per doc), and (b) the clean/hot branch
+    // statistic — on a corpus with no over-cap vocabulary the hot
+    // machinery (broadcast flag join, per-doc hot arrays, both correction
+    // joins) computes nothing but still shuffles, so the plan collapses to
+    // posting join → pair counts → row-wise set sizes, with
+    // n_common = n_rare exact.
+    val dfc = shingleDf(sh).cache()
+    val hist = dfHistogram(dfc)
     // cap + cost gate from ONE shared derivation ([[capFromHistogram]] —
-    // also the audit's, so the audit cannot diverge from the gate): the
-    // capped posting self-join emits EXACTLY Σ_{df≤cap} df·(df−1)/2 rows;
-    // refuse at plan time rather than OOM mid-shuffle (the r9 200×
-    // regime). Exact, so a probe can check the estimate against the
-    // measured join output 1:1.
+    // also the audit's and q98's): the capped posting self-join emits
+    // EXACTLY Σ_{df≤cap} df·(df−1)/2 rows; refuse at plan time rather than
+    // OOM mid-shuffle (the r9 200× regime). Exact, so a probe can check
+    // the estimate against the measured join output 1:1.
     val (capL, joinedPairs) = capFromHistogram(hist, fanoutBudget)
     val maxDf: Int = capL.toInt // capFromHistogram caps at Int.MaxValue
     if (joinedPairs > pairBudget) {
@@ -1118,11 +1073,10 @@ object NearDup {
       hotCappedCounts(sh, hotSet, prune), Seq(dfc))
   }
 
-  /** The hot-vocabulary capped machine shared by the lazy constant-cap
-    * path and the derived path's hot branch: flag postings against the
-    * broadcast hot set, one capped posting self-join for candidates +
-    * exact rare counts, per-doc scalar upper-bound prune, exact hot
-    * correction for survivors only.
+  /** The capped machine's hot branch: flag postings against the broadcast
+    * hot set, one capped posting self-join for candidates + exact rare
+    * counts, per-doc scalar upper-bound prune, exact hot correction for
+    * survivors only.
     */
   private def hotCappedCounts(
       sh: DataFrame, hotSet: DataFrame,
@@ -1171,9 +1125,7 @@ object NearDup {
     // Exact hot correction for the survivors only (hot arrays are tiny).
     val hA = docStats.select(col("doc_id").as("doc_a_h"), col("hot_arr").as("hot_a"))
     val hB = docStats.select(col("doc_id").as("doc_b_h"), col("hot_arr").as("hot_b"))
-    // intra-query caches (and the derived path's checkpointed hot set)
-    // freed after the caller's action (r19 §5); the constant-cap path's
-    // hotSet is an in-plan relation — freeing it is a no-op there.
+    // intra-query caches freed after the caller's action (r19 §5)
     graft.util.CacheScope.freeAfterUse(
       survivors
         .join(hA, col("doc_a") === col("doc_a_h"))
@@ -1182,106 +1134,59 @@ object NearDup {
           (col("n_rare") + size(array_intersect(col("hot_a"), col("hot_b")))
             .cast("long")).as("n_common"),
           col("n_a"), col("n_b")),
-      Seq(sh, hotSet, ex, docStats, exCapped))
+      Seq(sh, ex, docStats, exCapped))
   }
 
-  /** Distinct-shingle document frequencies — the inverted-index df table
-    * both capped entry points and the cap diagnostics share. */
-  private def shingleDf(documents: DataFrame, n: Int): DataFrame =
-    documents
-      .repartition(col("doc_id"))
-      .select(graft.functions.ShingleSet.shingles(col("text"), n).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .select(explode(col("shingles")).as("shingle"))
-      .groupBy("shingle").agg(count(lit(1)).as("df"))
-
-  /** Per-shingle cap-pressure diagnostic for the df-capped machine — the
-    * q38/q77 analog of [[lshBudgetPressure]] (VERDICT r8: the cap was
-    * silent — nothing observable said whether it bound): one row per
-    * OVER-CAP shingle with its document frequency, the postings the cap
-    * removes from the inverted index (all `df` of them — hot shingles are
-    * dropped entirely; exactness is recovered by the hot-correction join),
-    * and the posting pairs no longer generated through that shingle
-    * (`df·(df−1)/2`; a pair can still surface via a shared sub-cap
-    * shingle). Empty result = the cap is a no-op on this corpus and the
-    * capped plan's overhead bought no cost reduction.
-    */
-  def dfCapPressure(
-      documents: DataFrame, n: Int = 3, maxDf: Int = 100): DataFrame =
-    shingleDf(documents, n)
-      .filter(col("df") > maxDf)
-      .select(col("shingle"), col("df"),
-        col("df").as("dropped_postings"),
-        shiftright(col("df") * (col("df") - 1), 1).as("dropped_pairs"))
-      .orderBy(desc("df"), col("shingle"))
-
   /** One-row corpus df statistics + cap pressure summary (oracle-checked
-    * as q98): total shingle vocabulary, posting count, the constant cap's
-    * pressure (how many shingles/postings it trims, candidate-pair volume
-    * before/after), and the CORPUS-DERIVED cap — the largest cap whose
-    * capped posting-join cost `Σ_{df≤cap} df²` stays within `fanoutBudget`
-    * joined postings per posting (cost ≤ budget · total postings).
-    * `cap = budget` is always valid (`cost(β) ≤ β·P`), so the derived cap
-    * is never TIGHTER than the constant-β default — recall only improves —
-    * and `derived_cap = -1` means even the uncapped cost fits the budget:
-    * capping buys nothing on this corpus, apply none. The histogram the
-    * rule scans is distinct-df-valued (≪ vocabulary), so the cumulative
-    * window is driver-trivial at any corpus size.
+    * as q98): total shingle vocabulary, posting count, a constant cap's
+    * pressure (how many shingles/postings `maxDf` trims, candidate-pair
+    * volume before/after), and the cap the capped ops derive
+    * ([[capFromHistogram]]) — the largest cap whose capped posting-join
+    * cost `Σ_{df≤cap} df²` stays within `fanoutBudget` joined postings per
+    * posting. `cap = budget` is always valid (`cost(β) ≤ β·P`), so the
+    * derived cap is never TIGHTER than a constant cap of the budget.
+    * `derived_cap = -1` means even the uncapped cost fits the budget
+    * (capping buys nothing, apply none); NULL means no df fits it (the
+    * capped ops then serve with cap 0: every shingle is hot). The row is
+    * computed on the driver from the collected distinct-df histogram
+    * (≪ vocabulary); an empty corpus gives one all-NULL row.
     */
   def dfCapStats(
       documents: DataFrame, n: Int = 3, maxDf: Int = 100,
       fanoutBudget: Int = 100): DataFrame = {
-    val hist = shingleDf(documents, n)
-      .groupBy("df").agg(count(lit(1)).as("n_words"))
-    val pairs = shiftright(col("df") * (col("df") - 1), 1)
-    val tot = hist.agg(
-      sum(col("n_words")).as("n_shingles"),
-      sum(col("df") * col("n_words")).as("postings"),
-      max(col("df")).as("max_df"),
-      sum(when(col("df") > maxDf, col("n_words")).otherwise(0L)).as("n_hot"),
-      sum(when(col("df") > maxDf, col("df") * col("n_words")).otherwise(0L))
-        .as("hot_postings"),
-      sum(pairs * col("n_words")).as("pairs_uncapped"),
-      sum(when(col("df") <= maxDf, pairs * col("n_words")).otherwise(0L))
-        .as("pairs_capped"))
-    // cumulative posting-join cost per candidate cap, as a broadcast
-    // range self-join over the distinct-df HISTOGRAM (bounded ≪
-    // vocabulary — driver-trivial by construction). A global window would
-    // compute the same prefix sum but executes as an unpartitioned
-    // WindowExec (Spark 4's EliminateWindowPartitions strips any constant
-    // partition key), warning on every run; the hist×hist join is
-    // hist-quadratic at worst — trivial here — and needs no sort at all.
-    val costs = hist.select(col("df").as("df2"),
-      (col("df") * col("df") * col("n_words")).as("cost2"))
-    val cum = hist.select(col("df"))
-      .join(broadcast(costs), col("df2") <= col("df"))
-      .groupBy("df").agg(sum(col("cost2")).as("cum_cost"))
-    val valid = cum
-      .crossJoin(broadcast(tot.select(col("postings").as("p_"))))
-      .filter(col("cum_cost") <= lit(fanoutBudget.toLong) * col("p_"))
-      .agg(max(col("df")).as("valid_max"))
-    tot.crossJoin(broadcast(valid))
-      .select(col("n_shingles").cast("long").as("n_shingles"),
-        col("postings").cast("long").as("postings"),
-        col("max_df").cast("long").as("max_df"),
-        col("n_hot").cast("long").as("n_hot"),
-        col("hot_postings").cast("long").as("hot_postings"),
-        col("pairs_uncapped").cast("long").as("pairs_uncapped"),
-        col("pairs_capped").cast("long").as("pairs_capped"),
-        when(col("valid_max") === col("max_df"), lit(-1L))
-          .otherwise(col("valid_max").cast("long")).as("derived_cap"))
+    import Math.{addExact, multiplyExact}
+    val hist = dfHistogram(shingleDf(shingleSets(documents, n)))
+    // exact arithmetic: an overflow fails loudly, like Spark's ANSI sums
+    def total(f: (Long, Long) => Long): Long =
+      hist.foldLeft(0L) { case (s, (df, nw)) => addExact(s, f(df, nw)) }
+    def pairs(df: Long): Long = multiplyExact(df, df - 1) / 2
+    val cap = capFromHistogram(hist, fanoutBudget)._1
+    val values: Seq[Any] =
+      if (hist.isEmpty) Seq.fill(8)(null)
+      else Seq(
+        total((_, nw) => nw),
+        total(multiplyExact),
+        hist.last._1,
+        total((df, nw) => if (df > maxDf) nw else 0L),
+        total((df, nw) => if (df > maxDf) multiplyExact(df, nw) else 0L),
+        total((df, nw) => multiplyExact(pairs(df), nw)),
+        total((df, nw) => if (df <= maxDf) multiplyExact(pairs(df), nw) else 0L),
+        if (cap == 0L) null else if (cap == Int.MaxValue) -1L else cap)
+    val names = Seq("n_shingles", "postings", "max_df", "n_hot",
+      "hot_postings", "pairs_uncapped", "pairs_capped", "derived_cap")
+    documents.sparkSession.createDataFrame(
+      java.util.List.of(Row.fromSeq(values)),
+      StructType(names.map(StructField(_, LongType))))
   }
 
-  /** The derived cap as a scalar, for callers passing `maxDf = 0` to the
-    * capped entry points: `Int.MaxValue` (no capping) when the corpus is
-    * light-tailed enough that the uncapped join already fits the budget.
+  /** The cap the capped entry points serve with, as a scalar:
+    * `Int.MaxValue` (no capping) when the corpus is light-tailed enough
+    * that the uncapped join already fits the budget, 0 when no df fits it.
     */
   def derivedDfCap(
-      documents: DataFrame, n: Int = 3, fanoutBudget: Int = 100): Int = {
-    val d = dfCapStats(documents, n, fanoutBudget, fanoutBudget)
-      .select("derived_cap").head().getLong(0)
-    if (d < 0 || d > Int.MaxValue.toLong) Int.MaxValue else d.toInt
-  }
+      documents: DataFrame, n: Int = 3, fanoutBudget: Int = 100): Int =
+    capFromHistogram(dfHistogram(shingleDf(shingleSets(documents, n))),
+      fanoutBudget)._1.toInt
 
   /** Saturating multiply/add for the derived-cap arithmetic: at 100 TB
     * corpus sizes df can reach ~3e9 docs, where df²·n_words crosses
@@ -1297,15 +1202,15 @@ object NearDup {
     catch { case _: ArithmeticException => Long.MaxValue }
 
   /** The distinct-df-histogram → (derived cap, exact pair estimate)
-    * derivation — ONE implementation shared by the gated default path
-    * ([[cappedCommonCounts]]) and its audit ([[derivedCapJoinAudit]]), so
-    * the audit can never diverge from the gate it evidences, including in
-    * the saturating-overflow regime the gate was hardened for (ADVICE
-    * r10: the audit used to re-derive with plain arithmetic). Returns
-    * `cap` (Int.MaxValue when the whole histogram fits the budget — no
-    * capping buys anything) and `estJoinedPairs` =
-    * Σ_{df≤cap} df·(df−1)/2 · n_words, the EXACT output row count of the
-    * capped posting self-join (shingles are distinct per document).
+    * derivation — the ONE cap rule, shared by the gated capped ops
+    * ([[cappedCommonCounts]]), [[derivedDfCap]], q98's [[dfCapStats]] and
+    * the gate's audit ([[derivedCapJoinAudit]]), so none can diverge from
+    * the gate, including in the saturating-overflow regime the gate was
+    * hardened for. Returns `cap` (Int.MaxValue when the whole histogram
+    * fits the budget — no capping buys anything; 0 when no df fits) and
+    * `estJoinedPairs` = Σ_{df≤cap} df·(df−1)/2 · n_words, the EXACT output
+    * row count of the capped posting self-join (shingles are distinct per
+    * document).
     */
   private[ops] def capFromHistogram(
       hist0: Seq[(Long, Long)], fanoutBudget: Int): (Long, Long) = {
@@ -1344,101 +1249,50 @@ object NearDup {
       documents: DataFrame, n: Int = 3, fanoutBudget: Int = 100): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val sh = documents
-      .repartition(col("doc_id"))
-      .select(col("doc_id"),
-        graft.functions.ShingleSet.shingles(col("text"), n).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-    val ex = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-      .cache()
-    val dfTab = ex.groupBy("shingle").agg(count(lit(1)).as("df")).cache()
-    // derive the cap from the df table ALREADY cached here — calling
-    // derivedDfCap(documents, …) would re-run the tokenize/shingle/df
-    // corpus pass a second time (r10 review find)
-    val hist = dfTab.groupBy("df").agg(count(lit(1)).as("n_words"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val (cap, est) = capFromHistogram(hist, fanoutBudget)
-    val exRare = ex
+    // the cached shingle sets feed both the df table and the audited
+    // join, so the tokenize/shingle corpus pass runs once
+    val sh = shingleSets(documents, n).cache()
+    val dfTab = shingleDf(sh).cache()
+    val (cap, est) = capFromHistogram(dfHistogram(dfTab), fanoutBudget)
+    val exRare = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
       .join(dfTab.filter(col("df") <= cap).select("shingle"), Seq("shingle"))
     val measured = exRare.toDF("shingle", "doc_a")
       .join(exRare.toDF("shingle_b", "doc_b"),
         col("shingle") === col("shingle_b") && col("doc_a") < col("doc_b"))
       .count()
-    graft.util.CacheScope.release(ex); graft.util.CacheScope.release(dfTab)
+    graft.util.CacheScope.release(sh); graft.util.CacheScope.release(dfTab)
     Seq((cap, est, measured))
       .toDF("derived_cap", "est_joined_rows", "measured_joined_rows")
   }
 
-  /** Oracle for `ngramJaccardPairsCapped(maxDf = 0)` — the SELF-TUNING
-    * entry point: the cap itself is DERIVED IN SQL from the same
-    * distinct-df histogram rule as [[derivedDfCap]] (largest cap whose
+  /** Oracle for [[ngramJaccardPairsCapped]] — the SELF-TUNING entry
+    * point: the cap itself is DERIVED IN SQL from the same distinct-df
+    * histogram rule as [[capFromHistogram]] (largest cap whose
     * `Σ_{df≤cap} df²` stays within `fanoutBudget · postings`; cap =
     * max_df when even uncapped fits, i.e. no trim), then applied by the
-    * same rare-postings candidate pipeline as the constant-cap oracle.
-    * This closes the adaptive loop the way q46 does for the IVF p ≥ 1
-    * branch: the plan-time derivation is hash-checked end-to-end, not
-    * just its statistic (q98).
+    * rare-postings candidate pipeline. This closes the adaptive loop the
+    * way q46 does for the IVF p ≥ 1 branch: the plan-time derivation is
+    * hash-checked end-to-end, not just its statistic (q98).
     */
   def ngramJaccardPairsDerivedSql(
-      n: Int = 3, minJaccard: Double = 0.5, fanoutBudget: Int = 100): String = {
-    val gram = (0 until n).map(i => s"toks[i+$i]").mkString(" || ' ' || ")
-    s"""WITH sh AS (
-       |  SELECT doc_id,
-       |    CASE WHEN len(toks) >= $n
-       |      THEN list_distinct(list_transform(generate_series(1, len(toks)-${n - 1}), i -> $gram))
-       |      ELSE [] END AS shingles
-       |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS toks FROM documents)),
-       |ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE len(shingles) > 0),
-       |d AS (SELECT shingle, count(*) AS df FROM ex GROUP BY shingle),
-       |hist AS (SELECT df, count(*) AS n_words FROM d GROUP BY df),
-       |tot AS (SELECT CAST(SUM(df * n_words) AS BIGINT) AS postings,
-       |               MAX(df) AS max_df FROM hist),
-       |cum AS (SELECT df, SUM(df * df * n_words) OVER (ORDER BY df) AS cum_cost FROM hist),
-       |capv AS (
-       |  SELECT MAX(cum.df) AS cap
-       |  FROM cum, tot WHERE cum.cum_cost <= $fanoutBudget * tot.postings),
-       |rare AS (SELECT shingle FROM d, capv WHERE d.df <= capv.cap),
-       |exc AS (SELECT e.doc_id, e.shingle FROM ex e JOIN rare r ON e.shingle = r.shingle),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM exc a JOIN exc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id)
+      n: Int = 3, minJaccard: Double = 0.5, fanoutBudget: Int = 100): String =
+    s"""${derivedCandCtes(n, fanoutBudget)}
        |SELECT doc_a, doc_b, jaccard FROM (
        |  SELECT c.doc_a, c.doc_b,
        |    CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
        |      / len(list_distinct(x.shingles || y.shingles)) AS jaccard
        |  FROM cand c JOIN sh x ON c.doc_a = x.doc_id JOIN sh y ON c.doc_b = y.doc_id)
        |WHERE jaccard >= $minJaccard ORDER BY doc_a, doc_b""".stripMargin
-  }
 
-  /** Oracle for `ngramContainmentCapped(maxDf = 0)` — the derived-cap
-    * default: same in-SQL cap derivation as
-    * [[ngramJaccardPairsDerivedSql]], and [[ngramContainmentSql]]'s
-    * directed containment output with BIGINT set sizes.
+  /** Oracle for [[ngramContainmentCapped]] — the derived-cap default: same
+    * in-SQL cap derivation as [[ngramJaccardPairsDerivedSql]], and
+    * [[ngramContainmentSql]]'s directed containment output with BIGINT
+    * set sizes.
     */
   def ngramContainmentDerivedSql(
       n: Int = 3, minContainment: Double = 0.9,
-      fanoutBudget: Int = 100): String = {
-    val gram = (0 until n).map(i => s"toks[i+$i]").mkString(" || ' ' || ")
-    s"""WITH sh AS (
-       |  SELECT doc_id,
-       |    CASE WHEN len(toks) >= $n
-       |      THEN list_distinct(list_transform(generate_series(1, len(toks)-${n - 1}), i -> $gram))
-       |      ELSE [] END AS shingles
-       |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS toks FROM documents)),
-       |ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE len(shingles) > 0),
-       |d AS (SELECT shingle, count(*) AS df FROM ex GROUP BY shingle),
-       |hist AS (SELECT df, count(*) AS n_words FROM d GROUP BY df),
-       |tot AS (SELECT CAST(SUM(df * n_words) AS BIGINT) AS postings,
-       |               MAX(df) AS max_df FROM hist),
-       |cum AS (SELECT df, SUM(df * df * n_words) OVER (ORDER BY df) AS cum_cost FROM hist),
-       |capv AS (
-       |  SELECT MAX(cum.df) AS cap
-       |  FROM cum, tot WHERE cum.cum_cost <= $fanoutBudget * tot.postings),
-       |rare AS (SELECT shingle FROM d, capv WHERE d.df <= capv.cap),
-       |exc AS (SELECT e.doc_id, e.shingle FROM ex e JOIN rare r ON e.shingle = r.shingle),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM exc a JOIN exc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id),
+      fanoutBudget: Int = 100): String =
+    s"""${derivedCandCtes(n, fanoutBudget)},
        |pc AS (
        |  SELECT c.doc_a, c.doc_b,
        |    len(list_intersect(x.shingles, y.shingles)) AS n_common,
@@ -1457,20 +1311,10 @@ object NearDup {
        |FROM directed
        |WHERE CAST(n_common AS DOUBLE) / n_contained >= $minContainment
        |ORDER BY contained, container""".stripMargin
-  }
 
   def dfCapStatsSql(
-      n: Int = 3, maxDf: Int = 100, fanoutBudget: Int = 100): String = {
-    val gram = (0 until n).map(i => s"toks[i+$i]").mkString(" || ' ' || ")
-    s"""WITH sh AS (
-       |  SELECT doc_id,
-       |    CASE WHEN len(toks) >= $n
-       |      THEN list_distinct(list_transform(generate_series(1, len(toks)-${n - 1}), i -> $gram))
-       |      ELSE [] END AS shingles
-       |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS toks FROM documents)),
-       |ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE len(shingles) > 0),
-       |d AS (SELECT shingle, count(*) AS df FROM ex GROUP BY shingle),
-       |hist AS (SELECT df, count(*) AS n_words FROM d GROUP BY df),
+      n: Int = 3, maxDf: Int = 100, fanoutBudget: Int = 100): String =
+    s"""${dfHistCtes(n)},
        |tot AS (
        |  SELECT CAST(SUM(n_words) AS BIGINT) AS n_shingles,
        |    CAST(SUM(df * n_words) AS BIGINT) AS postings,
@@ -1486,7 +1330,47 @@ object NearDup {
        |  pairs_uncapped, pairs_capped,
        |  CAST(CASE WHEN valid_max = max_df THEN -1 ELSE valid_max END AS BIGINT) AS derived_cap
        |FROM tot, cap""".stripMargin
+
+  /** The oracles' `sh` CTE: DuckDB's twin of [[shingleSets]], with an
+    * empty list where a document has fewer than n tokens.
+    */
+  private def shingleSetsCte(n: Int): String = {
+    val gram = (0 until n).map(i => s"toks[i+$i]").mkString(" || ' ' || ")
+    s"""sh AS (
+       |  SELECT doc_id,
+       |    CASE WHEN len(toks) >= $n
+       |      THEN list_distinct(list_transform(generate_series(1, len(toks)-${n - 1}), i -> $gram))
+       |      ELSE [] END AS shingles
+       |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS toks FROM documents))""".stripMargin
   }
+
+  /** `WITH` [[shingleSetsCte]], its postings `ex`, the df table `d` and
+    * the distinct-df histogram `hist` — the oracles' twin of
+    * [[shingleDf]] + [[dfHistogram]].
+    */
+  private def dfHistCtes(n: Int): String =
+    s"""WITH ${shingleSetsCte(n)},
+       |ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE len(shingles) > 0),
+       |d AS (SELECT shingle, count(*) AS df FROM ex GROUP BY shingle),
+       |hist AS (SELECT df, count(*) AS n_words FROM d GROUP BY df)""".stripMargin
+
+  /** [[dfHistCtes]], the derived cap `capv` and the candidate pairs
+    * `cand` that share a sub-cap shingle — the derived-cap oracles'
+    * common CTE chain.
+    */
+  private def derivedCandCtes(n: Int, fanoutBudget: Int): String =
+    s"""${dfHistCtes(n)},
+       |tot AS (SELECT CAST(SUM(df * n_words) AS BIGINT) AS postings,
+       |               MAX(df) AS max_df FROM hist),
+       |cum AS (SELECT df, SUM(df * df * n_words) OVER (ORDER BY df) AS cum_cost FROM hist),
+       |capv AS (
+       |  SELECT MAX(cum.df) AS cap
+       |  FROM cum, tot WHERE cum.cum_cost <= $fanoutBudget * tot.postings),
+       |rare AS (SELECT shingle FROM d, capv WHERE d.df <= capv.cap),
+       |exc AS (SELECT e.doc_id, e.shingle FROM ex e JOIN rare r ON e.shingle = r.shingle),
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM exc a JOIN exc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id)""".stripMargin
 
   // ---------------------------------------------------------------- SimHash
 

@@ -330,11 +330,9 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
   }
 
-  test("constant-cap capped Jaccard stays lazy AND its plan keeps the " +
-    "posting equi-join shape (r10 override contract)") {
-    val docs = graft.sources.Tables.documents(spark, dir)
-    val p = graft.ops.NearDup.ngramJaccardPairsCapped(docs, maxDf = 50)
-      .queryExecution.executedPlan.toString
+  test("derived-cap Jaccard (q102) takes the hot branch via the posting equi-join") {
+    val p = plan("q102_jaccard_derived_cap")
+    assert(p.contains("hot_flag") && p.contains("n_rare"), p)
     assert(p.contains("Exchange hashpartitioning(shingle"), p)
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
   }

@@ -264,7 +264,16 @@ class TextNearDupSpec extends SparkSpec {
     val boiler = (1 to 20).map(i => s"hot$i").mkString(" ")
     val hotDocs = (100L until 250L).map(i => (i, s"$boiler filler${i}a filler${i}b"))
     val hot = docs((hotDocs :+ (1L -> inner) :+ (2L -> (boiler + " " + outer))): _*)
-    val got = NearDup.ngramContainmentCapped(hot, maxDf = 100)
+    // the derived cap is a df present in the corpus (here 2; the
+    // boilerplate's df is 151), so it cannot equal a constant 100, but it
+    // puts exactly the shingles over the cap that a cap of 100 would
+    assert(NearDup.derivedDfCap(hot) == 2)
+    def overCap(c: Int) = {
+      val r = NearDup.dfCapStats(hot, maxDf = c).head()
+      (r.getAs[Long]("n_hot"), r.getAs[Long]("hot_postings"))
+    }
+    assert(overCap(2) == overCap(100) && overCap(2)._1 > 0)
+    val got = NearDup.ngramContainmentCapped(hot)
       .filter(col("contained") === 1L).collect()
     assert(got.length == 1 && got.head.getAs[Long]("container") == 2L)
     assert(got.head.getAs[Double]("containment") == 1.0)
@@ -383,14 +392,16 @@ class TextNearDupSpec extends SparkSpec {
       (3L, phrase),                             // 3 and 4 share ONLY hot shingles
       (4L, phrase),
       (5L, s"$phrase six seven eight nine ten"))
-    // With maxDf=2 the phrase 3-grams (df=5) are hot, doc 1/2's tail (df=2)
-    // is rare. Uncapped finds both dup pairs; capped keeps (1,2) — found via
-    // rare shingles, jaccard still 1.0 because hot shingles are corrected
-    // back in — and documents the designed recall cut for hot-only (3,4).
+    // fanoutBudget 2 derives cap 2: the phrase 3-grams (df=5) are hot,
+    // doc 1/2's tail (df=2) is rare. Uncapped finds both dup pairs; capped
+    // keeps (1,2) — found via rare shingles, jaccard still 1.0 because hot
+    // shingles are corrected back in — and documents the designed recall
+    // cut for hot-only (3,4).
     val uncapped = NearDup.ngramJaccardPairs(df)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(uncapped.toSet == Set((1L, 2L, 1.0), (3L, 4L, 1.0)))
-    val capped = NearDup.ngramJaccardPairsCapped(df, maxDf = 2)
+    assert(NearDup.derivedDfCap(df, fanoutBudget = 2) == 2)
+    val capped = NearDup.ngramJaccardPairsCapped(df, fanoutBudget = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(capped.toSet == Set((1L, 2L, 1.0)))
   }
@@ -400,12 +411,14 @@ class TextNearDupSpec extends SparkSpec {
       (1L, "h1 h2 h3 h4 a b c"),
       (2L, "h1 h2 h3 h4 a b d"),
       (3L, "h1 h2 h3 h4 x y z"))
-    // cap 2: "h1 h2 h3"/"h2 h3 h4" have df=3 → hot; "h3 h4 a"/"h4 a b" have
-    // df=2 → rare. Pair (1,2): n_rare=2, hot_common=2, sizes 5/5 →
-    // jaccard = 4/6. Must equal the uncapped exact value bit-for-bit.
+    // fanoutBudget 2 derives cap 2: "h1 h2 h3"/"h2 h3 h4" have df=3 → hot;
+    // "h3 h4 a"/"h4 a b" have df=2 → rare. Pair (1,2): n_rare=2,
+    // hot_common=2, sizes 5/5 → jaccard = 4/6. Must equal the uncapped
+    // exact value bit-for-bit.
     val expect = NearDup.ngramJaccardPairs(df)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val got = NearDup.ngramJaccardPairsCapped(df, maxDf = 2)
+    assert(NearDup.derivedDfCap(df, fanoutBudget = 2) == 2)
+    val got = NearDup.ngramJaccardPairsCapped(df, fanoutBudget = 2)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(got.keySet == Set((1L, 2L)))
     assert(got((1L, 2L)) == expect((1L, 2L)))
@@ -433,21 +446,28 @@ class TextNearDupSpec extends SparkSpec {
     assert(stats.getLong(stats.fieldIndex("derived_cap")) == 2L)
     assert(NearDup.derivedDfCap(df, fanoutBudget = 2) == 2)
     // generous budget: even uncapped cost (30) ≤ 100·8 → capping buys
-    // nothing → sentinel -1 / Int.MaxValue, and the maxDf=0 entry point
+    // nothing → sentinel -1 / Int.MaxValue, and the capped entry point
     // must then equal the exact prefix-filtered result
     val rich = NearDup.dfCapStats(df, maxDf = 2, fanoutBudget = 100).head()
     assert(rich.getLong(rich.fieldIndex("derived_cap")) == -1L)
     assert(NearDup.derivedDfCap(df) == Int.MaxValue)
-    val derived = NearDup.ngramJaccardPairsCapped(df, maxDf = 0)
+    val derived = NearDup.ngramJaccardPairsCapped(df)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val exact = NearDup.ngramJaccardPairs(df, minJaccard = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(derived == exact)
-    // per-shingle pressure relation: the one hot shingle, all postings
-    // dropped, 10 pairs no longer generated through it
-    val pressure = NearDup.dfCapPressure(df, maxDf = 2)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(pressure.toSeq == Seq(("a b c", 5L, 5L, 10L)))
+  }
+
+  test("no df fits the fan-out budget: derivedDfCap is the gate's cap 0, " +
+    "q98 reports NULL, the capped op finds no pair") {
+    // three copies of one 3-token doc: histogram {3 → 1 shingle},
+    // postings 3, cost 9 > 2·3, so no df fits budget 2
+    val df = docs((1L, "a b c"), (2L, "a b c"), (3L, "a b c"))
+    assert(NearDup.derivedDfCap(df, fanoutBudget = 2) == 0)
+    val stats = NearDup.dfCapStats(df, fanoutBudget = 2).head()
+    assert(stats.isNullAt(stats.fieldIndex("derived_cap")))
+    assert(stats.getLong(stats.fieldIndex("max_df")) == 3L)
+    assert(NearDup.ngramJaccardPairsCapped(df, fanoutBudget = 2).count() == 0L)
   }
 
   test("duplicated spans: cross-doc window shared verbatim covers both docs; " +
@@ -780,30 +800,6 @@ class TextNearDupSpec extends SparkSpec {
     // same corpus under the default budget: runs, and finds the clones
     val ok = NearDup.ngramJaccardPairsCapped(clones)
     assert(ok.count() == 40L * 39 / 2)
-  }
-
-  test("constant-cap override is LAZY: constructing the DataFrame runs no " +
-    "Spark job; the derived default is eager by design") {
-    val df = docs(
-      (1L, "a b c d e"), (2L, "a b c d f"), (3L, "x y z w v"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val planOnly = NearDup.ngramJaccardPairsCapped(df, maxDf = 100)
-      planOnly.explain() // plan consumers must stay job-free too
-      Thread.sleep(500)
-      assert(jobs.get() == 0,
-        s"constant-cap construction launched ${jobs.get()} job(s)")
-      NearDup.ngramJaccardPairsCapped(df) // derived default: jobs expected
-      Thread.sleep(500)
-      assert(jobs.get() > 0)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("resolveDupRoots re-points chains of any depth at the root; " +

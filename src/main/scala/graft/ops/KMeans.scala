@@ -343,7 +343,7 @@ object KMeans {
        |SELECT vec_id, cluster AS cell FROM afinal ORDER BY vec_id""".stripMargin
 
   /** Ranked trained-cell assignment — (vec_id, cell, cell_rank ≤
-    * maxRank): the probe order over TRAINED centroids by exact
+    * maxRank, embedding): the probe order over TRAINED centroids by exact
     * fixed-point distance (ties to the smaller cell id; rank 1 is the
     * [[assignTrainedCells]] home cell by construction — same quantizer,
     * same distances, same tie-break). This is
@@ -361,17 +361,20 @@ object KMeans {
       trainedModel(embeddings, k, iters), maxRank)
 
   /** The `maxRank` nearest cells of `model` for every (id, embedding) row
-    * of well-formed `vectors`, in order: (id, cell, cell_rank) rows, rank
-    * 1 nearest. One narrow per-partition pass: each row is quantized once
-    * and [[Centroids.nearestN]] emits its cells.
+    * of well-formed `vectors`, in order: (id, cell, cell_rank, embedding)
+    * rows, rank 1 nearest, each carrying its row's embedding for the
+    * in-cell search. One narrow per-partition pass: each row is quantized
+    * once and [[Centroids.nearestN]] emits its cells.
     */
   private[ops] def rankedCells(
       vectors: DataFrame, model: Array[(Int, Array[Long])],
       maxRank: Int): DataFrame = {
     val cents = Centroids(model, Dim)
+    val emb = vectors.schema.fieldIndex("embedding")
     val schema = StructType(Seq(vectors.schema.fields(0),
       StructField("cell", IntegerType, nullable = false),
-      StructField("cell_rank", IntegerType, nullable = false)))
+      StructField("cell_rank", IntegerType, nullable = false),
+      vectors.schema.fields(emb)))
     val quant = rowQuantizer(vectors.schema, "embedding", Dim)
     vectors.mapPartitions { it =>
       val x = new Array[Long](Dim)
@@ -379,24 +382,21 @@ object KMeans {
         quant(row, x)
         val id = row.get(0)
         cents.nearestN(x, 0, cents.norm(x, 0), maxRank).iterator.zipWithIndex
-          .map { case (c, r) => Row(id, cents.ids(c), r + 1) }
+          .map { case (c, r) => Row(id, cents.ids(c), r + 1, row.get(emb)) }
       }
     }(Encoders.row(schema))
   }
 
   /** nprobe-probed trained-IVF top-k: each query probes its `nprobe`
     * nearest TRAINED cells; corpus vectors live in their single home
-    * cell. [[Similarity.ivfTopKFromRanked]] over the trained ranking —
+    * cell. [[Similarity.searchRanked]] over the trained ranking —
     * the same per-cell [[Similarity.cellTopK]] kernel as the label-cell
     * IVF, with the learned router; dots ≈ nprobe·n/k per query.
     */
   def ivfTopKTrainedProbed(
       embeddings: DataFrame, topK: Int = 3, nprobe: Int = 1,
       k: Int = K, iters: Int = Iters): DataFrame = {
-    val ranked = trainedCellsRanked(embeddings, nprobe, k, iters).cache()
-    // ranked-assignment cache freed after the caller's action (r19 §5)
-    graft.util.CacheScope.freeAfterUse(
-      Similarity.ivfTopKFromRanked(embeddings, ranked, topK), Seq(ranked))
+    Similarity.searchRanked(trainedCellsRanked(embeddings, nprobe, k, iters), topK)
   }
 
   /** Semantic deduplication over the trained cells — the SemDeDup recipe

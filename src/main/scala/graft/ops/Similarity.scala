@@ -4,8 +4,10 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.QuantizedDot.{cosineQ6, cosineQ6Sql}
 
@@ -531,37 +533,130 @@ object Similarity {
 
   // ------------------------------------------------------------------ IVF
 
-  /** Fixed-point quantization of an embedding (floor(x·1e6) per element) —
-    * the shared representation for centroid math.
+  /** The label router as a driver-held model, the label-seeded twin of
+    * [[KMeans.Centroids]]: one centroid per distinct `label` (NULL is a
+    * label too), in ascending label order with NULL first, plus the
+    * corpus row count. A centroid is its label's per-position sums of the
+    * non-NULL fixed-point elements `floor(x·1e6)` over `n` vectors, where
+    * `n` is the label's count of non-NULL, non-empty embeddings — for a
+    * ragged label, the vectors behind its first position. `sums` is null
+    * where some position has no non-NULL element (every score against
+    * such a centroid is NULL); a label with no non-NULL, non-empty
+    * embedding has no centroid. All integer math, bit-identical in any
+    * engine (the oracle's `cen` CTE).
     */
-  private def quantized(emb: Column): Column =
-    transform(emb, x => floor(x.cast("double") * 1e6).cast("long"))
+  private[ops] final case class LabelCentroids(
+      rows: Long, labels: Array[Any], sums: Array[Array[Long]], n: Array[Long]) {
 
-  /** IVF coarse quantizer: per-cell centroids as exact fixed-point sums.
-    * Cells are seeded from the corpus `label` column (the pre-clustering a
-    * real IVF trains with k-means; the assignment step below is the same
-    * either way). Centroids are k×dim — metadata-sized — and every vector
-    * is assigned to its nearest centroid by quantized dot (ties → lowest
-    * cell id). All integer math → bit-identical in any engine.
+    /** Centroid positions in rank order for the embedding at field `idx`
+      * of `r`, at most `maxRank` of them: score `dot / n` descending with
+      * NULL last, then label order. The dot is [[graft.functions.LongArrayDot]]'s
+      * — a NULL embedding, a NULL element or a length mismatch gives a
+      * NULL score.
+      */
+    def ranked(r: Row, idx: Int, maxRank: Int): Array[Int] = {
+      val x: Array[Long] =
+        if (r.isNullAt(idx)) null
+        else {
+          val s = r.getSeq[Any](idx)
+          if (s.contains(null)) null else s.iterator.map(q6).toArray
+        }
+      val score = new Array[Double](labels.length)
+      val isNull = new Array[Boolean](labels.length)
+      for (c <- labels.indices) {
+        val cs = sums(c)
+        if (x == null || cs == null || cs.length != x.length) isNull(c) = true
+        else {
+          var dot = 0L
+          var d = 0
+          while (d < x.length) { dot += x(d) * cs(d); d += 1 }
+          score(c) = dot.toDouble / n(c).toDouble
+        }
+      }
+      labels.indices.sortWith { (a, b) =>
+        if (isNull(a) != isNull(b)) !isNull(a)
+        else if (!isNull(a) && score(a) != score(b)) score(a) > score(b)
+        else a < b
+      }.take(maxRank).toArray
+    }
+  }
+
+  /** One label's running sums for [[labelCentroids]]: its rows, its
+    * non-NULL non-empty vectors and per-position sums of the non-NULL
+    * elements, in exact arithmetic that fails on overflow as ANSI SUM does.
     */
-  def ivfCentroids(embeddings: DataFrame): DataFrame =
-    embeddings
-      .select(col("label").as("clabel"), posexplode(quantized(col("embedding"))).as(Seq("pos", "qv")))
-      .groupBy("clabel", "pos")
-      .agg(sum("qv").as("s"), count(lit(1)).as("cnt"))
-      .groupBy("clabel")
-      .agg(array_sort(collect_list(struct(col("pos"), col("s")))).as("ps"),
-        first("cnt").as("n"))
-      .select(col("clabel"), transform(col("ps"), p => p.getField("s")).as("cs"), col("n"))
+  private final class LabelSums {
+    var rows = 0L
+    var n = 0L
+    private var sums = new Array[Long](0)
+    private var seen = new Array[Boolean](0)
 
-  /** (vec_id, cell, cell_rank, clabel): centroid assignments ranked by
-    * similarity (cell_rank 1 = nearest), with the centroid's label
-    * (`clabel`, the cell without its sub-bucket key). The n×k dot products run through
-    * [[graft.functions.LongArrayDot]] — native codegen — instead of
-    * interpreted `aggregate(zip_with(...))` lambdas (the quantization
-    * `transform` stays: it runs once per VECTOR in the projection, not once
-    * per vector×centroid candidate). `maxRank` bounds the fan-out (1 for
-    * storage assignment, nprobe for query routing).
+    /** Adds `count` rows and `vectors` vectors with per-position values
+      * `xs` (longs; a NULL adds nothing at its position).
+      */
+    def add(count: Long, vectors: Long, xs: Seq[Any]): Unit = {
+      rows = math.addExact(rows, count)
+      n = math.addExact(n, vectors)
+      if (xs.length > sums.length) {
+        sums = java.util.Arrays.copyOf(sums, xs.length)
+        seen = java.util.Arrays.copyOf(seen, xs.length)
+      }
+      var d = 0
+      xs.foreach { v =>
+        if (v != null) { sums(d) = math.addExact(sums(d), v.asInstanceOf[Long]); seen(d) = true }
+        d += 1
+      }
+    }
+
+    def row(label: Any): Row =
+      Row(label, rows, n, sums.indices.map(d => if (seen(d)) sums(d) else null))
+
+    /** The centroid's sums, null when some position has none. */
+    def centroid: Array[Long] = if (seen.forall(identity)) sums else null
+  }
+
+  /** [[LabelCentroids]] of `embeddings` in ONE labelled job: each
+    * partition folds its rows into per-label [[LabelSums]], and the driver
+    * merges the partials. The row count rides along, so no count job runs.
+    */
+  private[ops] def labelCentroids(embeddings: DataFrame): LabelCentroids = {
+    val labelType = embeddings.schema("label").dataType
+    val partials = graft.util.JobDesc.labeled(embeddings.sparkSession,
+      "ivf: label centroids")(
+      embeddings.select(col("label"), col("embedding")).mapPartitions { it =>
+        val acc = scala.collection.mutable.LinkedHashMap[Any, LabelSums]()
+        it.foreach { r =>
+          val xs = if (r.isNullAt(1)) Nil
+            else r.getSeq[Any](1).map(v => if (v == null) null else q6(v))
+          acc.getOrElseUpdate(r.get(0), new LabelSums).add(1L, if (xs.isEmpty) 0L else 1L, xs)
+        }
+        acc.iterator.map { case (l, s) => s.row(l) }
+      }(Encoders.row(StructType(Seq(StructField("label", labelType),
+        StructField("rows", LongType), StructField("n", LongType),
+        StructField("sums", ArrayType(LongType)))))).collect())
+    val merged = scala.collection.mutable.LinkedHashMap[Any, LabelSums]()
+    partials.foreach { r =>
+      merged.getOrElseUpdate(r.get(0), new LabelSums)
+        .add(r.getLong(1), r.getLong(2), r.getSeq[Any](3))
+    }
+    val ord = TypeUtils.getInterpretedOrdering(labelType)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(labelType)
+    val cents = merged.toArray.filter(_._2.n > 0).sortWith { case ((a, _), (b, _)) =>
+      if (a == null || b == null) a == null && b != null
+      else ord.lt(toCatalyst(a), toCatalyst(b))
+    }
+    LabelCentroids(merged.valuesIterator.map(_.rows).foldLeft(0L)(math.addExact),
+      cents.map(_._1), cents.map(_._2.centroid), cents.map(_._2.n))
+  }
+
+  /** (vec_id, cell, cell_rank, clabel, embedding): every row's `maxRank`
+    * nearest label centroids of `model` in [[LabelCentroids.ranked]]'s
+    * order (cell_rank 1 = nearest), with the centroid's label (`clabel`,
+    * the cell without its sub-bucket key) and the row's embedding, so the
+    * searches below read no second copy of the corpus. One narrow
+    * per-partition pass — no join, no rank window — each row quantized
+    * once; every row is ranked on its own, a duplicated vec_id included.
+    * Callers spread `vectors` first: the pass has no exchange before it.
     *
     * `subPlanes` > 0 appends an LSH sub-bucket key to the cell — the
     * multi-index remedy for the measured cell-scaling limit
@@ -570,25 +665,36 @@ object Similarity {
     * candidate growth; composite cells multiply the cell count by
     * 2^subPlanes without retraining centroids).
     */
-  def ivfCellsRanked(embeddings: DataFrame, maxRank: Int, subPlanes: Int = 0): DataFrame = {
-    // repartition first: the n×k assignment dots run against the broadcast
-    // centroid table — no exchange before them, so a single-split corpus
-    // scan would serialize the assignment on one core
-    val q = embeddings.repartition(col("vec_id"))
-      .select(col("vec_id"), col("embedding"),
-        quantized(col("embedding")).as("qv"))
-    val dotd = (graft.functions.LongArrayDot.dotLong(col("qv"), col("cs"))
-      .cast("double") / col("n"))
-    val w = Window.partitionBy(col("vec_id")).orderBy(dotd.desc, col("clabel"))
-    val cellCol =
+  private def rankLabelCells(
+      vectors: DataFrame, model: LabelCentroids, maxRank: Int,
+      subPlanes: Int): DataFrame = {
+    val sub = if (subPlanes <= 0) Nil else Seq(bucketCol(col("embedding"), subPlanes).as("sub"))
+    val in = vectors.select(Seq(col("vec_id"), col("embedding")) ++ sub: _*)
+    val schema = StructType(Seq(in.schema("vec_id"),
+      StructField("clabel", vectors.schema("label").dataType),
+      StructField("cell_rank", IntegerType, nullable = false), in.schema("embedding")) ++
+      in.schema.fields.drop(2))
+    val ranked = in.mapPartitions { it =>
+      it.flatMap { r =>
+        model.ranked(r, 1, maxRank).iterator.zipWithIndex.map { case (c, i) =>
+          Row.fromSeq(Seq[Any](r.get(0), model.labels(c), i + 1) ++ r.toSeq.drop(1))
+        }
+      }
+    }(Encoders.row(schema))
+    val cell =
       if (subPlanes <= 0) col("clabel")
-      else concat(col("clabel").cast("string"), lit("|"),
-        bucketCol(col("embedding"), subPlanes))
-    q.crossJoin(broadcast(ivfCentroids(embeddings)))
-      .withColumn("cell_rank", row_number().over(w))
-      .filter(col("cell_rank") <= maxRank)
-      .select(col("vec_id"), cellCol.as("cell"), col("cell_rank"), col("clabel"))
+      else concat(col("clabel").cast("string"), lit("|"), col("sub"))
+    ranked.select(col("vec_id"), cell.as("cell"), col("cell_rank"), col("clabel"),
+      col("embedding"))
   }
+
+  /** [[rankLabelCells]] over `embeddings` with its own label centroids:
+    * the public ranked assignment (1 for storage assignment, nprobe for
+    * query routing).
+    */
+  def ivfCellsRanked(embeddings: DataFrame, maxRank: Int, subPlanes: Int = 0): DataFrame =
+    rankLabelCells(embeddings.repartition(col("vec_id")), labelCentroids(embeddings),
+      maxRank, subPlanes)
 
   /** (vec_id, cell): nearest-centroid assignment. */
   def ivfCells(embeddings: DataFrame): DataFrame =
@@ -660,30 +766,31 @@ object Similarity {
     * (cell, salt) — same candidates, same output, spread compute.
     */
   def ivfTopK(
-      embeddings: DataFrame, k: Int = 3, nprobe: Int = 1, subPlanes: Int = 0): DataFrame = {
-    // cache: the salt derivation and the search both read the ranked
-    // assignment (the derivation's aggregation is also the action that
-    // materializes it, so the search does not recompute the pipeline).
-    // Query-scoped (r19): freed after the caller's action.
-    val ranked = ivfCellsRanked(embeddings, nprobe, subPlanes).cache()
-    graft.util.CacheScope.freeAfterUse(
-      ivfTopKFromRanked(embeddings, ranked, k), Seq(ranked))
+      embeddings: DataFrame, k: Int = 3, nprobe: Int = 1, subPlanes: Int = 0): DataFrame =
+    searchRanked(ivfCellsRanked(embeddings, nprobe, subPlanes), k)
+
+  /** [[ivfTopKFromRanked]] over `ranked`, cached: the salt derivation and
+    * the search both read it (the derivation's aggregation is also the
+    * action that materializes it, so the search does not recompute the
+    * ranking). Query-scoped: freed after the caller's action.
+    */
+  private[ops] def searchRanked(ranked0: DataFrame, k: Int): DataFrame = {
+    val ranked = ranked0.cache()
+    graft.util.CacheScope.freeAfterUse(ivfTopKFromRanked(ranked, k), Seq(ranked))
   }
 
   /** The in-cell search over an already-ranked (vec_id, cell, cell_rank ≤
-    * nprobe) assignment: one join attaches the embeddings, then
-    * [[cellTopK]] serves every query. Factored out (r18) so
-    * [[ivfTopKAdaptive]]'s serving pass reuses the SAME cached assignment
-    * its nprobe derivation already computed (`ivfCellsRanked(np)` ≡
-    * `ivfCellsRanked(MaxDerivedNprobe).filter(cell_rank ≤ np)` — the
-    * window rank is nprobe-independent), and so the trained router
+    * nprobe, embedding) assignment: [[cellTopK]] serves every query from
+    * the ranked rows themselves. Factored out so [[ivfTopKAdaptive]]'s
+    * serving pass reuses the SAME cached assignment its nprobe derivation
+    * already computed (`ivfCellsRanked(np)` ≡
+    * `ivfCellsRanked(MaxDerivedNprobe).filter(cell_rank ≤ np)` — a row's
+    * rank is nprobe-independent), and so the trained router
     * ([[KMeans.ivfTopKTrainedProbed]]) serves through the same code.
     */
-  private[ops] def ivfTopKFromRanked(
-      embeddings: DataFrame, ranked: DataFrame, k: Int): DataFrame = {
+  private[ops] def ivfTopKFromRanked(ranked: DataFrame, k: Int): DataFrame = {
     val (salts, probes) = cellJoinSalts(ranked)
-    cellTopK(embeddings.select(col("vec_id"), col("embedding")).join(ranked, "vec_id"),
-      k, salts, probes)
+    cellTopK(ranked, k, salts, probes)
   }
 
   /** The in-cell search: over (vec_id, embedding, cell, cell_rank) rows —
@@ -782,9 +889,10 @@ object Similarity {
     */
   private[ops] def quantizedAt(r: Row, idx: Int): Array[Long] =
     if (r.isNullAt(idx)) null
-    else r.getSeq[Any](idx).iterator.map(x =>
-      if (x == null) 0L else math.floor(x.asInstanceOf[Number].doubleValue * 1e6).toLong)
-      .toArray
+    else r.getSeq[Any](idx).iterator.map(x => if (x == null) 0L else q6(x)).toArray
+
+  /** `floor(x·1e6)` of one non-NULL embedding element. */
+  private def q6(x: Any): Long = math.floor(x.asInstanceOf[Number].doubleValue * 1e6).toLong
 
   /** Offers `id` to `best` keyed by QuantizedDot's exact dot of `x` and `y`
     * (a long sum over the shorter length; NULL when either side is).
@@ -916,21 +1024,17 @@ object Similarity {
     (0 to MaxSubPlanes).find(p => n <= budget * (1L << p)).getOrElse(MaxSubPlanes)
 
   /** The derivation's input, computed once per call: the
-    * [[MaxDerivedNprobe]]-ranked assignment at the corpus-derived
-    * sub-plane count, cached — the tune grid reads its sample rows and
-    * home cells, and the serving search needs exactly this relation
-    * filtered to `cell_rank ≤ np`. The caller frees the cache once its
-    * last reader has run.
+    * [[MaxDerivedNprobe]]-ranked assignment of the spread `vectors` by
+    * `model` at the corpus-derived sub-plane count, cached — the tune grid
+    * reads its sample rows and home cells, and the serving search needs
+    * exactly this relation filtered to `cell_rank ≤ np`. NOT eagerly
+    * materialized: the tune grid's sample collect is its first reader.
+    * The caller frees the cache once its last reader has run.
     */
-  private def rankedForTune(embeddings: DataFrame, budget: Long): DataFrame = {
-    val p = graft.util.JobDesc.labeled(embeddings.sparkSession,
-      "ivf-derive: corpus size")(
-      adaptiveSubPlanes(embeddings.count(), budget))
-    // NOT eagerly materialized: the tune grid's sample collect is its
-    // first reader and computes it (an up-front count() A/B'd flat in r19
-    // while paying one extra job)
-    ivfCellsRanked(embeddings, MaxDerivedNprobe, p).cache()
-  }
+  private def rankedForTune(
+      vectors: DataFrame, model: LabelCentroids, budget: Long): DataFrame =
+    rankLabelCells(vectors, model, MaxDerivedNprobe,
+      adaptiveSubPlanes(model.rows, budget)).cache()
 
   /** The derivation measurement behind [[derivedNprobe]]: per candidate
     * nprobe 1..[[MaxDerivedNprobe]], how many of the tune sample's exact
@@ -938,14 +1042,15 @@ object Similarity {
     * [[queryTopK]] pass with the sample queries shipped to the corpus,
     * which keeps each query's exact truth and its top-[[TuneK]] per
     * probe rank; the rank-≤np search is the merge of ranks 1..np. Cost:
-    * one corpus pass plus one sample-sized collect — the same order as
-    * the search being tuned. The ranked cache is freed before this
-    * returns.
+    * the centroid pass, one corpus pass plus one sample-sized collect —
+    * the same order as the search being tuned. The ranked cache is freed
+    * before this returns.
     */
   private def tuneGridRows(
       embeddings: DataFrame, budget: Long = CellBudget): Seq[(Int, Long)] = {
-    val ranked = rankedForTune(embeddings, budget)
-    try tuneGridFromRanked(embeddings, ranked)
+    val ranked = rankedForTune(embeddings.repartition(col("vec_id")),
+      labelCentroids(embeddings), budget)
+    try tuneGridFromRanked(ranked)
     finally graft.util.CacheScope.release(ranked)
   }
 
@@ -956,23 +1061,20 @@ object Similarity {
     grid.find(_._2 >= TuneHitBar).map(_._1).getOrElse(-1)
 
   /** The grid computation itself, parameterized by the ranked cell
-    * assignment: any (vec_id, cell, cell_rank ≤ [[MaxDerivedNprobe]])
-    * relation whose rank-1 row is the vector's single home cell. The
-    * sample queries' ranked cells are collected, and one [[queryTopK]]
-    * pass over (vec_id, embedding, home cell) rows keeps per query slot 0,
-    * the exact top-[[TuneK]] over every other vector ([[bruteForceTopK]]'s
-    * truth), and slot r, the top-[[TuneK]] among the homes of its rank-r
-    * cell. A neighbor has one home cell, so it meets a query in at most
-    * one rank slot, and the np-probe search's top-[[TuneK]] is the merge
-    * of slots 1..np.
+    * assignment: any (vec_id, cell, cell_rank ≤ [[MaxDerivedNprobe]],
+    * embedding) relation whose rank-1 row is the vector's single home
+    * cell. The sample queries' ranked cells are collected, and one
+    * [[queryTopK]] pass over the rank-1 (vec_id, embedding, home cell)
+    * rows keeps per query slot 0, the exact top-[[TuneK]] over every
+    * other vector ([[bruteForceTopK]]'s truth), and slot r, the
+    * top-[[TuneK]] among the homes of its rank-r cell. A neighbor has one
+    * home cell, so it meets a query in at most one rank slot, and the
+    * np-probe search's top-[[TuneK]] is the merge of slots 1..np.
     */
-  private def tuneGridFromRanked(
-      embeddings: DataFrame, ranked: DataFrame): Seq[(Int, Long)] = {
-    val emb2 = embeddings.select(col("vec_id"), col("embedding"))
+  private def tuneGridFromRanked(ranked: DataFrame): Seq[(Int, Long)] = {
     // the sample queries with their ranked cells: one row per (query, cell)
-    val sample = graft.util.JobDesc.labeled(embeddings.sparkSession, "ivf-derive: sample")(
-      emb2.filter(col("vec_id") < TuneQueries)
-        .join(ranked.filter(col("vec_id") < TuneQueries), Seq("vec_id"), "left")
+    val sample = graft.util.JobDesc.labeled(ranked.sparkSession, "ivf-derive: sample")(
+      ranked.filter(col("vec_id") < TuneQueries)
         .select(col("vec_id").cast("long"), col("embedding"), col("cell"), col("cell_rank"))
         .collect())
       .groupBy(_.getLong(0)).toArray.sortBy(_._1)
@@ -980,9 +1082,7 @@ object Similarity {
     val qx = sample.map(q => quantizedAt(q._2.head, 1))
     // per sample query: probe cell → its rank
     val probes = sample.map(_._2.filter(!_.isNullAt(2)).map(r => r.get(2) -> r.getInt(3)).toMap)
-    val homes = emb2.join(
-        ranked.filter(col("cell_rank") === 1).select(col("vec_id"), col("cell")),
-        Seq("vec_id"), "left")
+    val homes = ranked.filter(col("cell_rank") === 1)
       .select(col("vec_id").cast("long"), col("embedding"), col("cell"))
     val slots = 1 + MaxDerivedNprobe
     val found = queryTopK(homes, qids, slots, TuneK) { (r, best) =>
@@ -1147,33 +1247,33 @@ object Similarity {
       embeddings: DataFrame, k: Int = 3, nprobe: Int = 0,
       budget: Long = CellBudget): DataFrame = {
     // intra-query corpus cache (r18): one adaptive search reads the
-    // corpus ~5× (size count, centroid build, assignment, tune truth,
-    // the two serving join sides) and the CacheManager substitutes the
-    // cached relation into every one of those scans automatically. At
-    // cluster scale 5 passes over columnar blocks vs 5 parquet scans is
-    // the standard persist-when-reused trade (guide §5) and
+    // corpus twice (the centroid pass and the ranking pass, whose rows
+    // carry the embeddings every later reader needs), and the
+    // CacheManager substitutes the cached relation into both scans.
     // MEMORY_AND_DISK degrades to local-disk blocks, never OOM.
     // Query-scoped (r19, VERDICT r18 #5): CacheScope frees it, and in the
     // derived mode the ranked assignment too, after the caller's action.
     // Cached hash-spread on vec_id when it arrives in fewer partitions than
     // the session has cores: a single-split corpus cached as is makes every
-    // pass over it, the tune grid's kernel included, one task.
+    // pass over it, the ranking kernel included, one task.
     val par = embeddings.sparkSession.sparkContext.defaultParallelism
     val e = (if (embeddings.rdd.getNumPartitions >= par) embeddings
       else embeddings.repartition(par, col("vec_id"))).cache()
-    if (nprobe > 0) {
-      val p = graft.util.JobDesc.labeled(e.sparkSession,
-        "ivf: corpus size")(adaptiveSubPlanes(e.count(), budget))
-      return graft.util.CacheScope.freeAfterUse(ivfTopK(e, k, nprobe, p), Seq(e))
-    }
+    // one pass: the corpus size and the label centroids
+    val model = labelCentroids(e)
+    if (nprobe > 0)
+      return graft.util.CacheScope.freeAfterUse(
+        searchRanked(rankLabelCells(e, model, nprobe,
+          adaptiveSubPlanes(model.rows, budget)), k),
+        Seq(e))
     // one ranked assignment serves both the tune grid and the search
-    val ranked = rankedForTune(e, budget)
-    val np = chosenNprobe(tuneGridFromRanked(e, ranked))
+    val ranked = rankedForTune(e, model, budget)
+    val np = chosenNprobe(tuneGridFromRanked(ranked))
     val res =
       if (np > 0)
         // rank ≤ np is a filter over the MaxDerivedNprobe ranking, so the
-        // centroid + assignment pipeline is not rebuilt for the search
-        ivfTopKFromRanked(e, ranked.filter(col("cell_rank") <= np), k)
+        // ranking is not rebuilt for the search
+        ivfTopKFromRanked(ranked.filter(col("cell_rank") <= np), k)
       else {
         org.slf4j.LoggerFactory.getLogger(getClass)
           .warn(s"adaptive-IVF degrade: tune-sample recall < $TuneHitBar/" +
@@ -1183,25 +1283,18 @@ object Similarity {
             "refine path for corpora without label-metric structure")
         // Degrade serving reuses the derivation's ranking when it
         // provably IS the complete one: the ranking orders the label
-        // centroids whatever p is, and when the corpus has ≤
-        // MaxDerivedNprobe labels every (vector, label) pair already
-        // carries a rank ≤ label count ≤ MaxDerivedNprobe — so, with the
-        // label as the cell, it is the identical relation to rank ≤
-        // MaxValue over a SECOND centroid + assignment pipeline at p = 0.
-        // One tiny census over cached blocks replaces that pipeline (a
-        // NULL label is a centroid too, so the census counts it). More
-        // labels than the derivation ranks → the full rebuild.
-        val labels = graft.util.JobDesc.labeled(e.sparkSession,
-          "ivf: degrade label census")(
-          ranked.select(col("clabel")).distinct().count())
-        if (labels <= MaxDerivedNprobe)
-          ivfTopKFromRanked(e,
-            ranked.select(col("vec_id"), col("clabel").as("cell"), col("cell_rank")), k)
+        // centroids whatever p is, and when the model has ≤
+        // MaxDerivedNprobe centroids every (vector, label) pair already
+        // carries a rank ≤ centroid count ≤ MaxDerivedNprobe — so, with
+        // the label as the cell, it is the identical relation to a full
+        // ranking at p = 0. More centroids than the derivation ranks →
+        // a full ranking (maxRank = Int.MaxValue keeps every centroid)
+        // by the same model.
+        if (model.labels.length <= MaxDerivedNprobe)
+          ivfTopKFromRanked(ranked.select(col("vec_id"), col("clabel").as("cell"),
+            col("cell_rank"), col("embedding")), k)
         else
-          // nprobe = Int.MaxValue probes every cell without paying a
-          // distinct count job first — cell_rank ≤ MaxValue keeps every
-          // window row, the identical relation to nprobe = <cell count>
-          ivfTopK(e, k, Int.MaxValue, 0)
+          searchRanked(rankLabelCells(e, model, Int.MaxValue, 0), k)
       }
     graft.util.CacheScope.freeAfterUse(res, Seq(e, ranked))
   }

@@ -193,6 +193,27 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("Window "), p)
   }
 
+  test("label-IVF searches (q36, q121) rank cells in a narrow pass: no " +
+    "nested loop, no cartesian, no join, a Window only in cellTopK's re-rank") {
+    // the label centroids are a driver-held model and the ranked rows
+    // carry their embeddings, so the executed plan — the cached ranking
+    // printed inside its InMemoryRelation included — holds no centroid
+    // cross join, no per-vector rank window and no join back to the
+    // embeddings scan. Executed, not only planned, so the query's scope
+    // frees the caches its derivation pinned.
+    for (q <- Seq("q36_ann_ivf_topk", "q121_ann_ivf_derived_subbucket")) {
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("InMemoryRelation"), s"$q\n$p")
+      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), s"$q\n$p")
+      assert(!p.linesIterator.exists(_.contains("Join")), s"$q\n$p")
+      val windows = p.linesIterator.filter(_.contains("Window")).toSeq
+      assert(windows.forall(_.contains("query_id")), s"$q\n${windows.mkString("\n")}")
+    }
+    assert(graft.util.ListenerFence.await(spark.sparkContext))
+  }
+
   test("exact jaccard (q32) joins PREFIX-PRUNED postings: rank filters over " +
     "per-doc windows feed the shingle self-join") {
     val p = plan("q32_ngram_jaccard")

@@ -59,7 +59,7 @@ class NearestCentroidSpec extends SparkSpec {
     val model = KMeans.trainedModel(df, 16)
     def ranked(d: DataFrame, maxRank: Int) =
       KMeans.trainedCellsRanked(d, maxRank, k = 16)
-        .as[(Long, Int, Int)].collect().toSet
+        .select("vec_id", "cell", "cell_rank").as[(Long, Int, Int)].collect().toSet
     def reference(d: DataFrame, model: Array[(Int, Array[Long])], maxRank: Int) =
       vectors(d).flatMap { case (id, v) =>
         dists(v.map(q), model).sorted.take(maxRank).zipWithIndex
@@ -73,7 +73,7 @@ class NearestCentroidSpec extends SparkSpec {
     def axis(a: Int) = Seq.tabulate(dim)(d => if (d == a) 0.5f else 0f)
     val tie = Seq(4L -> axis(0), 3L -> axis(1), 1L -> axis(2)).toDF("vec_id", "embedding")
     val tieRanked = KMeans.trainedCellsRanked(tie, maxRank = 3, k = 3)
-      .as[(Long, Int, Int)].collect().toSet
+      .select("vec_id", "cell", "cell_rank").as[(Long, Int, Int)].collect().toSet
     assert(tieRanked == Set(
       (4L, 0, 1), (4L, 1, 2), (4L, 2, 3),
       (3L, 1, 1), (3L, 0, 2), (3L, 2, 3),

@@ -6,10 +6,10 @@ import org.apache.spark.sql.types.StructType
 
 /** The broadcast-query top-k searches against plain-Scala brute force over
   * the collected inputs: exact cosine truth, PQ ADC top-k, the
-  * tie-inclusive refine shortlist and the adaptive-IVF tune grid. The
-  * reference recomputes every score from the definition (fixed-point
-  * `floor(x·1e6)` arithmetic, ties to the smaller id) and shares no code
-  * with the kernels.
+  * tie-inclusive refine shortlist, the label-centroid cell ranking and the
+  * adaptive-IVF tune grid. The reference recomputes every score from the
+  * definition (fixed-point `floor(x·1e6)` arithmetic, ties to the smaller
+  * id) and shares no code with the kernels.
   */
 class TopKReferenceSpec extends SparkSpec {
   import spark.implicits._
@@ -119,6 +119,92 @@ class TopKReferenceSpec extends SparkSpec {
       codes = pqCodes, iters = pqIters)
       .collect().map(r => (r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
     assert(got == want)
+  }
+
+  private type Vec = Seq[java.lang.Float]
+
+  /** Plain-Scala label router over (vec_id, embedding, label) rows: per
+    * label (NULL included), the position-wise sums of the non-NULL
+    * quantized elements (None where a position has none) over n = the
+    * label's non-NULL non-empty embeddings; a label without one has no
+    * centroid. A row scores `dot / n` against a centroid, None for a NULL
+    * embedding, a NULL element on either side or a length mismatch. Each
+    * row (not each vec_id) gets its first `maxRank` labels by score desc,
+    * None last, then label asc with NULL first, as (vec_id, embedding,
+    * rank, label).
+    */
+  private def labelRanking(
+      rows: Seq[(Long, Vec, Integer)], maxRank: Int): Seq[(Long, Vec, Int, Integer)] = {
+    val cents = rows.map(_._3).distinct.flatMap { l =>
+      val vs = rows.collect { case (_, v, `l`) if v != null && v.nonEmpty => v }
+      Option.when(vs.nonEmpty) {
+        val sums = (0 until vs.map(_.size).max).map { d =>
+          val xs = vs.flatMap(_.lift(d)).filter(_ != null).map(x => q6(x))
+          Option.when(xs.nonEmpty)(xs.sum)
+        }
+        (l, sums, vs.size)
+      }
+    }
+    rows.flatMap { case (id, v, _) =>
+      cents.map { case (l, sums, n) =>
+        val s =
+          if (v == null || v.contains(null) || v.size != sums.size || sums.contains(None)) None
+          else Some(v.zip(sums).map { case (x, c) => q6(x) * c.get }.sum.toDouble / n)
+        (l, s)
+      }.sortBy { case (l, s) =>
+        (s.isEmpty, -s.getOrElse(0.0), l != null, Option(l).map(_.intValue).getOrElse(0))
+      }.take(maxRank).zipWithIndex.map { case ((l, _), i) => (id, v, i + 1, l) }
+    }
+  }
+
+  test("ivfCellsRanked == reference label ranking: NULL embedding, NULL " +
+    "element, shorter vector, NULL label, score tie, ragged label, " +
+    "duplicated vec_id, maxRank past the centroid count") {
+    def f(xs: Float*): Vec = xs.map(java.lang.Float.valueOf)
+    val nul: Integer = null
+    val rows: Seq[(Long, Vec, Integer)] = Seq(
+      (0L, f(1.0f, 0.5f, 0.0f), 1),
+      (1L, f(0.5f, 1.0f, 0.25f), 1),
+      (2L, null, 2),                                // NULL embedding
+      (3L, f(0.9f) ++ Seq(null) ++ f(0.1f), 2),     // NULL element
+      (4L, f(0.3f, 0.3f), 2),                       // shorter: label 2 is ragged
+      (5L, f(0.2f, -0.4f, 0.6f), nul),              // the NULL label's centroid…
+      (6L, f(0.2f, -0.4f, 0.6f), 3),                // …ties label 3's exactly
+      (7L, f(0.2f, -0.4f, 0.6f), 4),                // one vec_id, two rows
+      (7L, f(-0.7f, 0.1f, 0.1f), 4),
+      (8L, f(0.0f, 1.0f, 0.0f), 5))
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (id, e, l) => Row(id, e, l) }: _*),
+      StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"))
+    // the deterministic n: label 2's rows 3 and 4 (the NULL embedding is
+    // no vector), though only row 3 reaches its third position
+    val model = Similarity.labelCentroids(df)
+    assert(model.rows == rows.size)
+    assert(model.labels.toSeq == Seq(null, 1, 2, 3, 4, 5))
+    assert(model.n(model.labels.indexOf(2)) == 2L)
+    def bag[T](xs: Seq[T]) = xs.groupBy(identity).map { case (x, g) => x -> g.size }
+    for (maxRank <- Seq(1, 3, 10)) {
+      val got = Similarity.ivfCellsRanked(df, maxRank).collect().toSeq.map { r =>
+        assert(r.get(1) == r.get(3), "cell is the label at subPlanes 0")
+        (r.getLong(0), Option(r.getSeq[java.lang.Float](4)).map(_.toList).orNull, r.getInt(2),
+          r.getAs[Integer](3))
+      }
+      val want = labelRanking(rows, maxRank).map { case (id, v, i, l) =>
+        (id, Option(v).map(_.toList).orNull, i, l) }
+      assert(bag(got) == bag(want), s"maxRank $maxRank")
+    }
+    // the ragged label's n decides row 0's order: 2 puts label 1 first
+    assert(labelRanking(rows, 2).filter(_._1 == 0L).map(_._4) == Seq(1, 2))
+    // an exact tie goes to the NULL label, then the smaller one
+    assert(labelRanking(rows, 2).filter(_._1 == 6L).map(_._4) == Seq(nul, 3))
+  }
+
+  test("labelCentroids fails on a long overflow of a centroid sum, as ANSI SUM does") {
+    val big = Seq(4.0e12f)
+    val df = Seq((1L, big, 0), (2L, big, 0), (3L, big, 0)).toDF("vec_id", "embedding", "label")
+    val e = intercept[Exception](Similarity.labelCentroids(df))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e)
   }
 
   test("nprobeTuneGrid hits == reference grid from the collected ranking, " +

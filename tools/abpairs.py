@@ -2,12 +2,13 @@
 """Interleaved A/B pairs of the benchmark in two checkouts.
 
     python3 tools/abpairs.py <parentDir> <changeDir> --workload <w> --pairs N
-        [--seed-start S] [--seconds T] [--trace 0|1] [--out results.jsonl]
+        [--trace 0|1] [--out results.jsonl]
 
 Runs `python3 perfbench/run.py --workload <w> --seed <s> --seconds <T>
 --trace <0|1>` from the root of each checkout, one run at a time, for seeds
-S .. S+N-1. Odd seeds run the parent first, even seeds the change first, so
-neither side always runs on a warmer host. Every run's last stdout line (the
+1 .. N, where T is BENCHMARK.json's `run_seconds`, the same on both sides.
+Odd seeds run the parent first, even seeds the change first, so neither
+side always runs on a warmer host. Every run's last stdout line (the
 benchmark's JSON result) is appended to the JSONL file together with its
 side, seed and exit code; a run that writes no JSON line is kept as a
 record with `"result": null`.
@@ -16,8 +17,8 @@ Then, per metric (the end-to-end metrics of BENCHMARK.json with --trace 0,
 the per-layer ones with --trace 1), it prints the parent's and the change's
 median with quartiles, the change of the median in %, and in how many pairs
 the change was lower. A pair counts only when both of its runs reported the
-metric. --seconds defaults to BENCHMARK.json's `run_seconds`. Neither
-checkout's files are modified beyond what the benchmark itself writes.
+metric. Neither checkout's files are modified beyond what the benchmark
+itself writes.
 """
 import argparse
 import json
@@ -88,19 +89,17 @@ def main():
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
-    ap.add_argument("--seed-start", type=int, default=1)
-    ap.add_argument("--seconds", type=int)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--out", default="abpairs.jsonl")
     a = ap.parse_args()
 
     spec = json.load(open(os.path.join(a.change, "BENCHMARK.json")))
-    seconds = a.seconds if a.seconds is not None else spec["run_seconds"]
+    seconds = spec["run_seconds"]
     names = [m["name"] for m in spec["per_layer" if a.trace else "end_to_end"]]
     checkouts = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
 
     records = []
-    for seed in range(a.seed_start, a.seed_start + a.pairs):
+    for seed in range(1, a.pairs + 1):
         order = ("parent", "change") if seed % 2 else ("change", "parent")
         for side in order:
             code, result = run_once(checkouts[side], a.workload, seed, seconds, a.trace)
